@@ -55,6 +55,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import zlib
 from collections import OrderedDict
@@ -819,21 +820,44 @@ def load_tombstones(index_dir: str) -> frozenset[int]:
 # --------------------------------------------------------------------------
 
 
+# Index terms are the analyzer's output alphabet: lowercase ASCII
+# letters and digits (functions/analyzer.py _TOKEN_RE, lowercased; the
+# Porter stemmer only truncates/rewrites within it).
+_TERM_RE = re.compile(r"[a-z0-9]+")
+
+
+def check_terms(terms) -> list[str]:
+    """Caller-supplied index terms (pre-analyzed or excluded terms) must be
+    in the analyzer alphabet; anything else can never match a posting list
+    and is rejected with a ValueError instead of reaching the scan."""
+    bad = [t for t in terms if not isinstance(t, str) or not _TERM_RE.fullmatch(t)]
+    if bad:
+        raise ValueError(
+            f"index terms must match [a-z0-9]+ (analyzer output); got {bad[:5]!r}"
+        )
+    return list(terms)
+
+
 class SegmentIndex:
-    """Reader handle over a built segment index directory."""
+    """Reader handle over a built segment index directory.
+
+    Holds temp views and memoized broadcasts; ``close()`` (or a ``with``
+    block) releases them."""
 
     def __init__(self, spark: SparkSession, path: str, isolate_session: bool = True):
-        # Point-query session (r7): same SparkContext, isolated SQLConf,
-        # AQE off. Every query through this handle is a couple of
-        # single-digit-row exchanges (pruned terms × shards, then k rows)
-        # — AQE has nothing to adapt, and its stage-by-stage
-        # materialization adds fixed per-query latency (measured ~35-50
-        # ms/query on the 20-query reference loop, ~0.7-1.0 s of the
-        # loop). Builder-level conf (shuffle partitions, arrow, excluded
-        # rules) is inherited by newSession(); only the AQE toggle
-        # differs, and only for DataFrames built from this handle —
-        # corpus-scale work (build/merge/compact/promote) reads its own
-        # paths on the caller's session and keeps AQE.
+        # Point-query session: same SparkContext, isolated SQLConf, AQE
+        # off. A point query is 3 Spark jobs on an idf-memo miss and 2 on
+        # a hit: the idf lookup (hit: none), the segment scan feeding the
+        # shard-kernel stage (sized to the query's posting volume,
+        # query/wand.py _shard_stage) whose output broadcasts, and the
+        # docmap rehydrate join with its TakeOrderedAndProject. AQE has
+        # nothing to adapt there, and its stage-by-stage materialization
+        # adds fixed per-query latency (measured ~35-50 ms/query on the
+        # 20-query reference loop) and a job. Builder-level conf (shuffle
+        # partitions, arrow, excluded rules) is inherited by newSession();
+        # only the AQE toggle differs, and only for DataFrames built from
+        # this handle — corpus-scale work (build/merge/compact/promote)
+        # reads its own paths on the caller's session and keeps AQE.
         if isolate_session:
             q = spark.newSession()
             q.conf.set("spark.sql.adaptive.enabled", "false")
@@ -870,20 +894,37 @@ class SegmentIndex:
         # re-registers a temp view per substitution per call (~7 ms each,
         # measured), so per-query SQL references these by name instead.
         # Names are instance-unique (two indexes can share a session when
-        # isolate_session=False).
+        # isolate_session=False); close() drops them.
         import uuid as _uuid
 
         tag = _uuid.uuid4().hex[:10]
         self._seg_view = f"hse_seg_{tag}"
-        self._ts_view = f"hse_ts_{tag}"
         self._dm_view = f"hse_dm_{tag}"
         self.segments.createOrReplaceTempView(self._seg_view)
-        self.term_stats.createOrReplaceTempView(self._ts_view)
         self._dm.createOrReplaceTempView(self._dm_view)
-        self._idf_cache: dict[str, float | None] = {}
+        self._term_cache: dict[str, tuple[int, float] | None] = {}
         self.tombstones = load_tombstones(path)
         self._dead_bc = None
         self._scope_bcs: "OrderedDict[int, object]" = OrderedDict()
+
+    def close(self) -> None:
+        """Drop this handle's temp views and unpersist its memoized
+        tombstone and scope broadcasts. Idempotent; DataFrames built from
+        the handle must not be evaluated afterwards."""
+        catalog = self.spark.catalog
+        for view in (self._seg_view, self._dm_view):
+            catalog.dropTempView(view)
+        for bc in [self._dead_bc, *self._scope_bcs.values()]:
+            if bc is not None:
+                bc.unpersist()
+        self._dead_bc = None
+        self._scope_bcs.clear()
+
+    def __enter__(self) -> "SegmentIndex":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
 
     def dead_broadcast(self):
         """Tombstones translated to shard-local ordinals and memoized as a
@@ -941,45 +982,42 @@ class SegmentIndex:
         join form keeps the whole query one lazy plan."""
         return F.broadcast(df).join(self._dm, ["shard", "lid"])
 
-    def idf_map(self, terms: list[str]) -> dict[str, float]:
-        """idf for the given terms (absent term => absent key). Driver-side
-        memoized: repeated query terms never re-launch the lookup job. The
-        underlying scan is partition/row-group pruned — never a full
-        dictionary read."""
-        missing = [t for t in terms if t not in self._idf_cache]
+    def term_info(self, terms: list[str]) -> dict[str, tuple[int, float]]:
+        """(df, idf) for the given terms (absent term => absent key).
+        Driver-side memoized: repeated query terms never re-launch the
+        lookup job, and the shard kernels read idf from their closure, so
+        no per-query plan joins or scans the term dictionary. A miss is
+        one small job over the term-sorted, row-group-pruned dictionary."""
+        missing = [t for t in dict.fromkeys(terms) if t not in self._term_cache]
         if missing:
             rows = (
                 self.term_stats.filter(F.col("term").isin(missing))
-                .select("term", "idf")
+                .select("term", "df", "idf")
                 .collect()
             )
-            found = {r["term"]: float(r["idf"]) for r in rows}
+            found = {r["term"]: (int(r["df"]), float(r["idf"])) for r in rows}
             for t in missing:
-                self._idf_cache[t] = found.get(t)
-        return {t: v for t in terms if (v := self._idf_cache[t]) is not None}
+                self._term_cache[t] = found.get(t)
+        return {t: v for t in terms if (v := self._term_cache[t]) is not None}
 
     def segments_for(self, terms: list[str]) -> DataFrame:
-        buckets = sorted({bucket_of(t, self.n_buckets) for t in terms})
-        return self.segments.filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-        )
+        """Segment rows of `terms`: bucket-directory pruned, term filter
+        pushed to the parquet scan. Empty `terms` gives an empty frame
+        with the segment schema (the shard kernels' input schema).
 
-    def segments_with_idf(self, terms: list[str]) -> DataFrame:
-        """Pruned segment rows with `idf` attached via a broadcast join of
-        the (filtered) term dictionary — lets a query run as ONE Spark job
-        with no separate idf-lookup action.
-
-        Built as ONE templated spark.sql call instead of the equivalent
-        filter/isin/join chain: same plan (bucket partition pruning, term
-        pushdown, broadcast idf), ~2× fewer driver-side py4j round trips
-        per point query (59.6 → 33.3 ms/call measured; r7 late)."""
+        One spark.sql call over the static view (the per-query plan is
+        built with few py4j round trips). Terms are bound as positional
+        parameters, never spliced into the SQL text; buckets are ints
+        computed here."""
+        terms = list(dict.fromkeys(terms))
+        if not terms:
+            return self.segments.where("false")
         buckets = sorted({bucket_of(t, self.n_buckets) for t in terms})
-        lits = ",".join("'" + t.replace("'", "''") + "'" for t in terms)
         return self.spark.sql(
-            f"SELECT /*+ BROADCAST(t) */ s.*, t.idf FROM {self._seg_view} s "
-            f"JOIN {self._ts_view} t USING (term) "
-            f"WHERE s.bucket IN ({','.join(map(str, buckets))}) "
-            f"AND s.term IN ({lits})"
+            f"SELECT * FROM {self._seg_view} "
+            f"WHERE bucket IN ({','.join(map(str, buckets))}) "
+            f"AND term IN ({','.join('?' * len(terms))})",
+            args=terms,
         )
 
 

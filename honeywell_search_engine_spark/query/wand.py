@@ -1,17 +1,26 @@
 """BM25 top-k over encoded segments with block-max pruning.
 
-Distributed plan:
+Distributed plan of every Spark query entry point (``_shard_stage``):
 
-    term_stats lookup (≤12 rows, partition-pruned)      [driver]
+    (df, idf) of the query terms: driver memo, one      [driver; no job
+      small term_stats lookup job on a miss              on a memo hit]
     segments scan: bucket-dir pruning + term pushdown    [executors]
-    -> groupBy(shard).applyInPandas(shard kernel)        [executors,
-       one tiny group per shard: ≤ n_terms encoded rows] parallel]
+    -> repartition(n, shard), n sized to the scanned     [n Python tasks:
+       postings (1 below POSTINGS_PER_TASK)               1 for a point
+    -> groupBy(shard).applyInPandas(shard kernel),        query]
+       idf in the kernel closure
+    -> broadcast into the docmap rehydrate join
     -> global TakeOrderedAndProject(k, (-score, docid))  [k rows/shard]
+
+A point query is 3 Spark jobs on an idf-memo miss and 2 on a hit: the
+lookup, the scan + kernel stage feeding the broadcast, and the rehydrate
+join with its top-k.
 
 Because ``shard = pmod(docid, n_shards)`` every document's postings live in
 exactly one shard, so conjunctive evaluation is shard-local and the global
 top-k is the k-merge of per-shard top-k's — exact, no recall loss (tested
-rank-identical to both the naive Catalyst engine and the oracle).
+rank-identical to both the naive Catalyst engine and the oracle). One task
+may evaluate several shards' groups; the result does not depend on it.
 
 Shard kernel (numpy, per shard):
 
@@ -42,7 +51,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from honeywell_search_engine_spark.functions.analyzer import analyze_query
 from honeywell_search_engine_spark.index import codec
-from honeywell_search_engine_spark.index.segments import SegmentIndex
+from honeywell_search_engine_spark.index.segments import SegmentIndex, check_terms
 
 RESULT_SCHEMA = "docid long, score double"
 
@@ -1037,6 +1046,140 @@ def _shard_kernel_websearch_or(
     return _select_topk_with_ties(union.astype(np.int64), score, k)
 
 
+SHARD_SCHEMA = "shard int, lid long, score double"
+BATCH_SHARD_SCHEMA = "qid string, shard int, lid long, score double"
+BATCH_RESULT_SCHEMA = "qid string, rnk int, docid long, score double"
+
+# Postings one shard-kernel task should score before a second Python task
+# pays for itself: the per-task fixed CPU cost over the kernel's CPU cost
+# per posting, both measured on a 4-vCPU VM (Spark 4.1.2, local[4]):
+# - per-task fixed cost ~320 ms of VM CPU: an empty applyInPandas over
+#   three head terms' pruned segment rows cost 610-730 ms at 1 partition
+#   and 2890-3000 ms at 8. It is Python worker set-up per task
+#   (pyspark.worker.main) and the daemon's gc.collect() after it — not
+#   kernel work;
+# - kernel cost ~1.8 us of CPU per posting: the unpruned OR kernel (full
+#   decode + BM25 of every posting) over the perfbench corpus's 6 most
+#   frequent terms, 45k postings in 96 per-shard lists. Per-list overhead
+#   is included; longer lists cost less per posting, so this errs towards
+#   splitting early.
+# 320 ms / 1.8 us ~ 180k postings: every perfbench point query (sum of df
+# <= 23k) runs ONE kernel task.
+POSTINGS_PER_TASK = 180_000
+
+
+def _kernel_tasks(index: SegmentIndex, postings: int) -> int:
+    """Python tasks for a shard-kernel stage over `postings` postings:
+    ceil(postings / POSTINGS_PER_TASK), at least 1, at most one per shard
+    and one per core."""
+    cap = min(index.n_shards, index.spark.sparkContext.defaultParallelism)
+    return max(1, min(cap, -(-postings // POSTINGS_PER_TASK)))
+
+
+def _shard_stage(index: SegmentIndex, scan_terms: list[str], kernel,
+                 schema: str = SHARD_SCHEMA, scope_lids: DataFrame | None = None):
+    """The shard-kernel stage of every Spark query entry point: the pruned
+    segment rows of `scan_terms`, one pandas group per shard, and
+    ``kernel(shard, pdf, idf, dead)`` per group — ``kernel(shard, pdf,
+    idf, dead, scope_pdf)`` when `scope_lids` (shard, lid) is cogrouped in.
+
+    idf comes from the index's driver-side (df, idf) memo and rides the
+    kernel closure, so the plan carries no term-dictionary scan or join.
+    The stage runs in `_kernel_tasks` tasks sized to the scanned postings
+    (sum of df): its task count no longer follows the session-wide
+    spark.sql.shuffle.partitions, whose every extra task cost ~320 ms of
+    fixed Python-worker CPU on a point query. Both cogroup sides are
+    repartitioned to the same count, so they stay co-partitioned and no
+    further exchange appears."""
+    info = index.term_info(scan_terms)
+    idf = {t: v for t, (_n, v) in info.items()}
+    n = _kernel_tasks(index, sum(n for n, _v in info.values()))
+    dead_bc = index.dead_broadcast()
+
+    def dead_of(shard: int) -> np.ndarray:
+        return dead_bc.value.get(shard, _NO_DEAD) if dead_bc is not None else _NO_DEAD
+
+    groups = index.segments_for(scan_terms).repartition(n, "shard").groupBy("shard")
+    if scope_lids is None:
+        def run(key, pdf):  # no hints: applyInPandas warns on partial ones
+            shard = int(key[0])
+            return kernel(shard, pdf, idf, dead_of(shard))
+
+        return groups.applyInPandas(run, schema=schema)
+
+    def run_cogrouped(key, seg_pdf, scope_pdf):
+        shard = int(key[0])
+        return kernel(shard, seg_pdf, idf, dead_of(shard), scope_pdf)
+
+    scope_groups = scope_lids.repartition(n, "shard").groupBy("shard")
+    return groups.cogroup(scope_groups).applyInPandas(run_cogrouped, schema=schema)
+
+
+def _encoded_by_term(pdf: pd.DataFrame) -> dict:
+    """{term: EncodedList} of one shard's segment rows."""
+    return {r["term"]: _enc_from_row(r) for _, r in pdf.iterrows()}
+
+
+def _shard_frame(shard: int, res: list) -> pd.DataFrame:
+    """A kernel's [(lid, score)] as SHARD_SCHEMA rows."""
+    return pd.DataFrame(
+        {
+            "shard": [shard] * len(res),
+            "lid": [int(d) for d, _ in res],
+            "score": [float(s) for _, s in res],
+        }
+    )
+
+
+def _topk_tail(index: SegmentIndex, per_shard: DataFrame, k: int) -> DataFrame:
+    """Rehydrate lids -> global docids (the kernel output broadcasts into
+    the docmap join), then the exact global order (-score, docid) over the
+    per-shard top-k+ties. ONE templated spark.sql call for the whole tail
+    — the DataFrame-op chain cost ~35 ms of py4j round trips per point
+    query; identical plan (ORDER BY + LIMIT plans as
+    TakeOrderedAndProject)."""
+    return index.spark.sql(
+        "SELECT /*+ BROADCAST(p) */ dm.docid AS docid, p.score AS score "
+        "FROM {p} p JOIN " + index._dm_view + " dm "
+        "ON p.shard = dm.shard AND p.lid = dm.lid "
+        f"ORDER BY p.score DESC, dm.docid ASC LIMIT {int(k)}",
+        p=per_shard,
+    )
+
+
+def _batch_tail(index: SegmentIndex, per_shard: DataFrame, k: int) -> DataFrame:
+    """Rehydrate, then one per-query rank window: (qid, rnk, docid, score)."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
+    return (
+        index.rehydrate(per_shard)
+        .withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select("qid", "rnk", "docid", "score")
+        .orderBy("qid", "rnk")
+    )
+
+
+def _phrase_query(index: SegmentIndex, terms: list[str], k: int, slop: int,
+                  unordered: bool = False) -> DataFrame:
+    """Shared body of bm25_topk_phrase and bm25_topk_near_unordered:
+    `terms` in phrase order, repeats preserved."""
+    avgdl = index.stats.avgdl
+
+    def kernel(shard, pdf, idf, dead):
+        by_term = _encoded_by_term(pdf)
+        if any(t not in by_term for t in terms):
+            return _shard_frame(shard, [])
+        rows = [(t, by_term[t]) for t in terms]
+        return _shard_frame(
+            shard,
+            _shard_kernel_phrase(rows, idf, avgdl, k, dead, slop, unordered=unordered),
+        )
+
+    return _topk_tail(index, _shard_stage(index, sorted(set(terms)), kernel), k)
+
+
 def bm25_topk_phrase(
     index: SegmentIndex, phrase: str, k: int = 10, slop: int = 0
 ) -> DataFrame:
@@ -1045,43 +1188,11 @@ def bm25_topk_phrase(
     backend/migrations/003:32). Returns DataFrame(docid, score) by
     (-score, docid) — rank/score-identical to OracleIndex.search_phrase
     (tested)."""
-    spark = index.spark
     _aq, _tok, _sg = _analyzers_for(index)
     terms = _tok(phrase)
     if not terms:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    distinct = sorted(set(terms))
-    avgdl = index.stats.avgdl
-    dead_bc = index.dead_broadcast()
-    phrase_terms = list(terms)  # phrase order, repeats preserved
-
-    def run_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(key[0])
-        dead = dead_bc.value.get(shard, _NO_DEAD) if dead_bc is not None else _NO_DEAD
-        by_term = {r["term"]: _enc_from_row(r) for _, r in pdf.iterrows()}
-        idf_b = {r["term"]: float(r["idf"]) for _, r in pdf.iterrows()}
-        if any(t not in by_term for t in phrase_terms):
-            return pd.DataFrame({"shard": [], "lid": [], "score": []})
-        rows = [(t, by_term[t]) for t in phrase_terms]
-        res = _shard_kernel_phrase(rows, idf_b, avgdl, k, dead, slop)
-        return pd.DataFrame(
-            {
-                "shard": [shard] * len(res),
-                "lid": [int(d) for d, _ in res],
-                "score": [float(s) for _, s in res],
-            }
-        )
-
-    segs = index.segments_with_idf(distinct)
-    per_shard = segs.groupBy("shard").applyInPandas(
-        run_shard, schema="shard int, lid long, score double"
-    )
-    return (
-        index.rehydrate(per_shard)
-        .orderBy(F.desc("score"), F.asc("docid"))
-        .limit(k)
-        .select("docid", "score")
-    )
+        return index.spark.createDataFrame([], RESULT_SCHEMA)
+    return _phrase_query(index, terms, k, slop)
 
 
 def bm25_topk_near_unordered(
@@ -1097,7 +1208,6 @@ def bm25_topk_near_unordered(
     is the ordered m-term chain). Rank/score-identical to
     OracleIndex.search_near_unordered and ServingIndex.search_near_unordered
     (tested)."""
-    spark = index.spark
     _aq, _tok, _sg = _analyzers_for(index)
     terms = _tok(query)
     if len(terms) != 2 or terms[0] == terms[1]:
@@ -1106,39 +1216,7 @@ def bm25_topk_near_unordered(
             f"operator; got {terms!r} (use bm25_topk_phrase(slop) for the "
             "ordered chain)"
         )
-    avgdl = index.stats.avgdl
-    dead_bc = index.dead_broadcast()
-    pair = list(terms)
-
-    def run_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(key[0])
-        dead = dead_bc.value.get(shard, _NO_DEAD) if dead_bc is not None else _NO_DEAD
-        by_term = {r["term"]: _enc_from_row(r) for _, r in pdf.iterrows()}
-        idf_b = {r["term"]: float(r["idf"]) for _, r in pdf.iterrows()}
-        if any(t not in by_term for t in pair):
-            return pd.DataFrame({"shard": [], "lid": [], "score": []})
-        rows = [(t, by_term[t]) for t in pair]
-        res = _shard_kernel_phrase(
-            rows, idf_b, avgdl, k, dead, slop=dist, unordered=True
-        )
-        return pd.DataFrame(
-            {
-                "shard": [shard] * len(res),
-                "lid": [int(d) for d, _ in res],
-                "score": [float(s) for _, s in res],
-            }
-        )
-
-    segs = index.segments_with_idf(sorted(set(terms)))
-    per_shard = segs.groupBy("shard").applyInPandas(
-        run_shard, schema="shard int, lid long, score double"
-    )
-    return (
-        index.rehydrate(per_shard)
-        .orderBy(F.desc("score"), F.asc("docid"))
-        .limit(k)
-        .select("docid", "score")
-    )
+    return _phrase_query(index, terms, k, dist, unordered=True)
 
 
 def bm25_topk_wand(
@@ -1158,6 +1236,8 @@ def bm25_topk_wand(
     positive group from the websearch parser) and skips query analysis —
     Porter is not idempotent ('university'→'univers'→'univ'), so a caller
     holding stemmed terms must NOT round-trip them through the analyzer.
+    `pre_analyzed` and `exclude_terms` must be in the analyzer's
+    [a-z0-9]+ alphabet (ValueError otherwise).
 
     `allowed_docids` restricts the result to a caller-supplied global-docid
     scope (the reference limits every search to the caller's own documents,
@@ -1168,31 +1248,33 @@ def bm25_topk_wand(
     list above the threshold or any DataFrame of docids — is translated
     to (shard, lid) by a docmap join and COGROUPED with the segment rows,
     so it never materializes on the driver (a 10^8-id caller scope at
-    100 TB stays distributed end to end).
+    100 TB stays distributed end to end). A DataFrame scope must belong to
+    the SparkContext of `index.spark` (the index's isolated session shares
+    the caller's context).
 
-    Single Spark job: idf rides into the shard kernels via a broadcast
-    join of the (pruned) term_stats — no separate driver-side idf lookup
-    job. AND semantics stay exact when a query term is unknown globally:
-    no shard can then hold all terms, so every kernel returns empty."""
+    Spark work per query: at most 3 jobs — the idf lookup (none when every
+    term is in the index's memo), the segment scan + shard-kernel stage
+    (one task below POSTINGS_PER_TASK postings) whose output broadcasts,
+    and the docmap rehydrate join with its TakeOrderedAndProject. AND
+    semantics stay exact when a query term is unknown globally: no shard
+    can then hold all terms, so every kernel returns empty."""
     spark = index.spark
     if pre_analyzed is not None:
-        terms = list(dict.fromkeys(pre_analyzed))
+        terms = list(dict.fromkeys(check_terms(pre_analyzed)))
     else:
         _aq, _tok, _sg = _analyzers_for(index)
         terms = _aq(query)
+    neg_terms = sorted(set(check_terms(exclude_terms or [])))
     if not terms:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    neg_terms: list[str] = []
-    if exclude_terms:
+    if neg_terms:
         if mode != "and":
             raise ValueError("exclude_terms (websearch '-term') is AND-only")
-        neg_terms = sorted(set(exclude_terms))
         if set(terms) & set(neg_terms):
             return spark.createDataFrame([], RESULT_SCHEMA)  # contradiction
     n_terms = len(terms)
     avgdl = index.stats.avgdl
     mode_and = mode == "and"
-    dead_bc = index.dead_broadcast()  # broadcast {shard: lid array} (or None)
     scope_df = scope_bc = None
     if allowed_docids is not None:
         if isinstance(allowed_docids, DataFrame):
@@ -1203,88 +1285,43 @@ def bm25_topk_wand(
             )
         else:
             scope_bc = index.scope_broadcast(allowed_docids)
-    scoped = allowed_docids is not None
-
     neg_set = set(neg_terms)
 
-    def eval_shard(shard: int, pdf: pd.DataFrame, scope) -> pd.DataFrame:
-        dead = dead_bc.value.get(shard, _NO_DEAD) if dead_bc is not None else _NO_DEAD
-        all_rows = [(r["term"], _enc_from_row(r)) for _, r in pdf.iterrows()]
-        rows = [tr for tr in all_rows if tr[0] not in neg_set]
-        neg_rows = [tr for tr in all_rows if tr[0] in neg_set]
-        idf_b = {r["term"]: float(r["idf"]) for _, r in pdf.iterrows()}
-        if mode_and:
-            if len(rows) < n_terms:
-                return pd.DataFrame({"shard": [], "lid": [], "score": []})
-            if n_terms == 1:
-                res = _topk_single(
-                    rows[0][1], idf_b[rows[0][0]], avgdl, k, dead, scope,
-                    neg_rows,
-                )
-            else:
-                res = _shard_kernel_and(
-                    rows, idf_b, avgdl, k, dead, scope=scope, neg_rows=neg_rows
-                )
+    def kernel(shard, pdf, idf, dead, scope_pdf=None):
+        if scope_pdf is not None:
+            # cogroup keys are the UNION of both sides' shards: a shard
+            # with postings but no scoped docs (or vice versa) is empty
+            scope = np.sort(scope_pdf["lid"].to_numpy().astype(np.int64))
+            if len(pdf) == 0 or scope.size == 0:
+                return _shard_frame(shard, [])
         else:
-            res = _shard_kernel_or(rows, idf_b, avgdl, k, dead, scope=scope)
-        if not res:
-            return pd.DataFrame({"shard": [], "lid": [], "score": []})
-        return pd.DataFrame(
-            {
-                "shard": [shard] * len(res),
-                "lid": [int(d) for d, _ in res],
-                "score": [float(s) for _, s in res],
-            }
-        )
+            scope = scope_bc.value.get(shard, _NO_DEAD) if scope_bc is not None else None
+        by_term = _encoded_by_term(pdf)
+        rows = [(t, e) for t, e in by_term.items() if t not in neg_set]
+        neg_rows = [(t, e) for t, e in by_term.items() if t in neg_set]
+        if not mode_and:
+            res = _shard_kernel_or(rows, idf, avgdl, k, dead, scope=scope)
+        elif len(rows) < n_terms:
+            res = []
+        elif n_terms == 1:
+            res = _topk_single(
+                rows[0][1], idf[rows[0][0]], avgdl, k, dead, scope, neg_rows
+            )
+        else:
+            res = _shard_kernel_and(
+                rows, idf, avgdl, k, dead, scope=scope, neg_rows=neg_rows
+            )
+        return _shard_frame(shard, res)
 
-    def run_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(key[0])
-        scope = (
-            scope_bc.value.get(shard, _NO_DEAD) if scope_bc is not None
-            else (_NO_DEAD if scoped else None)
-        )
-        return eval_shard(shard, pdf, scope)
-
-    def run_shard_cogrouped(key, seg_pdf, scope_pdf) -> pd.DataFrame:
-        # cogroup keys are the UNION of both sides' shards: a shard with
-        # postings but no scoped docs (or vice versa) returns empty
-        shard = int(key[0])
-        scope = np.sort(scope_pdf["lid"].to_numpy().astype(np.int64))
-        if len(seg_pdf) == 0 or scope.size == 0:
-            return pd.DataFrame({"shard": [], "lid": [], "score": []})
-        return eval_shard(shard, seg_pdf, scope)
-
-    segs = index.segments_with_idf(terms + neg_terms)
+    scope_lids = None
     if scope_df is not None:
         scope_lids = index.docmap.join(
             scope_df.select(F.col("docid").cast("long").alias("docid")),
             "docid",
             "left_semi",
         ).select("shard", F.col("local_id").alias("lid"))
-        per_shard = (
-            segs.groupBy("shard")
-            .cogroup(scope_lids.groupBy("shard"))
-            .applyInPandas(
-                run_shard_cogrouped, schema="shard int, lid long, score double"
-            )
-        )
-    else:
-        per_shard = segs.groupBy("shard").applyInPandas(
-            run_shard, schema="shard int, lid long, score double"
-        )
-    # rehydrate lids -> global docids (docmap broadcast-join), then the
-    # exact global order: (-score, docid) over per-shard top-k+ties.
-    # ONE templated spark.sql call for the whole tail — the DataFrame-op
-    # chain cost ~35 ms of py4j round trips per point query (r7 late);
-    # identical plan (kernel output broadcasts, ORDER BY + LIMIT plans
-    # as TakeOrderedAndProject)
-    return index.spark.sql(
-        "SELECT /*+ BROADCAST(p) */ dm.docid AS docid, p.score AS score "
-        "FROM {p} p JOIN " + index._dm_view + " dm "
-        "ON p.shard = dm.shard AND p.lid = dm.lid "
-        f"ORDER BY p.score DESC, dm.docid ASC LIMIT {int(k)}",
-        p=per_shard,
-    )
+    per_shard = _shard_stage(index, terms + neg_terms, kernel, scope_lids=scope_lids)
+    return _topk_tail(index, per_shard, k)
 
 
 def bm25_topk_websearch(
@@ -1303,45 +1340,33 @@ def bm25_topk_websearch(
     OracleIndex.search_websearch (tested)."""
     from honeywell_search_engine_spark.functions.analyzer import parse_websearch_query
 
-    spark = index.spark
     _aq, _tok, _sg = _analyzers_for(index)
     groups = _sg(parse_websearch_query(query))
     if not groups:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-
+        return index.spark.createDataFrame([], RESULT_SCHEMA)
     avgdl = index.stats.avgdl
-    dead_bc = index.dead_broadcast()
 
     if len(groups) == 1 and not groups[0][3]:
         all_pos, neg, phrases, _ = groups[0]
         if not phrases:
             # all_pos/neg are already index-analyzed (stemmed if the index
             # is) — pass them through pre_analyzed so they're not re-stemmed
-            # (Porter is not idempotent; round-4 advice, wand.py:1090)
+            # (Porter is not idempotent)
             return bm25_topk_wand(
                 index, query, k, exclude_terms=neg, pre_analyzed=all_pos
             )
         neg_set = set(neg)
         n_pos = len(all_pos)
 
-        def run_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            shard = int(key[0])
-            dead = dead_bc.value.get(shard, _NO_DEAD) if dead_bc is not None else _NO_DEAD
-            all_rows = [(r["term"], _enc_from_row(r)) for _, r in pdf.iterrows()]
-            idf_b = {r["term"]: float(r["idf"]) for _, r in pdf.iterrows()}
-            pos_rows = [tr for tr in all_rows if tr[0] not in neg_set]
-            neg_rows = [tr for tr in all_rows if tr[0] in neg_set]
+        def kernel(shard, pdf, idf, dead):
+            by_term = _encoded_by_term(pdf)
+            pos_rows = [(t, e) for t, e in by_term.items() if t not in neg_set]
+            neg_rows = [(t, e) for t, e in by_term.items() if t in neg_set]
             if len(pos_rows) < n_pos:
-                return pd.DataFrame({"shard": [], "lid": [], "score": []})
-            res = _shard_kernel_websearch(
-                pos_rows, phrases, neg_rows, idf_b, avgdl, k, dead
-            )
-            return pd.DataFrame(
-                {
-                    "shard": [shard] * len(res),
-                    "lid": [int(d) for d, _ in res],
-                    "score": [float(s) for _, s in res],
-                }
+                return _shard_frame(shard, [])
+            return _shard_frame(
+                shard,
+                _shard_kernel_websearch(pos_rows, phrases, neg_rows, idf, avgdl, k, dead),
             )
 
         scan_terms = all_pos + neg
@@ -1354,48 +1379,69 @@ def bm25_topk_websearch(
             | {t for g in groups for ph in g[3] for t in ph}
         )
 
-        def run_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            shard = int(key[0])
-            dead = dead_bc.value.get(shard, _NO_DEAD) if dead_bc is not None else _NO_DEAD
-            by_term = {r["term"]: _enc_from_row(r) for _, r in pdf.iterrows()}
-            idf_b = {r["term"]: float(r["idf"]) for _, r in pdf.iterrows()}
-            res = _shard_kernel_websearch_or(
-                groups, by_term, idf_b, avgdl, k, dead
-            )
-            return pd.DataFrame(
-                {
-                    "shard": [shard] * len(res),
-                    "lid": [int(d) for d, _ in res],
-                    "score": [float(s) for _, s in res],
-                }
+        def kernel(shard, pdf, idf, dead):
+            return _shard_frame(
+                shard,
+                _shard_kernel_websearch_or(
+                    groups, _encoded_by_term(pdf), idf, avgdl, k, dead
+                ),
             )
 
-    segs = index.segments_with_idf(scan_terms)
-    per_shard = segs.groupBy("shard").applyInPandas(
-        run_shard, schema="shard int, lid long, score double"
+    return _topk_tail(index, _shard_stage(index, scan_terms, kernel), k)
+
+
+def _memo_by_term(pdf: pd.DataFrame, use_count: dict, need_pos=frozenset()) -> dict:
+    """{term: EncodedList} for a batch kernel: terms shared by several
+    queries (the Zipf head of a query log) decode ONCE per task as a
+    MemoList — every query after the first runs decode-free with
+    block-max pruning intact; single-query terms stay encoded (selective
+    decode only). Positions decode only for terms in `need_pos`."""
+    by_term = {}
+    for t, enc in _encoded_by_term(pdf).items():
+        if use_count.get(t, 0) > 1:
+            enc = codec.MemoList(
+                enc,
+                codec.decode_postings(
+                    enc, with_positions=t in need_pos, flat_positions=True
+                ),
+            )
+        by_term[t] = enc
+    return by_term
+
+
+def _batch_frame(shard: int, results) -> pd.DataFrame:
+    """[(qid, [(lid, score)])] as BATCH_SHARD_SCHEMA rows."""
+    out_q, out_d, out_s = [], [], []
+    for qid, res in results:
+        for d, s in res:
+            out_q.append(qid)
+            out_d.append(int(d))
+            out_s.append(float(s))
+    return pd.DataFrame(
+        {"qid": out_q, "shard": [shard] * len(out_q), "lid": out_d, "score": out_s}
     )
-    return (
-        index.rehydrate(per_shard)
-        .orderBy(F.desc("score"), F.asc("docid"))
-        .limit(k)
-        .select("docid", "score")
-    )
+
+
+def _use_count(term_sets) -> dict:
+    """Number of queries each term occurs in."""
+    use_count: dict[str, int] = {}
+    for ts in term_sets:
+        for t in set(ts):
+            use_count[t] = use_count.get(t, 0) + 1
+    return use_count
 
 
 def bm25_topk_websearch_batch(
     index: SegmentIndex, queries: dict[str, str], k: int = 10
 ) -> DataFrame:
     """A whole batch of websearch queries (plain AND, '"quoted"' groups,
-    '-term' negation, freely mixed) in ONE Spark job: one pruned segment
-    scan over the union of every query's positive AND negated terms, one
-    applyInPandas over shards where each kernel answers every query it
-    can serve, one per-query rank window. Returns (qid, rnk, docid,
-    score) — identical to per-query bm25_topk_websearch (tested)."""
-    from pyspark.sql import Window
-
+    '-term' negation, freely mixed) in ONE shard-kernel stage: one pruned
+    segment scan over the union of every query's positive AND negated
+    terms, one applyInPandas over shards where each kernel answers every
+    query it can serve, one per-query rank window. Returns (qid, rnk,
+    docid, score) — identical to per-query bm25_topk_websearch (tested)."""
     from honeywell_search_engine_spark.functions.analyzer import parse_websearch_query
 
-    spark = index.spark
     _aq, _tok, _sg = _analyzers_for(index)
     parsed: dict[str, list] = {}
     for qid, q in queries.items():
@@ -1411,11 +1457,9 @@ def bm25_topk_websearch_batch(
         }
     )
     if not scan_terms:
-        return spark.createDataFrame([], BATCH_RESULT_SCHEMA)
+        return index.spark.createDataFrame([], BATCH_RESULT_SCHEMA)
     avgdl = index.stats.avgdl
-    dead_bc = index.dead_broadcast()
-
-    use_count: dict[str, int] = {}
+    q_terms = []
     need_pos: set = set()
     for groups in parsed.values():
         q_t = set()
@@ -1424,227 +1468,116 @@ def bm25_topk_websearch_batch(
             for ph in list(g[2]) + list(g[3]):
                 q_t |= set(ph)
                 need_pos |= set(ph)
-        for t in q_t:
-            use_count[t] = use_count.get(t, 0) + 1
+        q_terms.append(q_t)
+    use_count = _use_count(q_terms)
 
-    def run_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(key[0])
-        dead = dead_bc.value.get(shard, _NO_DEAD) if dead_bc is not None else _NO_DEAD
-        # shared-term memoization: see bm25_topk_wand_batch — one decode
-        # per task (positions only where some phrase needs them)
-        by_term = {}
-        for _, r in pdf.iterrows():
-            enc = _enc_from_row(r)
-            if use_count.get(r["term"], 0) > 1:
-                enc = codec.MemoList(
-                    enc,
-                    codec.decode_postings(
-                        enc,
-                        with_positions=r["term"] in need_pos,
-                        flat_positions=True,
-                    ),
+    def answer(groups, by_term, idf, dead):
+        if len(groups) == 1 and not groups[0][3]:
+            all_pos, neg, phrases, _ = groups[0]
+            pos_rows = [(t, by_term[t]) for t in all_pos if t in by_term]
+            if len(pos_rows) < len(all_pos):
+                return []  # a required term absent in this shard
+            neg_rows = [(t, by_term[t]) for t in neg if t in by_term]
+            if phrases:
+                return _shard_kernel_websearch(
+                    pos_rows, phrases, neg_rows, idf, avgdl, k, dead
                 )
-            by_term[r["term"]] = enc
-        idf_b = {r["term"]: float(r["idf"]) for _, r in pdf.iterrows()}
-        out_q, out_d, out_s = [], [], []
-        for qid, groups in parsed.items():
-            if len(groups) == 1 and not groups[0][3]:
-                all_pos, neg, phrases, _ = groups[0]
-                pos_rows = [(t, by_term[t]) for t in all_pos if t in by_term]
-                if len(pos_rows) < len(all_pos):
-                    continue  # a required term absent in this shard
-                neg_rows = [(t, by_term[t]) for t in neg if t in by_term]
-                if phrases:
-                    res = _shard_kernel_websearch(
-                        pos_rows, phrases, neg_rows, idf_b, avgdl, k, dead
-                    )
-                elif len(all_pos) == 1:
-                    res = _topk_single(
-                        pos_rows[0][1], idf_b[pos_rows[0][0]], avgdl, k, dead,
-                        None, neg_rows,
-                    )
-                else:
-                    res = _shard_kernel_and(
-                        pos_rows, idf_b, avgdl, k, dead, neg_rows=neg_rows
-                    )
-            else:  # OR groups / negated phrases: group-union kernel
-                res = _shard_kernel_websearch_or(
-                    groups, by_term, idf_b, avgdl, k, dead
+            if len(all_pos) == 1:
+                return _topk_single(
+                    pos_rows[0][1], idf[pos_rows[0][0]], avgdl, k, dead,
+                    None, neg_rows,
                 )
-            for d, s in res:
-                out_q.append(qid)
-                out_d.append(int(d))
-                out_s.append(float(s))
-        return pd.DataFrame(
-            {"qid": out_q, "shard": [shard] * len(out_q), "lid": out_d, "score": out_s}
+            return _shard_kernel_and(pos_rows, idf, avgdl, k, dead, neg_rows=neg_rows)
+        # OR groups / negated phrases: group-union kernel
+        return _shard_kernel_websearch_or(groups, by_term, idf, avgdl, k, dead)
+
+    def kernel(shard, pdf, idf, dead):
+        by_term = _memo_by_term(pdf, use_count, need_pos)
+        return _batch_frame(
+            shard,
+            ((qid, answer(groups, by_term, idf, dead)) for qid, groups in parsed.items()),
         )
 
-    segs = index.segments_with_idf(scan_terms)
-    per_shard = segs.groupBy("shard").applyInPandas(
-        run_shard, schema="qid string, shard int, lid long, score double"
-    )
-    hydrated = index.rehydrate(per_shard)
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
-    return (
-        hydrated.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "rnk", "docid", "score")
-        .orderBy("qid", "rnk")
-    )
+    per_shard = _shard_stage(index, scan_terms, kernel, schema=BATCH_SHARD_SCHEMA)
+    return _batch_tail(index, per_shard, k)
 
 
 def bm25_topk_phrase_batch(
     index: SegmentIndex, queries: dict[str, str], k: int = 10, slop: int = 0
 ) -> DataFrame:
-    """Evaluate a batch of phrase/NEAR queries in ONE Spark job (same
-    amortization as bm25_topk_wand_batch: one pruned positional segment
-    scan over the union of all phrases' terms, per-shard kernels answer
-    every phrase they can serve, one rank window). Returns
+    """Evaluate a batch of phrase/NEAR queries in ONE shard-kernel stage
+    (same amortization as bm25_topk_wand_batch: one pruned positional
+    segment scan over the union of all phrases' terms, per-shard kernels
+    answer every phrase they can serve, one rank window). Returns
     (qid, rnk, docid, score) — identical to per-query bm25_topk_phrase."""
-    from pyspark.sql import Window
-
-    spark = index.spark
     _aq, _tok, _sg = _analyzers_for(index)  # stemmed index -> stemmed queries
     q_terms = {qid: _tok(q) for qid, q in queries.items()}
     live = {qid: ts for qid, ts in q_terms.items() if ts}
     scan_terms = sorted({t for ts in live.values() for t in ts})
     if not scan_terms:
-        return spark.createDataFrame([], BATCH_RESULT_SCHEMA)
+        return index.spark.createDataFrame([], BATCH_RESULT_SCHEMA)
     avgdl = index.stats.avgdl
-    dead_bc = index.dead_broadcast()
+    use_count = _use_count(live.values())
+    need_pos = frozenset(scan_terms)
 
-    use_count: dict[str, int] = {}
-    for ts in live.values():
-        for t in set(ts):
-            use_count[t] = use_count.get(t, 0) + 1
-
-    def run_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(key[0])
-        dead = dead_bc.value.get(shard, _NO_DEAD) if dead_bc is not None else _NO_DEAD
-        # shared-term memoization (positions included): see
-        # bm25_topk_wand_batch — one decode per task, not per query
-        by_term = {}
-        for _, r in pdf.iterrows():
-            enc = _enc_from_row(r)
-            if use_count.get(r["term"], 0) > 1:
-                enc = codec.MemoList(
-                    enc,
-                    codec.decode_postings(
-                        enc, with_positions=True, flat_positions=True
-                    ),
-                )
-            by_term[r["term"]] = enc
-        idf_b = {r["term"]: float(r["idf"]) for _, r in pdf.iterrows()}
-        out_q, out_d, out_s = [], [], []
-        for qid, ts in live.items():
-            if any(t not in by_term for t in ts):
-                continue
-            res = _shard_kernel_phrase(
-                [(t, by_term[t]) for t in ts], idf_b, avgdl, k, dead, slop
-            )
-            for d, s in res:
-                out_q.append(qid)
-                out_d.append(int(d))
-                out_s.append(float(s))
-        return pd.DataFrame(
-            {"qid": out_q, "shard": [shard] * len(out_q), "lid": out_d, "score": out_s}
+    def kernel(shard, pdf, idf, dead):
+        by_term = _memo_by_term(pdf, use_count, need_pos)
+        return _batch_frame(
+            shard,
+            (
+                (qid, _shard_kernel_phrase(
+                    [(t, by_term[t]) for t in ts], idf, avgdl, k, dead, slop
+                ))
+                for qid, ts in live.items()
+                if all(t in by_term for t in ts)
+            ),
         )
 
-    segs = index.segments_with_idf(scan_terms)
-    per_shard = segs.groupBy("shard").applyInPandas(
-        run_shard, schema="qid string, shard int, lid long, score double"
-    )
-    hydrated = index.rehydrate(per_shard)
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
-    return (
-        hydrated.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "rnk", "docid", "score")
-        .orderBy("qid", "rnk")
-    )
-
-
-BATCH_RESULT_SCHEMA = "qid string, rnk int, docid long, score double"
+    per_shard = _shard_stage(index, scan_terms, kernel, schema=BATCH_SHARD_SCHEMA)
+    return _batch_tail(index, per_shard, k)
 
 
 def bm25_topk_wand_batch(
     index: SegmentIndex, queries: dict[str, str], k: int = 10, mode: str = "and"
 ) -> DataFrame:
-    """Evaluate a whole query batch in ONE Spark job.
+    """Evaluate a whole query batch in ONE shard-kernel stage.
 
-    Per-query jobs pay ~0.3-0.5 s of scheduling each; a search engine's
-    natural unit is the query *stream* (the reference's design target is
-    100 q/s, PIPELINE.md:350). Here: one pruned segment scan over the
-    union of all queries' terms, one applyInPandas over shards where each
-    shard kernel answers every query it can serve, one final per-query
-    rank window over <= n_queries * n_shards * k tiny rows.
+    Per-query Spark work pays ~0.3-0.5 s of scheduling each; a search
+    engine's natural unit is the query *stream* (the reference's design
+    target is 100 q/s, PIPELINE.md:350). Here: one pruned segment scan
+    over the union of all queries' terms, one applyInPandas over shards
+    where each shard kernel answers every query it can serve, one final
+    per-query rank window over <= n_queries * n_shards * k tiny rows.
 
     Returns DataFrame(qid, rnk, docid, score), rank per query by
     (-score, docid) — identical results to per-query bm25_topk_wand
     (tested)."""
-    from pyspark.sql import Window
-
-    spark = index.spark
     _aq, _tok, _sg = _analyzers_for(index)  # stemmed index -> stemmed queries
     q_terms = {qid: _aq(q) for qid, q in queries.items()}
     live_b = {qid: ts for qid, ts in q_terms.items() if ts}
     scan_terms = sorted({t for ts in live_b.values() for t in ts})
     if not scan_terms:
-        return spark.createDataFrame([], BATCH_RESULT_SCHEMA)
+        return index.spark.createDataFrame([], BATCH_RESULT_SCHEMA)
     mode_and = mode == "and"
     avgdl = index.stats.avgdl
-    dead_bc = index.dead_broadcast()
+    use_count = _use_count(live_b.values())
 
-    use_count: dict[str, int] = {}
-    for ts in live_b.values():
-        for t in set(ts):
-            use_count[t] = use_count.get(t, 0) + 1
+    def answer(ts, by_term, idf, dead):
+        rows = [(t, by_term[t]) for t in ts if t in by_term]
+        if not mode_and:
+            return _shard_kernel_or(rows, idf, avgdl, k, dead) if rows else []
+        if len(rows) < len(ts):
+            return []  # some term absent in this shard => no AND hit here
+        if len(ts) == 1:
+            return _topk_single(rows[0][1], idf[rows[0][0]], avgdl, k, dead)
+        return _shard_kernel_and(rows, idf, avgdl, k, dead)
 
-    def run_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(key[0])
-        dead = dead_bc.value.get(shard, _NO_DEAD) if dead_bc is not None else _NO_DEAD
-        # terms shared by several queries (the Zipf head of a query log)
-        # decode ONCE per task as a MemoList — every query after the
-        # first runs decode-free with block-max pruning intact;
-        # single-query terms stay encoded (selective decode only)
-        by_term = {}
-        for _, r in pdf.iterrows():
-            enc = _enc_from_row(r)
-            if use_count.get(r["term"], 0) > 1:
-                enc = codec.MemoList(enc, codec.decode_postings(enc))
-            by_term[r["term"]] = enc
-        idf_b = {r["term"]: float(r["idf"]) for _, r in pdf.iterrows()}
-        out_q, out_d, out_s = [], [], []
-        for qid, ts in live_b.items():
-            rows = [(t, by_term[t]) for t in ts if t in by_term]
-            if mode_and:
-                if len(rows) < len(ts):
-                    continue  # some term absent in this shard => no AND hit here
-                if len(ts) == 1:
-                    res = _topk_single(rows[0][1], idf_b[rows[0][0]], avgdl, k, dead)
-                else:
-                    res = _shard_kernel_and(rows, idf_b, avgdl, k, dead)
-            else:
-                if not rows:
-                    continue
-                res = _shard_kernel_or(rows, idf_b, avgdl, k, dead)
-            for d, s in res:
-                out_q.append(qid)
-                out_d.append(int(d))
-                out_s.append(float(s))
-        return pd.DataFrame(
-            {"qid": out_q, "shard": [shard] * len(out_q), "lid": out_d, "score": out_s}
+    def kernel(shard, pdf, idf, dead):
+        by_term = _memo_by_term(pdf, use_count)
+        return _batch_frame(
+            shard,
+            ((qid, answer(ts, by_term, idf, dead)) for qid, ts in live_b.items()),
         )
 
-    segs = index.segments_with_idf(scan_terms)
-    per_shard = segs.groupBy("shard").applyInPandas(
-        run_shard, schema="qid string, shard int, lid long, score double"
-    )
-    hydrated = index.rehydrate(per_shard)
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
-    return (
-        hydrated.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "rnk", "docid", "score")
-        .orderBy("qid", "rnk")
-    )
+    per_shard = _shard_stage(index, scan_terms, kernel, schema=BATCH_SHARD_SCHEMA)
+    return _batch_tail(index, per_shard, k)

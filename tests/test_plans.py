@@ -227,16 +227,22 @@ def test_segment_index_point_query_session(spark, seg_index):
 def test_wand_sql_tail_plan_shape(seg_index):
     """The SQL-built wand query must keep the plan the DataFrame chain
     produced: partition-pruned segment scan with the term filter pushed,
-    broadcast idf join, and a TakeOrderedAndProject tail (never a global
-    Sort) — the py4j trim is a construction change, not a plan change."""
+    broadcast rehydrate join, and a TakeOrderedAndProject tail — never a
+    global Sort anywhere in the plan (the kernel stage's shard-local
+    `Sort [shard ...], false` is the only Sort allowed). idf rides the
+    kernel closure, so the term dictionary is not scanned or joined."""
+    import re
+
     from honeywell_search_engine_spark.query.wand import bm25_topk_wand
 
     df = bm25_topk_wand(seg_index, "data search", k=10)
     plan = physical_plan(df)
     assert "TakeOrderedAndProject" in plan
     assert "BroadcastHashJoin" in plan
-    assert plan.count("Sort ") == 0 or "Sort [" not in plan.split(
-        "TakeOrderedAndProject"
-    )[0]
+    sorts = re.findall(r"Sort \[([^\]]*)\], (true|false)", plan)
+    assert sorts, plan  # the kernel stage's group sort
+    assert all(g == "false" for _, g in sorts), plan  # no global Sort
+    assert all(keys.startswith("shard#") for keys, _ in sorts), plan
+    assert "term_stats" not in plan
     scan_part = plan.split("PushedFilters", 1)[1][:200] if "PushedFilters" in plan else ""
     assert "term" in scan_part
