@@ -15,8 +15,12 @@ The docmap table (``{index}/docmap``) is the docvalues/forward index:
   (maintenance.merge_deltas), so existing posting lists never shift.
   Appended lids break the "lid order == docid order" invariant, which is
   why the query kernels return per-shard top-k WITH boundary-score ties
-  and the final global sort tie-breaks on the rehydrated global docid —
-  exact under any lid assignment (query/wand.py).
+  and the final global sort tie-breaks on the global docid — exact under
+  any lid assignment (query/wand.py).
+- No query plan scans it: each shard-kernel task looks its top-k lids up
+  with a pyarrow read that pushes ``shard = s AND local_id IN lids`` into
+  row-group statistics (segments.docids_of_lids). The files are not
+  clustered by (shard, local_id), so that read prunes few row groups.
 
 Scalable dense numbering (no sampling, no global sort, no straggler):
 sha docids are uniform on [0, 2^60), so fixed bit-range buckets

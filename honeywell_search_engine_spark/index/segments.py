@@ -838,26 +838,65 @@ def check_terms(terms) -> list[str]:
     return list(terms)
 
 
+def _snapshot_files(df: DataFrame) -> list[str]:
+    """Local paths of the parquet files `df` reads: the listing Spark took
+    when `df` was created. pyarrow reads over these lists see the same
+    index state as the DataFrames they were taken from, even after a
+    compact or merge swaps the directories."""
+    from urllib.parse import unquote, urlparse
+
+    return sorted(unquote(urlparse(u).path) for u in df.inputFiles())
+
+
+def docids_of_lids(docmap_files: list[str], shard: int, lids: np.ndarray) -> np.ndarray:
+    """Global docids of one shard's local ids, aligned with `lids`: the
+    docvalues lookup a shard-kernel task runs on its own output. A pyarrow
+    read of `docmap_files` (a handle's snapshot) with ``shard = s AND
+    local_id IN lids`` pushed into the row-group statistics; no Spark
+    scan. Row groups prune only as far as the docmap layout clusters
+    (shard, local_id)."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    want = np.unique(lids)
+    tbl = ds.dataset(docmap_files, format="parquet").to_table(
+        columns=["local_id", "docid"],
+        filter=(ds.field("shard") == shard)
+        & ds.field("local_id").isin(pa.array(want, pa.int64())),
+    )
+    got = tbl.column("local_id").to_numpy()
+    if got.size != want.size:
+        raise ValueError(
+            f"docmap has {got.size} of {want.size} local ids asked for in shard {shard}"
+        )
+    order = np.argsort(got)
+    docids = tbl.column("docid").to_numpy()[order]
+    return docids[np.searchsorted(got[order], lids)]
+
+
 class SegmentIndex:
     """Reader handle over a built segment index directory.
 
-    Holds temp views and memoized broadcasts; ``close()`` (or a ``with``
-    block) releases them."""
+    Holds a temp view and memoized broadcasts; ``close()`` (or a ``with``
+    block) releases them. The handle is a snapshot: its DataFrames and
+    its pyarrow reads (idf on the driver, docids in the kernel tasks) all
+    use the file listings taken when it opened."""
 
     def __init__(self, spark: SparkSession, path: str, isolate_session: bool = True):
         # Point-query session: same SparkContext, isolated SQLConf, AQE
-        # off. A point query is 3 Spark jobs on an idf-memo miss and 2 on
-        # a hit: the idf lookup (hit: none), the segment scan feeding the
-        # shard-kernel stage (sized to the query's posting volume,
-        # query/wand.py _shard_stage) whose output broadcasts, and the
-        # docmap rehydrate join with its TakeOrderedAndProject. AQE has
-        # nothing to adapt there, and its stage-by-stage materialization
-        # adds fixed per-query latency (measured ~35-50 ms/query on the
-        # 20-query reference loop) and a job. Builder-level conf (shuffle
-        # partitions, arrow, excluded rules) is inherited by newSession();
-        # only the AQE toggle differs, and only for DataFrames built from
-        # this handle — corpus-scale work (build/merge/compact/promote)
-        # reads its own paths on the caller's session and keeps AQE.
+        # off. A point query is ONE Spark job of one stage: idf comes from
+        # a driver-side pyarrow read (term_info), and the segment scan,
+        # the shard kernels (which also map their lids to docids) and the
+        # TakeOrderedAndProject tail run in the same task when the kernel
+        # stage is sized to one task (query/wand.py _shard_stage). AQE
+        # has nothing to adapt there, and its stage-by-stage
+        # materialization adds fixed per-query latency (measured ~35-50
+        # ms/query on the 20-query reference loop) and a job.
+        # Builder-level conf (shuffle partitions, arrow, excluded rules)
+        # is inherited by newSession(); only the AQE toggle differs, and
+        # only for DataFrames built from this handle — corpus-scale work
+        # (build/merge/compact/promote) reads its own paths on the
+        # caller's session and keeps AQE.
         if isolate_session:
             q = spark.newSession()
             q.conf.set("spark.sql.adaptive.enabled", "false")
@@ -882,38 +921,27 @@ class SegmentIndex:
         self.segments = spark.read.parquet(f"{path}/segments")
         self.term_stats = spark.read.parquet(f"{path}/term_stats")
         self.docmap = spark.read.parquet(f"{path}/docmap")
-        # pruned docmap projection built ONCE: rehydrate runs per query
-        # and every DataFrame op is a py4j round trip (~100 ms of pure
-        # driver-side plan construction per point query before this
-        # round's trim — guide §1: measure the whole query, including
-        # what the driver does before the first task)
-        self._dm = self.docmap.select(
-            "shard", F.col("local_id").alias("lid"), "docid"
-        )
-        # static temp views registered ONCE: spark.sql {df} templating
+        self.term_stats_files = _snapshot_files(self.term_stats)
+        self.docmap_files = _snapshot_files(self.docmap)
+        # static temp view registered ONCE: spark.sql {df} templating
         # re-registers a temp view per substitution per call (~7 ms each,
-        # measured), so per-query SQL references these by name instead.
-        # Names are instance-unique (two indexes can share a session when
-        # isolate_session=False); close() drops them.
+        # measured), so per-query SQL references it by name instead.
+        # The name is instance-unique (two indexes can share a session
+        # when isolate_session=False); close() drops it.
         import uuid as _uuid
 
-        tag = _uuid.uuid4().hex[:10]
-        self._seg_view = f"hse_seg_{tag}"
-        self._dm_view = f"hse_dm_{tag}"
+        self._seg_view = f"hse_seg_{_uuid.uuid4().hex[:10]}"
         self.segments.createOrReplaceTempView(self._seg_view)
-        self._dm.createOrReplaceTempView(self._dm_view)
         self._term_cache: dict[str, tuple[int, float] | None] = {}
         self.tombstones = load_tombstones(path)
         self._dead_bc = None
         self._scope_bcs: "OrderedDict[int, object]" = OrderedDict()
 
     def close(self) -> None:
-        """Drop this handle's temp views and unpersist its memoized
+        """Drop this handle's temp view and unpersist its memoized
         tombstone and scope broadcasts. Idempotent; DataFrames built from
         the handle must not be evaluated afterwards."""
-        catalog = self.spark.catalog
-        for view in (self._seg_view, self._dm_view):
-            catalog.dropTempView(view)
+        self.spark.catalog.dropTempView(self._seg_view)
         for bc in [self._dead_bc, *self._scope_bcs.values()]:
             if bc is not None:
                 bc.unpersist()
@@ -973,29 +1001,22 @@ class SegmentIndex:
             old.unpersist()
         return bc
 
-    def rehydrate(self, df: DataFrame) -> DataFrame:
-        """(shard, lid, ...) -> same rows with the global `docid` attached
-        from the docmap. The kernel output side is tiny (<= shards * k), so
-        it broadcasts and the docmap is the streamed side, column-pruned to
-        (shard, local_id, docid). At 10^12 docs this becomes a docvalues
-        point lookup (lid min/max row-group pruning or a KV fetch); the
-        join form keeps the whole query one lazy plan."""
-        return F.broadcast(df).join(self._dm, ["shard", "lid"])
-
     def term_info(self, terms: list[str]) -> dict[str, tuple[int, float]]:
         """(df, idf) for the given terms (absent term => absent key).
-        Driver-side memoized: repeated query terms never re-launch the
-        lookup job, and the shard kernels read idf from their closure, so
-        no per-query plan joins or scans the term dictionary. A miss is
-        one small job over the term-sorted, row-group-pruned dictionary."""
+        Driver-side memoized, and a miss runs no Spark job: it is a
+        pyarrow read of the handle's term_stats files with ``term IN
+        missing`` pushed into the row-group statistics of the
+        term-sorted dictionary (the read ServingIndex.suggest does). The
+        shard kernels read idf from their closure, so no query plan
+        joins or scans the term dictionary."""
         missing = [t for t in dict.fromkeys(terms) if t not in self._term_cache]
         if missing:
-            rows = (
-                self.term_stats.filter(F.col("term").isin(missing))
-                .select("term", "df", "idf")
-                .collect()
+            import pyarrow.dataset as ds
+
+            tbl = ds.dataset(self.term_stats_files, format="parquet").to_table(
+                columns=["term", "df", "idf"], filter=ds.field("term").isin(missing)
             )
-            found = {r["term"]: (int(r["df"]), float(r["idf"])) for r in rows}
+            found = {r["term"]: (int(r["df"]), float(r["idf"])) for r in tbl.to_pylist()}
             for t in missing:
                 self._term_cache[t] = found.get(t)
         return {t: v for t in terms if (v := self._term_cache[t]) is not None}

@@ -2,19 +2,22 @@
 
 Distributed plan of every Spark query entry point (``_shard_stage``):
 
-    (df, idf) of the query terms: driver memo, one      [driver; no job
-      small term_stats lookup job on a miss              on a memo hit]
+    (df, idf) of the query terms: driver memo; a miss     [driver; no job]
+      is a pyarrow read of the term_stats files
     segments scan: bucket-dir pruning + term pushdown    [executors]
-    -> repartition(n, shard), n sized to the scanned     [n Python tasks:
-       postings (1 below POSTINGS_PER_TASK)               1 for a point
-    -> groupBy(shard).applyInPandas(shard kernel),        query]
-       idf in the kernel closure
-    -> broadcast into the docmap rehydrate join
+    -> coalesce(1) when the scanned postings fit one     [1 Python task for
+       task (below POSTINGS_PER_TASK), else               a point query]
+       repartition(n, shard)
+    -> groupBy(shard).applyInPandas(shard kernel),
+       idf in the kernel closure; each group maps its
+       top-k lids to global docids with a pyarrow read
+       of the handle's docmap files (shard and lids
+       pushed into row-group statistics)
     -> global TakeOrderedAndProject(k, (-score, docid))  [k rows/shard]
 
-A point query is 3 Spark jobs on an idf-memo miss and 2 on a hit: the
-lookup, the scan + kernel stage feeding the broadcast, and the rehydrate
-join with its top-k.
+A point query is ONE Spark job of one stage and one task: no exchange
+cuts a one-task stage, no plan joins the docmap or the term dictionary,
+and the top-k runs in the kernel task's job.
 
 Because ``shard = pmod(docid, n_shards)`` every document's postings live in
 exactly one shard, so conjunctive evaluation is shard-local and the global
@@ -51,7 +54,11 @@ from pyspark.sql import DataFrame, functions as F
 
 from honeywell_search_engine_spark.functions.analyzer import analyze_query
 from honeywell_search_engine_spark.index import codec
-from honeywell_search_engine_spark.index.segments import SegmentIndex, check_terms
+from honeywell_search_engine_spark.index.segments import (
+    SegmentIndex,
+    check_terms,
+    docids_of_lids,
+)
 
 RESULT_SCHEMA = "docid long, score double"
 
@@ -1046,8 +1053,7 @@ def _shard_kernel_websearch_or(
     return _select_topk_with_ties(union.astype(np.int64), score, k)
 
 
-SHARD_SCHEMA = "shard int, lid long, score double"
-BATCH_SHARD_SCHEMA = "qid string, shard int, lid long, score double"
+BATCH_SHARD_SCHEMA = "qid string, docid long, score double"
 BATCH_RESULT_SCHEMA = "qid string, rnk int, docid long, score double"
 
 # Postings one shard-kernel task should score before a second Python task
@@ -1077,40 +1083,55 @@ def _kernel_tasks(index: SegmentIndex, postings: int) -> int:
 
 
 def _shard_stage(index: SegmentIndex, scan_terms: list[str], kernel,
-                 schema: str = SHARD_SCHEMA, scope_lids: DataFrame | None = None):
+                 schema: str = RESULT_SCHEMA, scope_lids: DataFrame | None = None):
     """The shard-kernel stage of every Spark query entry point: the pruned
     segment rows of `scan_terms`, one pandas group per shard, and
     ``kernel(shard, pdf, idf, dead)`` per group — ``kernel(shard, pdf,
-    idf, dead, scope_pdf)`` when `scope_lids` (shard, lid) is cogrouped in.
+    idf, dead, scope_pdf)`` when `scope_lids` (shard, lid) is cogrouped
+    in. A kernel returns its top-k+ties as a frame with a `lid` column
+    (``_shard_frame`` / ``_batch_frame``); the stage maps those lids to
+    global docids in the same task (``docids_of_lids``: a pyarrow read
+    of the handle's docmap files), so its output is `schema` with `docid`
+    and no plan joins or scans the docmap.
 
     idf comes from the index's driver-side (df, idf) memo and rides the
-    kernel closure, so the plan carries no term-dictionary scan or join.
-    The stage runs in `_kernel_tasks` tasks sized to the scanned postings
-    (sum of df): its task count no longer follows the session-wide
-    spark.sql.shuffle.partitions, whose every extra task cost ~320 ms of
-    fixed Python-worker CPU on a point query. Both cogroup sides are
-    repartitioned to the same count, so they stay co-partitioned and no
-    further exchange appears."""
+    kernel closure. The stage runs in `_kernel_tasks` tasks sized to the
+    scanned postings (sum of df), not spark.sql.shuffle.partitions, whose
+    every extra task cost ~320 ms of fixed Python-worker CPU on a point
+    query. One task is a ``coalesce(1)``: a single partition already
+    clusters every shard, so no exchange cuts the stage and the scan,
+    the group sort, the kernels and the caller's tail run as one stage.
+    More tasks repartition by shard; both cogroup sides always do, to the
+    same count, so they stay co-partitioned."""
     info = index.term_info(scan_terms)
     idf = {t: v for t, (_n, v) in info.items()}
     n = _kernel_tasks(index, sum(n for n, _v in info.values()))
     dead_bc = index.dead_broadcast()
+    docmap_files = index.docmap_files
 
     def dead_of(shard: int) -> np.ndarray:
         return dead_bc.value.get(shard, _NO_DEAD) if dead_bc is not None else _NO_DEAD
 
-    groups = index.segments_for(scan_terms).repartition(n, "shard").groupBy("shard")
+    def with_docids(shard: int, out: pd.DataFrame) -> pd.DataFrame:
+        if len(out):
+            out["lid"] = docids_of_lids(docmap_files, shard, out["lid"].to_numpy(np.int64))
+        return out.rename(columns={"lid": "docid"})
+
+    rows = index.segments_for(scan_terms)
     if scope_lids is None:
+        groups = (rows.coalesce(1) if n == 1 else rows.repartition(n, "shard")).groupBy("shard")
+
         def run(key, pdf):  # no hints: applyInPandas warns on partial ones
             shard = int(key[0])
-            return kernel(shard, pdf, idf, dead_of(shard))
+            return with_docids(shard, kernel(shard, pdf, idf, dead_of(shard)))
 
         return groups.applyInPandas(run, schema=schema)
 
     def run_cogrouped(key, seg_pdf, scope_pdf):
         shard = int(key[0])
-        return kernel(shard, seg_pdf, idf, dead_of(shard), scope_pdf)
+        return with_docids(shard, kernel(shard, seg_pdf, idf, dead_of(shard), scope_pdf))
 
+    groups = rows.repartition(n, "shard").groupBy("shard")
     scope_groups = scope_lids.repartition(n, "shard").groupBy("shard")
     return groups.cogroup(scope_groups).applyInPandas(run_cogrouped, schema=schema)
 
@@ -1120,41 +1141,27 @@ def _encoded_by_term(pdf: pd.DataFrame) -> dict:
     return {r["term"]: _enc_from_row(r) for _, r in pdf.iterrows()}
 
 
-def _shard_frame(shard: int, res: list) -> pd.DataFrame:
-    """A kernel's [(lid, score)] as SHARD_SCHEMA rows."""
+def _shard_frame(res: list) -> pd.DataFrame:
+    """A kernel's [(lid, score)] as a (lid, score) frame."""
     return pd.DataFrame(
-        {
-            "shard": [shard] * len(res),
-            "lid": [int(d) for d, _ in res],
-            "score": [float(s) for _, s in res],
-        }
+        {"lid": [int(d) for d, _ in res], "score": [float(s) for _, s in res]}
     )
 
 
-def _topk_tail(index: SegmentIndex, per_shard: DataFrame, k: int) -> DataFrame:
-    """Rehydrate lids -> global docids (the kernel output broadcasts into
-    the docmap join), then the exact global order (-score, docid) over the
-    per-shard top-k+ties. ONE templated spark.sql call for the whole tail
-    — the DataFrame-op chain cost ~35 ms of py4j round trips per point
-    query; identical plan (ORDER BY + LIMIT plans as
-    TakeOrderedAndProject)."""
-    return index.spark.sql(
-        "SELECT /*+ BROADCAST(p) */ dm.docid AS docid, p.score AS score "
-        "FROM {p} p JOIN " + index._dm_view + " dm "
-        "ON p.shard = dm.shard AND p.lid = dm.lid "
-        f"ORDER BY p.score DESC, dm.docid ASC LIMIT {int(k)}",
-        p=per_shard,
-    )
+def _topk_tail(per_shard: DataFrame, k: int) -> DataFrame:
+    """The exact global order (-score, docid) over the per-shard
+    top-k+ties: ORDER BY + LIMIT plans as a TakeOrderedAndProject in the
+    kernel stage's job (in its one stage when the stage is one task)."""
+    return per_shard.orderBy(F.desc("score"), F.asc("docid")).limit(int(k))
 
 
-def _batch_tail(index: SegmentIndex, per_shard: DataFrame, k: int) -> DataFrame:
-    """Rehydrate, then one per-query rank window: (qid, rnk, docid, score)."""
+def _batch_tail(per_shard: DataFrame, k: int) -> DataFrame:
+    """One per-query rank window: (qid, rnk, docid, score)."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
     return (
-        index.rehydrate(per_shard)
-        .withColumn("rnk", F.row_number().over(w))
+        per_shard.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select("qid", "rnk", "docid", "score")
         .orderBy("qid", "rnk")
@@ -1170,14 +1177,13 @@ def _phrase_query(index: SegmentIndex, terms: list[str], k: int, slop: int,
     def kernel(shard, pdf, idf, dead):
         by_term = _encoded_by_term(pdf)
         if any(t not in by_term for t in terms):
-            return _shard_frame(shard, [])
+            return _shard_frame([])
         rows = [(t, by_term[t]) for t in terms]
         return _shard_frame(
-            shard,
             _shard_kernel_phrase(rows, idf, avgdl, k, dead, slop, unordered=unordered),
         )
 
-    return _topk_tail(index, _shard_stage(index, sorted(set(terms)), kernel), k)
+    return _topk_tail(_shard_stage(index, sorted(set(terms)), kernel), k)
 
 
 def bm25_topk_phrase(
@@ -1250,15 +1256,26 @@ def bm25_topk_wand(
     so it never materializes on the driver (a 10^8-id caller scope at
     100 TB stays distributed end to end). A DataFrame scope must belong to
     the SparkContext of `index.spark` (the index's isolated session shares
-    the caller's context).
+    the caller's context); one from another context raises ValueError.
 
-    Spark work per query: at most 3 jobs — the idf lookup (none when every
-    term is in the index's memo), the segment scan + shard-kernel stage
-    (one task below POSTINGS_PER_TASK postings) whose output broadcasts,
-    and the docmap rehydrate join with its TakeOrderedAndProject. AND
+    Spark work per query: one job. idf comes from the index's driver-side
+    memo (a miss is a pyarrow read, not a job); the segment scan, the
+    shard kernels (which map their lids to docids) and the
+    TakeOrderedAndProject run in one stage of one task below
+    POSTINGS_PER_TASK postings, and behind one shard exchange above it.
+    The large-scope cogroup path adds the docmap semi-join that turns
+    the scope's docids into lids. AND
     semantics stay exact when a query term is unknown globally: no shard
     can then hold all terms, so every kernel returns empty."""
     spark = index.spark
+    if (
+        isinstance(allowed_docids, DataFrame)
+        and allowed_docids.sparkSession.sparkContext is not spark.sparkContext
+    ):
+        raise ValueError(
+            "allowed_docids DataFrame belongs to another SparkContext than "
+            "index.spark; build it on a session of the index's context"
+        )
     if pre_analyzed is not None:
         terms = list(dict.fromkeys(check_terms(pre_analyzed)))
     else:
@@ -1293,7 +1310,7 @@ def bm25_topk_wand(
             # with postings but no scoped docs (or vice versa) is empty
             scope = np.sort(scope_pdf["lid"].to_numpy().astype(np.int64))
             if len(pdf) == 0 or scope.size == 0:
-                return _shard_frame(shard, [])
+                return _shard_frame([])
         else:
             scope = scope_bc.value.get(shard, _NO_DEAD) if scope_bc is not None else None
         by_term = _encoded_by_term(pdf)
@@ -1311,7 +1328,7 @@ def bm25_topk_wand(
             res = _shard_kernel_and(
                 rows, idf, avgdl, k, dead, scope=scope, neg_rows=neg_rows
             )
-        return _shard_frame(shard, res)
+        return _shard_frame(res)
 
     scope_lids = None
     if scope_df is not None:
@@ -1321,7 +1338,7 @@ def bm25_topk_wand(
             "left_semi",
         ).select("shard", F.col("local_id").alias("lid"))
     per_shard = _shard_stage(index, terms + neg_terms, kernel, scope_lids=scope_lids)
-    return _topk_tail(index, per_shard, k)
+    return _topk_tail(per_shard, k)
 
 
 def bm25_topk_websearch(
@@ -1363,9 +1380,8 @@ def bm25_topk_websearch(
             pos_rows = [(t, e) for t, e in by_term.items() if t not in neg_set]
             neg_rows = [(t, e) for t, e in by_term.items() if t in neg_set]
             if len(pos_rows) < n_pos:
-                return _shard_frame(shard, [])
+                return _shard_frame([])
             return _shard_frame(
-                shard,
                 _shard_kernel_websearch(pos_rows, phrases, neg_rows, idf, avgdl, k, dead),
             )
 
@@ -1381,13 +1397,12 @@ def bm25_topk_websearch(
 
         def kernel(shard, pdf, idf, dead):
             return _shard_frame(
-                shard,
                 _shard_kernel_websearch_or(
                     groups, _encoded_by_term(pdf), idf, avgdl, k, dead
                 ),
             )
 
-    return _topk_tail(index, _shard_stage(index, scan_terms, kernel), k)
+    return _topk_tail(_shard_stage(index, scan_terms, kernel), k)
 
 
 def _memo_by_term(pdf: pd.DataFrame, use_count: dict, need_pos=frozenset()) -> dict:
@@ -1409,17 +1424,15 @@ def _memo_by_term(pdf: pd.DataFrame, use_count: dict, need_pos=frozenset()) -> d
     return by_term
 
 
-def _batch_frame(shard: int, results) -> pd.DataFrame:
-    """[(qid, [(lid, score)])] as BATCH_SHARD_SCHEMA rows."""
+def _batch_frame(results) -> pd.DataFrame:
+    """[(qid, [(lid, score)])] as a (qid, lid, score) frame."""
     out_q, out_d, out_s = [], [], []
     for qid, res in results:
         for d, s in res:
             out_q.append(qid)
             out_d.append(int(d))
             out_s.append(float(s))
-    return pd.DataFrame(
-        {"qid": out_q, "shard": [shard] * len(out_q), "lid": out_d, "score": out_s}
-    )
+    return pd.DataFrame({"qid": out_q, "lid": out_d, "score": out_s})
 
 
 def _use_count(term_sets) -> dict:
@@ -1494,12 +1507,11 @@ def bm25_topk_websearch_batch(
     def kernel(shard, pdf, idf, dead):
         by_term = _memo_by_term(pdf, use_count, need_pos)
         return _batch_frame(
-            shard,
             ((qid, answer(groups, by_term, idf, dead)) for qid, groups in parsed.items()),
         )
 
     per_shard = _shard_stage(index, scan_terms, kernel, schema=BATCH_SHARD_SCHEMA)
-    return _batch_tail(index, per_shard, k)
+    return _batch_tail(per_shard, k)
 
 
 def bm25_topk_phrase_batch(
@@ -1523,7 +1535,6 @@ def bm25_topk_phrase_batch(
     def kernel(shard, pdf, idf, dead):
         by_term = _memo_by_term(pdf, use_count, need_pos)
         return _batch_frame(
-            shard,
             (
                 (qid, _shard_kernel_phrase(
                     [(t, by_term[t]) for t in ts], idf, avgdl, k, dead, slop
@@ -1534,7 +1545,7 @@ def bm25_topk_phrase_batch(
         )
 
     per_shard = _shard_stage(index, scan_terms, kernel, schema=BATCH_SHARD_SCHEMA)
-    return _batch_tail(index, per_shard, k)
+    return _batch_tail(per_shard, k)
 
 
 def bm25_topk_wand_batch(
@@ -1575,9 +1586,8 @@ def bm25_topk_wand_batch(
     def kernel(shard, pdf, idf, dead):
         by_term = _memo_by_term(pdf, use_count)
         return _batch_frame(
-            shard,
             ((qid, answer(ts, by_term, idf, dead)) for qid, ts in live_b.items()),
         )
 
     per_shard = _shard_stage(index, scan_terms, kernel, schema=BATCH_SHARD_SCHEMA)
-    return _batch_tail(index, per_shard, k)
+    return _batch_tail(per_shard, k)

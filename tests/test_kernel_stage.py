@@ -1,10 +1,15 @@
 """The shard-kernel stage of the Spark query entry points: its task count
 follows the query's posting volume (query/wand.py _shard_stage), idf rides
-the kernel closure, caller strings never reach the SQL text, and a
-SegmentIndex releases what it registered."""
+the kernel closure, the kernel tasks map their lids to docids themselves,
+caller strings never reach the SQL text, and a SegmentIndex releases what
+it registered."""
 
+import itertools
 import re
+import types
 
+import numpy as np
+import pyarrow.parquet as pq
 import pytest
 
 import test_segments as TS
@@ -25,11 +30,15 @@ HOSTILE = [
 ]
 
 
+_GROUPS = itertools.count()
+
+
 def _run_counted(spark, fn):
-    """(result, [(numTasks per stage)] per job) of everything `fn` ran,
-    read from statusTracker() under a job group."""
+    """(result, [[numTasks per stage] per job]) of everything `fn` ran —
+    plan building included — read from statusTracker() under a job
+    group."""
     sc = spark.sparkContext
-    group = "kernel-stage-probe"
+    group = f"kernel-stage-probe-{next(_GROUPS)}"
     sc.setJobGroup(group, group)
     try:
         out = fn()
@@ -40,8 +49,7 @@ def _run_counted(spark, fn):
     jobs = []
     for j in sorted(tracker.getJobIdsForGroup(group)):
         info = tracker.getJobInfo(j)
-        stages = [tracker.getStageInfo(s) for s in info.stageIds]
-        jobs.append([s.numCompletedTasks for s in stages if s and s.numCompletedTasks])
+        jobs.append([tracker.getStageInfo(s).numTasks for s in info.stageIds])
     return out, jobs
 
 
@@ -58,23 +66,32 @@ def test_kernel_tasks_sized_to_postings(seg_index):
     assert W._kernel_tasks(seg_index, 10**12) == cap
 
 
-def test_repeated_point_query_runs_one_kernel_task(seg_index):
-    """A point query whose terms are in the idf memo runs 2 jobs: the
-    segment scan + ONE shard-kernel task feeding the broadcast, then the
-    docmap rehydrate join with its top-k. The kernel stage no longer
-    inherits spark.sql.shuffle.partitions (8 in the test session)."""
+def test_repeated_point_query_runs_one_kernel_task(spark, seg_index):
+    """A point query is ONE Spark job of one stage and one task, on its
+    first call (every term an idf-memo miss: the lookup is a driver-side
+    pyarrow read) as on a repeat: the segment scan, the shard kernels
+    (which map their lids to docids), and the TakeOrderedAndProject run
+    in the same task. The kernel stage does not inherit
+    spark.sql.shuffle.partitions (8 in the test session), and a one-task
+    stage has no exchange."""
+    from honeywell_search_engine_spark.index.segments import SegmentIndex
+
     q = QUERIES["q10"]
-    first = _rows(W.bm25_topk_wand(seg_index, q, k=10))  # fills the memo
-    df = W.bm25_topk_wand(seg_index, q, k=10)
-    got, jobs = _run_counted(seg_index.spark, lambda: _rows(df))
-    assert got == first
-    assert len(jobs) == 2, jobs
-    plan = physical_plan(df)
-    # repartition(1, shard) plans as a single-partition exchange
-    assert "Exchange SinglePartition" in plan and "hashpartitioning" not in plan, plan
-    # the kernel job: scan stage(s), then the 1-task kernel stage
-    assert jobs[0][-1] == 1, jobs
-    assert "term_stats" not in plan  # idf rides the kernel closure
+    with SegmentIndex(spark, seg_index.path) as idx:  # empty idf memo
+        assert not idx._term_cache
+        first, jobs = _run_counted(
+            idx.spark, lambda: _rows(W.bm25_topk_wand(idx, q, k=10))
+        )
+        assert first and idx._term_cache
+        assert jobs == [[1]], jobs
+        df = W.bm25_topk_wand(idx, q, k=10)
+        got, jobs = _run_counted(idx.spark, lambda: _rows(df))
+        assert got == first
+        assert jobs == [[1]], jobs
+        plan = physical_plan(df)
+    assert "Coalesce 1" in plan and "Exchange" not in plan, plan
+    for side in ("term_stats", "docmap", "Join"):  # idf and docids ride the kernel
+        assert side not in plan, plan
 
 
 def test_oracle_identity_at_task_cap(monkeypatch, spark, seg_index, oracle, pages_pdf):
@@ -179,10 +196,139 @@ def test_close_drops_views_and_broadcasts(spark, seg_index):
         return {t.name for t in session.catalog.listTables() if t.isTemporary}
 
     with SegmentIndex(spark, seg_index.path, isolate_session=False) as idx:
-        mine = {idx._seg_view, idx._dm_view}
+        mine = {idx._seg_view}
         assert mine <= views(spark)
         assert _rows(W.bm25_topk_wand(idx, QUERIES["q10"], k=10, allowed_docids=[1])) == []
         assert idx._scope_bcs
     assert not mine & views(spark)
     assert not idx._scope_bcs
     idx.close()  # idempotent
+
+
+def test_foreign_context_scope_rejected(seg_index):
+    """A DataFrame scope from another SparkContext is refused with a
+    clear ValueError before any plan is built (a stand-in DataFrame whose
+    session reports a different context; the index's own context, and so
+    the caller's session, stays accepted)."""
+    scope = seg_index.spark.range(0, 1).withColumnRenamed("id", "docid")
+
+    class ForeignFrame(type(scope)):
+        sparkSession = types.SimpleNamespace(sparkContext=object())
+
+    foreign = ForeignFrame(scope._jdf, scope.sparkSession)
+    with pytest.raises(ValueError, match="SparkContext"):
+        W.bm25_topk_wand(seg_index, QUERIES["q01"], k=10, allowed_docids=foreign)
+    assert W.bm25_topk_wand(seg_index, QUERIES["q01"], k=10, allowed_docids=scope).collect() == []
+
+
+@pytest.fixture(scope="module")
+def merged_index(spark, tmp_path_factory):
+    """A 200-doc base index with 100 streamed docs merged in: merged docs
+    get lids APPENDED after each shard's max, so lid order is not docid
+    order."""
+    from test_streaming import _write_slice
+
+    from honeywell_search_engine_spark.index.corpus import docs_from_pages, tokenized_docs
+    from honeywell_search_engine_spark.index.maintenance import merge_deltas
+    from honeywell_search_engine_spark.index.segments import build_segments
+    from honeywell_search_engine_spark.sources.pages import PAGES_SCHEMA, generate_pages_pdf
+    from honeywell_search_engine_spark.streaming.ingest import stream_postings_delta
+
+    tmp = tmp_path_factory.mktemp("merged")
+    pdf = generate_pages_pdf(300)
+    base_dir, idx_dir = str(tmp / "pages"), str(tmp / "idx")
+    _write_slice(spark, pdf, 0, 200, base_dir)
+    base = spark.read.schema(PAGES_SCHEMA).parquet(base_dir)
+    build_segments(
+        tokenized_docs(docs_from_pages(base)), idx_dir, base_dir,
+        n_buckets=8, n_shards=4, buckets_per_job=8,
+    )
+    stream_dir, delta_dir = str(tmp / "pages2"), str(tmp / "delta")
+    _write_slice(spark, pdf, 200, 300, stream_dir)
+    stream_postings_delta(spark, stream_dir, delta_dir, n_buckets=8, n_shards=4)
+    assert merge_deltas(spark, idx_dir, delta_dir)["docs_added"] > 0
+    return idx_dir, pdf
+
+
+def _lids_out_of_docid_order(idx_dir) -> bool:
+    dm = pq.read_table(f"{idx_dir}/docmap").to_pandas()
+    return any(
+        not g.sort_values("local_id")["docid"].is_monotonic_increasing
+        for _, g in dm.groupby("shard")
+    )
+
+
+def test_in_kernel_rehydrate_matches_oracle_after_merge(spark, merged_index):
+    """The kernel tasks' docid lookup is exact on a docmap whose lids are
+    not in docid order (appended by merge_deltas), with tombstones
+    outstanding: AND, OR and a phrase through bm25_topk_wand and
+    bm25_topk_phrase equal the oracle of the merged corpus with the dead
+    docs removed from the results (corpus stats keep them until
+    compaction)."""
+    from honeywell_search_engine_spark.functions.analyzer import analyze
+    from honeywell_search_engine_spark.index.corpus import docid_py
+    from honeywell_search_engine_spark.index.maintenance import delete_docs
+    from honeywell_search_engine_spark.index.segments import SegmentIndex
+    from honeywell_search_engine_spark.oracle import OracleIndex
+
+    idx_dir, pdf = merged_index
+    assert _lids_out_of_docid_order(idx_dir)
+    en = pdf[pdf.lang == "en"]
+    oracle = OracleIndex.build([(docid_py(u), t) for u, t in zip(en.url, en.text)])
+    appended = {docid_py(u) for u in pdf.iloc[200:300].url}
+    k = 20
+    victims = [d for d, _ in oracle.search("data", k=40)][::7][:4]
+    assert len(victims) == 4
+    delete_docs(idx_dir, victims, reason="in-kernel rehydrate test")
+    phrase = " ".join(analyze(en[en.url.map(docid_py).isin(appended)].text.iloc[0])[:2])
+
+    def live(res):
+        return [r for r in res if r[0] not in set(victims)][:k]
+
+    cases = [
+        (lambda i: W.bm25_topk_wand(i, "data", k=k), live(oracle.search("data", k=k + 4))),
+        (lambda i: W.bm25_topk_wand(i, "data search", k=k),
+         live(oracle.search("data search", k=k + 4))),
+        (lambda i: W.bm25_topk_wand(i, "data search", k=k, mode="or"),
+         live(oracle.search_or("data search", k=k + 4))),
+        (lambda i: W.bm25_topk_phrase(i, phrase, k=k), live(oracle.search_phrase(phrase, k=k + 4))),
+    ]
+    seen = set()
+    with SegmentIndex(spark, idx_dir) as idx:
+        assert set(victims) <= idx.tombstones
+        for run, exp in cases:
+            got = _rows(run(idx))
+            assert got == exp
+            seen |= {d for d, _ in got}
+    assert seen & appended  # appended lids were rehydrated
+    assert not seen & set(victims)
+
+
+def test_handle_opened_before_compact_keeps_its_docmap(spark, merged_index, tmp_path):
+    """A handle is a snapshot: after compact swaps in new docmap files, a
+    handle opened before it still looks docids up in ITS files only — the
+    lookup of a gone file fails, it never falls through to the new files
+    — while a handle opened after compact answers from the new ones."""
+    import shutil
+
+    from honeywell_search_engine_spark.index.maintenance import compact, delete_docs
+    from honeywell_search_engine_spark.index.segments import SegmentIndex, docids_of_lids
+
+    idx_dir = str(tmp_path / "idx")
+    shutil.copytree(merged_index[0], idx_dir)
+    old = SegmentIndex(spark, idx_dir)
+    try:
+        before = _rows(W.bm25_topk_wand(old, "data", k=10))
+        delete_docs(idx_dir, [before[0][0]], reason="compact snapshot test")
+        compact(spark, idx_dir)
+        with SegmentIndex(spark, idx_dir) as new:
+            assert not set(old.docmap_files) & set(new.docmap_files)
+            assert not set(old.term_stats_files) & set(new.term_stats_files)
+            after = _rows(W.bm25_topk_wand(new, "data", k=10))
+        assert before[0][0] not in {d for d, _ in after}
+        with pytest.raises(FileNotFoundError):
+            docids_of_lids(old.docmap_files, 0, np.array([0], dtype=np.int64))
+        with pytest.raises(Exception, match="FileNotFound|does not exist"):
+            W.bm25_topk_wand(old, "data", k=10).collect()
+    finally:
+        old.close()

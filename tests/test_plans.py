@@ -73,17 +73,32 @@ def test_docmap_assignment_is_tokenizer_free(spark, pages_path):
     assert "text" not in schema_part
 
 
-def test_query_rehydrate_broadcasts_kernel_output(seg_index):
-    """The docmap rehydration join must broadcast the tiny kernel-output
-    side (never shuffle the docmap), and the final cut must stay a
-    TakeOrderedAndProject."""
+def test_point_query_rehydrates_inside_kernel_stage(seg_index):
+    """A point query's plan is one stage: the pruned segment scan, a
+    Coalesce 1 (no Exchange), the shard kernels — which map their lids to
+    docids themselves — and a TakeOrderedAndProject final cut. No join of
+    any kind, and no docmap or term_stats scan."""
     from honeywell_search_engine_spark.query.wand import bm25_topk_wand
 
     plan = _plan(bm25_topk_wand(seg_index, "data search", k=10))
-    assert "BroadcastHashJoin" in plan
     assert "TakeOrderedAndProject" in plan
-    # no sort-merge join anywhere in the per-query path
-    assert "SortMergeJoin" not in plan
+    assert "Coalesce 1" in plan
+    for bad in ("Exchange", "Join", "docmap", "term_stats"):
+        assert bad not in plan, (bad, plan)
+
+
+def test_batch_plans_read_no_docmap(seg_index):
+    """The batch entry points' kernels rehydrate too: their plans join
+    nothing and never scan the docmap, and a one-task stage feeds the
+    rank window without an exchange."""
+    from honeywell_search_engine_spark.query import wand as W
+
+    qs = {"a": "data search", "b": "table"}
+    for fn in (W.bm25_topk_wand_batch, W.bm25_topk_websearch_batch, W.bm25_topk_phrase_batch):
+        plan = _plan(fn(seg_index, qs, k=10))
+        assert "FlatMapGroupsInPandas" in plan and "Coalesce 1" in plan, plan
+        for bad in ("Exchange", "Join", "docmap", "term_stats"):
+            assert bad not in plan, (fn.__name__, bad, plan)
 
 
 def test_phrase_scan_pruned_and_projected(seg_index):
@@ -225,12 +240,13 @@ def test_segment_index_point_query_session(spark, seg_index):
 
 
 def test_wand_sql_tail_plan_shape(seg_index):
-    """The SQL-built wand query must keep the plan the DataFrame chain
-    produced: partition-pruned segment scan with the term filter pushed,
-    broadcast rehydrate join, and a TakeOrderedAndProject tail — never a
-    global Sort anywhere in the plan (the kernel stage's shard-local
-    `Sort [shard ...], false` is the only Sort allowed). idf rides the
-    kernel closure, so the term dictionary is not scanned or joined."""
+    """The wand query plan: partition-pruned segment scan with the term
+    filter pushed, the kernel stage, and a TakeOrderedAndProject tail —
+    never a global Sort anywhere in the plan (the kernel stage's
+    shard-local `Sort [shard ...], false` is the only Sort allowed). idf
+    and docids ride the kernel stage, so neither the term dictionary nor
+    the docmap is scanned or joined, and a one-task stage has no
+    Exchange."""
     import re
 
     from honeywell_search_engine_spark.query.wand import bm25_topk_wand
@@ -238,7 +254,8 @@ def test_wand_sql_tail_plan_shape(seg_index):
     df = bm25_topk_wand(seg_index, "data search", k=10)
     plan = physical_plan(df)
     assert "TakeOrderedAndProject" in plan
-    assert "BroadcastHashJoin" in plan
+    for bad in ("Join", "Exchange", "docmap"):
+        assert bad not in plan, (bad, plan)
     sorts = re.findall(r"Sort \[([^\]]*)\], (true|false)", plan)
     assert sorts, plan  # the kernel stage's group sort
     assert all(g == "false" for _, g in sorts), plan  # no global Sort
