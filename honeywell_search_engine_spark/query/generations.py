@@ -56,6 +56,7 @@ import json
 
 import numpy as np
 
+from honeywell_search_engine_spark.query import respond
 from honeywell_search_engine_spark.query.local import ServingIndex
 
 
@@ -288,6 +289,7 @@ class GenerationSet:
             raise ValueError("one docs path per generation (or one shared)")
         for g, p in zip(self.gens, docs_paths):
             g.attach_docs(p, id_col, text_col, doc_cache_entries)
+        self._docs_path = docs_paths
 
     def _fetch_texts(self, docids: list[int]) -> dict[int, str]:
         out: dict[int, str] = {}
@@ -316,20 +318,4 @@ class GenerationSet:
         mode: str = "and",
         rerank_from: int | None = None,
     ) -> list[tuple]:
-        from honeywell_search_engine_spark.query import respond
-
-        if not hasattr(self.gens[0], "_docs_path"):
-            raise ValueError(
-                "no text store attached — call attach_docs(docs_path) first"
-            )
-        if rerank_from is not None:
-            cands = self.search(query, k=rerank_from, mode="or")
-            texts = self._fetch_texts([d for d, _ in cands])
-            qterms = respond.analyze_query(query)
-            ranked = respond.rerank_hits_py(cands, texts, qterms, k_out=k)
-            hits = [(d, rr) for _rnk, d, rr, _sr in ranked]
-            return respond.compose_response_rows(hits, texts, query)
-        hits = self.search(query, k=k, mode=mode)
-        return respond.compose_response_rows(
-            hits, self._fetch_texts([d for d, _ in hits]), query
-        )
+        return respond.search_response(self, query, k, mode, rerank_from)

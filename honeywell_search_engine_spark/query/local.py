@@ -10,8 +10,9 @@ remove. The deployment story at 10^12 docs is the standard one: Spark
 writes immutable segments to the lake; stateless serving nodes read them.
 
 This module is that serving node. It is bit-exact with the Spark path by
-construction — it runs the SAME shard kernels (query/wand.py) over the
-SAME encoded rows; only the I/O differs:
+construction — every search method is "plan, then evaluate" through the
+SAME plan step and shard evaluator (query/wand.py ``plan_query`` and
+``eval_shard``) over the SAME encoded rows; only the I/O differs:
 
 - posting rows: pyarrow dataset read of ``{index}/segments`` with bucket
   partition-directory pruning + a `term IN (...)` filter pushed to parquet
@@ -26,6 +27,11 @@ SAME encoded rows; only the I/O differs:
   10^12 docs a serving shard holds only ITS shard's docvalues
   (mmap/KV-backed), exactly like Lucene docvalues — the per-shard array
   layout here is that design at sandbox scale.
+- decode: each (term, shard) list is decoded once into a byte-budgeted
+  LRU (``_memo``). Per shard, ``_search`` hands the evaluator the
+  decoded PostingLists (full-scan kernels) when every list the plan
+  touches there is at most FULLSCAN_MAX_POSTINGS long, else the
+  MemoLists (block-max-pruned kernels, block decode = a slice).
 
 Tombstones are read from the same manifest files as the Spark path and
 translated per shard with vectorized searchsorted. An instance is a
@@ -43,11 +49,12 @@ import numpy as np
 
 from honeywell_search_engine_spark.index.naive import bucket_of
 from honeywell_search_engine_spark.index.segments import load_tombstones
+from honeywell_search_engine_spark.query import respond
 from honeywell_search_engine_spark.query import wand as W
 
 
-# Per-shard posting-list size above which the decode-through path switches
-# from fully-vectorized full-scan kernels to the block-walk kernels with
+# Per-shard posting-list size above which a serving query switches from
+# the fully-vectorized full-scan kernels to the block-walk kernels with
 # exact block-max pruning (still decode-free via MemoList slices). The
 # crossover: a full scan costs ~10 ns/posting, so a 128k list is ~1.3 ms —
 # about the fixed bookkeeping cost of the pruning kernels; below it the
@@ -83,19 +90,12 @@ class ServingIndex:
         self,
         path: str,
         term_cache_capacity: int = 65536,
-        decode_through: bool = True,
         dec_cache_bytes: int = 256 << 20,
         shards: list[int] | None = None,
     ):
         import pyarrow.parquet as pq
 
         self.path = path
-        # decode-through: AND/OR/single queries run on fully-decoded
-        # posting lists from the (term, shard) LRU — warm queries skip
-        # codec work entirely (phrase/NEAR already did this). False keeps
-        # the block-selective encoded kernels (used by parity tests; also
-        # the right setting for a one-shot cold query over a huge term).
-        self.decode_through = decode_through
         # shard-subset mode (the 10^12-doc deployment unit): this node
         # owns only `shards` — docmap rows and posting payloads load for
         # those shards alone, so per-node memory scales with owned
@@ -176,7 +176,6 @@ class ServingIndex:
         self.__init__(
             self.path,
             term_cache_capacity=self._term_cap,
-            decode_through=self.decode_through,
             dec_cache_bytes=self._dec_budget,
             shards=self._shards,
         )
@@ -266,6 +265,45 @@ class ServingIndex:
 
     # ---- queries ----------------------------------------------------------
 
+    def _search(self, plan, k: int, allowed_docids=None) -> list[tuple[int, float]]:
+        """Evaluate a wand.QueryPlan (None: matches nothing) over this
+        node: the pruned row fetch and idf, per shard the lists from the
+        decoded LRU — PostingLists when every list the plan touches there
+        is <= FULLSCAN_MAX_POSTINGS (full-scan kernels: lowest constant
+        cost, measured ~3x faster than block walking at that size), else
+        MemoLists (exact block-max pruning, essential for Zipf head terms
+        at scale; block decode is a slice of the cached decode) —
+        wand.eval_shard, the lid->docid mapping and the (-score, docid)
+        cut."""
+        if plan is None:
+            return []
+        rows_by_term = self._rows_for(list(plan.scan_terms))
+        if any(not rows_by_term[t] for t in plan.required):
+            return []  # a required term unknown globally -> no hit
+        idf = {t: self._idf(r, t) for t, r in rows_by_term.items() if r}
+        scope = self._lids_by_shard(allowed_docids) if allowed_docids is not None else None
+        by_shard: dict[int, dict[str, dict]] = {}
+        for t, rows in rows_by_term.items():
+            for row in rows:
+                by_shard.setdefault(int(row["shard"]), {})[t] = row
+        out: list[tuple[int, float]] = []
+        for s, tmap in by_shard.items():
+            if any(t not in tmap for t in plan.required):
+                continue
+            full_scan = max(int(r["n"]) for r in tmap.values()) <= FULLSCAN_MAX_POSTINGS
+            by_term = {}
+            for t, r in tmap.items():
+                ml = self._memo(t, s, r, positions=t in plan.need_pos)
+                by_term[t] = ml.pl if full_scan else ml
+            res = W.eval_shard(
+                plan, by_term, idf, self.avgdl, k, self._dead.get(s, W._NO_DEAD),
+                scope.get(s, W._NO_DEAD) if scope is not None else None,
+            )
+            arr = self._docid_of[s]
+            out.extend((int(arr[int(l)]), float(v)) for l, v in res)
+        out.sort(key=lambda r: (-r[1], r[0]))
+        return out[:k]
+
     def search(
         self,
         query: str,
@@ -281,175 +319,15 @@ class ServingIndex:
         `pre_analyzed` supplies already-analyzed (stemmed) index terms and
         skips query analysis — Porter is not idempotent, so delegating
         callers must not round-trip stems through the analyzer."""
-        if pre_analyzed is not None:
-            terms = list(dict.fromkeys(pre_analyzed))
-        else:
-            _aq, _tok, _sg = W._analyzers_for(self)
-            terms = _aq(query)
-        if not terms:
-            return []
-        neg_terms: list[str] = []
-        if exclude_terms:
-            if mode != "and":
-                raise ValueError("exclude_terms (websearch '-term') is AND-only")
-            neg_terms = sorted(set(exclude_terms))
-            if set(terms) & set(neg_terms):
-                return []  # contradiction: a & !a never matches
-        rows_by_term = self._rows_for(terms + neg_terms)
-        if mode == "and" and any(not rows_by_term[t] for t in terms):
-            return []  # a term unknown globally -> conjunction empty
-        idf = {t: self._idf(r, t) for t, r in rows_by_term.items() if r}
-        scope = self._lids_by_shard(allowed_docids) if allowed_docids is not None else None
-        by_shard: dict[int, list] = {}
-        neg_by_shard: dict[int, list] = {}
-        for t in terms:
-            for row in rows_by_term[t]:
-                by_shard.setdefault(int(row["shard"]), []).append((t, row))
-        for t in neg_terms:
-            for row in rows_by_term[t]:
-                neg_by_shard.setdefault(int(row["shard"]), []).append((t, row))
-        out: list[tuple[int, float]] = []
-        for s, trs in by_shard.items():
-            dead = self._dead.get(s, W._NO_DEAD)
-            sc = scope.get(s, W._NO_DEAD) if scope is not None else None
-            if self.decode_through:
-                all_rows = trs + neg_by_shard.get(s, [])
-                if max(int(r["n"]) for _, r in all_rows) <= FULLSCAN_MAX_POSTINGS:
-                    # small lists: fully-vectorized scan kernels over the
-                    # cached decoded arrays — lowest constant cost, and
-                    # pruning cannot pay for its bookkeeping at this size
-                    # (measured ~3x faster than the block-walk kernels)
-                    pls = [(t, self._decoded(t, s, r)) for t, r in trs]
-                    neg_pls = [
-                        (t, self._decoded(t, s, r))
-                        for t, r in neg_by_shard.get(s, [])
-                    ]
-                    if mode == "and":
-                        if len(pls) < len(terms):
-                            continue
-                        if len(terms) == 1:
-                            res = W._topk_single_decoded(
-                                pls[0][1], idf[pls[0][0]], self.avgdl, k,
-                                dead, sc, neg_pls,
-                            )
-                        else:
-                            res = W._shard_kernel_and_decoded(
-                                pls, idf, self.avgdl, k, dead, scope=sc,
-                                neg_pls=neg_pls,
-                            )
-                    else:
-                        res = W._shard_kernel_or_decoded(
-                            pls, idf, self.avgdl, k, dead, scope=sc
-                        )
-                    arr = self._docid_of[s]
-                    out.extend(
-                        (int(arr[int(l)]), float(v)) for l, v in res
-                    )
-                    continue
-                # big lists (Zipf head terms): MemoList — the SAME
-                # encoded kernels, with their exact block-max pruning
-                # (essential at scale: a full scan of a 10M-posting list
-                # per query doesn't survive 100x), but block "decode" is
-                # a slice of the cached full decode
-                rows = [(t, self._memo(t, s, r)) for t, r in trs]
-                neg_rows = [
-                    (t, self._memo(t, s, r))
-                    for t, r in neg_by_shard.get(s, [])
-                ]
-            else:
-                rows = [(t, W._enc_from_row(r)) for t, r in trs]
-                neg_rows = [
-                    (t, W._enc_from_row(r)) for t, r in neg_by_shard.get(s, [])
-                ]
-            if mode == "and":
-                if len(rows) < len(terms):
-                    continue
-                if len(terms) == 1:
-                    res = W._topk_single(
-                        rows[0][1], idf[rows[0][0]], self.avgdl, k, dead, sc,
-                        neg_rows,
-                    )
-                else:
-                    res = W._shard_kernel_and(
-                        rows, idf, self.avgdl, k, dead, scope=sc,
-                        neg_rows=neg_rows,
-                    )
-            else:
-                res = W._shard_kernel_or(rows, idf, self.avgdl, k, dead, scope=sc)
-            arr = self._docid_of[s]
-            out.extend((int(arr[int(l)]), float(v)) for l, v in res)
-        out.sort(key=lambda r: (-r[1], r[0]))
-        return out[:k]
+        plan = W.plan_query(self, query, k, mode, exclude_terms, pre_analyzed)
+        return self._search(plan, k, allowed_docids)
 
     def search_websearch(self, query: str, k: int = 10) -> list[tuple[int, float]]:
         """FULL websearch_to_tsquery semantics (quoted adjacency groups,
         '-term' negation, '-"quoted"' negated phrases, the 'or' keyword)
         — mirrors query/wand.bm25_topk_websearch, bit-identical. Never
         raises on user query strings (round-3 advice)."""
-        from honeywell_search_engine_spark.functions.analyzer import (
-            parse_websearch_query,
-        )
-
-        _aq, _tok, _sg = W._analyzers_for(self)
-        groups = _sg(parse_websearch_query(query))
-        if not groups:
-            return []
-        single = len(groups) == 1 and not groups[0][3]
-        if single and not groups[0][2]:
-            all_pos, neg, _, _ = groups[0]
-            # all_pos/neg are already index-analyzed — skip re-analysis
-            # (Porter is not idempotent; round-4 advice, local.py:234)
-            return self.search(query, k, exclude_terms=neg, pre_analyzed=all_pos)
-        scan_terms = sorted(
-            {t for g in groups for t in g[0]}
-            | {t for g in groups for t in g[1]}
-            | {t for g in groups for ph in g[3] for t in ph}
-        )
-        rows_by_term = self._rows_for(scan_terms)
-        if single and any(not rows_by_term[t] for t in groups[0][0]):
-            return []  # a required term unknown globally -> empty
-        idf = {t: self._idf(r, t) for t, r in rows_by_term.items() if r}
-        by_shard: dict[int, dict[str, dict]] = {}
-        for t in scan_terms:
-            for row in rows_by_term[t]:
-                by_shard.setdefault(int(row["shard"]), {})[t] = row
-        # terms needing positions: members of any quoted phrase, positive
-        # or negated (adjacency verification reads them)
-        need_pos = {
-            t
-            for g in groups
-            for ph in (list(g[2]) + list(g[3]))
-            for t in ph
-        }
-        out: list[tuple[int, float]] = []
-        for s, tmap in by_shard.items():
-            dead = self._dead.get(s, W._NO_DEAD)
-            if self.decode_through:
-                # MemoList-backed: the websearch kernels run unchanged
-                # (selective probes become slices of the cached decode)
-                by_term = {
-                    t: self._memo(t, s, r, positions=t in need_pos)
-                    for t, r in tmap.items()
-                }
-            else:
-                by_term = {t: W._enc_from_row(r) for t, r in tmap.items()}
-            if single:
-                all_pos, neg, phrases, _ = groups[0]
-                if any(t not in by_term for t in all_pos):
-                    continue
-                pos_rows = [(t, by_term[t]) for t in all_pos]
-                neg_rows = [(t, by_term[t]) for t in neg if t in by_term]
-                res = W._shard_kernel_websearch(
-                    pos_rows, phrases, neg_rows, idf, self.avgdl, k, dead
-                )
-            else:
-                res = W._shard_kernel_websearch_or(
-                    groups, by_term, idf, self.avgdl, k, dead
-                )
-            arr = self._docid_of[s]
-            out.extend((int(arr[int(l)]), float(v)) for l, v in res)
-        out.sort(key=lambda r: (-r[1], r[0]))
-        return out[:k]
+        return self._search(W.plan_query(self, query, k, syntax="web"), k)
 
     def search_phrase(
         self, phrase: str, k: int = 10, slop: int = 0
@@ -460,39 +338,7 @@ class ServingIndex:
         posting lists, so a warm phrase query costs only intersection +
         positional verify — no varbyte work (measured ~3x faster at 60k
         docs; same results, pinned vs the Spark path and oracle)."""
-        _aq, _tok, _sg = W._analyzers_for(self)
-        terms = _tok(phrase)
-        if not terms:
-            return []
-        rows_by_term = self._rows_for(terms)
-        if any(not rows_by_term[t] for t in set(terms)):
-            return []
-        idf = {t: self._idf(r, t) for t, r in rows_by_term.items()}
-        by_shard: dict[int, dict[str, dict]] = {}
-        for t, rows in rows_by_term.items():
-            for row in rows:
-                by_shard.setdefault(int(row["shard"]), {})[t] = row
-        out: list[tuple[int, float]] = []
-        for s, tmap in by_shard.items():
-            if any(t not in tmap for t in terms):
-                continue
-            dead = self._dead.get(s, W._NO_DEAD)
-            if max(int(tmap[t]["n"]) for t in terms) > FULLSCAN_MAX_POSTINGS:
-                # head-term phrase: keep candidate-block selectivity
-                # (positions sliced only for candidate blocks), decode-free
-                rows = [(t, self._memo(t, s, tmap[t], positions=True)) for t in terms]
-                res = W._shard_kernel_phrase(
-                    rows, idf, self.avgdl, k, dead, slop
-                )
-            else:
-                pls = [(t, self._decoded(t, s, tmap[t], positions=True)) for t in terms]
-                res = W._shard_kernel_phrase_decoded(
-                    pls, idf, self.avgdl, k, dead, slop
-                )
-            arr = self._docid_of[s]
-            out.extend((int(arr[int(l)]), float(v)) for l, v in res)
-        out.sort(key=lambda r: (-r[1], r[0]))
-        return out[:k]
+        return self._search(W.plan_query(self, phrase, k, syntax="phrase", slop=slop), k)
 
     def search_near_unordered(
         self, query: str, k: int = 10, dist: int = 3
@@ -500,40 +346,7 @@ class ServingIndex:
         """Ranked unordered two-term NEAR — mirrors
         wand.bm25_topk_near_unordered (same decoded-postings LRU hot path
         as search_phrase; rank/score bit-identical, tested)."""
-        _aq, _tok, _sg = W._analyzers_for(self)
-        terms = _tok(query)
-        if len(terms) != 2 or terms[0] == terms[1]:
-            raise ValueError(
-                "search_near_unordered is the two-distinct-term NEAR "
-                f"operator; got {terms!r}"
-            )
-        rows_by_term = self._rows_for(terms)
-        if any(not rows_by_term[t] for t in terms):
-            return []
-        idf = {t: self._idf(r, t) for t, r in rows_by_term.items()}
-        by_shard: dict[int, dict[str, dict]] = {}
-        for t, rows in rows_by_term.items():
-            for row in rows:
-                by_shard.setdefault(int(row["shard"]), {})[t] = row
-        out: list[tuple[int, float]] = []
-        for s, tmap in by_shard.items():
-            if any(t not in tmap for t in terms):
-                continue
-            dead = self._dead.get(s, W._NO_DEAD)
-            if max(int(tmap[t]["n"]) for t in terms) > FULLSCAN_MAX_POSTINGS:
-                rows = [(t, self._memo(t, s, tmap[t], positions=True)) for t in terms]
-                res = W._shard_kernel_phrase(
-                    rows, idf, self.avgdl, k, dead, slop=dist, unordered=True
-                )
-            else:
-                pls = [(t, self._decoded(t, s, tmap[t], positions=True)) for t in terms]
-                res = W._shard_kernel_phrase_decoded(
-                    pls, idf, self.avgdl, k, dead, slop=dist, unordered=True
-                )
-            arr = self._docid_of[s]
-            out.extend((int(arr[int(l)]), float(v)) for l, v in res)
-        out.sort(key=lambda r: (-r[1], r[0]))
-        return out[:k]
+        return self._search(W.plan_query(self, query, k, syntax="near", slop=dist), k)
 
     def _memo(self, term: str, shard: int, row: dict,
               positions: bool = False):
@@ -577,12 +390,6 @@ class ServingIndex:
         else:
             self._dec_lru.move_to_end(key)
         return ml
-
-    def _decoded(self, term: str, shard: int, row: dict,
-                 positions: bool = False):
-        """The cached PostingList for one (term, shard) — the phrase/NEAR
-        kernels consume the decoded arrays directly."""
-        return self._memo(term, shard, row, positions).pl
 
     # ---- suggest / spell (serving-side mirrors of query/suggest.py) ------
 
@@ -729,8 +536,6 @@ class ServingIndex:
         — the distinction GenerationSet needs for newest-wins over
         per-generation stores where an EMPTY newest text must still win
         (r6 advice, low)."""
-        from honeywell_search_engine_spark.query import respond
-
         out: dict[int, str] = {}
         missing = []
         _ABSENT = self._doc_lru  # unique sentinel, never a cached value
@@ -781,24 +586,7 @@ class ServingIndex:
         (respond.rerank_hits_py ≡ operators/serving.rerank_topk), top-k
         of THAT order composed (rnk = rerank order, score_r = rerank
         score)."""
-        from honeywell_search_engine_spark.query import respond
-
-        if not hasattr(self, "_docs_path"):
-            raise ValueError(
-                "no text store attached — call attach_docs(docs_path) first"
-            )
-        _texts = self._fetch_texts
-        if rerank_from is not None:
-            cands = self.search(query, k=rerank_from, mode="or")
-            texts = _texts([d for d, _ in cands])
-            qterms = respond.analyze_query(query)
-            ranked = respond.rerank_hits_py(cands, texts, qterms, k_out=k)
-            hits = [(d, rr) for _rnk, d, rr, _sr in ranked]
-            return respond.compose_response_rows(hits, texts, query)
-        hits = self.search(query, k=k, mode=mode)
-        return respond.compose_response_rows(
-            hits, _texts([d for d, _ in hits]), query
-        )
+        return respond.search_response(self, query, k, mode, rerank_from)
 
 
 class ShardRouter:
@@ -906,6 +694,10 @@ class ShardRouter:
         via one node)."""
         for n in self.nodes:
             n.attach_docs(docs_path, id_col, text_col, doc_cache_entries)
+        self._docs_path = docs_path
+
+    def _fetch_texts(self, docids: list[int]) -> dict[int, str]:
+        return self.nodes[0]._fetch_texts(docids)
 
     def search_response(
         self,
@@ -919,22 +711,4 @@ class ShardRouter:
         composition (and the optional rerank stage over the merged
         disjunctive top-N) runs once at the router — identical to a full
         instance (tested)."""
-        from honeywell_search_engine_spark.query import respond
-
-        node = self.nodes[0]
-        if not hasattr(node, "_docs_path"):
-            raise ValueError(
-                "no text store attached — call attach_docs(docs_path) first"
-            )
-        _texts = node._fetch_texts
-        if rerank_from is not None:
-            cands = self.search(query, k=rerank_from, mode="or")
-            texts = _texts([d for d, _ in cands])
-            qterms = respond.analyze_query(query)
-            ranked = respond.rerank_hits_py(cands, texts, qterms, k_out=k)
-            hits = [(d, rr) for _rnk, d, rr, _sr in ranked]
-            return respond.compose_response_rows(hits, texts, query)
-        hits = self.search(query, k=k, mode=mode)
-        return respond.compose_response_rows(
-            hits, _texts([d for d, _ in hits]), query
-        )
+        return respond.search_response(self, query, k, mode, rerank_from)

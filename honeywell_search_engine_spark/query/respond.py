@@ -163,6 +163,35 @@ def compose_response_rows(
     return out
 
 
+def search_response(
+    index,
+    query: str,
+    k: int = 10,
+    mode: str = "and",
+    rerank_from: int | None = None,
+) -> list[tuple]:
+    """The full response rows of a serving front end (ServingIndex,
+    ShardRouter or GenerationSet: anything with ``search`` and
+    ``_fetch_texts`` whose ``attach_docs`` was called): the top-k hits
+    of ``index.search``, composed over only those k documents'
+    texts. `rerank_from=N` takes the disjunctive top-N instead, reranks
+    it (rerank_hits_py) and composes the top-k of that order."""
+    if not hasattr(index, "_docs_path"):
+        raise ValueError(
+            "no text store attached — call attach_docs(docs_path) first"
+        )
+    if rerank_from is not None:
+        cands = index.search(query, k=rerank_from, mode="or")
+        texts = index._fetch_texts([d for d, _ in cands])
+        ranked = rerank_hits_py(cands, texts, analyze_query(query), k_out=k)
+        hits = [(d, rr) for _rnk, d, rr, _sr in ranked]
+        return compose_response_rows(hits, texts, query)
+    hits = index.search(query, k=k, mode=mode)
+    return compose_response_rows(
+        hits, index._fetch_texts([d for d, _ in hits]), query
+    )
+
+
 def fetch_texts(
     docs_path: str,
     docids: list[int],

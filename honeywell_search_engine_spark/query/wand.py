@@ -1,5 +1,22 @@
 """BM25 top-k over encoded segments with block-max pruning.
 
+Every query on every front end is "plan, then evaluate":
+
+- ``plan_query`` analyzes and validates a query once and returns an
+  immutable ``QueryPlan`` (kind and, or, web, phrase or near; positive
+  and negated terms; websearch groups; slop; the terms to scan and the
+  terms whose positions the kernels read).
+- ``eval_shard`` evaluates a plan on one shard and is the only code
+  that picks a kernel. Its lists are EncodedLists (Spark path),
+  MemoLists (cached full decode with block metadata: block-max walk) or
+  decoded PostingLists (no block metadata: full scan). The kernels take
+  any of the three; the float operations are the same, so scores are
+  bit-identical whichever is passed.
+
+The Spark entry points run ``eval_shard`` for a ``{qid: plan}`` map in
+one shard stage (``_eval_stage``); query/local.py's ServingIndex runs it
+per shard in-process.
+
 Distributed plan of every Spark query entry point (``_shard_stage``):
 
     (df, idf) of the query terms: driver memo; a miss     [driver; no job]
@@ -48,11 +65,17 @@ into the segments.
 
 from __future__ import annotations
 
+import numbers
+from dataclasses import dataclass
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from honeywell_search_engine_spark.functions.analyzer import analyze_query
+from honeywell_search_engine_spark.functions.analyzer import (
+    analyze_query,
+    parse_websearch_query,
+)
 from honeywell_search_engine_spark.index import codec
 from honeywell_search_engine_spark.index.segments import (
     SegmentIndex,
@@ -84,6 +107,121 @@ def _analyzers_for(index):
 # a docid scope above this size never rides a driver collect/broadcast —
 # it joins the docmap and cogroups with the segment rows instead
 SCOPE_INLINE_MAX = 100_000
+
+
+@dataclass(frozen=True)
+class QueryPlan:
+    """One analyzed, validated query: what ``eval_shard`` evaluates on
+    every shard, whichever front end asked.
+
+    - kind: 'and', 'or', 'web' (websearch groups), 'phrase' or 'near';
+    - terms: positive terms — distinct for and/or, phrase order with
+      repeats for phrase/near, every group's positive terms for web;
+    - neg: negated terms (and: websearch '-term');
+    - groups: websearch groups (all_pos, neg, phrases, neg_phrases);
+    - slop: phrase slop, or the NEAR distance;
+    - required: terms every hit contains — a shard (or a whole index)
+      missing one has no hit;
+    - scan_terms: sorted distinct terms whose posting rows are read;
+    - need_pos: terms whose positions the kernels read."""
+
+    kind: str
+    terms: tuple
+    neg: tuple
+    groups: tuple
+    slop: int
+    required: tuple
+    scan_terms: tuple
+    need_pos: frozenset
+
+
+def _plan(kind: str, terms, neg=(), groups=(), slop: int = 0) -> QueryPlan:
+    """A QueryPlan with its derived term sets."""
+    groups = tuple(
+        (tuple(p), tuple(n), tuple(map(tuple, ph)), tuple(map(tuple, nph)))
+        for p, n, ph, nph in groups
+    )
+    if kind == "web":
+        terms = sorted({t for g in groups for t in g[0]})
+        scan = {t for g in groups for t in (*g[0], *g[1], *(x for ph in g[3] for x in ph))}
+        need_pos = frozenset(t for g in groups for ph in (*g[2], *g[3]) for t in ph)
+        required = groups[0][0] if len(groups) == 1 else ()
+    else:
+        scan = {*terms, *neg}
+        need_pos = frozenset(terms) if kind in ("phrase", "near") else frozenset()
+        required = () if kind == "or" else tuple(dict.fromkeys(terms))
+    return QueryPlan(
+        kind, tuple(terms), tuple(neg), groups, int(slop), required,
+        tuple(sorted(scan)), need_pos,
+    )
+
+
+def plan_query(
+    index,
+    query: str,
+    k: int = 10,
+    mode: str = "and",
+    exclude_terms: list[str] | None = None,
+    pre_analyzed: list[str] | None = None,
+    syntax: str = "words",
+    slop: int = 0,
+) -> QueryPlan | None:
+    """Analyze and validate one query for `index` (a SegmentIndex or a
+    ServingIndex): the plan step every front end shares. Returns the
+    QueryPlan, or None when the query can match nothing (no analyzed
+    term, or a contradiction ``a -a``).
+
+    `syntax` is how `query` reads: 'words' (bag of words under `mode`,
+    'and' or 'or'), 'web' (websearch_to_tsquery), 'phrase' (phrase
+    order; `slop` > 0 is ordered NEAR) or 'near' (two distinct terms
+    within `slop` positions in either order). A websearch query of one
+    group without quoted phrases plans as AND over its positive terms
+    with its negated ones excluded. Analysis follows the index
+    (``_analyzers_for``: a stemmed index stems queries); `pre_analyzed`
+    terms skip it — Porter is not idempotent, so stems are never
+    re-stemmed. `pre_analyzed` and `exclude_terms` must be in the
+    analyzer's [a-z0-9]+ alphabet. ValueError on an unknown mode or
+    syntax, on `k` not an int >= 1, on `exclude_terms` outside AND mode,
+    and on a NEAR query without exactly two distinct terms."""
+    if mode not in ("and", "or"):
+        raise ValueError(f"mode must be 'and' or 'or'; got {mode!r}")
+    if syntax not in ("words", "web", "phrase", "near"):
+        raise ValueError(f"unknown query syntax {syntax!r}")
+    if isinstance(k, bool) or not isinstance(k, numbers.Integral) or k < 1:
+        raise ValueError(f"k must be an int >= 1; got {k!r}")
+    aq, tok, sg = _analyzers_for(index)
+    if syntax in ("phrase", "near"):
+        terms = tok(query)
+        if syntax == "near" and (len(terms) != 2 or terms[0] == terms[1]):
+            raise ValueError(
+                "NEAR is the two-distinct-term operator; got "
+                f"{terms!r} (use the phrase search with slop for the "
+                "ordered chain)"
+            )
+        return _plan(syntax, terms, slop=slop) if terms else None
+    if syntax == "web":
+        groups = sg(parse_websearch_query(query))
+        if not groups:
+            return None
+        all_pos, neg, phrases, neg_phrases = groups[0]
+        if len(groups) > 1 or phrases or neg_phrases:
+            return _plan("web", (), groups=groups)
+        # one plain group: its terms are already index-analyzed (stemmed
+        # if the index is), so they ride pre_analyzed
+        pre_analyzed, exclude_terms = all_pos, neg
+    if pre_analyzed is not None:
+        terms = list(dict.fromkeys(check_terms(pre_analyzed)))
+    else:
+        terms = aq(query)
+    neg_terms = sorted(set(check_terms(exclude_terms or [])))
+    if not terms:
+        return None
+    if neg_terms:
+        if mode != "and":
+            raise ValueError("exclude_terms (websearch '-term') is AND-only")
+        if set(terms) & set(neg_terms):
+            return None  # contradiction: a & !a never matches
+    return _plan(mode, terms, neg_terms)
 
 
 def _enc_from_row(row) -> codec.EncodedList:
@@ -130,6 +268,41 @@ def _select_topk_with_ties(lids: np.ndarray, scores: np.ndarray, k: int):
     return list(zip(lids[idx], scores[idx]))
 
 
+def _pos_kw(with_positions: bool) -> dict:
+    """Codec decode arguments: flat absolute positions, or no positions."""
+    return {"with_positions": True, "flat_positions": True} if with_positions else {}
+
+
+def _full(x, with_positions: bool = False) -> codec.PostingList:
+    """The whole list decoded: a PostingList as it is (its holder decoded
+    flat positions for the terms that need them), else a codec decode (a
+    slice of the cached decode for a MemoList)."""
+    if isinstance(x, codec.PostingList):
+        return x
+    return codec.decode_postings(x, **_pos_kw(with_positions))
+
+
+def _blocked(rows) -> bool:
+    """Every (term, list) in `rows` carries block metadata — a decoded
+    PostingList has none, so the kernels take their full-scan branch."""
+    return not any(isinstance(x, codec.PostingList) for _t, x in rows)
+
+
+def _live(lids: np.ndarray, scores: np.ndarray, dead: np.ndarray,
+          scope: np.ndarray | None, neg_rows) -> tuple:
+    """(lids, scores) without tombstoned, out-of-scope and negated docs."""
+    if dead.size:
+        alive = ~np.isin(lids, dead)
+        lids, scores = lids[alive], scores[alive]
+    if scope is not None:
+        m = np.isin(lids, scope)
+        lids, scores = lids[m], scores[m]
+    if neg_rows and lids.size:
+        keep_n = ~_negated_mask(neg_rows, lids)
+        lids, scores = lids[keep_n], scores[keep_n]
+    return lids, scores
+
+
 def _topk_single(enc: codec.EncodedList, idf: float, avgdl: float, k: int,
                  dead: np.ndarray = _NO_DEAD, scope: np.ndarray | None = None,
                  neg_rows: list = ()):
@@ -139,7 +312,14 @@ def _topk_single(enc: codec.EncodedList, idf: float, avgdl: float, k: int,
     sorted allowed-lid array (the reference's per-caller allowed_ids
     restriction, F2/F3); `neg_rows` are (term, EncodedList) exclusions
     (websearch '-term'), filtered per chunk BEFORE the top-k buffer so the
-    pruning threshold never counts an excluded doc."""
+    pruning threshold never counts an excluded doc. A decoded PostingList
+    has no block bounds and is scored in one full-scan pass."""
+    if isinstance(enc, codec.PostingList):
+        lids, scores = _live(
+            enc.docids.astype(np.int64), idf * _u_exact(enc.tfs, enc.doclens, avgdl),
+            dead, scope, neg_rows,
+        )
+        return _select_topk_with_ties(lids, scores, k)
     order = np.argsort(-enc.bmax_u, kind="stable")
     # Blocks are visited in descending-bound order in CHUNKS: the stop
     # test uses the first (= highest-bound) block of the next chunk, so
@@ -157,17 +337,10 @@ def _topk_single(enc: codec.EncodedList, idf: float, avgdl: float, k: int,
         if topbuf.size >= k and bound < topbuf.min():
             break  # every remaining block has a strictly smaller bound
         pl = codec.decode_blocks(enc, np.sort(batch))
-        lids = pl.docids.astype(np.int64)
-        scores = idf * _u_exact(pl.tfs, pl.doclens, avgdl)
-        if dead.size:
-            alive = ~np.isin(lids, dead)
-            lids, scores = lids[alive], scores[alive]
-        if scope is not None:
-            m = np.isin(lids, scope)
-            lids, scores = lids[m], scores[m]
-        if neg_rows and lids.size:
-            keep_n = ~_negated_mask(neg_rows, lids)
-            lids, scores = lids[keep_n], scores[keep_n]
+        lids, scores = _live(
+            pl.docids.astype(np.int64), idf * _u_exact(pl.tfs, pl.doclens, avgdl),
+            dead, scope, neg_rows,
+        )
         cand_d.append(lids)
         cand_s.append(scores)
         if scores.size:
@@ -193,27 +366,9 @@ def _negated_mask(neg_rows: list, cand: np.ndarray) -> np.ndarray:
     websearch '-term' exclusion. Candidate-selective decode: only the
     blocks that could contain a candidate are touched (same skip pattern
     as the AND intersect); a negated term's list is never fully decoded."""
-    ci = cand.astype(np.int64)
-    hit = np.zeros(ci.size, dtype=bool)
-    for _t, enc in neg_rows:
-        if ci.size == 0:
-            break
-        if isinstance(enc, codec.PostingList):  # decoded-LRU path
-            hit |= _member_mask(enc.docids.astype(np.int64), ci)
-            continue
-        blocks = _candidate_blocks(enc, ci)
-        valid = blocks < enc.bmax_docid.size
-        if not valid.any():
-            continue
-        ublocks = np.unique(blocks[valid])
-        pl = codec.decode_blocks(enc, ublocks)
-        pd_ids = pl.docids.astype(np.int64)
-        cand_v = ci[valid]
-        pos = np.searchsorted(pd_ids, cand_v)
-        ok = pos < pd_ids.size
-        match = np.zeros(cand_v.size, dtype=bool)
-        match[ok] = pd_ids[pos[ok]] == cand_v[ok]
-        hit[np.flatnonzero(valid)[match]] = True
+    hit = np.zeros(cand.size, dtype=bool)
+    for _t, x in neg_rows:
+        hit |= _probe_any(x, cand)[0]
     return hit
 
 
@@ -241,10 +396,12 @@ def _shard_kernel_and(term_rows: list, idf: dict[str, float], avgdl: float,
     conjunction there is no sound theta and score pruning is skipped —
     only the always-valid "past the last block" drop applies. (An earlier
     version took theta from UNVERIFIED driver contributions, which
-    over-prunes when high-driver-score docs fail the intersection.)"""
+    over-prunes when high-driver-score docs fail the intersection.)
+    Lists without block metadata (decoded PostingLists) skip the score
+    pruning; the intersection probes them directly."""
     term_rows = sorted(term_rows, key=lambda tr: tr[1].n)
     t0, e0 = term_rows[0]
-    pl0 = codec.decode_postings(e0)
+    pl0 = _full(e0)
     cand = pl0.docids  # uint64 ascending
     tf_cols = {t0: (pl0.tfs, pl0.doclens)}
     if dead.size:
@@ -264,7 +421,7 @@ def _shard_kernel_and(term_rows: list, idf: dict[str, float], avgdl: float,
             tfs0, dls0 = tf_cols[t0]
             cand = cand[keep_n]
             tf_cols[t0] = (tfs0[keep_n], dls0[keep_n])
-    if prune and cand.size > k:
+    if prune and cand.size > k and _blocked(term_rows[1:]):
         tfs0, dls0 = tf_cols[t0]
         exact0 = idf[t0] * _u_exact(tfs0, dls0, avgdl)  # exact driver part
         ub = exact0.copy()
@@ -307,28 +464,17 @@ def _shard_kernel_and(term_rows: list, idf: dict[str, float], avgdl: float,
 
 def _intersect_selective(rest_rows: list, cand: np.ndarray, tf_cols: dict):
     """Intersect `cand` (ascending docids, with driver tf columns already
-    in tf_cols) against every (term, EncodedList) in rest_rows, decoding
-    ONLY the blocks that can contain a surviving candidate. Returns the
+    in tf_cols) against every (term, list) in rest_rows through
+    _probe_any: an encoded list decodes ONLY the blocks that can contain a
+    surviving candidate, a decoded one is searched directly. Returns the
     matched (cand, tf_cols) with one (tfs, doclens) column per term."""
-    for t, enc in rest_rows:
+    for t, x in rest_rows:
         if cand.size == 0:
             return cand, tf_cols
-        nblocks = enc.bmax_docid.size
-        blocks = _candidate_blocks(enc, cand.astype(np.int64))
-        valid = blocks < nblocks  # candidates beyond the last block can't match
-        ublocks = np.unique(blocks[valid])
-        pl = codec.decode_blocks(enc, ublocks)  # only candidate blocks decoded
-        cand_v = cand[valid]
-        pos = np.searchsorted(pl.docids, cand_v)
-        ok = pos < pl.docids.size
-        match = np.zeros(cand_v.size, dtype=bool)
-        match[ok] = pl.docids[pos[ok]] == cand_v[ok]
-        keep = np.zeros(cand.size, dtype=bool)
-        keep[np.flatnonzero(valid)[match]] = True
-        sel = pos[match]
+        keep, tfs, dls, _ = _probe_any(x, cand)
         for tt in list(tf_cols):
             tf_cols[tt] = (tf_cols[tt][0][keep], tf_cols[tt][1][keep])
-        tf_cols[t] = (pl.tfs[sel], pl.doclens[sel])
+        tf_cols[t] = (tfs, dls)
         cand = cand[keep]
     return cand, tf_cols
 
@@ -391,15 +537,16 @@ def _shard_kernel_or(term_rows: list, idf: dict[str, float], avgdl: float,
     block-max pass (_or_block_prune) drops whole docid regions whose
     summed upper bound cannot reach the k-th best single-term score —
     exact (returned scores unchanged, boundary ties kept), and the skipped
-    blocks are never decoded."""
+    blocks are never decoded. Decoded PostingLists (no block metadata)
+    are scored unpruned."""
     term_rows = sorted(term_rows, key=lambda tr: tr[0])
     blocks_per_term = region = None
-    if prune and len(term_rows) > 1:
+    if prune and len(term_rows) > 1 and _blocked(term_rows):
         blocks_per_term, region = _or_block_prune(
             term_rows, idf, avgdl, k, dead, scope
         )
     if blocks_per_term is None:
-        decoded = [(t, codec.decode_postings(enc)) for t, enc in term_rows]
+        decoded = [(t, _full(x)) for t, x in term_rows]
     else:
         decoded = [
             (t, codec.decode_blocks(enc, blocks))
@@ -429,120 +576,6 @@ def _shard_kernel_or(term_rows: list, idf: dict[str, float], avgdl: float,
     return _select_topk_with_ties(union.astype(np.int64), score, k)
 
 
-def _member_mask(sorted_ids: np.ndarray, cand: np.ndarray) -> np.ndarray:
-    """True where cand[i] appears in sorted_ids (both int64-comparable,
-    sorted_ids ascending) — one searchsorted, no decode, no Python set."""
-    if cand.size == 0 or sorted_ids.size == 0:
-        return np.zeros(cand.size, dtype=bool)
-    pos = np.searchsorted(sorted_ids, cand)
-    ok = pos < sorted_ids.size
-    out = np.zeros(cand.size, dtype=bool)
-    out[ok] = sorted_ids[pos[ok]] == cand[ok]
-    return out
-
-
-def _topk_single_decoded(pl, idf: float, avgdl: float, k: int,
-                         dead: np.ndarray = _NO_DEAD,
-                         scope: np.ndarray | None = None, neg_pls: list = ()):
-    """Single-term top-k over a PRE-DECODED posting list — the serving
-    decoded-LRU hot path. No block pruning (there is nothing left to
-    skip once the list is in memory as arrays); scores are the same
-    idf * _u_exact as _topk_single, so rank/score are bit-identical
-    (elementwise scoring commutes with filtering; pinned by
-    tests/test_local_serving.py)."""
-    lids = pl.docids.astype(np.int64)
-    scores = idf * _u_exact(pl.tfs, pl.doclens, avgdl)
-    if dead.size:
-        alive = ~np.isin(lids, dead)
-        lids, scores = lids[alive], scores[alive]
-    if scope is not None:
-        m = np.isin(lids, scope)
-        lids, scores = lids[m], scores[m]
-    for _t, npl in neg_pls:
-        if lids.size == 0:
-            break
-        keep = ~_member_mask(npl.docids.astype(np.int64), lids)
-        lids, scores = lids[keep], scores[keep]
-    return _select_topk_with_ties(lids, scores, k)
-
-
-def _shard_kernel_and_decoded(term_pls: list, idf: dict[str, float],
-                              avgdl: float, k: int,
-                              dead: np.ndarray = _NO_DEAD,
-                              scope: np.ndarray | None = None,
-                              neg_pls: list = ()):
-    """Conjunctive kernel over PRE-DECODED posting lists: term_pls =
-    [(term, PostingList)], all query terms present (caller enforces).
-    Same evaluation order as _shard_kernel_and — rarest list drives,
-    dead/scope/negation applied to the driver before intersection, exact
-    scores summed in lexicographic term order — so rank/score are
-    bit-identical to the encoded kernel (same float ops on the same
-    values; the encoded kernel's pruning is exact, so skipping it cannot
-    change results)."""
-    term_pls = sorted(term_pls, key=lambda tp: tp[1].docids.size)
-    t0, pl0 = term_pls[0]
-    cand = pl0.docids  # uint64 ascending
-    cols = {t0: (pl0.tfs, pl0.doclens)}
-    if dead.size:
-        alive = ~np.isin(cand.astype(np.int64), dead)
-        cand = cand[alive]
-        cols[t0] = (pl0.tfs[alive], pl0.doclens[alive])
-    if scope is not None:
-        m = np.isin(cand.astype(np.int64), scope)
-        tfs0, dls0 = cols[t0]
-        cand, cols[t0] = cand[m], (tfs0[m], dls0[m])
-    for _t, npl in neg_pls:
-        if cand.size == 0:
-            break
-        keep = ~_member_mask(npl.docids, cand)
-        if not keep.all():
-            tfs0, dls0 = cols[t0]
-            cand, cols[t0] = cand[keep], (tfs0[keep], dls0[keep])
-    for t, pl in term_pls[1:]:
-        if cand.size == 0:
-            return []
-        pos = np.searchsorted(pl.docids, cand)
-        ok = pos < pl.docids.size
-        keep = np.zeros(cand.size, dtype=bool)
-        keep[ok] = pl.docids[pos[ok]] == cand[ok]
-        sel = pos[keep]
-        for tt in list(cols):
-            cols[tt] = (cols[tt][0][keep], cols[tt][1][keep])
-        cols[t] = (pl.tfs[sel], pl.doclens[sel])
-        cand = cand[keep]
-    if cand.size == 0:
-        return []
-    score = np.zeros(cand.size, dtype=np.float64)
-    for t in sorted(cols):
-        tfs, dls = cols[t]
-        score += idf[t] * _u_exact(tfs, dls, avgdl)
-    return _select_topk_with_ties(cand.astype(np.int64), score, k)
-
-
-def _shard_kernel_or_decoded(term_pls: list, idf: dict[str, float],
-                             avgdl: float, k: int,
-                             dead: np.ndarray = _NO_DEAD,
-                             scope: np.ndarray | None = None):
-    """Disjunctive kernel over PRE-DECODED posting lists — union via
-    np.unique, contributions scatter-added in lexicographic term order,
-    exactly like _shard_kernel_or's unpruned path (whose pruned path is
-    exact too), so rank/score are bit-identical."""
-    term_pls = sorted(term_pls, key=lambda tp: tp[0])
-    union = np.unique(np.concatenate([pl.docids for _, pl in term_pls]))
-    if dead.size:
-        union = union[~np.isin(union.astype(np.int64), dead)]
-    if scope is not None:
-        union = union[np.isin(union.astype(np.int64), scope)]
-    score = np.zeros(union.size, dtype=np.float64)
-    for t, pl in term_pls:  # lexicographic order
-        pos = np.searchsorted(union, pl.docids)
-        ok = pos < union.size
-        ok[ok] = union[pos[ok]] == pl.docids[ok]
-        contrib = idf[t] * _u_exact(pl.tfs, pl.doclens, avgdl)
-        score[pos[ok]] += contrib[ok]
-    return _select_topk_with_ties(union.astype(np.int64), score, k)
-
-
 def _shard_kernel_phrase(term_rows: list, idf: dict[str, float], avgdl: float,
                          k: int, dead: np.ndarray = _NO_DEAD, slop: int = 0,
                          unordered: bool = False):
@@ -552,12 +585,11 @@ def _shard_kernel_phrase(term_rows: list, idf: dict[str, float], avgdl: float,
     are decoded ONLY for candidate blocks and adjacency is verified by
     chained intersection of per-term positions shifted by their phrase
     offset. Matching docs score standard BM25 over the phrase's distinct
-    terms (lexicographic sum order — oracle bit-parity)."""
+    terms (lexicographic sum order — oracle bit-parity). Decoded
+    PostingLists (flat positions) are probed directly."""
     m = len(term_rows)
     drive = min(range(m), key=lambda i: term_rows[i][1].n)
-    pl0 = codec.decode_postings(
-        term_rows[drive][1], with_positions=True, flat_positions=True
-    )
+    pl0 = _full(term_rows[drive][1], with_positions=True)
     cand = pl0.docids
     # per_term[i] = (tfs, doclens, flat absolute positions) — positions
     # stay ONE flat array per term (per-posting boundaries are the tfs);
@@ -576,36 +608,12 @@ def _shard_kernel_phrase(term_rows: list, idf: dict[str, float], avgdl: float,
             continue
         if cand.size == 0:
             return []
-        enc = term_rows[i][1]
-        nblocks = enc.bmax_docid.size
-        blocks = _candidate_blocks(enc, cand.astype(np.int64))
-        valid = blocks < nblocks
-        ublocks = np.unique(blocks[valid])
-        pl = codec.decode_blocks(enc, ublocks, with_positions=True, flat_positions=True)
-        cand_v = cand[valid]
-        pos = np.searchsorted(pl.docids, cand_v)
-        ok = pos < pl.docids.size
-        match = np.zeros(cand_v.size, dtype=bool)
-        match[ok] = pl.docids[pos[ok]] == cand_v[ok]
-        keep = np.zeros(cand.size, dtype=bool)
-        keep[np.flatnonzero(valid)[match]] = True
-        sel = pos[match]
+        # candidate blocks only (positions too), or a direct search of a
+        # decoded list; flat positions gathered at the matched postings
+        keep, tfs, dls, flat = _probe_any(term_rows[i][1], cand, with_positions=True)
         for tt in list(per_term):
             per_term[tt] = _filter_cols(*per_term[tt], keep)
-        # vectorized segment gather of pl's flat positions at postings `sel`
-        cnt = pl.tfs.astype(np.int64)
-        starts = np.zeros(cnt.size + 1, dtype=np.int64)
-        np.cumsum(cnt, out=starts[1:])
-        seg_s, seg_l = starts[sel], cnt[sel]
-        out_starts = np.zeros(sel.size, dtype=np.int64)
-        if sel.size > 1:
-            np.cumsum(seg_l[:-1], out=out_starts[1:])
-        gidx = (
-            np.arange(int(seg_l.sum()), dtype=np.int64)
-            - np.repeat(out_starts, seg_l)
-            + np.repeat(seg_s, seg_l)
-        )
-        per_term[i] = (pl.tfs[sel], pl.doclens[sel], pl.positions[gidx])
+        per_term[i] = (tfs, dls, flat)
         cand = cand[keep]
     if cand.size == 0:
         return []
@@ -615,52 +623,29 @@ def _shard_kernel_phrase(term_rows: list, idf: dict[str, float], avgdl: float,
     )
 
 
-def _shard_kernel_phrase_decoded(
-    term_pls: list, idf: dict[str, float], avgdl: float,
-    k: int, dead: np.ndarray = _NO_DEAD, slop: int = 0,
-    unordered: bool = False,
-):
-    """Phrase kernel over PRE-DECODED posting lists: term_pls = [(term,
-    PostingList with flat absolute positions)] in phrase order. The
-    serving-node hot path — ServingIndex keeps a decoded-postings LRU so
-    repeated phrase/NEAR queries skip varbyte decode entirely.
-    Rank/score-identical to _shard_kernel_phrase by construction: same
-    intersection math on the same arrays, shared _phrase_verify_score
-    (pinned by tests/test_local_serving.py)."""
-    m = len(term_pls)
-    drive = min(range(m), key=lambda i: term_pls[i][1].docids.size)
-    pl0 = term_pls[drive][1]
-    cand = pl0.docids
-    per_term: dict[int, tuple] = {drive: (pl0.tfs, pl0.doclens, pl0.positions)}
+def _pos_keys(tfs: np.ndarray, flat: np.ndarray) -> np.ndarray:
+    """One term's flat positions over candidates 0..n-1 (per-candidate
+    counts are its tfs) as composite (candidate << 32) | position keys,
+    ascending by construction."""
+    c = np.repeat(np.arange(tfs.size, dtype=np.int64), tfs.astype(np.int64))
+    return (c << 32) | flat.astype(np.int64)
 
-    def _filter_cols(tfs, dls, flat, keep):
-        return tfs[keep], dls[keep], flat[np.repeat(keep, tfs.astype(np.int64))]
 
-    if dead.size:
-        alive = ~np.isin(cand.astype(np.int64), dead)
-        per_term[drive] = _filter_cols(*per_term[drive], alive)
-        cand = cand[alive]
-    for i in sorted(range(m), key=lambda i: term_pls[i][1].docids.size):
-        if i == drive:
-            continue
-        if cand.size == 0:
-            return []
-        pl = term_pls[i][1]
-        pos = np.searchsorted(pl.docids, cand)
-        ok = pos < pl.docids.size
-        keep = np.zeros(cand.size, dtype=bool)
-        keep[ok] = pl.docids[pos[ok]] == cand[ok]
-        sel = pos[keep]
-        for tt in list(per_term):
-            per_term[tt] = _filter_cols(*per_term[tt], keep)
-        per_term[i] = (pl.tfs[sel], pl.doclens[sel], _gather_flat(pl, sel))
-        cand = cand[keep]
-    if cand.size == 0:
-        return []
-    return _phrase_verify_score(
-        [t for t, _ in term_pls], per_term, cand, idf, avgdl, k, slop,
-        unordered=unordered,
-    )
+def _adjacent(keys, m: int) -> np.ndarray:
+    """Candidate indices where phrase terms 0..m-1 occur at consecutive
+    positions; keys(j) gives term j's _pos_keys. A start survives term j
+    iff key+j is among term j's keys (exact adjacency)."""
+    cur = keys(0)
+    for j in range(1, m):
+        if cur.size == 0:
+            break
+        kj = keys(j)
+        tgt = cur + j  # pos+j can't overflow into the candidate bits
+        idx = np.searchsorted(kj, tgt)
+        ok = idx < kj.size
+        ok[ok] = kj[idx[ok]] == tgt[ok]
+        cur = cur[ok]
+    return np.unique(cur >> 32)
 
 
 def _phrase_verify_score(
@@ -688,8 +673,7 @@ def _phrase_verify_score(
 
     def _keys(j: int) -> np.ndarray:
         tfs_j, _dls_j, flat_j = per_term[j]
-        c = np.repeat(np.arange(n_cand, dtype=np.int64), tfs_j.astype(np.int64))
-        return (c << 32) | flat_j.astype(np.int64)  # ascending by construction
+        return _pos_keys(tfs_j, flat_j)
 
     if unordered:
         if m != 2:
@@ -711,17 +695,7 @@ def _phrase_verify_score(
         hit |= same_p & ((p0 - (pred & 0xFFFFFFFF)) <= slop)
         hit_c = np.unique(c0[hit])
     elif slop == 0:
-        cur = _keys(0)
-        for j in range(1, m):
-            if cur.size == 0:
-                break
-            kj = _keys(j)
-            tgt = cur + j  # pos+j can't overflow into the candidate bits
-            idx = np.searchsorted(kj, tgt)
-            ok = idx < kj.size
-            ok[ok] = kj[idx[ok]] == tgt[ok]
-            cur = cur[ok]
-        hit_c = np.unique(cur >> 32)
+        hit_c = _adjacent(_keys, m)
     else:
         cur = _keys(0)
         c0 = cur >> 32
@@ -792,9 +766,10 @@ def _probe_pl(pl, cand: np.ndarray, with_positions: bool = False):
 
 def _probe_any(x, cand: np.ndarray, with_positions: bool = False):
     """Probe an EncodedList (block-selective decode) or an already-decoded
-    PostingList (direct searchsorted) with one calling convention — lets
-    the websearch kernels run unchanged over either representation (the
-    serving decoded-LRU path passes PostingLists)."""
+    PostingList (direct searchsorted) with one calling convention: every
+    candidate probe of every kernel goes through here, so the kernels run
+    unchanged over either representation (the serving path passes
+    PostingLists for short lists)."""
     if isinstance(x, codec.PostingList):
         return _probe_pl(x, cand, with_positions)
     return _probe_at(x, cand, with_positions)
@@ -805,30 +780,12 @@ def _probe_at(enc: codec.EncodedList, cand: np.ndarray, with_positions: bool = F
     only blocks that could contain a candidate are touched (block-max
     docid skip). Returns (keep mask over cand, tfs, doclens,
     flat_positions|None) — the value arrays aligned with cand[keep]."""
-    empty = np.zeros(0, dtype=np.int64)
-    if cand.size == 0:
-        return np.zeros(0, dtype=bool), empty, empty, (empty if with_positions else None)
     blocks = _candidate_blocks(enc, cand.astype(np.int64))
-    valid = blocks < enc.bmax_docid.size
-    if not valid.any():
-        return (
-            np.zeros(cand.size, dtype=bool), empty, empty,
-            (empty if with_positions else None),
-        )
-    ublocks = np.unique(blocks[valid])
-    pl = codec.decode_blocks(
-        enc, ublocks, with_positions=with_positions, flat_positions=True
-    )
-    cand_v = cand[valid]
-    pos = np.searchsorted(pl.docids, cand_v)
-    ok = pos < pl.docids.size
-    match = np.zeros(cand_v.size, dtype=bool)
-    match[ok] = pl.docids[pos[ok]] == cand_v[ok]
+    valid = blocks < enc.bmax_docid.size  # beyond the last block: no match
+    pl = codec.decode_blocks(enc, np.unique(blocks[valid]), **_pos_kw(with_positions))
     keep = np.zeros(cand.size, dtype=bool)
-    keep[np.flatnonzero(valid)[match]] = True
-    sel = pos[match]
-    flat = _gather_flat(pl, sel) if with_positions else None
-    return keep, pl.tfs[sel], pl.doclens[sel], flat
+    keep[valid], tfs, dls, flat = _probe_pl(pl, cand[valid], with_positions)
+    return keep, tfs, dls, flat
 
 
 def _phrase_mask(ph_rows: list, cand: np.ndarray) -> np.ndarray:
@@ -857,26 +814,7 @@ def _phrase_mask(ph_rows: list, cand: np.ndarray) -> np.ndarray:
             )
         alive, sub = alive[keep], sub[keep]
         flats[t] = (tfs, flat)
-    nsub = sub.size
-    m = len(ph_rows)
-
-    def _keys(j: int) -> np.ndarray:
-        tfs_j, flat_j = flats[ph_rows[j][0]]
-        c = np.repeat(np.arange(nsub, dtype=np.int64), tfs_j.astype(np.int64))
-        return (c << 32) | flat_j.astype(np.int64)
-
-    cur = _keys(0)
-    for j in range(1, m):
-        if cur.size == 0:
-            break
-        kj = _keys(j)
-        tgt = cur + j
-        idx = np.searchsorted(kj, tgt)
-        ok = idx < kj.size
-        ok[ok] = kj[idx[ok]] == tgt[ok]
-        cur = cur[ok]
-    if cur.size:
-        out[alive[np.unique(cur >> 32)]] = True
+    out[alive[_adjacent(lambda j: _pos_keys(*flats[ph_rows[j][0]]), len(ph_rows))]] = True
     return out
 
 
@@ -899,12 +837,7 @@ def _websearch_match(
     need_pos = {t for ph in phrase_groups for t in ph}
     rows = sorted(pos_rows, key=lambda tr: tr[1].n)
     t0, e0 = rows[0]
-    if isinstance(e0, codec.PostingList):  # decoded-LRU path: caller
-        pl0 = e0  # guarantees positions are present for need_pos terms
-    else:
-        pl0 = codec.decode_postings(
-            e0, with_positions=t0 in need_pos, flat_positions=True
-        )
+    pl0 = _full(e0, with_positions=t0 in need_pos)
     cand = pl0.docids
     cols: dict[str, tuple] = {
         t0: (pl0.tfs, pl0.doclens, pl0.positions if t0 in need_pos else None)
@@ -928,10 +861,8 @@ def _websearch_match(
         if cand.size == 0:
             return cand, cols
         wp = t in need_pos
-        # _probe_any = the block-selective decode + membership + segment
-        # gather this loop used to inline (same ops, shared with the
-        # phrase-mask path), or a direct searchsorted when the caller
-        # passes pre-decoded PostingLists (serving decoded-LRU path)
+        # block-selective decode + membership + segment gather, or a
+        # direct searchsorted of a decoded PostingList
         keep, tfs, dls, flat = _probe_any(enc, cand, with_positions=wp)
         _filter(keep)
         cols[t] = (tfs, dls, flat if wp else None)
@@ -946,25 +877,9 @@ def _websearch_match(
     # adjacency verification per quoted group — same composite-key sweep
     # as the phrase kernel, all groups must hold
     ok_all = np.ones(cand.size, dtype=bool)
-    n_cand = cand.size
     for ph in phrase_groups:
-        def _keys_of(t: str) -> np.ndarray:
-            tfs, _dls, flat = cols[t]
-            c = np.repeat(np.arange(n_cand, dtype=np.int64), tfs.astype(np.int64))
-            return (c << 32) | flat.astype(np.int64)
-
-        cur = _keys_of(ph[0])
-        for j in range(1, len(ph)):
-            if cur.size == 0:
-                break
-            kj = _keys_of(ph[j])
-            tgt = cur + j
-            idx = np.searchsorted(kj, tgt)
-            okk = idx < kj.size
-            okk[okk] = kj[idx[okk]] == tgt[okk]
-            cur = cur[okk]
-        g = np.zeros(n_cand, dtype=bool)
-        g[np.unique(cur >> 32)] = True
+        g = np.zeros(cand.size, dtype=bool)
+        g[_adjacent(lambda j: _pos_keys(cols[ph[j]][0], cols[ph[j]][2]), len(ph))] = True
         ok_all &= g
     if not ok_all.all():
         _filter(ok_all)
@@ -1051,6 +966,41 @@ def _shard_kernel_websearch_or(
         if keep.any():
             score[keep] += idf[t] * _u_exact(tfs, dls, avgdl)
     return _select_topk_with_ties(union.astype(np.int64), score, k)
+
+
+def eval_shard(plan: QueryPlan, by_term: dict, idf: dict[str, float],
+               avgdl: float, k: int, dead: np.ndarray = _NO_DEAD,
+               scope: np.ndarray | None = None) -> list:
+    """Top-k+ties [(lid, score)] of `plan` on one shard — the only code
+    that picks a kernel, for every front end. `by_term` maps the shard's
+    terms to their lists: EncodedLists or MemoLists (block-max walk) or
+    decoded PostingLists (full scan), with flat positions for the plan's
+    `need_pos` terms. `dead` is the shard's sorted tombstoned lids;
+    `scope`, when given, its sorted allowed lids (and/or plans)."""
+    if any(t not in by_term for t in plan.required):
+        return []  # a required term absent in this shard: no hit here
+    if plan.kind == "web":
+        groups = plan.groups
+        if len(groups) > 1 or groups[0][3]:
+            # OR of groups / negated phrases: group-union kernel
+            return _shard_kernel_websearch_or(groups, by_term, idf, avgdl, k, dead)
+        all_pos, neg, phrases, _ = groups[0]
+        return _shard_kernel_websearch(
+            [(t, by_term[t]) for t in all_pos], phrases,
+            [(t, by_term[t]) for t in neg if t in by_term], idf, avgdl, k, dead,
+        )
+    if plan.kind in ("phrase", "near"):
+        return _shard_kernel_phrase(
+            [(t, by_term[t]) for t in plan.terms], idf, avgdl, k, dead,
+            plan.slop, unordered=plan.kind == "near",
+        )
+    rows = [(t, by_term[t]) for t in plan.terms if t in by_term]
+    if plan.kind == "or":
+        return _shard_kernel_or(rows, idf, avgdl, k, dead, scope=scope) if rows else []
+    neg_rows = [(t, by_term[t]) for t in plan.neg if t in by_term]
+    if len(rows) == 1:
+        return _topk_single(rows[0][1], idf[rows[0][0]], avgdl, k, dead, scope, neg_rows)
+    return _shard_kernel_and(rows, idf, avgdl, k, dead, scope=scope, neg_rows=neg_rows)
 
 
 BATCH_SHARD_SCHEMA = "qid string, docid long, score double"
@@ -1168,22 +1118,103 @@ def _batch_tail(per_shard: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _phrase_query(index: SegmentIndex, terms: list[str], k: int, slop: int,
-                  unordered: bool = False) -> DataFrame:
-    """Shared body of bm25_topk_phrase and bm25_topk_near_unordered:
-    `terms` in phrase order, repeats preserved."""
+
+
+def _memo_by_term(pdf: pd.DataFrame, use_count: dict, need_pos=frozenset()) -> dict:
+    """{term: EncodedList} of one shard group: terms shared by several
+    queries of a batch (the Zipf head of a query log) decode ONCE per task as a
+    MemoList — every query after the first runs decode-free with
+    block-max pruning intact; single-query terms stay encoded (selective
+    decode only). Positions decode only for terms in `need_pos`."""
+    by_term = {}
+    for t, enc in _encoded_by_term(pdf).items():
+        if use_count.get(t, 0) > 1:
+            enc = codec.MemoList(
+                enc,
+                codec.decode_postings(
+                    enc, with_positions=t in need_pos, flat_positions=True
+                ),
+            )
+        by_term[t] = enc
+    return by_term
+
+
+def _batch_frame(results) -> pd.DataFrame:
+    """[(qid, [(lid, score)])] as a (qid, lid, score) frame."""
+    out_q, out_d, out_s = [], [], []
+    for qid, res in results:
+        for d, s in res:
+            out_q.append(qid)
+            out_d.append(int(d))
+            out_s.append(float(s))
+    return pd.DataFrame({"qid": out_q, "lid": out_d, "score": out_s})
+
+
+def _use_count(term_sets) -> dict:
+    """Number of queries each term occurs in."""
+    use_count: dict[str, int] = {}
+    for ts in term_sets:
+        for t in set(ts):
+            use_count[t] = use_count.get(t, 0) + 1
+    return use_count
+
+
+def _eval_stage(index: SegmentIndex, plans: dict, k: int, batch: bool,
+                scope_bc=None, scope_lids: DataFrame | None = None) -> DataFrame:
+    """The shard stage of every Spark entry point: one pruned segment scan
+    over the union of the plans' scan terms, and per shard group
+    ``eval_shard`` for every plan of `plans` ({qid: QueryPlan}) over the
+    group's rows (``_memo_by_term``: terms shared by several plans decode
+    once per task). Output: (qid, docid, score) when `batch`, else the
+    one plan's (docid, score). `scope_bc` (a {shard: lids} broadcast) or
+    `scope_lids` (cogrouped (shard, lid) rows) restrict the candidates."""
     avgdl = index.stats.avgdl
+    scan_terms = sorted({t for p in plans.values() for t in p.scan_terms})
+    use_count = _use_count(p.scan_terms for p in plans.values())
+    need_pos = frozenset().union(*(p.need_pos for p in plans.values()))
 
-    def kernel(shard, pdf, idf, dead):
-        by_term = _encoded_by_term(pdf)
-        if any(t not in by_term for t in terms):
-            return _shard_frame([])
-        rows = [(t, by_term[t]) for t in terms]
-        return _shard_frame(
-            _shard_kernel_phrase(rows, idf, avgdl, k, dead, slop, unordered=unordered),
-        )
+    def kernel(shard, pdf, idf, dead, scope_pdf=None):
+        if scope_pdf is not None:
+            # cogroup keys are the UNION of both sides' shards: a shard
+            # with postings but no scoped docs (or vice versa) has no hit
+            scope = np.sort(scope_pdf["lid"].to_numpy().astype(np.int64))
+            if scope.size == 0:
+                pdf = pdf.iloc[0:0]
+        else:
+            scope = scope_bc.value.get(shard, _NO_DEAD) if scope_bc is not None else None
+        by_term = _memo_by_term(pdf, use_count, need_pos)
+        res = [
+            (qid, eval_shard(p, by_term, idf, avgdl, k, dead, scope))
+            for qid, p in plans.items()
+        ]
+        return _batch_frame(res) if batch else _shard_frame(res[0][1])
 
-    return _topk_tail(_shard_stage(index, sorted(set(terms)), kernel), k)
+    schema = BATCH_SHARD_SCHEMA if batch else RESULT_SCHEMA
+    return _shard_stage(index, scan_terms, kernel, schema=schema, scope_lids=scope_lids)
+
+
+def _spark_topk(index: SegmentIndex, plan: QueryPlan | None, k: int,
+                scope_bc=None, scope_lids: DataFrame | None = None) -> DataFrame:
+    """A single-query entry point's body: the plan's shard stage and the
+    TakeOrderedAndProject tail; an empty frame for a plan of None."""
+    if plan is None:
+        return index.spark.createDataFrame([], RESULT_SCHEMA)
+    per_shard = _eval_stage(index, {"": plan}, k, False, scope_bc, scope_lids)
+    return _topk_tail(per_shard, k)
+
+
+def _spark_batch(index: SegmentIndex, queries: dict[str, str], k: int,
+                 **plan_kw) -> DataFrame:
+    """A batch entry point's body: one plan per query (a query that can
+    match nothing gets no rows), one shard stage, one rank window."""
+    plans = {}
+    for qid, q in queries.items():
+        plan = plan_query(index, q, k, **plan_kw)
+        if plan is not None:
+            plans[qid] = plan
+    if not plans:
+        return index.spark.createDataFrame([], BATCH_RESULT_SCHEMA)
+    return _batch_tail(_eval_stage(index, plans, k, True), k)
 
 
 def bm25_topk_phrase(
@@ -1194,11 +1225,7 @@ def bm25_topk_phrase(
     backend/migrations/003:32). Returns DataFrame(docid, score) by
     (-score, docid) — rank/score-identical to OracleIndex.search_phrase
     (tested)."""
-    _aq, _tok, _sg = _analyzers_for(index)
-    terms = _tok(phrase)
-    if not terms:
-        return index.spark.createDataFrame([], RESULT_SCHEMA)
-    return _phrase_query(index, terms, k, slop)
+    return _spark_topk(index, plan_query(index, phrase, k, syntax="phrase", slop=slop), k)
 
 
 def bm25_topk_near_unordered(
@@ -1214,15 +1241,7 @@ def bm25_topk_near_unordered(
     is the ordered m-term chain). Rank/score-identical to
     OracleIndex.search_near_unordered and ServingIndex.search_near_unordered
     (tested)."""
-    _aq, _tok, _sg = _analyzers_for(index)
-    terms = _tok(query)
-    if len(terms) != 2 or terms[0] == terms[1]:
-        raise ValueError(
-            "bm25_topk_near_unordered is the two-distinct-term NEAR "
-            f"operator; got {terms!r} (use bm25_topk_phrase(slop) for the "
-            "ordered chain)"
-        )
-    return _phrase_query(index, terms, k, dist, unordered=True)
+    return _spark_topk(index, plan_query(index, query, k, syntax="near", slop=dist), k)
 
 
 def bm25_topk_wand(
@@ -1276,69 +1295,23 @@ def bm25_topk_wand(
             "allowed_docids DataFrame belongs to another SparkContext than "
             "index.spark; build it on a session of the index's context"
         )
-    if pre_analyzed is not None:
-        terms = list(dict.fromkeys(check_terms(pre_analyzed)))
-    else:
-        _aq, _tok, _sg = _analyzers_for(index)
-        terms = _aq(query)
-    neg_terms = sorted(set(check_terms(exclude_terms or [])))
-    if not terms:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    if neg_terms:
-        if mode != "and":
-            raise ValueError("exclude_terms (websearch '-term') is AND-only")
-        if set(terms) & set(neg_terms):
-            return spark.createDataFrame([], RESULT_SCHEMA)  # contradiction
-    n_terms = len(terms)
-    avgdl = index.stats.avgdl
-    mode_and = mode == "and"
-    scope_df = scope_bc = None
-    if allowed_docids is not None:
-        if isinstance(allowed_docids, DataFrame):
+    plan = plan_query(index, query, k, mode, exclude_terms, pre_analyzed)
+    scope_bc = scope_lids = None
+    if plan is not None and allowed_docids is not None:
+        if isinstance(allowed_docids, DataFrame) or len(allowed_docids) > SCOPE_INLINE_MAX:
             scope_df = allowed_docids
-        elif len(allowed_docids) > SCOPE_INLINE_MAX:
-            scope_df = spark.createDataFrame(
-                ((int(d),) for d in allowed_docids), "docid long"
-            )
+            if not isinstance(scope_df, DataFrame):
+                scope_df = spark.createDataFrame(
+                    ((int(d),) for d in allowed_docids), "docid long"
+                )
+            scope_lids = index.docmap.join(
+                scope_df.select(F.col("docid").cast("long").alias("docid")),
+                "docid",
+                "left_semi",
+            ).select("shard", F.col("local_id").alias("lid"))
         else:
             scope_bc = index.scope_broadcast(allowed_docids)
-    neg_set = set(neg_terms)
-
-    def kernel(shard, pdf, idf, dead, scope_pdf=None):
-        if scope_pdf is not None:
-            # cogroup keys are the UNION of both sides' shards: a shard
-            # with postings but no scoped docs (or vice versa) is empty
-            scope = np.sort(scope_pdf["lid"].to_numpy().astype(np.int64))
-            if len(pdf) == 0 or scope.size == 0:
-                return _shard_frame([])
-        else:
-            scope = scope_bc.value.get(shard, _NO_DEAD) if scope_bc is not None else None
-        by_term = _encoded_by_term(pdf)
-        rows = [(t, e) for t, e in by_term.items() if t not in neg_set]
-        neg_rows = [(t, e) for t, e in by_term.items() if t in neg_set]
-        if not mode_and:
-            res = _shard_kernel_or(rows, idf, avgdl, k, dead, scope=scope)
-        elif len(rows) < n_terms:
-            res = []
-        elif n_terms == 1:
-            res = _topk_single(
-                rows[0][1], idf[rows[0][0]], avgdl, k, dead, scope, neg_rows
-            )
-        else:
-            res = _shard_kernel_and(
-                rows, idf, avgdl, k, dead, scope=scope, neg_rows=neg_rows
-            )
-        return _shard_frame(res)
-
-    scope_lids = None
-    if scope_df is not None:
-        scope_lids = index.docmap.join(
-            scope_df.select(F.col("docid").cast("long").alias("docid")),
-            "docid",
-            "left_semi",
-        ).select("shard", F.col("local_id").alias("lid"))
-    per_shard = _shard_stage(index, terms + neg_terms, kernel, scope_lids=scope_lids)
-    return _topk_tail(per_shard, k)
+    return _spark_topk(index, plan, k, scope_bc, scope_lids)
 
 
 def bm25_topk_websearch(
@@ -1355,93 +1328,7 @@ def bm25_topk_websearch(
     run the combined positional kernel; everything else (OR / negated
     phrases) runs the group-union kernel. Rank/score bit-identical to
     OracleIndex.search_websearch (tested)."""
-    from honeywell_search_engine_spark.functions.analyzer import parse_websearch_query
-
-    _aq, _tok, _sg = _analyzers_for(index)
-    groups = _sg(parse_websearch_query(query))
-    if not groups:
-        return index.spark.createDataFrame([], RESULT_SCHEMA)
-    avgdl = index.stats.avgdl
-
-    if len(groups) == 1 and not groups[0][3]:
-        all_pos, neg, phrases, _ = groups[0]
-        if not phrases:
-            # all_pos/neg are already index-analyzed (stemmed if the index
-            # is) — pass them through pre_analyzed so they're not re-stemmed
-            # (Porter is not idempotent)
-            return bm25_topk_wand(
-                index, query, k, exclude_terms=neg, pre_analyzed=all_pos
-            )
-        neg_set = set(neg)
-        n_pos = len(all_pos)
-
-        def kernel(shard, pdf, idf, dead):
-            by_term = _encoded_by_term(pdf)
-            pos_rows = [(t, e) for t, e in by_term.items() if t not in neg_set]
-            neg_rows = [(t, e) for t, e in by_term.items() if t in neg_set]
-            if len(pos_rows) < n_pos:
-                return _shard_frame([])
-            return _shard_frame(
-                _shard_kernel_websearch(pos_rows, phrases, neg_rows, idf, avgdl, k, dead),
-            )
-
-        scan_terms = all_pos + neg
-    else:
-        # general path: OR of groups and/or negated phrases — the scan
-        # covers every group's positive, negated, and neg-phrase terms
-        scan_terms = sorted(
-            {t for g in groups for t in g[0]}
-            | {t for g in groups for t in g[1]}
-            | {t for g in groups for ph in g[3] for t in ph}
-        )
-
-        def kernel(shard, pdf, idf, dead):
-            return _shard_frame(
-                _shard_kernel_websearch_or(
-                    groups, _encoded_by_term(pdf), idf, avgdl, k, dead
-                ),
-            )
-
-    return _topk_tail(_shard_stage(index, scan_terms, kernel), k)
-
-
-def _memo_by_term(pdf: pd.DataFrame, use_count: dict, need_pos=frozenset()) -> dict:
-    """{term: EncodedList} for a batch kernel: terms shared by several
-    queries (the Zipf head of a query log) decode ONCE per task as a
-    MemoList — every query after the first runs decode-free with
-    block-max pruning intact; single-query terms stay encoded (selective
-    decode only). Positions decode only for terms in `need_pos`."""
-    by_term = {}
-    for t, enc in _encoded_by_term(pdf).items():
-        if use_count.get(t, 0) > 1:
-            enc = codec.MemoList(
-                enc,
-                codec.decode_postings(
-                    enc, with_positions=t in need_pos, flat_positions=True
-                ),
-            )
-        by_term[t] = enc
-    return by_term
-
-
-def _batch_frame(results) -> pd.DataFrame:
-    """[(qid, [(lid, score)])] as a (qid, lid, score) frame."""
-    out_q, out_d, out_s = [], [], []
-    for qid, res in results:
-        for d, s in res:
-            out_q.append(qid)
-            out_d.append(int(d))
-            out_s.append(float(s))
-    return pd.DataFrame({"qid": out_q, "lid": out_d, "score": out_s})
-
-
-def _use_count(term_sets) -> dict:
-    """Number of queries each term occurs in."""
-    use_count: dict[str, int] = {}
-    for ts in term_sets:
-        for t in set(ts):
-            use_count[t] = use_count.get(t, 0) + 1
-    return use_count
+    return _spark_topk(index, plan_query(index, query, k, syntax="web"), k)
 
 
 def bm25_topk_websearch_batch(
@@ -1453,65 +1340,7 @@ def bm25_topk_websearch_batch(
     terms, one applyInPandas over shards where each kernel answers every
     query it can serve, one per-query rank window. Returns (qid, rnk,
     docid, score) — identical to per-query bm25_topk_websearch (tested)."""
-    from honeywell_search_engine_spark.functions.analyzer import parse_websearch_query
-
-    _aq, _tok, _sg = _analyzers_for(index)
-    parsed: dict[str, list] = {}
-    for qid, q in queries.items():
-        groups = _sg(parse_websearch_query(q))
-        if groups:  # no matchable group: no rows for this qid
-            parsed[qid] = groups
-    scan_terms = sorted(
-        {
-            t
-            for groups in parsed.values()
-            for g in groups
-            for t in list(g[0]) + list(g[1]) + [x for ph in g[3] for x in ph]
-        }
-    )
-    if not scan_terms:
-        return index.spark.createDataFrame([], BATCH_RESULT_SCHEMA)
-    avgdl = index.stats.avgdl
-    q_terms = []
-    need_pos: set = set()
-    for groups in parsed.values():
-        q_t = set()
-        for g in groups:
-            q_t |= set(g[0]) | set(g[1])
-            for ph in list(g[2]) + list(g[3]):
-                q_t |= set(ph)
-                need_pos |= set(ph)
-        q_terms.append(q_t)
-    use_count = _use_count(q_terms)
-
-    def answer(groups, by_term, idf, dead):
-        if len(groups) == 1 and not groups[0][3]:
-            all_pos, neg, phrases, _ = groups[0]
-            pos_rows = [(t, by_term[t]) for t in all_pos if t in by_term]
-            if len(pos_rows) < len(all_pos):
-                return []  # a required term absent in this shard
-            neg_rows = [(t, by_term[t]) for t in neg if t in by_term]
-            if phrases:
-                return _shard_kernel_websearch(
-                    pos_rows, phrases, neg_rows, idf, avgdl, k, dead
-                )
-            if len(all_pos) == 1:
-                return _topk_single(
-                    pos_rows[0][1], idf[pos_rows[0][0]], avgdl, k, dead,
-                    None, neg_rows,
-                )
-            return _shard_kernel_and(pos_rows, idf, avgdl, k, dead, neg_rows=neg_rows)
-        # OR groups / negated phrases: group-union kernel
-        return _shard_kernel_websearch_or(groups, by_term, idf, avgdl, k, dead)
-
-    def kernel(shard, pdf, idf, dead):
-        by_term = _memo_by_term(pdf, use_count, need_pos)
-        return _batch_frame(
-            ((qid, answer(groups, by_term, idf, dead)) for qid, groups in parsed.items()),
-        )
-
-    per_shard = _shard_stage(index, scan_terms, kernel, schema=BATCH_SHARD_SCHEMA)
-    return _batch_tail(per_shard, k)
+    return _spark_batch(index, queries, k, syntax="web")
 
 
 def bm25_topk_phrase_batch(
@@ -1522,30 +1351,7 @@ def bm25_topk_phrase_batch(
     segment scan over the union of all phrases' terms, per-shard kernels
     answer every phrase they can serve, one rank window). Returns
     (qid, rnk, docid, score) — identical to per-query bm25_topk_phrase."""
-    _aq, _tok, _sg = _analyzers_for(index)  # stemmed index -> stemmed queries
-    q_terms = {qid: _tok(q) for qid, q in queries.items()}
-    live = {qid: ts for qid, ts in q_terms.items() if ts}
-    scan_terms = sorted({t for ts in live.values() for t in ts})
-    if not scan_terms:
-        return index.spark.createDataFrame([], BATCH_RESULT_SCHEMA)
-    avgdl = index.stats.avgdl
-    use_count = _use_count(live.values())
-    need_pos = frozenset(scan_terms)
-
-    def kernel(shard, pdf, idf, dead):
-        by_term = _memo_by_term(pdf, use_count, need_pos)
-        return _batch_frame(
-            (
-                (qid, _shard_kernel_phrase(
-                    [(t, by_term[t]) for t in ts], idf, avgdl, k, dead, slop
-                ))
-                for qid, ts in live.items()
-                if all(t in by_term for t in ts)
-            ),
-        )
-
-    per_shard = _shard_stage(index, scan_terms, kernel, schema=BATCH_SHARD_SCHEMA)
-    return _batch_tail(per_shard, k)
+    return _spark_batch(index, queries, k, syntax="phrase", slop=slop)
 
 
 def bm25_topk_wand_batch(
@@ -1563,31 +1369,4 @@ def bm25_topk_wand_batch(
     Returns DataFrame(qid, rnk, docid, score), rank per query by
     (-score, docid) — identical results to per-query bm25_topk_wand
     (tested)."""
-    _aq, _tok, _sg = _analyzers_for(index)  # stemmed index -> stemmed queries
-    q_terms = {qid: _aq(q) for qid, q in queries.items()}
-    live_b = {qid: ts for qid, ts in q_terms.items() if ts}
-    scan_terms = sorted({t for ts in live_b.values() for t in ts})
-    if not scan_terms:
-        return index.spark.createDataFrame([], BATCH_RESULT_SCHEMA)
-    mode_and = mode == "and"
-    avgdl = index.stats.avgdl
-    use_count = _use_count(live_b.values())
-
-    def answer(ts, by_term, idf, dead):
-        rows = [(t, by_term[t]) for t in ts if t in by_term]
-        if not mode_and:
-            return _shard_kernel_or(rows, idf, avgdl, k, dead) if rows else []
-        if len(rows) < len(ts):
-            return []  # some term absent in this shard => no AND hit here
-        if len(ts) == 1:
-            return _topk_single(rows[0][1], idf[rows[0][0]], avgdl, k, dead)
-        return _shard_kernel_and(rows, idf, avgdl, k, dead)
-
-    def kernel(shard, pdf, idf, dead):
-        by_term = _memo_by_term(pdf, use_count)
-        return _batch_frame(
-            ((qid, answer(ts, by_term, idf, dead)) for qid, ts in live_b.items()),
-        )
-
-    per_shard = _shard_stage(index, scan_terms, kernel, schema=BATCH_SHARD_SCHEMA)
-    return _batch_tail(per_shard, k)
+    return _spark_batch(index, queries, k, mode=mode)

@@ -158,14 +158,55 @@ def test_hostile_strings_through_batch_entry_points(seg_index):
         assert batch_fn(seg_index, {}, k=10).collect() == []
 
 
+@pytest.fixture(scope="module")
+def search_fronts(seg_index):
+    """The single-query search entry point of every front end: Spark,
+    ServingIndex and GenerationSet."""
+    from honeywell_search_engine_spark.query.generations import GenerationSet
+    from honeywell_search_engine_spark.query.local import ServingIndex
+
+    return {
+        "spark": lambda *a, **kw: W.bm25_topk_wand(seg_index, *a, **kw),
+        "serving": ServingIndex(seg_index.path).search,
+        "generations": GenerationSet([seg_index.path]).search,
+    }
+
+
 @pytest.mark.parametrize(
     "bad", [["data'"], ["search\\"], ["x') OR ('1'='1"], ["Data"], ["日本"], [""], [None]]
 )
-def test_pre_analyzed_outside_alphabet_rejected(seg_index, bad):
-    with pytest.raises(ValueError, match="a-z0-9"):
-        W.bm25_topk_wand(seg_index, "", pre_analyzed=bad)
-    with pytest.raises(ValueError, match="a-z0-9"):
-        W.bm25_topk_wand(seg_index, QUERIES["q01"], exclude_terms=bad)
+def test_pre_analyzed_outside_alphabet_rejected(search_fronts, bad):
+    for name, search in search_fronts.items():
+        with pytest.raises(ValueError, match="a-z0-9"):
+            search("", pre_analyzed=bad)
+        with pytest.raises(ValueError, match="a-z0-9"):
+            search(QUERIES["q01"], exclude_terms=bad)
+
+
+@pytest.mark.parametrize(
+    "kw, match",
+    [
+        ({"mode": "AND"}, "mode"),
+        ({"mode": "xor"}, "mode"),
+        ({"mode": ""}, "mode"),
+        ({"k": 0}, "k must be"),
+        ({"k": -3}, "k must be"),
+        ({"k": 2.5}, "k must be"),
+        ({"k": True}, "k must be"),
+        ({"k": "10"}, "k must be"),
+    ],
+)
+def test_unknown_mode_and_bad_k_rejected(seg_index, search_fronts, kw, match):
+    """An unknown mode (mode is case-sensitive: 'AND' is not 'and') and a
+    k that is not an int >= 1 are rejected by the plan step with a
+    ValueError on every front end, batch included — never read as OR,
+    never a numpy error from inside the top-k selection."""
+    q = QUERIES["q01"]
+    fronts = dict(search_fronts)
+    fronts["spark-batch"] = lambda q, **kw: W.bm25_topk_wand_batch(seg_index, {"a": q}, **kw)
+    for name, search in fronts.items():
+        with pytest.raises(ValueError, match=match):
+            search(q, **kw)
 
 
 def test_pre_analyzed_and_empty_terms(seg_index, oracle):

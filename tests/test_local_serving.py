@@ -119,69 +119,71 @@ def test_serving_matches_spark_near_unordered(spark, seg_index, serving, pages_p
 
 
 def test_decode_through_parity_with_encoded_kernels(
-    spark, seg_index, serving, monkeypatch
+    spark, seg_index, serving, oracle, monkeypatch
 ):
-    """The decode-through path (decoded-postings LRU kernels for AND/OR/
-    single) must be bit-exact with the block-selective encoded kernels on
-    every mode, including negation, scope, and the positions-upgrade path
-    (an entry cached WITHOUT positions by an AND query must still serve a
-    later phrase query correctly). Both decode-through regimes are
-    exercised: the full-scan kernels (lists under FULLSCAN_MAX_POSTINGS —
+    """Both kernel regimes of the serving path are bit-exact with the
+    oracle on every mode, including negation, scope, and the
+    positions-upgrade path (an entry cached WITHOUT positions by an AND
+    query must still serve a later phrase query correctly): the full-scan
+    kernels over decoded PostingLists (lists under FULLSCAN_MAX_POSTINGS —
     the natural case at this corpus size) and the MemoList block-walk
     kernels (forced by dropping the threshold to 0, the Zipf-head-term
-    regime at scale)."""
+    regime at scale) for AND, OR, websearch, phrase and NEAR."""
     import honeywell_search_engine_spark.query.local as L
 
-    enc = ServingIndex(seg_index.path, decode_through=False)
-    assert serving.decode_through  # default ON
     memo_sv = ServingIndex(seg_index.path)  # separate LRU for the 0-threshold regime
-    for qid, q in reference_queries().items():
-        for mode in ("and", "or"):
-            exp = enc.search(q, k=10, mode=mode)
-            assert serving.search(q, k=10, mode=mode) == exp, (qid, mode)
-            monkeypatch.setattr(L, "FULLSCAN_MAX_POSTINGS", 0)
-            try:
-                assert memo_sv.search(q, k=10, mode=mode) == exp, (qid, mode)
-            finally:
-                monkeypatch.undo()
-    # phrase/NEAR through the forced-MemoList regime too
+    q0, q1 = marker_term(0), marker_term(1)
+    web = [f"{q0} -{q1}", '"data search" engine', f"{q0} or {q1}"]
+
+    def check(sv):
+        for qid, q in reference_queries().items():
+            assert sv.search(q, k=10) == oracle.search(q, k=10), qid
+            assert sv.search(q, k=10, mode="or") == oracle.search_or(q, k=10), qid
+        for q in web:
+            assert sv.search_websearch(q, k=10) == oracle.search_websearch(q, k=10), q
+        for slop in (0, 2):
+            assert sv.search_phrase("data search", k=10, slop=slop) == (
+                oracle.search_phrase("data search", k=10, slop=slop)
+            )
+        assert sv.search_near_unordered("data engine", k=10, dist=3) == (
+            oracle.search_near_unordered("data engine", k=10, dist=3)
+        )
+
+    check(serving)
     monkeypatch.setattr(L, "FULLSCAN_MAX_POSTINGS", 0)
     try:
-        assert memo_sv.search_phrase("data search", k=10) == enc.search_phrase(
-            "data search", k=10
-        )
-        assert memo_sv.search_near_unordered(
-            "data engine", k=10, dist=3
-        ) == enc.search_near_unordered("data engine", k=10, dist=3)
+        check(memo_sv)
     finally:
         monkeypatch.undo()
     # negation (websearch '-term') and scope through the decoded path
-    q0, q1 = marker_term(0), marker_term(1)
-    assert serving.search(q0, k=10, exclude_terms=[q1]) == enc.search(
-        q0, k=10, exclude_terms=[q1]
+    assert serving.search(q0, k=10, exclude_terms=[q1]) == oracle.search(
+        q0, k=10, exclude=[q1]
     )
-    hits = [d for d, _ in enc.search(q0, k=100)]
+    hits = [d for d, _ in oracle.search(q0, k=100)]
     scope = hits[: max(1, len(hits) // 2)]
-    assert serving.search(q0, k=10, allowed_docids=scope) == enc.search(
-        q0, k=10, allowed_docids=scope
+    assert serving.search(q0, k=10, allowed_docids=scope) == oracle.search(
+        q0, k=10, allowed=scope
     )
-    # positions-upgrade: a fresh decode-through instance runs an AND query
-    # first (caches postings WITHOUT positions), then a phrase query over
-    # the same terms must upgrade the entries in place and match
+    # positions-upgrade: a fresh instance runs an AND query first
+    # (caches postings WITHOUT positions), then a phrase query over the
+    # same terms must upgrade the entries in place and match
     fresh = ServingIndex(seg_index.path)
     ph = "data search"
     _ = fresh.search(ph, k=10, mode="and")  # caches w/o positions
-    assert fresh.search_phrase(ph, k=10) == enc.search_phrase(ph, k=10)
+    assert fresh.search_phrase(ph, k=10) == oracle.search_phrase(ph, k=10)
     # and the upgraded entries still serve AND identically
-    assert fresh.search(ph, k=10, mode="and") == enc.search(ph, k=10, mode="and")
+    assert fresh.search(ph, k=10, mode="and") == oracle.search(ph, k=10)
 
 
-def test_decode_through_websearch_multigroup_parity(spark, seg_index, serving):
+def test_decode_through_websearch_multigroup_parity(
+    spark, seg_index, serving, oracle, monkeypatch
+):
     """Multi-group websearch (OR keyword, quoted phrases, negated quoted
-    phrases) through the decoded-LRU path must equal the encoded-kernel
-    path bit-exactly — covers wand._probe_any's PostingList branches in
+    phrases) over decoded PostingLists and over MemoLists must equal the
+    oracle bit-exactly — covers wand._probe_any's PostingList branches in
     _websearch_match, _phrase_mask, and the OR scoring probe."""
-    enc = ServingIndex(seg_index.path, decode_through=False)
+    import honeywell_search_engine_spark.query.local as L
+
     q0, q1 = marker_term(0), marker_term(1)
     queries = [
         f"{q0} or {q1}",
@@ -191,28 +193,33 @@ def test_decode_through_websearch_multigroup_parity(spark, seg_index, serving):
         'web -"search engine" or "data search"',
     ]
     for q in queries:
-        assert serving.search_websearch(q, k=10) == enc.search_websearch(
+        assert serving.search_websearch(q, k=10) == oracle.search_websearch(
+            q, k=10
+        ), q
+    memo_sv = ServingIndex(seg_index.path)
+    monkeypatch.setattr(L, "FULLSCAN_MAX_POSTINGS", 0)
+    for q in queries:
+        assert memo_sv.search_websearch(q, k=10) == oracle.search_websearch(
             q, k=10
         ), q
 
 
-def test_decoded_lru_byte_budget(spark, seg_index, serving):
+def test_decoded_lru_byte_budget(spark, seg_index, serving, oracle):
     """The decoded-postings LRU is byte-budgeted: entries evict in LRU
     order when the budget is exceeded, accounting stays consistent under
     the positions-upgrade path, and results stay correct under a budget
     so small that nothing can be retained."""
-    enc = ServingIndex(seg_index.path, decode_through=False)
     qs = list(reference_queries().values())
     # tiny budget: every entry exceeds it -> serve-uncached path
     tiny = ServingIndex(seg_index.path, dec_cache_bytes=1)
     for q in qs[:6]:
-        assert tiny.search(q, k=10) == enc.search(q, k=10), q
+        assert tiny.search(q, k=10) == oracle.search(q, k=10), q
     assert len(tiny._dec_lru) == 0
     assert tiny._dec_bytes == 0
     # moderate budget: cache holds some entries, total tracked exactly
     mod = ServingIndex(seg_index.path, dec_cache_bytes=64 << 10)
     for q in qs:
-        assert mod.search(q, k=10) == enc.search(q, k=10), q
+        assert mod.search(q, k=10) == oracle.search(q, k=10), q
     assert 0 < mod._dec_bytes <= 64 << 10
     assert mod._dec_bytes == sum(ml.nbytes for ml in mod._dec_lru.values())
     # upgrade path: phrase over terms already cached without positions
@@ -284,7 +291,7 @@ def test_shard_router_serial_equals_parallel(spark, seg_index, serving):
     )
 
 
-def test_decoded_lru_oversize_entry_served_uncached(seg_index):
+def test_decoded_lru_oversize_entry_served_uncached(seg_index, oracle):
     """A single (term, shard) entry larger than the WHOLE decoded-cache
     budget must be served uncached without touching the LRU — the
     pre-fix code inserted it first and then popped from the LRU end
@@ -312,13 +319,16 @@ def test_decoded_lru_oversize_entry_served_uncached(seg_index):
     assert small, "fixture corpus too uniform for this test"
     small_term = min(small, key=lambda kv: kv[1])[0]
 
-    enc = ServingIndex(seg_index.path, shards=[shard], decode_through=False)
+    def expected(term):  # the oracle's ranking restricted to this node's shard
+        hits = oracle.search(term, k=len(oracle.doclen))
+        return [(d, v) for d, v in hits if d % probe.n_shards == shard][:10]
+
     sv = ServingIndex(seg_index.path, shards=[shard], dec_cache_bytes=budget)
-    assert sv.search(small_term, k=10) == enc.search(small_term, k=10)
+    assert sv.search(small_term, k=10) == expected(small_term)
     warm = set(sv._dec_lru)
     assert (small_term, shard) in warm
     # the oversize term: correct results, warm set untouched, not cached
-    assert sv.search(big_term, k=10) == enc.search(big_term, k=10)
+    assert sv.search(big_term, k=10) == expected(big_term)
     assert set(sv._dec_lru) == warm
     assert (big_term, shard) not in sv._dec_lru
     assert sv._dec_bytes == sum(ml.nbytes for ml in sv._dec_lru.values())
