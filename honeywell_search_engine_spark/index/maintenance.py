@@ -31,10 +31,17 @@ from honeywell_search_engine_spark.index import codec
 from honeywell_search_engine_spark.index.segments import (
     SEGMENT_SCHEMA,
     SegmentIndex,
+    _encode_group,
+    _invalidate_buckets,
     _read_manifest,
     _write_manifest,
     bucket_checksums,
+    enc_from_row,
+    encode_pending_buckets,
+    input_fingerprint,
     load_tombstones,
+    write_occurrences,
+    write_term_stats,
 )
 
 
@@ -58,27 +65,10 @@ def _rewrite_kernel(dead_bc, avgdl: float):
 
     def rewrite(batches):
         dead_map = dead_bc.value
-        from honeywell_search_engine_spark.index.segments import _encode_group
-
         for pdf in batches:
             out = []
             for _, row in pdf.iterrows():
-                enc = codec.EncodedList(
-                    n=int(row["n"]),
-                    bmax_docid=np.asarray(row["bmax_docid"], np.int64),
-                    bmax_u=np.asarray(row["bmax_u"], np.float64),
-                    d_off=np.asarray(row["d_off"], np.int64),
-                    t_off=np.asarray(row["t_off"], np.int64),
-                    l_off=np.asarray(row["l_off"], np.int64),
-                    deltas=bytes(row["deltas"]),
-                    tfs=bytes(row["tfs"]),
-                    doclens=bytes(row["doclens"]),
-                    positions=bytes(row["positions"]) if row["positions"] is not None else b"",
-                    p_off=np.asarray(row["p_off"], np.int64) if row["p_off"] is not None else None,
-                    fmt=codec.FMT_FROM_TAG[int(row["fmt"])]
-                    if "fmt" in row and row["fmt"] is not None
-                    else codec.FMT_VB,
-                )
+                enc = enc_from_row(row)
                 pl = codec.decode_postings(enc, with_positions=True)
                 dead_arr = dead_map.get(int(row["shard"]), _EMPTY)
                 keep = ~np.isin(pl.docids.astype(np.int64), dead_arr)
@@ -206,35 +196,23 @@ def compact(spark: SparkSession, index_dir: str, _fail_at: str | None = None) ->
     # the phase-1 postings table is the durable re-encode source (merges
     # re-encode affected buckets FROM it) — it must shed the dead rows too,
     # or a later merge would resurrect deleted docs. Anti-join on the dead
-    # (shard, lid) pairs, then the same salted repartition + sort so the
-    # (term, shard)-contiguity invariant future encodes rely on holds.
+    # (shard, lid) pairs, rewritten in the occurrence layout future
+    # encodes rely on.
     dead_pairs = spark.createDataFrame(
         [(int(s), int(l)) for s, ls in dead_map.items() for l in ls] or [],
         "shard int, lid long",
     )
-    (
-        spark.read.parquet(f"{index_dir}/postings")
-        .join(F.broadcast(dead_pairs), ["shard", "lid"], "left_anti")
-        .repartition(F.col("term"), F.col("shard"))
-        .sortWithinPartitions("bucket", "term", "shard", "lid", "pos")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{index_dir}/postings_new")
+    write_occurrences(
+        spark.read.parquet(f"{index_dir}/postings").join(
+            F.broadcast(dead_pairs), ["shard", "lid"], "left_anti"
+        ),
+        f"{index_dir}/postings_new",
     )
-
-    seg_new = spark.read.parquet(f"{index_dir}/segments_new")
-    ts = (
-        seg_new.groupBy("term")
-        .agg(F.sum("n").alias("df"), F.sum("ctf").alias("ctf"))
-        .withColumn(
-            "idf",
-            F.log1p(
-                (F.lit(float(new_n)) - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-            ),
-        )
+    n_postings = write_term_stats(
+        spark.read.parquet(f"{index_dir}/segments_new"),
+        new_n,
+        f"{index_dir}/term_stats_new",
     )
-    ts.coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/term_stats_new")
 
     # journal the post-compaction stats BEFORE mutating anything: once the
     # swap starts, the dead docs leave the docmap and a rerun could no
@@ -245,6 +223,7 @@ def compact(spark: SparkSession, index_dir: str, _fail_at: str | None = None) ->
         "n_docs": new_n,
         "avgdl": new_avgdl,
         "sum_doclen": int(row["s"] or 0),
+        "n_postings": n_postings,
         "n_removed": n_removed,
         "tombstone_files": ts_files,
     }
@@ -283,6 +262,15 @@ def _finish_compact(
             f"bucket_{b}.json",
             {**prev, **chks[b], "status": "complete", "generation": gen},
         )
+    # the swapped-in term_stats counts only surviving postings; a journal
+    # that predates the field falls back to the fresh bucket checksums' Σn
+    n_postings = st.get("n_postings", sum(c["postings"] for c in chks.values()))
+    fin = _read_manifest(index_dir, "finalize.json") or {}
+    _write_manifest(
+        index_dir,
+        "finalize.json",
+        {**fin, "status": "complete", "n_postings": int(n_postings)},
+    )
     # remove ONLY the tombstone files this compaction folded in (recorded
     # at staging) — tombstones issued afterwards, including during a
     # crash/resume gap, stay for the next compaction instead of being
@@ -401,10 +389,6 @@ def merge_deltas(
     `_fail_at` is a test-only fault-injection point ("staged",
     "invalidated", "mid_swap", "swapped")."""
     from honeywell_search_engine_spark.index.naive import bucket_col
-    from honeywell_search_engine_spark.index.segments import (
-        encode_pending_buckets,
-        input_fingerprint,
-    )
     from honeywell_search_engine_spark.streaming.ingest import delta_postings
 
     def _boom(point: str) -> None:
@@ -525,14 +509,7 @@ def merge_deltas(
         )
         if re_pairs is not None:
             base = base.join(F.broadcast(re_pairs), ["shard", "lid"], "left_anti")
-        (
-            base.unionByName(occ_delta)
-            .repartition(F.col("term"), F.col("shard"))
-            .sortWithinPartitions("bucket", "term", "shard", "lid", "pos")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(staged_dir)
-        )
+        write_occurrences(base.unionByName(occ_delta), staged_dir)
         srow = staged_dm.agg(F.sum("doclen").alias("s")).collect()[0]
         new_n = meta["n_docs"] + n_added
         new_avgdl = float(srow["s"] or 0) / new_n if new_n else 0.0
@@ -552,15 +529,7 @@ def merge_deltas(
     # ---- COMMIT -----------------------------------------------------------
     if inflight["status"] == "staged":
         affected = inflight["affected_buckets"]
-        # invalidate BEFORE mutating: a crash mid-swap leaves an index that
-        # refuses to open rather than one whose manifests lie
-        for b in affected:
-            p = os.path.join(index_dir, "manifests", f"bucket_{b}.json")
-            if os.path.exists(p):
-                os.remove(p)
-        fin = os.path.join(index_dir, "manifests", "finalize.json")
-        if os.path.exists(fin):
-            os.remove(fin)
+        _invalidate_buckets(index_dir, affected)
         _boom("invalidated")
         for i, b in enumerate(affected):
             _swap_bucket_dir(

@@ -76,6 +76,25 @@ from pyspark.sql import SparkSession, functions as F
 
 from honeywell_search_engine_spark.index import codec
 from honeywell_search_engine_spark.index.codec import BLOCK, EncodedList
+from honeywell_search_engine_spark.index.maintenance import (
+    _carry_sum_doclen,
+    _repair_dir_swaps,
+    _swap_bucket_dir,
+)
+from honeywell_search_engine_spark.index.segments import (
+    PA_SEGMENT_SCHEMA,
+    SEGMENT_SCHEMA,
+    _invalidate_buckets,
+    _read_manifest,
+    _write_manifest,
+    bucket_checksums,
+    build_segments,
+    enc_from_row,
+    encode_pending_buckets,
+    input_fingerprint,
+    load_tombstones,
+    segment_row,
+)
 
 __all__ = [
     "build_generation",
@@ -261,34 +280,15 @@ def _row_splice_chain(
     resolved). Function composition of splice_encoded — byte-identical
     to promoting the generations sequentially (each later splice sees
     exactly the encoded list the previous one produced)."""
-    from honeywell_search_engine_spark.query.wand import _enc_from_row
-
-    out = _enc_from_row(brow) if brow is not None else None
+    out = enc_from_row(brow) if brow is not None else None
     ctf = int(brow["ctf"]) if brow is not None else 0
     src = brow
     for drow, off in chain:
-        out = splice_encoded(out, _enc_from_row(drow), off)
+        out = splice_encoded(out, enc_from_row(drow), off)
         ctf += int(drow["ctf"])
         if src is None:
             src = drow
-    return {
-        "term": src["term"],
-        "shard": int(src["shard"]),
-        "n": out.n,
-        "ctf": ctf,
-        "bmax_docid": out.bmax_docid.tolist(),
-        "bmax_u": out.bmax_u.tolist(),
-        "d_off": out.d_off.tolist(),
-        "t_off": out.t_off.tolist(),
-        "l_off": out.l_off.tolist(),
-        "deltas": out.deltas,
-        "tfs": out.tfs,
-        "doclens": out.doclens,
-        "positions": out.positions,
-        "p_off": out.p_off.tolist() if out.p_off is not None else None,
-        "fmt": codec.FMT_TAGS[out.fmt],
-        "bucket": int(bucket),
-    }
+    return segment_row(out, src["term"], src["shard"], ctf, bucket)
 
 
 def _make_bucket_splicer(
@@ -316,10 +316,6 @@ def _make_bucket_splicer(
     def splice_bucket(batches):
         import pyarrow as pa
         import pyarrow.dataset as ds
-
-        from honeywell_search_engine_spark.index.segments import (
-            PA_SEGMENT_SCHEMA,
-        )
 
         def _with_bucket(base_batch, b):
             """Base batch -> output batch WITHOUT a Python round-trip: the
@@ -441,8 +437,6 @@ def _base_epoch(spark: SparkSession, index_dir: str) -> str:
     tombstones, kernels read dead lists at query time."""
     import zlib
 
-    from honeywell_search_engine_spark.index.segments import input_fingerprint
-
     with open(f"{index_dir}/stats.json", "rb") as f:
         sj = zlib.crc32(f.read())
     return f"{input_fingerprint(spark, f'{index_dir}/docmap')}|{sj:08x}"
@@ -543,21 +537,6 @@ def promote_generation(
     at any point converges (tests/test_promote.py kill-point tests).
     `_fail_at` is the test-only injection hook ("staged" | "committing" |
     "invalidated" | "mid_swap" | "committed_files" | "swapped")."""
-    from honeywell_search_engine_spark.index.maintenance import (
-        _carry_sum_doclen,
-        _repair_dir_swaps,
-        _swap_bucket_dir,
-    )
-    from honeywell_search_engine_spark.index.segments import (
-        SEGMENT_SCHEMA,
-        _read_manifest,
-        _write_manifest,
-        bucket_checksums,
-        encode_pending_buckets,
-        input_fingerprint,
-        load_tombstones,
-    )
-
     def _boom(point: str) -> None:
         if _fail_at == point:
             raise RuntimeError(f"injected failure at {point}")
@@ -839,14 +818,7 @@ def promote_generation(
             _write_promote_state(index_dir, state)
         _boom("committing")
         affected = inflight["affected"]
-        # invalidate BEFORE mutating (readers refuse a half-promoted index)
-        for b in affected:
-            p = os.path.join(index_dir, "manifests", f"bucket_{b}.json")
-            if os.path.exists(p):
-                os.remove(p)
-        finp = os.path.join(index_dir, "manifests", "finalize.json")
-        if os.path.exists(finp):
-            os.remove(finp)
+        _invalidate_buckets(index_dir, affected)
         _boom("invalidated")
         for i, b in enumerate(affected):
             _swap_bucket_dir(
@@ -939,7 +911,6 @@ def build_generation(
         extracted_docs_from_pages,
         tokenized_docs,
     )
-    from honeywell_search_engine_spark.index.segments import build_segments
     from honeywell_search_engine_spark.sources.pages import read_pages
 
     with open(f"{base_index_dir}/stats.json") as f:
@@ -995,7 +966,6 @@ def build_generation_from_delta(
     with build_generation in that case."""
     from pyspark.sql import Window
 
-    from honeywell_search_engine_spark.index.segments import build_segments
     from honeywell_search_engine_spark.streaming.ingest import delta_postings
 
     with open(f"{base_index_dir}/stats.json") as f:

@@ -5,13 +5,21 @@ Layout on disk (all immutable once a manifest marks its unit complete):
     {index}/docmap/                      forward index / docvalues:
                                          (shard, local_id, docid, doclen)
     {index}/postings/bucket=<b>/...      phase-1 occurrence rows (term,
-                                         lid, doclen, shard), parquet
+                                         lid, doclen, shard, pos), parquet
     {index}/segments/bucket=<b>/...      phase-2 encoded posting lists
                                          (values are shard-local lids)
-    {index}/term_stats/                  (term, df, ctf, idf) parquet
+    {index}/term_stats/                  (term, df, ctf, idf) parquet,
+                                         one term-sorted file
     {index}/stats.json                   N, avgdl, layout params
     {index}/manifests/phase1.json        input lineage for phase 1
     {index}/manifests/bucket_<b>.json    per-partition lineage for phase 2
+    {index}/manifests/finalize.json      term_stats written; n_postings
+
+This module owns those formats, and build, promote, merge and compact
+write them only through it: ``write_occurrences`` (postings/),
+``write_term_stats`` (term_stats/ and n_postings), ``enc_from_row`` /
+``segment_row`` (a segments/ row <-> ``codec.EncodedList``) and
+``_invalidate_buckets`` (what a rewriting commit drops before it moves data).
 
 Design (north_rule / SURVEY.md §3.2 rebuild lifecycle):
 
@@ -27,7 +35,7 @@ Design (north_rule / SURVEY.md §3.2 rebuild lifecycle):
   exact.
 - **ONE shuffle for the whole build.** Phase 1 explodes raw token
   occurrences and does the salted ``repartition(term, shard)`` +
-  ``sortWithinPartitions(bucket, term, shard, docid)`` ONCE, writing the
+  ``sortWithinPartitions(bucket, term, shard, lid, pos)`` ONCE, writing the
   grouped, sorted occurrence rows partitioned by bucket. tf is never
   aggregated relationally: phase 2 derives it by run-length counting the
   sorted duplicates inside the encoder. This removes two full exchanges
@@ -38,7 +46,7 @@ Design (north_rule / SURVEY.md §3.2 rebuild lifecycle):
   satisfied and Spark's writer adds no (unstable!) re-sort of its own.
 - **Phase 2 is shuffle-free**: each (term, shard) group lives entirely in
   one parquet file (written by the one task that owned its hash), so the
-  encoder mapInPandas runs directly on the pruned file scan. The kernel
+  encoder (mapInArrow) runs directly on the pruned file scan. The kernel
   is *streaming*: it carries the open run across Arrow batches and never
   materializes a partition, only the current (term, shard) run.
 - **Checkpointed resume**: phase 1 commits once (Spark's all-or-nothing
@@ -56,6 +64,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import time
 import zlib
 from collections import OrderedDict
@@ -67,7 +76,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from honeywell_search_engine_spark.index import codec
 from honeywell_search_engine_spark.index.docmap import assign_local_ids
 from honeywell_search_engine_spark.index.naive import bucket_col, bucket_of
-from honeywell_search_engine_spark.index.stats import CorpusStats
+from honeywell_search_engine_spark.index.stats import CorpusStats, idf_col
 
 N_BUCKETS = 64
 N_SHARDS = 8
@@ -110,6 +119,57 @@ PA_SEGMENT_SCHEMA = _pa_segment_schema()
 
 
 # --------------------------------------------------------------------------
+# segment rows <-> encoded posting lists
+# --------------------------------------------------------------------------
+
+
+def enc_from_row(row) -> codec.EncodedList:
+    """The encoded posting list of one segment row (a dict or a pandas
+    row). Rows of indexes built before positions or `fmt` joined the
+    schema decode as position-less varbyte lists."""
+    p_off = row["p_off"] if "p_off" in row else None
+    pos = row["positions"] if "positions" in row else None
+    fmt = row["fmt"] if "fmt" in row else None
+    return codec.EncodedList(
+        n=int(row["n"]),
+        bmax_docid=np.asarray(row["bmax_docid"], dtype=np.int64),
+        bmax_u=np.asarray(row["bmax_u"], dtype=np.float64),
+        d_off=np.asarray(row["d_off"], dtype=np.int64),
+        t_off=np.asarray(row["t_off"], dtype=np.int64),
+        l_off=np.asarray(row["l_off"], dtype=np.int64),
+        deltas=bytes(row["deltas"]),
+        tfs=bytes(row["tfs"]),
+        doclens=bytes(row["doclens"]),
+        positions=bytes(pos) if pos is not None else b"",
+        p_off=np.asarray(p_off, dtype=np.int64) if p_off is not None else None,
+        fmt=codec.FMT_FROM_TAG[int(fmt)] if fmt is not None else codec.FMT_VB,
+    )
+
+
+def segment_row(enc: codec.EncodedList, term: str, shard: int, ctf: int,
+                bucket: int) -> dict:
+    """The SEGMENT_SCHEMA row of one encoded (term, shard) posting list."""
+    return {
+        "term": term,
+        "shard": int(shard),
+        "n": int(enc.n),
+        "ctf": int(ctf),
+        "bmax_docid": enc.bmax_docid.tolist(),
+        "bmax_u": enc.bmax_u.tolist(),
+        "d_off": enc.d_off.tolist(),
+        "t_off": enc.t_off.tolist(),
+        "l_off": enc.l_off.tolist(),
+        "deltas": enc.deltas,
+        "tfs": enc.tfs,
+        "doclens": enc.doclens,
+        "positions": enc.positions,
+        "p_off": enc.p_off.tolist() if enc.p_off is not None else None,
+        "fmt": codec.FMT_TAGS[enc.fmt],
+        "bucket": int(bucket),
+    }
+
+
+# --------------------------------------------------------------------------
 # streaming group encoder (phase 2 kernel)
 # --------------------------------------------------------------------------
 
@@ -131,24 +191,8 @@ def _encode_group(term: str, shard: int, bucket: int,
         np.asarray(doclens)[order], avgdl,
         positions=positions, fmt=fmt,
     )
-    return {
-        "term": term,
-        "shard": int(shard),
-        "n": enc.n,
-        "ctf": int(np.asarray(tfs, dtype=np.int64).sum()),
-        "bmax_docid": enc.bmax_docid.tolist(),
-        "bmax_u": enc.bmax_u.tolist(),
-        "d_off": enc.d_off.tolist(),
-        "t_off": enc.t_off.tolist(),
-        "l_off": enc.l_off.tolist(),
-        "deltas": enc.deltas,
-        "tfs": enc.tfs,
-        "doclens": enc.doclens,
-        "positions": enc.positions,
-        "p_off": enc.p_off.tolist() if enc.p_off is not None else None,
-        "fmt": codec.FMT_TAGS[fmt],
-        "bucket": int(bucket),
-    }
+    ctf = int(np.asarray(tfs, dtype=np.int64).sum())
+    return segment_row(enc, term, shard, ctf, bucket)
 
 
 def make_segment_encoder(avgdl: float, n_buckets: int, fmt: str = codec.FMT_VB):
@@ -172,8 +216,9 @@ def make_segment_encoder(avgdl: float, n_buckets: int, fmt: str = codec.FMT_VB):
     boundaries come from the int32 indices and the string is looked up
     once per RUN. The open trailing run is carried across batch
     boundaries as plain arrays — memory stays O(batch + largest run).
-    Posting values are shard-local dense ordinals (index/docmap.py); the
-    docmap rehydrates global docids at query time."""
+    Posting values are shard-local dense ordinals (index/docmap.py); a
+    query's shard kernel maps the lids it returns to global docids
+    (docids_of_lids)."""
 
     def _emit(t_idx, t_vals, s, l, dl, po) -> list[dict]:
         """Encode every run in the given sorted occurrence arrays.
@@ -390,6 +435,18 @@ def _read_manifest(index_dir: str, name: str) -> dict | None:
         return None
 
 
+def _invalidate_buckets(index_dir: str, buckets) -> None:
+    """Remove the manifests of `buckets`, then the finalize marker: the
+    first step of every commit that rewrites those buckets, taken before
+    any data moves, so a crash leaves an index that refuses to open (and a
+    resumed build re-encodes and refinalizes) rather than one whose
+    manifests describe bytes that are gone."""
+    for name in [f"bucket_{b}.json" for b in buckets] + ["finalize.json"]:
+        p = os.path.join(_manifest_dir(index_dir), name)
+        if os.path.exists(p):
+            os.remove(p)
+
+
 def input_fingerprint(spark: SparkSession, input_path: str) -> str:
     """Cheap lineage identity of the input table. For an Iceberg input
     (``iceberg:<table>``, sources/pages.read_pages) this is the table's
@@ -466,6 +523,47 @@ def bucket_checksums(spark: SparkSession, seg_path: str, buckets: list[int]) -> 
 
 def bucket_checksum(spark: SparkSession, seg_path: str, b: int) -> dict:
     return bucket_checksums(spark, seg_path, [b])[b]
+
+
+# --------------------------------------------------------------------------
+# the occurrence and term-dictionary layouts
+# --------------------------------------------------------------------------
+
+
+def write_occurrences(df: DataFrame, path: str) -> None:
+    """Write occurrence rows (term, lid, doclen, shard, bucket, pos) in the
+    layout the no-shuffle phase-2 encode relies on ("ONE shuffle" above):
+    each (term, shard) group contiguous and sorted by (lid, pos) in
+    exactly one file of its bucket directory."""
+    (
+        df.repartition(F.col("term"), F.col("shard"))
+        .sortWithinPartitions("bucket", "term", "shard", "lid", "pos")
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(path)
+    )
+
+
+def write_term_stats(segments_df: DataFrame, n_docs: int, path: str) -> int:
+    """Derive the term dictionary (term, df, ctf, idf) from segment
+    metadata (df = Σn, ctf = Σctf; no posting scan) and write it as one
+    term-sorted file, the order ``SegmentIndex.term_info`` and
+    ``ServingIndex.suggest`` prune row groups by. Returns n_postings
+    (Σdf), observed on the write instead of a second aggregate job."""
+    from pyspark.sql import Observation
+
+    obs = Observation("term_stats_totals")
+    (
+        segments_df.groupBy("term")
+        .agg(F.sum("n").alias("df"), F.sum("ctf").alias("ctf"))
+        .withColumn("idf", idf_col(F.col("df"), n_docs))
+        .coalesce(1)
+        .sortWithinPartitions("term")
+        .observe(obs, F.sum("df").alias("n_postings"))
+        .write.mode("overwrite")
+        .parquet(path)
+    )
+    return int(obs.get["n_postings"] or 0)
 
 
 # --------------------------------------------------------------------------
@@ -547,19 +645,8 @@ def build_segments(
             "shard",
             F.posexplode("tokens").alias("pos", "term"),
         ).withColumn("bucket", bucket_col(F.col("term"), n_buckets))
-        # THE shuffle of the build: salted repartition on (term, shard) +
-        # sort-within-partitions. The sort leads with `bucket` (a function
-        # of term) so the partitionBy writer sees its required ordering
-        # already satisfied and preserves row order inside each file —
-        # every (term, shard) group lands contiguous and sorted in exactly
-        # one file of its bucket directory.
-        (
-            occ.repartition(F.col("term"), F.col("shard"))
-            .sortWithinPartitions("bucket", "term", "shard", "lid", "pos")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(f"{index_dir}/postings")
-        )
+        # THE shuffle of the build
+        write_occurrences(occ, f"{index_dir}/postings")
         # ---- finalize the docmap as the forward index: attach doclen
         # (derived from the written postings — no re-tokenize; zero-token
         # docs get doclen 0 and simply own an unused lid).
@@ -587,9 +674,7 @@ def build_segments(
             .write.mode("overwrite")
             .parquet(f"{index_dir}/docmap")
         )
-        import shutil as _shutil
-
-        _shutil.rmtree(f"{index_dir}/docmap_ids", ignore_errors=True)
+        shutil.rmtree(f"{index_dir}/docmap_ids", ignore_errors=True)
         stats_row = obs.get
         n_input = int(stats_row["n"])
         cs = CorpusStats(
@@ -637,11 +722,11 @@ def build_segments(
 def _normalize_occurrence_buckets(
     spark: SparkSession, index_dir: str, meta: dict, buckets: list[int]
 ) -> None:
-    """Rewrite each bucket's occurrence rows with the build's
-    repartition(term, shard) + sort, restoring the one-file-per-group
-    invariant promotion's file appends relaxed, then clear its marker.
-    Crash-safe: staged write + rename-with-backup swap per bucket; a
-    re-run simply re-normalizes (idempotent)."""
+    """Rewrite each bucket's occurrence rows through write_occurrences,
+    restoring the one-file-per-group invariant promotion's file appends
+    relaxed, then clear its marker. Crash-safe: staged write +
+    rename-with-backup swap per bucket; a re-run simply re-normalizes
+    (idempotent)."""
     from honeywell_search_engine_spark.index.maintenance import _swap_bucket_dir
 
     for b in buckets:
@@ -654,14 +739,11 @@ def _normalize_occurrence_buckets(
         bak = src + ".bak"
         if not os.path.isdir(src) and os.path.isdir(bak):
             os.rename(bak, src)
-        (
-            spark.read.parquet(src)
-            .repartition(F.col("term"), F.col("shard"))
-            .sortWithinPartitions("term", "shard", "lid", "pos")
-            .write.mode("overwrite")
-            .parquet(staged)
+        write_occurrences(
+            spark.read.parquet(src).withColumn("bucket", F.lit(b)), staged
         )
-        _swap_bucket_dir(src, staged)
+        _swap_bucket_dir(src, f"{staged}/bucket={b}")
+        shutil.rmtree(staged, ignore_errors=True)
         meta["occ_multifile_buckets"] = [
             x for x in meta.get("occ_multifile_buckets", []) if x != b
         ]
@@ -765,40 +847,15 @@ def encode_pending_buckets(
     fin = _read_manifest(index_dir, "finalize.json")
     if not todo and fin and fin.get("status") == "complete":
         return
-    seg = spark.read.parquet(f"{index_dir}/segments")
-    ts = (
-        seg.groupBy("term")
-        .agg(F.sum("n").alias("df"), F.sum("ctf").alias("ctf"))
-        .withColumn(
-            "idf",
-            F.log1p(
-                (F.lit(float(meta["n_docs"])) - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-            ),
-        )
+    n_postings = write_term_stats(
+        spark.read.parquet(f"{index_dir}/segments"),
+        meta["n_docs"],
+        f"{index_dir}/term_stats",
     )
-    # n_postings == sum(df) over term_stats (df = sum of per-segment n), so
-    # it rides the term_stats WRITE as an Observation — the separate
-    # full-segments aggregate job is gone (round-4 serial-floor item)
-    from pyspark.sql import Observation
-
-    obs = Observation("term_stats_totals")
-    (
-        ts.coalesce(1)
-        .sortWithinPartitions("term")  # row-group pruning for prefix scans
-        .observe(obs, F.sum("df").alias("n_postings"))
-        .write.mode("overwrite")
-        .parquet(f"{index_dir}/term_stats")
-    )
-    n_postings = obs.get["n_postings"]
     _write_manifest(
         index_dir,
         "finalize.json",
-        {
-            "status": "complete",
-            "input_fingerprint": fp,
-            "n_postings": int(n_postings or 0),
-        },
+        {"status": "complete", "input_fingerprint": fp, "n_postings": n_postings},
     )
 
 

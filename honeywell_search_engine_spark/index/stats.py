@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from honeywell_search_engine_spark import B, K1
 
@@ -43,13 +43,16 @@ def term_stats(postings: DataFrame, n_docs: int) -> DataFrame:
     return postings.groupBy("term").agg(
         F.count("*").alias("df"),
         F.sum("tf").alias("ctf"),
-    ).withColumn(
-        "idf",
-        F.log1p(
-            (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
-            / (F.col("df") + F.lit(0.5))
-        ),
-    )
+    ).withColumn("idf", idf_col(F.col("df"), n_docs))
+
+
+def idf_col(df: Column, n_docs) -> Column:
+    """The BM25 idf of a document-frequency Column as a float64 Column:
+    log1p((N - df + 0.5) / (df + 0.5)). `n_docs` is a Column or a number.
+    The association order is the one the oracle's scalar idf uses, so the
+    two agree bit-for-bit."""
+    n = n_docs if isinstance(n_docs, Column) else F.lit(float(n_docs))
+    return F.log1p((n - df + F.lit(0.5)) / (df + F.lit(0.5)))
 
 
 def bm25_part_col(tf, doclen, idf, avgdl: float):

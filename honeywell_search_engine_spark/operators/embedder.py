@@ -29,6 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from honeywell_search_engine_spark.index.stats import idf_col
 from honeywell_search_engine_spark.operators.search import doc_term_freqs
 
 DIM = 64
@@ -71,10 +72,7 @@ def _term_table(tf: DataFrame, dim: int) -> DataFrame:
             "term",
             _hash_j(F.col("term"), dim).alias("j"),
             _hash_sign(F.col("term")).alias("sign"),
-            F.log1p(
-                (F.col("nd").cast("double") - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-            ).alias("idf"),
+            idf_col(F.col("df"), F.col("nd").cast("double")).alias("idf"),
         )
     )
 

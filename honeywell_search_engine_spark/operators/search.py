@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from honeywell_search_engine_spark import B, K1
 from honeywell_search_engine_spark.functions.analyzer import analyze_query
 from honeywell_search_engine_spark.functions.analyzer import tokens_col
+from honeywell_search_engine_spark.index.stats import idf_col
 
 
 def doc_tokens(
@@ -185,10 +186,7 @@ def bm25_inflight(
     cand = base.filter(_stage_pin(nt == n_terms if mode == "and" else nt >= 1))
     score = None
     for j in range(len(uterms)):
-        idf = F.log1p(
-            (F.col("n_docs").cast("double") - F.col(f"_df{j}") + F.lit(0.5))
-            / (F.col(f"_df{j}") + F.lit(0.5))
-        )
+        idf = idf_col(F.col(f"_df{j}"), F.col("n_docs").cast("double"))
         tfd = F.col(f"_tf{j}").cast("double")
         part = idf * (
             tfd

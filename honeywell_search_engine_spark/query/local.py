@@ -48,7 +48,7 @@ from collections import OrderedDict
 import numpy as np
 
 from honeywell_search_engine_spark.index.naive import bucket_of
-from honeywell_search_engine_spark.index.segments import load_tombstones
+from honeywell_search_engine_spark.index.segments import enc_from_row, load_tombstones
 from honeywell_search_engine_spark.query import respond
 from honeywell_search_engine_spark.query import wand as W
 
@@ -367,7 +367,7 @@ class ServingIndex:
             if ml is not None:  # positions upgrade replaces the entry
                 del self._dec_lru[key]
                 self._dec_bytes -= ml.nbytes
-            enc = W._enc_from_row(row)
+            enc = enc_from_row(row)
             ml = codec.MemoList(
                 enc,
                 codec.decode_postings(

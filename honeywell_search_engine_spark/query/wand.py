@@ -81,6 +81,7 @@ from honeywell_search_engine_spark.index.segments import (
     SegmentIndex,
     check_terms,
     docids_of_lids,
+    enc_from_row,
 )
 
 RESULT_SCHEMA = "docid long, score double"
@@ -224,26 +225,6 @@ def plan_query(
     return _plan(mode, terms, neg_terms)
 
 
-def _enc_from_row(row) -> codec.EncodedList:
-    p_off = row["p_off"] if "p_off" in row else None
-    return codec.EncodedList(
-        n=int(row["n"]),
-        bmax_docid=np.asarray(row["bmax_docid"], dtype=np.int64),
-        bmax_u=np.asarray(row["bmax_u"], dtype=np.float64),
-        d_off=np.asarray(row["d_off"], dtype=np.int64),
-        t_off=np.asarray(row["t_off"], dtype=np.int64),
-        l_off=np.asarray(row["l_off"], dtype=np.int64),
-        deltas=bytes(row["deltas"]),
-        tfs=bytes(row["tfs"]),
-        doclens=bytes(row["doclens"]),
-        positions=bytes(row["positions"]) if "positions" in row and row["positions"] is not None else b"",
-        p_off=np.asarray(p_off, dtype=np.int64) if p_off is not None else None,
-        # per-row stream codec (segment schema `fmt`); rows from indexes
-        # built before the column existed decode as varbyte
-        fmt=codec.FMT_FROM_TAG[int(row["fmt"])] if "fmt" in row and row["fmt"] is not None else codec.FMT_VB,
-    )
-
-
 def _u_exact(tfs: np.ndarray, doclens: np.ndarray, avgdl: float) -> np.ndarray:
     return codec.bm25_u(tfs, doclens, avgdl)
 
@@ -254,8 +235,9 @@ _NO_DEAD = np.zeros(0, dtype=np.int64)
 def _select_topk_with_ties(lids: np.ndarray, scores: np.ndarray, k: int):
     """Top-k by score (tie: ascending lid) INCLUDING every row tied with
     the k-th score. Returning boundary ties makes the global merge exact
-    under ANY lid assignment: final ordering tie-breaks on the rehydrated
-    global docid, and nothing tied at the cut was dropped shard-side —
+    under ANY lid assignment: final ordering tie-breaks on the global
+    docid the kernel maps each lid to (docids_of_lids), and nothing tied
+    at the cut was dropped shard-side —
     required because merged-in documents get appended lids, which are not
     docid-ordered (index/docmap.py)."""
     if lids.size == 0:
@@ -1088,7 +1070,7 @@ def _shard_stage(index: SegmentIndex, scan_terms: list[str], kernel,
 
 def _encoded_by_term(pdf: pd.DataFrame) -> dict:
     """{term: EncodedList} of one shard's segment rows."""
-    return {r["term"]: _enc_from_row(r) for _, r in pdf.iterrows()}
+    return {r["term"]: enc_from_row(r) for _, r in pdf.iterrows()}
 
 
 def _shard_frame(res: list) -> pd.DataFrame:

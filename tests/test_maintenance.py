@@ -2,6 +2,9 @@
 immediately; compaction folds them in and matches a from-scratch rebuild
 of the reduced corpus (scores included, since stats shift)."""
 
+import json
+
+import pyarrow.parquet as pq
 import pytest
 
 from honeywell_search_engine_spark.index.corpus import docid_py, docs_from_pages, tokenized_docs
@@ -57,6 +60,17 @@ def test_tombstone_then_compact(spark, small_index, pages_pdf, oracle):
     exp = reduced_oracle.search(q, k=10)
     got = [(r["docid"], r["score"]) for r in bm25_topk_wand(idx3, q, k=10).collect()]
     assert got == exp
+
+    # 3) the rewritten term dictionary keeps the build's invariants: sorted
+    # by term (term_info / suggest prune row groups by it), and finalize's
+    # n_postings counts the surviving postings
+    terms = pq.read_table(f"{idx3.path}/term_stats", columns=["term"])
+    terms = terms.column("term").to_pylist()
+    assert terms == sorted(terms)
+    with open(f"{idx3.path}/manifests/finalize.json") as f:
+        n_postings = json.load(f)["n_postings"]
+    seg_n = pq.read_table(f"{idx3.path}/segments", columns=["n"]).column("n")
+    assert n_postings == sum(seg_n.to_pylist())
 
 
 def test_bulk_tombstones_100k(spark, small_index, pages_pdf, oracle):
