@@ -12,7 +12,8 @@ Parts:
    index build at local[N_LOW] and local[N_HIGH] on the same input,
    throughput at both + efficiency (sandbox stand-in for 2 cluster sizes).
 
-Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default 32),
+Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default: the CPUs this
+process may run on),
 BENCH_PAGES_DOCS (default 50000), BENCH_SCALING=0 to skip part 3.
 """
 
@@ -30,7 +31,7 @@ def log(*a):
 
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 N_DOCS = int(os.environ.get("BENCH_PAGES_DOCS", "60000"))
 # N-vs-4N scaling pair. This VM advertises 32 CPUs but its effective
 # parallel capacity fluctuates (shared host): at 8+ JVM threads both the

@@ -16,10 +16,12 @@ Spark-first:
   manifests for checkpointed resume;
 - BM25 top-k query engine: naive Catalyst-only path (broadcast term join +
   hash aggregate) and a segment path with block-max WAND pruning inside
-  mapInPandas.
+  one mapInArrow task body.
 
 No per-row Python UDFs anywhere — only pandas_udf / applyInPandas /
-mapInPandas over Arrow batches, plus built-in pyspark.sql.functions.
+mapInPandas / mapInArrow over Arrow batches, plus built-in
+pyspark.sql.functions. Sessions from ``get_spark`` run their Python
+workers under the engine's daemon (``worker_daemon``).
 """
 
 __version__ = "0.1.0"

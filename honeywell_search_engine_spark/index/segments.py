@@ -905,30 +905,46 @@ def _snapshot_files(df: DataFrame) -> list[str]:
     return sorted(unquote(urlparse(u).path) for u in df.inputFiles())
 
 
-def docids_of_lids(docmap_files: list[str], shard: int, lids: np.ndarray) -> np.ndarray:
-    """Global docids of one shard's local ids, aligned with `lids`: the
-    docvalues lookup a shard-kernel task runs on its own output. A pyarrow
-    read of `docmap_files` (a handle's snapshot) with ``shard = s AND
-    local_id IN lids`` pushed into the row-group statistics; no Spark
-    scan. Row groups prune only as far as the docmap layout clusters
-    (shard, local_id)."""
+def docids_of_lids(docmap_files: list[str], shards, lids: np.ndarray) -> np.ndarray:
+    """Global docids of (shard, local id) pairs, aligned with `lids`
+    (`shards` is one shard or an array aligned with `lids`): the docvalues
+    lookup a shard-kernel task runs on its own output. ONE pyarrow read of
+    `docmap_files` (a handle's snapshot) with ``shard IN shards AND
+    local_id IN lids`` pushed into the row-group statistics, however many
+    shards the task evaluated; no Spark scan. Row groups prune only as far
+    as the docmap layout clusters (shard, local_id). ValueError when a
+    pair is missing from the docmap."""
     import pyarrow as pa
     import pyarrow.dataset as ds
 
-    want = np.unique(lids)
-    tbl = ds.dataset(docmap_files, format="parquet").to_table(
-        columns=["local_id", "docid"],
-        filter=(ds.field("shard") == shard)
-        & ds.field("local_id").isin(pa.array(want, pa.int64())),
+    lids = np.asarray(lids, dtype=np.int64)
+    shards = np.broadcast_to(np.asarray(shards, dtype=np.int64), lids.shape)
+    out = np.empty(lids.size, dtype=np.int64)
+    if lids.size == 0:
+        return out
+    dset = ds.dataset(docmap_files, format="parquet")
+    want_shards = np.unique(shards)
+    tbl = dset.to_table(
+        columns=["shard", "local_id", "docid"],
+        filter=ds.field("shard").isin(pa.array(want_shards, dset.schema.field("shard").type))
+        & ds.field("local_id").isin(pa.array(np.unique(lids), pa.int64())),
     )
-    got = tbl.column("local_id").to_numpy()
-    if got.size != want.size:
-        raise ValueError(
-            f"docmap has {got.size} of {want.size} local ids asked for in shard {shard}"
-        )
-    order = np.argsort(got)
-    docids = tbl.column("docid").to_numpy()[order]
-    return docids[np.searchsorted(got[order], lids)]
+    got_shard = tbl.column("shard").to_numpy()
+    got_lid = tbl.column("local_id").to_numpy()
+    got_docid = tbl.column("docid").to_numpy()
+    for shard in want_shards:
+        at = shards == shard
+        want = np.unique(lids[at])
+        # the read also returns other shards' wanted lids of this shard
+        mine = (got_shard == shard) & np.isin(got_lid, want)
+        order = np.argsort(got_lid[mine])
+        have = got_lid[mine][order]
+        if have.size != want.size:
+            raise ValueError(
+                f"docmap has {have.size} of {want.size} local ids asked for in shard {shard}"
+            )
+        out[at] = got_docid[mine][order][np.searchsorted(have, lids[at])]
+    return out
 
 
 class SegmentIndex:

@@ -14,7 +14,7 @@ Every query on every front end is "plan, then evaluate":
   bit-identical whichever is passed.
 
 The Spark entry points run ``eval_shard`` for a ``{qid: plan}`` map in
-one shard stage (``_eval_stage``); query/local.py's ServingIndex runs it
+one shard stage (``_shard_stage``); query/local.py's ServingIndex runs it
 per shard in-process.
 
 Distributed plan of every Spark query entry point (``_shard_stage``):
@@ -25,16 +25,18 @@ Distributed plan of every Spark query entry point (``_shard_stage``):
     -> coalesce(1) when the scanned postings fit one     [1 Python task for
        task (below POSTINGS_PER_TASK), else               a point query]
        repartition(n, shard)
-    -> groupBy(shard).applyInPandas(shard kernel),
-       idf in the kernel closure; each group maps its
-       top-k lids to global docids with a pyarrow read
-       of the handle's docmap files (shard and lids
-       pushed into row-group statistics)
+    -> mapInArrow(task body, ``_task_body``): the
+       task's rows grouped by shard, eval_shard per
+       shard with idf from the closure, then ONE pyarrow
+       read of the handle's docmap files maps every
+       (shard, lid) of the task to its docid
     -> global TakeOrderedAndProject(k, (-score, docid))  [k rows/shard]
 
 A point query is ONE Spark job of one stage and one task: no exchange
 cuts a one-task stage, no plan joins the docmap or the term dictionary,
-and the top-k runs in the kernel task's job.
+and the top-k runs in the kernel task's job. A large docid scope
+cogroups its (shard, lid) rows with the segment rows instead
+(``cogroup().applyInArrow``, the same body per shard).
 
 Because ``shard = pmod(docid, n_shards)`` every document's postings live in
 exactly one shard, so conjunctive evaluation is shard-local and the global
@@ -69,7 +71,7 @@ import numbers
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from honeywell_search_engine_spark.functions.analyzer import (
@@ -990,20 +992,23 @@ BATCH_RESULT_SCHEMA = "qid string, rnk int, docid long, score double"
 
 # Postings one shard-kernel task should score before a second Python task
 # pays for itself: the per-task fixed CPU cost over the kernel's CPU cost
-# per posting, both measured on a 4-vCPU VM (Spark 4.1.2, local[4]):
-# - per-task fixed cost ~320 ms of VM CPU: an empty applyInPandas over
-#   three head terms' pruned segment rows cost 610-730 ms at 1 partition
-#   and 2890-3000 ms at 8. It is Python worker set-up per task
-#   (pyspark.worker.main) and the daemon's gc.collect() after it — not
-#   kernel work;
-# - kernel cost ~1.8 us of CPU per posting: the unpruned OR kernel (full
-#   decode + BM25 of every posting) over the perfbench corpus's 6 most
+# per posting, both measured on a 4-vCPU VM (Spark 4.1.2, local[4]) on the
+# perfbench index (7600 docs, 16 shards):
+# - per-task fixed cost ~94 ms of VM CPU: an empty mapInArrow over the
+#   three head terms' pruned segment rows (22.8k postings) cost 710-760 ms
+#   at 1 partition and 1360-1420 ms at 8 (medians of 5), under
+#   get_spark's worker daemon. It is Python worker set-up per task, not
+#   kernel work. Under Spark's own daemon the same recipe gives ~354 ms
+#   (1100 and 3580 ms): the per-task zip-directory re-reads the engine's
+#   daemon skips (worker_daemon.py);
+# - kernel cost ~1.5-2.1 us of CPU per posting: the unpruned OR kernel
+#   (full decode + BM25 of every posting) over the corpus's 6 most
 #   frequent terms, 45k postings in 96 per-shard lists. Per-list overhead
 #   is included; longer lists cost less per posting, so this errs towards
 #   splitting early.
-# 320 ms / 1.8 us ~ 180k postings: every perfbench point query (sum of df
+# 94 ms / ~1.9 us ~ 50k postings: every perfbench point query (sum of df
 # <= 23k) runs ONE kernel task.
-POSTINGS_PER_TASK = 180_000
+POSTINGS_PER_TASK = 50_000
 
 
 def _kernel_tasks(index: SegmentIndex, postings: int) -> int:
@@ -1012,72 +1017,6 @@ def _kernel_tasks(index: SegmentIndex, postings: int) -> int:
     and one per core."""
     cap = min(index.n_shards, index.spark.sparkContext.defaultParallelism)
     return max(1, min(cap, -(-postings // POSTINGS_PER_TASK)))
-
-
-def _shard_stage(index: SegmentIndex, scan_terms: list[str], kernel,
-                 schema: str = RESULT_SCHEMA, scope_lids: DataFrame | None = None):
-    """The shard-kernel stage of every Spark query entry point: the pruned
-    segment rows of `scan_terms`, one pandas group per shard, and
-    ``kernel(shard, pdf, idf, dead)`` per group — ``kernel(shard, pdf,
-    idf, dead, scope_pdf)`` when `scope_lids` (shard, lid) is cogrouped
-    in. A kernel returns its top-k+ties as a frame with a `lid` column
-    (``_shard_frame`` / ``_batch_frame``); the stage maps those lids to
-    global docids in the same task (``docids_of_lids``: a pyarrow read
-    of the handle's docmap files), so its output is `schema` with `docid`
-    and no plan joins or scans the docmap.
-
-    idf comes from the index's driver-side (df, idf) memo and rides the
-    kernel closure. The stage runs in `_kernel_tasks` tasks sized to the
-    scanned postings (sum of df), not spark.sql.shuffle.partitions, whose
-    every extra task cost ~320 ms of fixed Python-worker CPU on a point
-    query. One task is a ``coalesce(1)``: a single partition already
-    clusters every shard, so no exchange cuts the stage and the scan,
-    the group sort, the kernels and the caller's tail run as one stage.
-    More tasks repartition by shard; both cogroup sides always do, to the
-    same count, so they stay co-partitioned."""
-    info = index.term_info(scan_terms)
-    idf = {t: v for t, (_n, v) in info.items()}
-    n = _kernel_tasks(index, sum(n for n, _v in info.values()))
-    dead_bc = index.dead_broadcast()
-    docmap_files = index.docmap_files
-
-    def dead_of(shard: int) -> np.ndarray:
-        return dead_bc.value.get(shard, _NO_DEAD) if dead_bc is not None else _NO_DEAD
-
-    def with_docids(shard: int, out: pd.DataFrame) -> pd.DataFrame:
-        if len(out):
-            out["lid"] = docids_of_lids(docmap_files, shard, out["lid"].to_numpy(np.int64))
-        return out.rename(columns={"lid": "docid"})
-
-    rows = index.segments_for(scan_terms)
-    if scope_lids is None:
-        groups = (rows.coalesce(1) if n == 1 else rows.repartition(n, "shard")).groupBy("shard")
-
-        def run(key, pdf):  # no hints: applyInPandas warns on partial ones
-            shard = int(key[0])
-            return with_docids(shard, kernel(shard, pdf, idf, dead_of(shard)))
-
-        return groups.applyInPandas(run, schema=schema)
-
-    def run_cogrouped(key, seg_pdf, scope_pdf):
-        shard = int(key[0])
-        return with_docids(shard, kernel(shard, seg_pdf, idf, dead_of(shard), scope_pdf))
-
-    groups = rows.repartition(n, "shard").groupBy("shard")
-    scope_groups = scope_lids.repartition(n, "shard").groupBy("shard")
-    return groups.cogroup(scope_groups).applyInPandas(run_cogrouped, schema=schema)
-
-
-def _encoded_by_term(pdf: pd.DataFrame) -> dict:
-    """{term: EncodedList} of one shard's segment rows."""
-    return {r["term"]: enc_from_row(r) for _, r in pdf.iterrows()}
-
-
-def _shard_frame(res: list) -> pd.DataFrame:
-    """A kernel's [(lid, score)] as a (lid, score) frame."""
-    return pd.DataFrame(
-        {"lid": [int(d) for d, _ in res], "score": [float(s) for _, s in res]}
-    )
 
 
 def _topk_tail(per_shard: DataFrame, k: int) -> DataFrame:
@@ -1100,16 +1039,16 @@ def _batch_tail(per_shard: DataFrame, k: int) -> DataFrame:
     )
 
 
-
-
-def _memo_by_term(pdf: pd.DataFrame, use_count: dict, need_pos=frozenset()) -> dict:
-    """{term: EncodedList} of one shard group: terms shared by several
-    queries of a batch (the Zipf head of a query log) decode ONCE per task as a
-    MemoList — every query after the first runs decode-free with
-    block-max pruning intact; single-query terms stay encoded (selective
-    decode only). Positions decode only for terms in `need_pos`."""
+def _memo_by_term(rows: list, use_count: dict, need_pos=frozenset()) -> dict:
+    """{term: EncodedList} of one shard's segment rows (dicts): terms
+    shared by several queries of a batch (the Zipf head of a query log)
+    decode ONCE per task as a MemoList — every query after the first runs
+    decode-free with block-max pruning intact; single-query terms stay
+    encoded (selective decode only). Positions decode only for terms in
+    `need_pos`."""
     by_term = {}
-    for t, enc in _encoded_by_term(pdf).items():
+    for r in rows:
+        t, enc = r["term"], enc_from_row(r)
         if use_count.get(t, 0) > 1:
             enc = codec.MemoList(
                 enc,
@@ -1121,17 +1060,6 @@ def _memo_by_term(pdf: pd.DataFrame, use_count: dict, need_pos=frozenset()) -> d
     return by_term
 
 
-def _batch_frame(results) -> pd.DataFrame:
-    """[(qid, [(lid, score)])] as a (qid, lid, score) frame."""
-    out_q, out_d, out_s = [], [], []
-    for qid, res in results:
-        for d, s in res:
-            out_q.append(qid)
-            out_d.append(int(d))
-            out_s.append(float(s))
-    return pd.DataFrame({"qid": out_q, "lid": out_d, "score": out_s})
-
-
 def _use_count(term_sets) -> dict:
     """Number of queries each term occurs in."""
     use_count: dict[str, int] = {}
@@ -1141,38 +1069,95 @@ def _use_count(term_sets) -> dict:
     return use_count
 
 
-def _eval_stage(index: SegmentIndex, plans: dict, k: int, batch: bool,
-                scope_bc=None, scope_lids: DataFrame | None = None) -> DataFrame:
-    """The shard stage of every Spark entry point: one pruned segment scan
-    over the union of the plans' scan terms, and per shard group
-    ``eval_shard`` for every plan of `plans` ({qid: QueryPlan}) over the
-    group's rows (``_memo_by_term``: terms shared by several plans decode
-    once per task). Output: (qid, docid, score) when `batch`, else the
-    one plan's (docid, score). `scope_bc` (a {shard: lids} broadcast) or
-    `scope_lids` (cogrouped (shard, lid) rows) restrict the candidates."""
+def _task_body(index: SegmentIndex, plans: dict, k: int, batch: bool,
+               idf: dict[str, float], scope_bc=None):
+    """The body of one shard-kernel task, ``body(segs, scope=None)``.
+
+    `segs` is the task's segment rows as a pyarrow Table: any number of
+    shards, each shard's rows complete. Per shard the body builds the
+    lists (``_memo_by_term``) and runs ``eval_shard`` for every plan of
+    `plans` ({qid: QueryPlan}); then ONE ``docids_of_lids`` read of the
+    handle's docmap files maps every (shard, lid) of the task to its
+    docid. Returns a Table of (docid, score), or (qid, docid, score) when
+    `batch`. `scope` (a Table of (shard, lid) rows, the cogroup path) or
+    `scope_bc` (a {shard: lids} broadcast) restricts the candidates."""
     avgdl = index.stats.avgdl
-    scan_terms = sorted({t for p in plans.values() for t in p.scan_terms})
     use_count = _use_count(p.scan_terms for p in plans.values())
     need_pos = frozenset().union(*(p.need_pos for p in plans.values()))
+    dead_bc = index.dead_broadcast()
+    docmap_files = index.docmap_files
 
-    def kernel(shard, pdf, idf, dead, scope_pdf=None):
-        if scope_pdf is not None:
-            # cogroup keys are the UNION of both sides' shards: a shard
-            # with postings but no scoped docs (or vice versa) has no hit
-            scope = np.sort(scope_pdf["lid"].to_numpy().astype(np.int64))
-            if scope.size == 0:
-                pdf = pdf.iloc[0:0]
-        else:
-            scope = scope_bc.value.get(shard, _NO_DEAD) if scope_bc is not None else None
-        by_term = _memo_by_term(pdf, use_count, need_pos)
-        res = [
-            (qid, eval_shard(p, by_term, idf, avgdl, k, dead, scope))
-            for qid, p in plans.items()
-        ]
-        return _batch_frame(res) if batch else _shard_frame(res[0][1])
+    def body(segs: pa.Table, scope: pa.Table | None = None) -> pa.Table:
+        by_shard: dict[int, list] = {}
+        for r in segs.to_pylist():
+            by_shard.setdefault(r["shard"], []).append(r)
+        if scope is not None:
+            scope_shard = scope.column("shard").to_numpy()
+            scope_lid = scope.column("lid").to_numpy().astype(np.int64)
+        hits = []  # (qid, shard, lid, score)
+        for shard, rows in by_shard.items():
+            if scope is not None:
+                allowed = np.sort(scope_lid[scope_shard == shard])
+                if allowed.size == 0:
+                    # cogroup keys are the UNION of both sides' shards: a
+                    # shard with postings but no scoped docs has no hit
+                    continue
+            else:
+                allowed = scope_bc.value.get(shard, _NO_DEAD) if scope_bc is not None else None
+            dead = dead_bc.value.get(shard, _NO_DEAD) if dead_bc is not None else _NO_DEAD
+            by_term = _memo_by_term(rows, use_count, need_pos)
+            for qid, plan in plans.items():
+                hits += [(qid, shard, lid, s)
+                         for lid, s in eval_shard(plan, by_term, idf, avgdl, k, dead, allowed)]
+        qids, shards, lids, scores = zip(*hits) if hits else ((), (), (), ())
+        cols = {
+            "docid": docids_of_lids(docmap_files, np.array(shards, dtype=np.int64),
+                                    np.array(lids, dtype=np.int64)),
+            "score": np.array(scores, dtype=np.float64),
+        }
+        if batch:
+            cols = {"qid": pa.array(qids, pa.string()), **cols}
+        return pa.table(cols)
 
+    return body
+
+
+def _shard_stage(index: SegmentIndex, plans: dict, k: int, batch: bool,
+                 scope_bc=None, scope_lids: DataFrame | None = None) -> DataFrame:
+    """The shard-kernel stage of every Spark query entry point: the pruned
+    segment rows of the union of the plans' scan terms, and one
+    ``_task_body`` per task over them. Output: (qid, docid, score) when
+    `batch`, else the one plan's (docid, score); no plan joins or scans
+    the docmap. `scope_bc` (a {shard: lids} broadcast) or `scope_lids`
+    (cogrouped (shard, lid) rows) restrict the candidates.
+
+    idf comes from the index's driver-side (df, idf) memo and rides the
+    body's closure. The stage runs in `_kernel_tasks` tasks sized to the
+    scanned postings (sum of df), not spark.sql.shuffle.partitions. One
+    task is a ``coalesce(1)``: no exchange cuts the stage, and the scan,
+    the ``mapInArrow`` body and the caller's tail run as one stage. More
+    tasks repartition by shard, so each task holds whole shards. The
+    large-scope path cogroups both sides, repartitioned by shard to the
+    same count (they stay co-partitioned), and runs the body per shard
+    with ``applyInArrow``."""
+    scan_terms = sorted({t for p in plans.values() for t in p.scan_terms})
+    info = index.term_info(scan_terms)
+    n = _kernel_tasks(index, sum(n for n, _v in info.values()))
+    body = _task_body(index, plans, k, batch, {t: v for t, (_n, v) in info.items()}, scope_bc)
     schema = BATCH_SHARD_SCHEMA if batch else RESULT_SCHEMA
-    return _shard_stage(index, scan_terms, kernel, schema=schema, scope_lids=scope_lids)
+    rows = index.segments_for(scan_terms)
+    if scope_lids is None:
+
+        def run(batches):
+            # a shard's rows may arrive in several batches
+            batches = list(batches)
+            if batches:
+                yield from body(pa.Table.from_batches(batches)).to_batches()
+
+        part = rows.coalesce(1) if n == 1 else rows.repartition(n, "shard")
+        return part.mapInArrow(run, schema)
+    segs, scope = (df.repartition(n, "shard").groupBy("shard") for df in (rows, scope_lids))
+    return segs.cogroup(scope).applyInArrow(body, schema=schema)
 
 
 def _spark_topk(index: SegmentIndex, plan: QueryPlan | None, k: int,
@@ -1181,7 +1166,7 @@ def _spark_topk(index: SegmentIndex, plan: QueryPlan | None, k: int,
     TakeOrderedAndProject tail; an empty frame for a plan of None."""
     if plan is None:
         return index.spark.createDataFrame([], RESULT_SCHEMA)
-    per_shard = _eval_stage(index, {"": plan}, k, False, scope_bc, scope_lids)
+    per_shard = _shard_stage(index, {"": plan}, k, False, scope_bc, scope_lids)
     return _topk_tail(per_shard, k)
 
 
@@ -1196,7 +1181,7 @@ def _spark_batch(index: SegmentIndex, queries: dict[str, str], k: int,
             plans[qid] = plan
     if not plans:
         return index.spark.createDataFrame([], BATCH_RESULT_SCHEMA)
-    return _batch_tail(_eval_stage(index, plans, k, True), k)
+    return _batch_tail(_shard_stage(index, plans, k, True), k)
 
 
 def bm25_topk_phrase(
@@ -1319,7 +1304,7 @@ def bm25_topk_websearch_batch(
     """A whole batch of websearch queries (plain AND, '"quoted"' groups,
     '-term' negation, freely mixed) in ONE shard-kernel stage: one pruned
     segment scan over the union of every query's positive AND negated
-    terms, one applyInPandas over shards where each kernel answers every
+    terms, one kernel stage where each shard kernel answers every
     query it can serve, one per-query rank window. Returns (qid, rnk,
     docid, score) — identical to per-query bm25_topk_websearch (tested)."""
     return _spark_batch(index, queries, k, syntax="web")
@@ -1344,7 +1329,7 @@ def bm25_topk_wand_batch(
     Per-query Spark work pays ~0.3-0.5 s of scheduling each; a search
     engine's natural unit is the query *stream* (the reference's design
     target is 100 q/s, PIPELINE.md:350). Here: one pruned segment scan
-    over the union of all queries' terms, one applyInPandas over shards
+    over the union of all queries' terms, one kernel stage
     where each shard kernel answers every query it can serve, one final
     per-query rank window over <= n_queries * n_shards * k tiny rows.
 

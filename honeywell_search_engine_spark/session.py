@@ -2,13 +2,31 @@
 
 Local-mode knobs for the sandbox; on a real cluster the same settings apply
 except master/memory come from spark-submit (see jobs/*.py).
+
+``get_spark`` also runs Spark's Python workers under the engine's daemon
+(``worker_daemon``), which stops the per-task re-read of every zip archive
+on the worker's path, when the worker interpreter can import it.
 """
 
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
+
+DAEMON_MODULE = "honeywell_search_engine_spark.worker_daemon"
+
+
+def _workers_can_import_package() -> bool:
+    """Whether a Python worker launched by this process's JVM can import
+    the package: its root is on PYTHONPATH, is the working directory
+    (which ``python -m`` puts on the worker's path), or is a
+    site-packages directory."""
+    root = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
+    dirs = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    dirs += [os.getcwd(), *site.getsitepackages(), site.getusersitepackages()]
+    return any(os.path.realpath(d) == root for d in dirs)
 
 
 def get_spark(
@@ -17,7 +35,9 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     b = (
         SparkSession.builder.master(f"local[{cores}]")
@@ -53,6 +73,8 @@ def get_spark(
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         )
     )
+    if _workers_can_import_package():
+        b = b.config("spark.python.daemon.module", DAEMON_MODULE)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

@@ -123,6 +123,34 @@ def test_oracle_identity_at_task_cap(monkeypatch, spark, seg_index, oracle, page
     assert len(re.findall(rf"hashpartitioning\(shard#\d+, {cap}\)", cg_plan)) == 2, cg_plan
 
 
+def test_task_body_reads_docmap_once(monkeypatch, seg_index, oracle):
+    """One kernel task's body, run in-process over every shard's segment
+    rows (shuffled, as they may arrive from several batches): it maps the
+    (shard, lid) pairs of all shards and all queries with ONE docmap
+    dataset read, and its per-shard top-k+ties cut to k is the oracle's
+    answer for every query."""
+    import pyarrow.dataset as ds
+
+    queries = {n: QUERIES[n] for n in ("q01", "q02", "q10")}
+    plans = {n: W.plan_query(seg_index, q, 10) for n, q in queries.items()}
+    terms = sorted({t for p in plans.values() for t in p.scan_terms})
+    idf = {t: v for t, (_n, v) in seg_index.term_info(terms).items()}
+    segs = seg_index.segments_for(terms).toArrow()
+    assert len(set(segs.column("shard").to_pylist())) > 1
+    segs = segs.take(np.random.default_rng(7).permutation(segs.num_rows))
+
+    opened = []
+    real_dataset = ds.dataset
+    monkeypatch.setattr(ds, "dataset", lambda *a, **kw: opened.append(a) or real_dataset(*a, **kw))
+    out = W._task_body(seg_index, plans, 10, True, idf)(segs)
+    assert len(opened) == 1
+    rows = sorted(zip(*(out.column(c).to_pylist() for c in ("qid", "docid", "score"))),
+                  key=lambda r: (r[0], -r[2], r[1]))
+    for name, q in queries.items():
+        got = [(d, s) for qid, d, s in rows if qid == name][:10]
+        assert got == oracle.search(q, k=10), name
+
+
 @pytest.mark.parametrize("q", HOSTILE)
 def test_hostile_query_strings_match_oracle(seg_index, oracle, q):
     """Quotes, backslashes and unicode in a query string are analyzer

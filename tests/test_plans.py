@@ -96,7 +96,7 @@ def test_batch_plans_read_no_docmap(seg_index):
     qs = {"a": "data search", "b": "table"}
     for fn in (W.bm25_topk_wand_batch, W.bm25_topk_websearch_batch, W.bm25_topk_phrase_batch):
         plan = _plan(fn(seg_index, qs, k=10))
-        assert "FlatMapGroupsInPandas" in plan and "Coalesce 1" in plan, plan
+        assert "MapInArrow" in plan and "Coalesce 1" in plan, plan
         for bad in ("Exchange", "Join", "docmap", "term_stats"):
             assert bad not in plan, (fn.__name__, bad, plan)
 
@@ -242,11 +242,10 @@ def test_segment_index_point_query_session(spark, seg_index):
 def test_wand_sql_tail_plan_shape(seg_index):
     """The wand query plan: partition-pruned segment scan with the term
     filter pushed, the kernel stage, and a TakeOrderedAndProject tail —
-    never a global Sort anywhere in the plan (the kernel stage's
-    shard-local `Sort [shard ...], false` is the only Sort allowed). idf
-    and docids ride the kernel stage, so neither the term dictionary nor
-    the docmap is scanned or joined, and a one-task stage has no
-    Exchange."""
+    no Sort anywhere in the plan (the kernel body groups its rows by
+    shard itself, so not even a shard-local group sort). idf and docids
+    ride the kernel stage, so neither the term dictionary nor the docmap
+    is scanned or joined, and a one-task stage has no Exchange."""
     import re
 
     from honeywell_search_engine_spark.query.wand import bm25_topk_wand
@@ -256,10 +255,8 @@ def test_wand_sql_tail_plan_shape(seg_index):
     assert "TakeOrderedAndProject" in plan
     for bad in ("Join", "Exchange", "docmap"):
         assert bad not in plan, (bad, plan)
-    sorts = re.findall(r"Sort \[([^\]]*)\], (true|false)", plan)
-    assert sorts, plan  # the kernel stage's group sort
-    assert all(g == "false" for _, g in sorts), plan  # no global Sort
-    assert all(keys.startswith("shard#") for keys, _ in sorts), plan
+    assert "MapInArrow" in plan, plan
+    assert not re.findall(r"Sort \[", plan), plan
     assert "term_stats" not in plan
     scan_part = plan.split("PushedFilters", 1)[1][:200] if "PushedFilters" in plan else ""
     assert "term" in scan_part
