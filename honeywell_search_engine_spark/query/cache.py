@@ -5,11 +5,13 @@ The reference's latency target explicitly assumes result caching
 reference PIPELINE.md:349); real query streams are heavily repeated, so
 the serving layer memoizes COLLECTED top-k results per (query, k, mode).
 
-Safety: a SegmentIndex instance is a snapshot of an immutable index
-generation — merges/compactions mutate the directory only through staged
-swaps that a NEW SegmentIndex must be opened to observe — so a cache bound
-to one index instance can never serve stale results. The cache also keys
-nothing on corpus stats: they are frozen in the same instance.
+Misses are served by one in-process serving node (query/local.ServingIndex
+— bit-exact with the Spark plans, tested): a pruned Arrow read + numpy
+kernels, never a Spark job. Safety: a ServingIndex is a snapshot of one
+index generation — merges/compactions mutate the directory only through
+staged swaps that the node must be reloaded to observe — so the cache
+never serves a result the node would not; ``reload`` drops both together.
+The cache keys nothing on corpus stats: they are frozen in the same node.
 """
 
 from __future__ import annotations
@@ -17,42 +19,32 @@ from __future__ import annotations
 from collections import OrderedDict
 
 from honeywell_search_engine_spark.index.segments import SegmentIndex
-from honeywell_search_engine_spark.query.wand import bm25_topk_phrase, bm25_topk_wand
+from honeywell_search_engine_spark.query.local import ServingIndex
 
 
 class CachedSearcher:
-    """LRU memo over the query surface. Misses are served by the
-    in-process serving path (query/local.ServingIndex — bit-exact with
-    the Spark plans, tested) by default, so a miss costs a pruned Arrow
-    read + numpy kernels instead of a Spark job; pass
-    ``local_misses=False`` to route misses through the Spark plans
-    (bm25_topk_wand / bm25_topk_phrase) instead — useful when the caller
-    wants the query inside a larger lazy pipeline."""
+    """LRU memo over the serving query surface of `index`'s directory
+    (query/local.QuerySurface); each miss runs on an in-process
+    ServingIndex opened on ``index.path``."""
 
-    def __init__(
-        self, index: SegmentIndex, capacity: int = 1024, local_misses: bool = True
-    ):
+    def __init__(self, index: SegmentIndex, capacity: int = 1024):
         self.index = index
         self.capacity = capacity
         self._lru: OrderedDict[tuple, list] = OrderedDict()
         self.hits = 0
         self.misses = 0
-        self._local = None
-        if local_misses:
-            from honeywell_search_engine_spark.query.local import ServingIndex
-
-            self._local = ServingIndex(index.path)
+        self._local = ServingIndex(index.path)
 
     def reload(self, index: SegmentIndex | None = None) -> "CachedSearcher":
         """Refresh after on-disk maintenance: drop every memoized result
-        (they may reflect the pre-maintenance corpus) and reload the local
-        serving node. The Spark-miss path caches DataFrames inside its
-        SegmentIndex — pass a freshly constructed one to swap it."""
+        (they may reflect the pre-maintenance corpus) and reload the
+        serving node — on ``index.path`` when `index` is given (an
+        attached docs store stays attached)."""
         self._lru.clear()
         if index is not None:
             self.index = index
-        if self._local is not None:
-            self._local.reload()
+            self._local.path = index.path
+        self._local.reload()
         return self
 
     def _get(self, key, compute):
@@ -68,78 +60,25 @@ class CachedSearcher:
         return rows
 
     def search(self, query: str, k: int = 10, mode: str = "and") -> list:
-        """[(docid, score)] — collected, memoized."""
-        key = ("q", query, k, mode)
-        if self._local is not None:
-            return self._get(key, lambda: self._local.search(query, k, mode))
-        return self._get(
-            key,
-            lambda: [
-                (r["docid"], r["score"])
-                for r in bm25_topk_wand(self.index, query, k, mode).collect()
-            ],
-        )
+        """[(docid, score)] — memoized."""
+        return self._get(("q", query, k, mode), lambda: self._local.search(query, k, mode))
 
     def search_websearch(self, query: str, k: int = 10) -> list:
-        """Full websearch surface (quotes + '-term'), memoized; misses ride
-        the serving path when enabled, else the Spark plan."""
-        key = ("w", query, k)
-        if self._local is not None:
-            return self._get(key, lambda: self._local.search_websearch(query, k))
-        from honeywell_search_engine_spark.query.wand import bm25_topk_websearch
-
-        return self._get(
-            key,
-            lambda: [
-                (r["docid"], r["score"])
-                for r in bm25_topk_websearch(self.index, query, k).collect()
-            ],
-        )
+        """Full websearch surface (quotes + '-term'), memoized."""
+        return self._get(("w", query, k), lambda: self._local.search_websearch(query, k))
 
     def search_phrase(self, phrase: str, k: int = 10, slop: int = 0) -> list:
-        key = ("p", phrase, k, slop)
-        if self._local is not None:
-            return self._get(
-                key, lambda: self._local.search_phrase(phrase, k, slop)
-            )
-        return self._get(
-            key,
-            lambda: [
-                (r["docid"], r["score"])
-                for r in bm25_topk_phrase(self.index, phrase, k, slop).collect()
-            ],
-        )
+        return self._get(("p", phrase, k, slop), lambda: self._local.search_phrase(phrase, k, slop))
 
     def search_near_unordered(self, query: str, k: int = 10, dist: int = 3) -> list:
-        key = ("nu", query, k, dist)
-        if self._local is not None:
-            return self._get(
-                key, lambda: self._local.search_near_unordered(query, k, dist)
-            )
-        from honeywell_search_engine_spark.query.wand import (
-            bm25_topk_near_unordered,
-        )
-
         return self._get(
-            key,
-            lambda: [
-                (r["docid"], r["score"])
-                for r in bm25_topk_near_unordered(
-                    self.index, query, k, dist
-                ).collect()
-            ],
+            ("nu", query, k, dist), lambda: self._local.search_near_unordered(query, k, dist)
         )
 
     def attach_docs(
         self, docs_path: str, id_col: str = "docid", text_col: str = "text"
     ) -> None:
-        """Attach the forward text store for search_response (local-miss
-        serving only — the Spark-miss path composes via
-        operators/serving.search_response_indexed in the caller's plan)."""
-        if self._local is None:
-            raise ValueError(
-                "attach_docs requires local_misses=True (the serving path)"
-            )
+        """Attach the forward text store for search_response."""
         self._local.attach_docs(docs_path, id_col, text_col)
 
     def search_response(
@@ -153,16 +92,9 @@ class CachedSearcher:
         the reference's result cache sits exactly here: the cached value
         IS the API row the serving process returns (reference
         PIPELINE.md result-caching note)."""
-        if self._local is None:
-            raise ValueError(
-                "search_response requires local_misses=True (the serving path)"
-            )
-        key = ("r", query, k, mode, rerank_from)
         return self._get(
-            key,
-            lambda: self._local.search_response(
-                query, k=k, mode=mode, rerank_from=rerank_from
-            ),
+            ("r", query, k, mode, rerank_from),
+            lambda: self._local.search_response(query, k=k, mode=mode, rerank_from=rerank_from),
         )
 
     def warm(self, query_log) -> int:

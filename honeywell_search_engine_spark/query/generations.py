@@ -8,7 +8,11 @@ merged in 1.5× the full-build time, BENCH r6). At 100 TB that is the
 wrong default. The standard design — Lucene generations / LSM levels — is
 to BUILD an index over just the delta (O(delta)) and serve the union,
 compacting with `merge_deltas` only when the generation count or delta
-ratio crosses a threshold. This module is that read path.
+ratio crosses a threshold. This module is that read path: one more front
+end on the shared query surface (query/local.QuerySurface), whose
+``_search`` evaluates the one query plan in every generation and merges
+the hits with the same (-score, docid) ``top_k`` as a ServingIndex's
+shards.
 
 Exactness (pinned bit-for-bit against the eagerly merged index in
 tests/test_generations.py) requires three corrections, all injected into
@@ -56,8 +60,7 @@ import json
 
 import numpy as np
 
-from honeywell_search_engine_spark.query import respond
-from honeywell_search_engine_spark.query.local import ServingIndex
+from honeywell_search_engine_spark.query.local import QuerySurface, ServingIndex, top_k
 
 
 def _logical_stats(paths: list[str]) -> tuple[int, int, list[np.ndarray]]:
@@ -135,15 +138,15 @@ def _logical_stats(paths: list[str]) -> tuple[int, int, list[np.ndarray]]:
     return n_docs, total, shadows
 
 
-class GenerationSet:
+class GenerationSet(QuerySurface):
     """Serve `paths` (oldest → newest) as one logical index.
 
-    Query surface mirrors ServingIndex (search / search_websearch /
-    search_phrase / search_near_unordered, plus attach_docs +
-    search_response); every mode merges per-generation top-k under the
-    shared total order (-score, docid) — exact because scores are
-    generation-independent after the stat injection, and each document
-    lives wholly in one generation."""
+    The query surface is ServingIndex's (query/local.QuerySurface): a
+    query is planned once, every generation evaluates that plan, and
+    top_k merges the per-generation top-k under the shared total order
+    (-score, docid) — exact because scores are generation-independent
+    after the stat injection, and each document lives wholly in one
+    generation. Generations are searched one after another."""
 
     def __init__(self, paths: list[str], **kw):
         if not paths:
@@ -152,6 +155,7 @@ class GenerationSet:
         self.gens = [ServingIndex(p, **kw) for p in paths]
         if len({g.stemmed for g in self.gens}) > 1:
             raise ValueError("generations disagree on the stemmed flag")
+        self.stemmed = self.gens[0].stemmed
 
         # ---- exact logical stats + newest-wins shadow sets ---------------
         # journaled integer sums + vectorized shadow detection — the same
@@ -249,29 +253,9 @@ class GenerationSet:
 
     # ---- query surface ----------------------------------------------------
 
-    def _merge(self, parts: list[list[tuple[int, float]]], k: int):
-        out = [r for p in parts for r in p]
-        out.sort(key=lambda r: (-r[1], r[0]))
-        return out[:k]
-
-    def search(self, query: str, k: int = 10, **kw):
-        return self._merge([g.search(query, k=k, **kw) for g in self.gens], k)
-
-    def search_websearch(self, query: str, k: int = 10):
-        return self._merge(
-            [g.search_websearch(query, k=k) for g in self.gens], k
-        )
-
-    def search_phrase(self, phrase: str, k: int = 10, slop: int = 0):
-        return self._merge(
-            [g.search_phrase(phrase, k=k, slop=slop) for g in self.gens], k
-        )
-
-    def search_near_unordered(self, query: str, k: int = 10, dist: int = 3):
-        return self._merge(
-            [g.search_near_unordered(query, k=k, dist=dist) for g in self.gens],
-            k,
-        )
+    def _search(self, plan, k: int, allowed_docids=None) -> list[tuple[int, float]]:
+        """Every generation's top-k of the one plan, merged by top_k."""
+        return top_k([g._search(plan, k, allowed_docids) for g in self.gens], k)
 
     def attach_docs(
         self,
@@ -310,12 +294,3 @@ class GenerationSet:
         for d in remaining:
             out[d] = ""
         return out
-
-    def search_response(
-        self,
-        query: str,
-        k: int = 10,
-        mode: str = "and",
-        rerank_from: int | None = None,
-    ) -> list[tuple]:
-        return respond.search_response(self, query, k, mode, rerank_from)

@@ -9,10 +9,16 @@ carries a fixed ~0.3-0.5 s scheduling cost that no kernel speed can
 remove. The deployment story at 10^12 docs is the standard one: Spark
 writes immutable segments to the lake; stateless serving nodes read them.
 
-This module is that serving node. It is bit-exact with the Spark path by
-construction — every search method is "plan, then evaluate" through the
-SAME plan step and shard evaluator (query/wand.py ``plan_query`` and
-``eval_shard``) over the SAME encoded rows; only the I/O differs:
+This module is that serving node, and the one query surface every
+in-process front end shares (``QuerySurface``: search, search_websearch,
+search_phrase, search_near_unordered, search_response). Each method plans
+the query once (query/wand.py ``plan_query``) and hands the plan to the
+front end's ``_search``: ``ServingIndex`` evaluates it over its shards,
+``ShardRouter`` and ``GenerationSet`` (query/generations.py) over their
+members' ``_search``; every one cuts its hits with ``top_k``. The node is
+bit-exact with the Spark path by construction — the SAME plan step and
+shard evaluator (``eval_shard``) over the SAME encoded rows; only the I/O
+differs:
 
 - posting rows: pyarrow dataset read of ``{index}/segments`` with bucket
   partition-directory pruning + a `term IN (...)` filter pushed to parquet
@@ -83,7 +89,97 @@ def _succ_prefix(prefix: str) -> str | None:
     return None
 
 
-class ServingIndex:
+def top_k(parts, k: int) -> list[tuple[int, float]]:
+    """The first `k` of the hit lists `parts` [(docid, score)] under the
+    total order (-score, docid) — the one merge of shards, nodes and
+    generations. Exact when each part holds its own top-k: scores are
+    member-independent and a document lives in exactly one part."""
+    out = [h for p in parts for h in p]
+    out.sort(key=lambda r: (-r[1], r[0]))
+    return out[:k]
+
+
+class QuerySurface:
+    """The query surface of every in-process front end. Each method
+    analyzes and validates the query once (wand.plan_query — it reads
+    only ``self.stemmed``) and evaluates the plan with ``self._search``,
+    the one method a front end supplies; search_response composes over
+    ``self._fetch_texts`` once ``attach_docs`` was called."""
+
+    def _search(self, plan, k: int, allowed_docids=None) -> list[tuple[int, float]]:
+        """[(docid, score)]: the top-k of a wand.QueryPlan (None matches
+        nothing) under (-score, docid), scoped to `allowed_docids`."""
+        raise NotImplementedError
+
+    def search(
+        self,
+        query: str,
+        k: int = 10,
+        mode: str = "and",
+        allowed_docids=None,
+        exclude_terms: list[str] | None = None,
+        pre_analyzed: list[str] | None = None,
+    ) -> list[tuple[int, float]]:
+        """[(docid, score)] by (-score, docid) — rank/score bit-identical
+        to query/wand.bm25_topk_wand (tested on the reference query set).
+        `exclude_terms` is websearch '-term' negation (AND mode only).
+        `pre_analyzed` supplies already-analyzed (stemmed) index terms and
+        skips query analysis — Porter is not idempotent, so delegating
+        callers must not round-trip stems through the analyzer."""
+        plan = W.plan_query(self, query, k, mode, exclude_terms, pre_analyzed)
+        return self._search(plan, k, allowed_docids)
+
+    def search_websearch(self, query: str, k: int = 10) -> list[tuple[int, float]]:
+        """FULL websearch_to_tsquery semantics (quoted adjacency groups,
+        '-term' negation, '-"quoted"' negated phrases, the 'or' keyword)
+        — mirrors query/wand.bm25_topk_websearch, bit-identical. Never
+        raises on user query strings (round-3 advice)."""
+        return self._search(W.plan_query(self, query, k, syntax="web"), k)
+
+    def search_phrase(
+        self, phrase: str, k: int = 10, slop: int = 0
+    ) -> list[tuple[int, float]]:
+        """Exact phrase / ordered-NEAR — mirrors wand.bm25_topk_phrase.
+
+        Positional decode rides a (term, shard)-keyed LRU of fully-decoded
+        posting lists, so a warm phrase query costs only intersection +
+        positional verify — no varbyte work (measured ~3x faster at 60k
+        docs; same results, pinned vs the Spark path and oracle)."""
+        return self._search(W.plan_query(self, phrase, k, syntax="phrase", slop=slop), k)
+
+    def search_near_unordered(
+        self, query: str, k: int = 10, dist: int = 3
+    ) -> list[tuple[int, float]]:
+        """Ranked unordered two-term NEAR — mirrors
+        wand.bm25_topk_near_unordered (same decoded-postings LRU hot path
+        as search_phrase; rank/score bit-identical, tested)."""
+        return self._search(W.plan_query(self, query, k, syntax="near", slop=dist), k)
+
+    def search_response(
+        self,
+        query: str,
+        k: int = 10,
+        mode: str = "and",
+        rerank_from: int | None = None,
+    ) -> list[tuple]:
+        """The reference's full search-response row, served Spark-free:
+        [(rnk, docid, score_r, snippet, highlights, lex_score, has_oie,
+        confidence)] — row-identical to the Spark path
+        (operators/serving.search_response_indexed; parity pinned in
+        tests/test_serving.py). BM25 top-k runs on the pruned posting
+        lists as usual; the composition (query/respond.py mirrors of the
+        snippet/highlight/triple operators) touches only the k hit
+        documents, fetched from the attached docs store.
+
+        `rerank_from=N` routes through the deterministic rerank stage
+        (R7 analog): candidates = disjunctive top-N, feature-rescored
+        (respond.rerank_hits_py ≡ operators/serving.rerank_topk), top-k
+        of THAT order composed (rnk = rerank order, score_r = rerank
+        score)."""
+        return respond.search_response(self, query, k, mode, rerank_from)
+
+
+class ServingIndex(QuerySurface):
     """Spark-free reader over a segment index directory (serving node)."""
 
     def __init__(
@@ -273,8 +369,7 @@ class ServingIndex:
         cost, measured ~3x faster than block walking at that size), else
         MemoLists (exact block-max pruning, essential for Zipf head terms
         at scale; block decode is a slice of the cached decode) —
-        wand.eval_shard, the lid->docid mapping and the (-score, docid)
-        cut."""
+        wand.eval_shard, the lid->docid mapping and the top_k cut."""
         if plan is None:
             return []
         rows_by_term = self._rows_for(list(plan.scan_terms))
@@ -286,7 +381,7 @@ class ServingIndex:
         for t, rows in rows_by_term.items():
             for row in rows:
                 by_shard.setdefault(int(row["shard"]), {})[t] = row
-        out: list[tuple[int, float]] = []
+        parts = []
         for s, tmap in by_shard.items():
             if any(t not in tmap for t in plan.required):
                 continue
@@ -300,53 +395,8 @@ class ServingIndex:
                 scope.get(s, W._NO_DEAD) if scope is not None else None,
             )
             arr = self._docid_of[s]
-            out.extend((int(arr[int(l)]), float(v)) for l, v in res)
-        out.sort(key=lambda r: (-r[1], r[0]))
-        return out[:k]
-
-    def search(
-        self,
-        query: str,
-        k: int = 10,
-        mode: str = "and",
-        allowed_docids=None,
-        exclude_terms: list[str] | None = None,
-        pre_analyzed: list[str] | None = None,
-    ) -> list[tuple[int, float]]:
-        """[(docid, score)] by (-score, docid) — rank/score bit-identical
-        to query/wand.bm25_topk_wand (tested on the reference query set).
-        `exclude_terms` is websearch '-term' negation (AND mode only).
-        `pre_analyzed` supplies already-analyzed (stemmed) index terms and
-        skips query analysis — Porter is not idempotent, so delegating
-        callers must not round-trip stems through the analyzer."""
-        plan = W.plan_query(self, query, k, mode, exclude_terms, pre_analyzed)
-        return self._search(plan, k, allowed_docids)
-
-    def search_websearch(self, query: str, k: int = 10) -> list[tuple[int, float]]:
-        """FULL websearch_to_tsquery semantics (quoted adjacency groups,
-        '-term' negation, '-"quoted"' negated phrases, the 'or' keyword)
-        — mirrors query/wand.bm25_topk_websearch, bit-identical. Never
-        raises on user query strings (round-3 advice)."""
-        return self._search(W.plan_query(self, query, k, syntax="web"), k)
-
-    def search_phrase(
-        self, phrase: str, k: int = 10, slop: int = 0
-    ) -> list[tuple[int, float]]:
-        """Exact phrase / ordered-NEAR — mirrors wand.bm25_topk_phrase.
-
-        Positional decode rides a (term, shard)-keyed LRU of fully-decoded
-        posting lists, so a warm phrase query costs only intersection +
-        positional verify — no varbyte work (measured ~3x faster at 60k
-        docs; same results, pinned vs the Spark path and oracle)."""
-        return self._search(W.plan_query(self, phrase, k, syntax="phrase", slop=slop), k)
-
-    def search_near_unordered(
-        self, query: str, k: int = 10, dist: int = 3
-    ) -> list[tuple[int, float]]:
-        """Ranked unordered two-term NEAR — mirrors
-        wand.bm25_topk_near_unordered (same decoded-postings LRU hot path
-        as search_phrase; rank/score bit-identical, tested)."""
-        return self._search(W.plan_query(self, query, k, syntax="near", slop=dist), k)
+            parts.append([(int(arr[int(l)]), float(v)) for l, v in res])
+        return top_k(parts, k)
 
     def _memo(self, term: str, shard: int, row: dict,
               positions: bool = False):
@@ -565,31 +615,8 @@ class ServingIndex:
                 self._doc_lru.popitem(last=False)
         return out
 
-    def search_response(
-        self,
-        query: str,
-        k: int = 10,
-        mode: str = "and",
-        rerank_from: int | None = None,
-    ) -> list[tuple]:
-        """The reference's full search-response row, served Spark-free:
-        [(rnk, docid, score_r, snippet, highlights, lex_score, has_oie,
-        confidence)] — row-identical to the Spark path
-        (operators/serving.search_response_indexed; parity pinned in
-        tests/test_serving.py). BM25 top-k runs on the pruned posting
-        lists as usual; the composition (query/respond.py mirrors of the
-        snippet/highlight/triple operators) touches only the k hit
-        documents, fetched from the attached docs store.
 
-        `rerank_from=N` routes through the deterministic rerank stage
-        (R7 analog): candidates = disjunctive top-N, feature-rescored
-        (respond.rerank_hits_py ≡ operators/serving.rerank_topk), top-k
-        of THAT order composed (rnk = rerank order, score_r = rerank
-        score)."""
-        return respond.search_response(self, query, k, mode, rerank_from)
-
-
-class ShardRouter:
+class ShardRouter(QuerySurface):
     """Fan-out over shard-subset ServingIndex nodes — the 10^12-doc
     serving topology at sandbox scale: `n_shards` shards are dealt
     round-robin to `n_nodes` nodes, each node loads ONLY its shards'
@@ -603,51 +630,38 @@ class ShardRouter:
     per-node top-k lists. Results are bit-identical to a single
     full-index ServingIndex (tested)."""
 
-    def __init__(
-        self, path: str, n_nodes: int = 2, parallel: bool = True, **kw
-    ):
+    def __init__(self, path: str, n_nodes: int = 2, **kw):
+        if n_nodes < 1:
+            raise ValueError(f"n_nodes must be >= 1; got {n_nodes!r}")
         with open(f"{path}/stats.json") as f:
             n_shards = int(json.load(f)["n_shards"])
         self.nodes = [
             ServingIndex(path, shards=list(range(i, n_shards, n_nodes)), **kw)
             for i in range(min(n_nodes, n_shards))
         ]
+        self.stemmed = self.nodes[0].stemmed
         # in-process stand-in for the scatter-gather RPC: node queries run
         # on a thread pool (numpy/pyarrow release the GIL for the heavy
         # parts), so router latency tracks the slowest node, not the sum
-        self._pool = None
-        if parallel and len(self.nodes) > 1:
+        self._map = map
+        if len(self.nodes) > 1:
             from concurrent.futures import ThreadPoolExecutor
 
-            self._pool = ThreadPoolExecutor(max_workers=len(self.nodes))
+            self._map = ThreadPoolExecutor(max_workers=len(self.nodes)).map
 
-    def _fanout(self, fn_name: str, k: int, *args, **kw):
-        calls = [getattr(n, fn_name) for n in self.nodes]
-        if self._pool is None:
-            parts = [c(*args, k=k, **kw) for c in calls]
-        else:
-            parts = list(
-                self._pool.map(lambda c: c(*args, k=k, **kw), calls)
-            )
-        out = [r for p in parts for r in p]
-        out.sort(key=lambda r: (-r[1], r[0]))
-        return out[:k]
+    def _search(self, plan, k: int, allowed_docids=None) -> list[tuple[int, float]]:
+        """The exact scatter-gather: every node's top-k of the one plan,
+        merged by top_k."""
+        return top_k(
+            self._map(lambda n: n._search(plan, k, allowed_docids), self.nodes), k
+        )
 
-    def search(self, query: str, k: int = 10, **kw) -> list[tuple[int, float]]:
-        return self._fanout("search", k, query, **kw)
-
-    def search_websearch(self, query: str, k: int = 10) -> list[tuple[int, float]]:
-        return self._fanout("search_websearch", k, query)
-
-    def search_phrase(
-        self, phrase: str, k: int = 10, slop: int = 0
-    ) -> list[tuple[int, float]]:
-        return self._fanout("search_phrase", k, phrase, slop=slop)
-
-    def search_near_unordered(
-        self, query: str, k: int = 10, dist: int = 3
-    ) -> list[tuple[int, float]]:
-        return self._fanout("search_near_unordered", k, query, dist=dist)
+    def reload(self) -> "ShardRouter":
+        """Refresh every node from the on-disk index (see
+        ServingIndex.reload) — fan out over the same thread pool so the
+        router's refresh gap tracks the slowest node, not the sum."""
+        list(self._map(lambda n: n.reload(), self.nodes))
+        return self
 
     # ---- dictionary surface ----------------------------------------------
     # suggest / spell read index-GLOBAL metadata (term_stats and the
@@ -656,17 +670,6 @@ class ShardRouter:
     # payloads), so any node answers exactly; no scatter-gather. The
     # router routes them to one node — this is the real topology too:
     # autocomplete boxes hit any serving node, not all of them.
-
-    def reload(self) -> "ShardRouter":
-        """Refresh every node from the on-disk index (see
-        ServingIndex.reload) — fan out over the same thread pool so the
-        router's refresh gap tracks the slowest node, not the sum."""
-        if self._pool is None:
-            for n in self.nodes:
-                n.reload()
-        else:
-            list(self._pool.map(lambda n: n.reload(), self.nodes))
-        return self
 
     def suggest(self, prefix: str, k: int = 10) -> list[tuple[str, int]]:
         return self.nodes[0].suggest(prefix, k=k)
@@ -688,27 +691,11 @@ class ShardRouter:
         text_col: str = "text",
         doc_cache_entries: int = 4096,
     ) -> None:
-        """Attach the forward text store to every node (the docs table is
-        lake-global; each node could equally fetch only its own shards'
-        docs — the router composes from the merged hit set, so it fetches
-        via one node)."""
-        for n in self.nodes:
-            n.attach_docs(docs_path, id_col, text_col, doc_cache_entries)
+        """Attach the forward text store. The router composes responses
+        from the merged hit set, fetching through its first node, so only
+        that node opens the store (and re-attaches it on reload)."""
+        self.nodes[0].attach_docs(docs_path, id_col, text_col, doc_cache_entries)
         self._docs_path = docs_path
 
     def _fetch_texts(self, docids: list[int]) -> dict[int, str]:
         return self.nodes[0]._fetch_texts(docids)
-
-    def search_response(
-        self,
-        query: str,
-        k: int = 10,
-        mode: str = "and",
-        rerank_from: int | None = None,
-    ) -> list[tuple]:
-        """Full response rows over the fanned-out global top-k: the hit
-        merge is the exact scatter-gather (see _fanout); the k-document
-        composition (and the optional rerank stage over the merged
-        disjunctive top-N) runs once at the router — identical to a full
-        instance (tested)."""
-        return respond.search_response(self, query, k, mode, rerank_from)

@@ -170,11 +170,12 @@ def search_response(
     mode: str = "and",
     rerank_from: int | None = None,
 ) -> list[tuple]:
-    """The full response rows of a serving front end (ServingIndex,
-    ShardRouter or GenerationSet: anything with ``search`` and
-    ``_fetch_texts`` whose ``attach_docs`` was called): the top-k hits
-    of ``index.search``, composed over only those k documents'
-    texts. `rerank_from=N` takes the disjunctive top-N instead, reranks
+    """The full response rows of a serving front end — the body of
+    QuerySurface.search_response (query/local.py), shared by
+    ServingIndex, ShardRouter and GenerationSet; `index` needs
+    ``search`` and ``_fetch_texts``, and ``attach_docs`` must have been
+    called: the top-k hits of ``index.search``, composed over only those
+    k documents' texts. `rerank_from=N` takes the disjunctive top-N instead, reranks
     it (rerank_hits_py) and composes the top-k of that order."""
     if not hasattr(index, "_docs_path"):
         raise ValueError(

@@ -122,6 +122,31 @@ def test_generation_search_bitexact_vs_merged(gen_fixture):
     )
 
 
+def test_generation_plans_each_query_once(gen_fixture, monkeypatch):
+    """A GenerationSet analyzes a query once and evaluates the one plan
+    in every generation — not once per generation."""
+    from honeywell_search_engine_spark.query import wand
+
+    base_idx, delta_idx, merged_idx, *_ = gen_fixture
+    gs = GenerationSet([base_idx, delta_idx])
+    merged = ServingIndex(merged_idx)
+    cases = (
+        ("search", "data search"),
+        ("search_websearch", '"data search" engine'),
+        ("search_phrase", "reingest fresh content"),
+    )
+    exp = {name: getattr(merged, name)(q, k=20) for name, q in cases}
+    calls = []
+    real = wand.plan_query
+    monkeypatch.setattr(
+        wand, "plan_query", lambda *a, **kw: calls.append(a[1]) or real(*a, **kw)
+    )
+    for name, q in cases:
+        calls.clear()
+        assert getattr(gs, name)(q, k=20) == exp[name], name
+        assert calls == [q], name
+
+
 def test_generation_shadowing_excludes_old_versions(gen_fixture):
     """A query matching ONLY the old version of a re-ingested doc must
     not surface it from the base generation (newest wins, even when the

@@ -89,15 +89,41 @@ def test_serving_respects_tombstones(spark, pages_path, tmp_path):
 def test_cached_searcher_local_misses_equal_spark_path(spark, seg_index):
     from honeywell_search_engine_spark.query.cache import CachedSearcher
 
-    cs_local = CachedSearcher(seg_index)  # default: local misses
-    cs_spark = CachedSearcher(seg_index, local_misses=False)
-    for q in list(reference_queries().values())[:6]:
-        assert cs_local.search(q, k=10) == cs_spark.search(q, k=10), q
-    assert cs_local.misses == 6
+    cs = CachedSearcher(seg_index)
+    qs = list(reference_queries().values())[:6]
+    exp = {
+        q: [(r["docid"], r["score"]) for r in bm25_topk_wand(seg_index, q, k=10).collect()]
+        for q in qs
+    }
+    for q in qs:
+        assert cs.search(q, k=10) == exp[q], q
+    assert cs.misses == 6
     # repeat -> hits, same rows
-    for q in list(reference_queries().values())[:6]:
-        assert cs_local.search(q, k=10) == cs_spark.search(q, k=10), q
-    assert cs_local.hits == 6
+    for q in qs:
+        assert cs.search(q, k=10) == exp[q], q
+    assert cs.hits == 6
+
+
+def test_cached_searcher_reload_onto_new_index(spark, seg_index, tmp_path):
+    """reload(index) re-opens the serving node on the NEW index's
+    directory: afterwards the cache answers as a fresh ServingIndex over
+    that directory does, not as the old one."""
+    import shutil
+
+    from honeywell_search_engine_spark.index.maintenance import delete_docs
+    from honeywell_search_engine_spark.index.segments import SegmentIndex
+    from honeywell_search_engine_spark.query.cache import CachedSearcher
+
+    second = str(tmp_path / "idx2")
+    shutil.copytree(seg_index.path, second)
+    cs = CachedSearcher(seg_index)
+    before = cs.search("data search", k=10)
+    delete_docs(second, [d for d, _ in before[:3]], reason="reload test")
+    expected = ServingIndex(second).search("data search", k=10)
+    assert expected != before  # the second directory answers differently
+    cs.reload(index=SegmentIndex(spark, second))
+    assert cs.index.path == second
+    assert cs.search("data search", k=10) == expected
 
 
 def test_serving_matches_spark_near_unordered(spark, seg_index, serving, pages_pdf):
@@ -275,20 +301,75 @@ def test_shard_router_matches_full_index(spark, seg_index, serving):
     assert rows[q0] and all(int(r["shard"]) in node._shards for r in rows[q0])
 
 
-def test_shard_router_serial_equals_parallel(spark, seg_index, serving):
-    """parallel=False (serial fan-out) and the threaded default must be
-    identical — the pool is an execution detail, not a semantics one."""
+@pytest.mark.parametrize("n_nodes", [0, -1])
+def test_shard_router_rejects_no_nodes(seg_index, n_nodes):
     from honeywell_search_engine_spark.query.local import ShardRouter
 
-    par = ShardRouter(seg_index.path, n_nodes=2)
-    ser = ShardRouter(seg_index.path, n_nodes=2, parallel=False)
-    for q in list(reference_queries().values())[:6]:
-        assert par.search(q, k=10) == ser.search(q, k=10) == serving.search(
-            q, k=10
-        ), q
-    assert par.search_phrase("data search", k=10) == ser.search_phrase(
-        "data search", k=10
+    with pytest.raises(ValueError, match="n_nodes"):
+        ShardRouter(seg_index.path, n_nodes=n_nodes)
+
+
+def test_shard_router_plans_each_query_once(seg_index, serving, monkeypatch):
+    """The router analyzes a query once and hands the one plan to every
+    node — not once per node."""
+    from honeywell_search_engine_spark.query import wand
+    from honeywell_search_engine_spark.query.local import ShardRouter
+
+    router = ShardRouter(seg_index.path, n_nodes=3)
+    assert len(router.nodes) == 3
+    cases = (
+        ("search", "data search"),
+        ("search_websearch", '"data search" or engine -web'),
+        ("search_phrase", "data search"),
     )
+    exp = {name: getattr(serving, name)(q, k=10) for name, q in cases}
+    calls = []
+    real = wand.plan_query
+    monkeypatch.setattr(
+        wand, "plan_query", lambda *a, **kw: calls.append(a[1]) or real(*a, **kw)
+    )
+    for name, q in cases:
+        calls.clear()
+        assert getattr(router, name)(q, k=10) == exp[name], name
+        assert calls == [q], name
+
+
+def test_shard_router_docs_store_on_fetch_node(spark, seg_index, pages_path, tmp_path):
+    """The router fetches response texts through its first node only, so
+    only that node holds the docs store; a reload keeps it attached."""
+    from honeywell_search_engine_spark.index.corpus import docs_from_pages
+    from honeywell_search_engine_spark.query.local import ShardRouter
+    from honeywell_search_engine_spark.sources.pages import read_pages
+
+    docs_path = str(tmp_path / "docs")
+    (
+        docs_from_pages(read_pages(spark, pages_path))
+        .select("docid", "text")
+        .write.parquet(docs_path)
+    )
+    sv = ServingIndex(seg_index.path)
+    sv.attach_docs(docs_path)
+    router = ShardRouter(seg_index.path, n_nodes=3)
+    router.attach_docs(docs_path)
+    assert [hasattr(n, "_docs_path") for n in router.nodes] == [True, False, False]
+    router.reload()
+    q = list(reference_queries().values())[0]
+    assert router.search_response(q, k=5) == sv.search_response(q, k=5)
+
+
+def test_query_surface_signatures_match():
+    """ServingIndex, ShardRouter and GenerationSet expose one query
+    surface: the same five methods with the same signatures."""
+    import inspect
+
+    from honeywell_search_engine_spark.query.generations import GenerationSet
+    from honeywell_search_engine_spark.query.local import ShardRouter
+
+    for name in ("search", "search_websearch", "search_phrase",
+                 "search_near_unordered", "search_response"):
+        sigs = {inspect.signature(getattr(c, name))
+                for c in (ServingIndex, ShardRouter, GenerationSet)}
+        assert len(sigs) == 1, (name, sigs)
 
 
 def test_decoded_lru_oversize_entry_served_uncached(seg_index, oracle):
@@ -453,9 +534,9 @@ def test_cached_searcher_search_response(spark, seg_index, pages_path, tmp_path)
     assert cs2.warm([("r", qs[0], 5)]) == 1
     assert cs2.search_response(qs[0], k=5) == sv.search_response(qs[0], k=5)
     assert cs2.hits == 1
-    # Spark-miss-mode searcher refuses the serving-only surface
-    with _pytest.raises(ValueError, match="local_misses"):
-        CachedSearcher(seg_index, local_misses=False).search_response(qs[0])
+    # without an attached store the response surface fails loudly
+    with _pytest.raises(ValueError, match="attach_docs"):
+        CachedSearcher(seg_index).search_response(qs[0])
 
 
 def test_doc_text_lru(spark, seg_index, pages_path, tmp_path):
