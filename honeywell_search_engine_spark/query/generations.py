@@ -10,28 +10,33 @@ to BUILD an index over just the delta (O(delta)) and serve the union,
 compacting with `merge_deltas` only when the generation count or delta
 ratio crosses a threshold. This module is that read path: one more front
 end on the shared query surface (query/local.QuerySurface), whose
-``_search`` evaluates the one query plan in every generation and merges
-the hits with the same (-score, docid) ``top_k`` as a ServingIndex's
-shards.
+``_search`` reads every generation's posting rows for the plan's terms,
+sums their df into the logical df, evaluates the one query plan in every
+generation with that df (ServingIndex ``_eval``) and merges the hits with
+the same (-score, docid) ``top_k`` as a ServingIndex's shards.
 
 Exactness (pinned bit-for-bit against the eagerly merged index in
-tests/test_generations.py) requires three corrections, all injected into
-the member `ServingIndex` instances:
+tests/test_generations.py) requires three corrections:
 
-1. **Global stats.** BM25 depends on N (n_docs) and avgdl. Each
-   generation's kernels get the LOGICAL index's values — computed here
-   with exact integer arithmetic over the docmaps (pyarrow reads), the
-   same sums `merge_deltas` journals.
+1. **Global stats.** BM25 depends on N (n_docs), avgdl and each term's
+   df. N and avgdl of the LOGICAL index are computed here with exact
+   integer arithmetic over the docmaps (pyarrow reads), the same sums
+   `merge_deltas` journals, and set on every member once. The logical df
+   is per query (item 3): each member's ``_rows_for`` returns its df with
+   the rows the member evaluates anyway, and ``_search`` hands the summed
+   df to every member's ``_eval`` — term_stats is never read.
 2. **Newest-wins shadowing.** A docid re-ingested in a newer generation
    must not surface from an older one, even when only the OLD version
    matches the query (the document was replaced, not duplicated).
    Shadowed docids are translated to per-shard lids and unioned into the
    older generation's tombstone arrays — the existing kernel dead-list
    path, zero new kernel code.
-3. **df correction.** idf uses df from segment metadata; the merged
-   index drops a replaced doc's old posting rows, so global df(t) =
-   Σ_generations df_g(t) − |t's postings on shadowed docs|. The
-   correction is delta-sized: one pruned read of the older generation's
+3. **df correction.** idf uses df from segment metadata (df_g = Σ n
+   over a generation's rows of t); the merged index drops a replaced
+   doc's old posting rows, so global df(t) = Σ_generations df_g(t) −
+   |t's postings on shadowed docs|, summed per query from the rows the
+   members read. The correction (``_df_corr``) is computed once at open
+   and is delta-sized: one pruned read of the older generation's
    occurrence parquet filtered to the shadowed lids, deduplicated to
    (term, shard, lid). Possible because scores and block bounds are
    stats-independent in the codec (index/codec.py bm25_u_bound) — exact
@@ -181,11 +186,6 @@ class GenerationSet(QuerySurface):
                 )
             self._df_corr_update(paths[i], extra)
 
-        # ---- per-term global df (memoized) --------------------------------
-        self._df_memo: dict[str, int] = {}
-        for g in self.gens:
-            g._df_global = self._global_df
-
     def _df_corr_update(self, path: str, lids_by_shard: dict) -> None:
         """Accumulate df corrections: distinct (term, shard, lid) posting
         rows of THIS generation's occurrence parquet whose lid is
@@ -228,34 +228,25 @@ class GenerationSet(QuerySurface):
         ):
             self._df_corr[t] = self._df_corr.get(t, 0) + int(c)
 
-    def _gen_df(self, gen_idx: int, term: str) -> int:
-        """One generation's df for `term` from its term_stats parquet
-        (term-sorted -> row-group pruned read), 0 if absent."""
-        import pyarrow.dataset as ds
-
-        data = ds.dataset(
-            f"{self.paths[gen_idx]}/term_stats", format="parquet"
-        )
-        tbl = data.to_table(
-            filter=ds.field("term") == term, columns=["df"]
-        )
-        col = tbl.column("df").to_pylist()
-        return int(col[0]) if col else 0
-
-    def _global_df(self, term: str) -> int:
-        v = self._df_memo.get(term)
-        if v is None:
-            v = sum(
-                self._gen_df(i, term) for i in range(len(self.gens))
-            ) - self._df_corr.get(term, 0)
-            self._df_memo[term] = v
-        return v
-
     # ---- query surface ----------------------------------------------------
 
+    def _rows_for(self, terms) -> tuple[dict[str, int], list[dict[str, list[dict]]]]:
+        """(logical {term: df}, each generation's {term: rows}) — one
+        batched ServingIndex._rows_for per generation; df = Σ df_g minus
+        the shadowed postings (``_df_corr``)."""
+        reads = [g._rows_for(terms) for g in self.gens]
+        df = {t: sum(d[t] for d, _ in reads) - self._df_corr.get(t, 0) for t in reads[0][0]}
+        return df, [rows for _, rows in reads]
+
     def _search(self, plan, k: int, allowed_docids=None) -> list[tuple[int, float]]:
-        """Every generation's top-k of the one plan, merged by top_k."""
-        return top_k([g._search(plan, k, allowed_docids) for g in self.gens], k)
+        """Every generation's top-k of the one plan under the logical df,
+        merged by top_k."""
+        if plan is None:
+            return []
+        df, rows = self._rows_for(plan.scan_terms)
+        return top_k(
+            [g._eval(plan, k, allowed_docids, df, r) for g, r in zip(self.gens, rows)], k
+        )
 
     def attach_docs(
         self,

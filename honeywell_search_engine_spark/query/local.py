@@ -25,9 +25,11 @@ differs:
   row groups — a query touches only its terms' lists (the whole point of
   an inverted index), a few KB-MB regardless of corpus size. Rows are
   LRU-memoized per term (hot-term working set).
-- idf: the pruned term rows also ride the dataset read (term_stats is
-  only needed for idf, which equals ln1p((N-df+.5)/(df+.5)) from the
-  segment metadata df = sum of per-shard n) — no second lookup.
+- idf: ln1p((N-df+.5)/(df+.5)) with df = Σ n over the term's segment
+  rows of all shards (the sum term_stats stores), taken from the same
+  read and kept with the rows in the term's one LRU entry — the query
+  path never reads term_stats. A GenerationSet sums its members' df and
+  hands the logical df to every member's ``_eval``.
 - docid rehydration: the docmap (forward index / docvalues) is loaded as
   per-shard lid->docid arrays. At bench scale that is a few MB; at
   10^12 docs a serving shard holds only ITS shard's docvalues
@@ -195,10 +197,9 @@ class ServingIndex(QuerySurface):
         # shard-subset mode (the 10^12-doc deployment unit): this node
         # owns only `shards` — docmap rows and posting payloads load for
         # those shards alone, so per-node memory scales with owned
-        # shards, not the corpus; idf still uses GLOBAL df (see _idf), so
-        # scores are node-independent and a ShardRouter merge is exact.
+        # shards, not the corpus; idf still uses GLOBAL df (see _rows_for),
+        # so scores are node-independent and a ShardRouter merge is exact.
         self._shards = sorted(set(int(s) for s in shards)) if shards is not None else None
-        self._df_cache: dict[str, int] = {}
         with open(f"{path}/stats.json") as f:
             meta = json.load(f)
         self.n_docs = int(meta["n_docs"])
@@ -234,7 +235,8 @@ class ServingIndex(QuerySurface):
             self._by_docid[int(s)] = (ds[o], ls[o])
         # tombstones -> {shard: sorted lid array}
         self._dead = self._lids_by_shard(load_tombstones(path))
-        self._term_lru: OrderedDict[str, list[dict]] = OrderedDict()
+        # term -> (df, [segment row dict per owned shard])
+        self._term_lru: OrderedDict[str, tuple[int, list[dict]]] = OrderedDict()
         self._term_cap = term_cache_capacity
         # decoded-postings LRU: (term, shard) -> codec.MemoList (encoded
         # row + its full decode). BYTE-budgeted, not entry-counted: a head
@@ -247,17 +249,15 @@ class ServingIndex(QuerySurface):
         self._dec_lru: OrderedDict[tuple, object] = OrderedDict()
         self._dec_budget = int(dec_cache_bytes)
         self._dec_bytes = 0
-        # hook for generation-set serving (query/generations.py): when
-        # set, df for idf comes from the LOGICAL index (sum over live
-        # generations) instead of this instance's segment metadata
-        self._df_global = None
 
     def reload(self) -> "ServingIndex":
         """Re-open the index in place after maintenance mutated it on disk
         (promote_generation / merge_deltas / compact): re-reads stats,
-        docmap, and tombstones, and drops every cache (term-row LRU,
-        decoded-postings LRU, df memo, hot-document LRU) — no process
-        restart. Posting rows are read lazily per query, so between the
+        docmap, and tombstones, and drops every cache (term-row and df
+        LRU, decoded-postings LRU, hot-document LRU) — no process
+        restart; an attached docs store is re-attached with its
+        columns and its document-cache cap. Posting rows are read
+        lazily per query, so between the
         on-disk swap and this call an UNCACHED term would pair new
         postings with old stats: for strict consistency either promote
         into a versioned directory and open a fresh node on it, or drain
@@ -266,17 +266,16 @@ class ServingIndex(QuerySurface):
         window. A GenerationSet member should not be reloaded directly
         (the injected global stats/shadows would be lost) — re-open the
         GenerationSet instead."""
-        docs = getattr(self, "_docs_path", None)
-        id_col = getattr(self, "_docs_id_col", "docid")
-        text_col = getattr(self, "_docs_text_col", "text")
         self.__init__(
             self.path,
             term_cache_capacity=self._term_cap,
             dec_cache_bytes=self._dec_budget,
             shards=self._shards,
         )
-        if docs is not None:
-            self.attach_docs(docs, id_col=id_col, text_col=text_col)
+        if hasattr(self, "_docs_path"):  # __init__ keeps the attach settings
+            self.attach_docs(
+                self._docs_path, self._docs_id_col, self._docs_text_col, self._doc_cap
+            )
         return self
 
     # ---- translation ----------------------------------------------------
@@ -301,18 +300,21 @@ class ServingIndex(QuerySurface):
 
     # ---- pruned posting reads --------------------------------------------
 
-    def _rows_for(self, terms: list[str]) -> dict[str, list[dict]]:
-        """{term: [segment row dict per shard]} — LRU first, then ONE
-        pruned dataset read for all missing terms. A shard-subset node
-        reads only its OWN shards' posting payloads; global df (for idf —
-        scores must be identical on every node) rides a second,
-        metadata-columns-only read over all shards."""
-        out: dict[str, list[dict]] = {}
+    def _rows_for(self, terms) -> tuple[dict[str, int], dict[str, list[dict]]]:
+        """({term: df}, {term: [segment row dict per shard]}) — LRU first,
+        then ONE pruned dataset read for all missing terms. df is Σ n over
+        the term's rows of ALL shards (the sum term_stats stores), kept
+        with the rows in the term's one LRU entry. A shard-subset node
+        reads only its OWN shards' posting payloads; its df (scores must
+        be identical on every node) rides a second, metadata-columns-only
+        read over all shards."""
+        df: dict[str, int] = {}
+        rows: dict[str, list[dict]] = {}
         missing = []
         for t in dict.fromkeys(terms):
             if t in self._term_lru:
                 self._term_lru.move_to_end(t)
-                out[t] = self._term_lru[t]
+                df[t], rows[t] = self._term_lru[t]
             else:
                 missing.append(t)
         if missing:
@@ -324,58 +326,49 @@ class ServingIndex(QuerySurface):
             buckets = sorted({bucket_of(t, self.n_buckets) for t in missing})
             flt = ds.field("bucket").isin(buckets) & ds.field("term").isin(missing)
             if self._shards is not None:
-                df_tbl = data.to_table(filter=flt, columns=["term", "n"])
-                dfs = {t: 0 for t in missing}
-                for t, n in zip(
-                    df_tbl.column("term").to_pylist(),
-                    df_tbl.column("n").to_pylist(),
-                ):
-                    dfs[t] += int(n)
-                self._df_cache.update(dfs)
+                meta = data.to_table(filter=flt, columns=["term", "n"])
                 flt = flt & ds.field("shard").isin(list(self._shards))
             tbl = data.to_table(filter=flt)
+            if self._shards is None:
+                meta = tbl
+            dfs = dict.fromkeys(missing, 0)
+            for t, n in zip(meta.column("term").to_pylist(), meta.column("n").to_pylist()):
+                dfs[t] += n
             got: dict[str, list[dict]] = {t: [] for t in missing}
             for row in tbl.to_pylist():
                 got[row["term"]].append(row)
-            for t, rows in got.items():
-                self._term_lru[t] = rows
-                out[t] = rows
+            for t in missing:
+                df[t], rows[t] = self._term_lru[t] = (dfs[t], got[t])
                 if len(self._term_lru) > self._term_cap:
-                    old_t, _ = self._term_lru.popitem(last=False)
-                    self._df_cache.pop(old_t, None)
-        return out
-
-    def _idf(self, rows: list[dict], term: str | None = None) -> float:
-        """idf from segment metadata: df = sum of per-shard n (identical to
-        the finalize aggregate, index/stats.py). On a shard-subset node
-        `rows` covers only the owned shards, so df comes from the global
-        metadata cache instead — idf (and therefore every score) is
-        node-independent."""
-        if self._df_global is not None and term is not None:
-            df = self._df_global(term)
-        elif self._shards is not None and term is not None:
-            df = self._df_cache.get(term, 0)
-        else:
-            df = sum(int(r["n"]) for r in rows)
-        return math.log1p((self.n_docs - df + 0.5) / (df + 0.5))
+                    self._term_lru.popitem(last=False)
+        return df, rows
 
     # ---- queries ----------------------------------------------------------
 
     def _search(self, plan, k: int, allowed_docids=None) -> list[tuple[int, float]]:
         """Evaluate a wand.QueryPlan (None: matches nothing) over this
-        node: the pruned row fetch and idf, per shard the lists from the
-        decoded LRU — PostingLists when every list the plan touches there
-        is <= FULLSCAN_MAX_POSTINGS (full-scan kernels: lowest constant
-        cost, measured ~3x faster than block walking at that size), else
-        MemoLists (exact block-max pruning, essential for Zipf head terms
-        at scale; block decode is a slice of the cached decode) —
-        wand.eval_shard, the lid->docid mapping and the top_k cut."""
+        node: the pruned row fetch with its df, then ``_eval``."""
         if plan is None:
             return []
-        rows_by_term = self._rows_for(list(plan.scan_terms))
+        return self._eval(plan, k, allowed_docids, *self._rows_for(plan.scan_terms))
+
+    def _eval(self, plan, k: int, allowed_docids, df: dict[str, int],
+              rows_by_term: dict[str, list[dict]]) -> list[tuple[int, float]]:
+        """The top-k of `plan` over `rows_by_term` (``_rows_for``), with
+        idf from `df` — this node's own, or a GenerationSet's logical df.
+        Per shard the lists come from the decoded LRU — PostingLists when
+        every list the plan touches there is <= FULLSCAN_MAX_POSTINGS
+        (full-scan kernels: lowest constant cost, measured ~3x faster
+        than block walking at that size), else MemoLists (exact
+        block-max pruning, essential for Zipf head terms at scale; block
+        decode is a slice of the cached decode) — then wand.eval_shard,
+        the lid->docid mapping and the top_k cut."""
         if any(not rows_by_term[t] for t in plan.required):
-            return []  # a required term unknown globally -> no hit
-        idf = {t: self._idf(r, t) for t, r in rows_by_term.items() if r}
+            return []  # a required term has no rows here -> no hit
+        idf = {
+            t: math.log1p((self.n_docs - df[t] + 0.5) / (df[t] + 0.5))
+            for t, r in rows_by_term.items() if r
+        }
         scope = self._lids_by_shard(allowed_docids) if allowed_docids is not None else None
         by_shard: dict[int, dict[str, dict]] = {}
         for t, rows in rows_by_term.items():

@@ -1145,7 +1145,11 @@ def _shard_stage(index: SegmentIndex, plans: dict, k: int, batch: bool,
     n = _kernel_tasks(index, sum(n for n, _v in info.values()))
     body = _task_body(index, plans, k, batch, {t: v for t, (_n, v) in info.items()}, scope_bc)
     schema = BATCH_SHARD_SCHEMA if batch else RESULT_SCHEMA
-    rows = index.segments_for(scan_terms)
+    # the kernels read neither ctf nor the bucket partition column, and
+    # positions only for a positional plan: the scan skips what they skip
+    unread = ("ctf", "bucket") + (() if any(p.need_pos for p in plans.values())
+                                  else ("positions", "p_off"))
+    rows = index.segments_for(scan_terms).drop(*unread)
     if scope_lids is None:
 
         def run(batches):

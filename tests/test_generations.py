@@ -178,8 +178,29 @@ def test_generation_df_correction_binds(gen_fixture):
     merged = ServingIndex(merged_idx)
     assert gs._df_corr, "fixture produced no shadowed postings"
     term = max(gs._df_corr, key=gs._df_corr.get)
-    rows = merged._rows_for([term])[term]
-    assert gs._global_df(term) == sum(int(r["n"]) for r in rows)
+    df, _rows = gs._rows_for([term])
+    _df, merged_rows = merged._rows_for([term])
+    assert df[term] == sum(int(r["n"]) for r in merged_rows[term])
+
+
+def test_generation_first_touch_reads(gen_fixture, monkeypatch):
+    """A first-touch query on a fresh two-generation set opens each
+    generation's segments once and never term_stats: the logical df is
+    summed from the posting rows the members read anyway."""
+    import pyarrow.dataset as ds
+
+    base_idx, delta_idx, *_ = gen_fixture
+    gs = GenerationSet([base_idx, delta_idx])
+    opened = []
+    real = ds.dataset
+
+    def counting(source, *a, **kw):
+        opened.append(str(source))
+        return real(source, *a, **kw)
+
+    monkeypatch.setattr(ds, "dataset", counting)
+    assert gs.search("data search reingest", k=10, mode="or")
+    assert opened == [f"{base_idx}/segments", f"{delta_idx}/segments"]
 
 
 def test_generation_scope_and_tombstones(gen_fixture, tmp_path):

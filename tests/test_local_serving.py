@@ -297,7 +297,7 @@ def test_shard_router_matches_full_index(spark, seg_index, serving):
     ) == serving.search_near_unordered("data engine", k=10, dist=3)
     # posting payload rows on a node are restricted to its shards
     node = router.nodes[0]
-    rows = node._rows_for([q0])
+    _df, rows = node._rows_for([q0])
     assert rows[q0] and all(int(r["shard"]) in node._shards for r in rows[q0])
 
 
@@ -355,6 +355,32 @@ def test_shard_router_docs_store_on_fetch_node(spark, seg_index, pages_path, tmp
     router.reload()
     q = list(reference_queries().values())[0]
     assert router.search_response(q, k=5) == sv.search_response(q, k=5)
+
+
+def test_reload_keeps_doc_cache_cap(spark, seg_index, pages_path, tmp_path):
+    """reload() re-attaches the docs store with the document-cache cap it
+    was attached with — on a node and through a router — and the cap
+    still bounds the document LRU."""
+    from honeywell_search_engine_spark.index.corpus import docs_from_pages
+    from honeywell_search_engine_spark.query.local import ShardRouter
+    from honeywell_search_engine_spark.sources.pages import read_pages
+
+    docs_path = str(tmp_path / "docs")
+    (
+        docs_from_pages(read_pages(spark, pages_path))
+        .select("docid", "text")
+        .write.parquet(docs_path)
+    )
+    sv = ServingIndex(seg_index.path)
+    sv.attach_docs(docs_path, doc_cache_entries=2)
+    router = ShardRouter(seg_index.path, n_nodes=2)
+    router.attach_docs(docs_path, doc_cache_entries=2)
+    q = list(reference_queries().values())[0]
+    for fe, node in ((sv, sv), (router, router.nodes[0])):
+        fe.reload()
+        assert node._doc_cap == 2
+        assert len(fe.search_response(q, k=5)) > 2
+        assert len(node._doc_lru) <= 2
 
 
 def test_query_surface_signatures_match():

@@ -112,6 +112,28 @@ def test_phrase_scan_pruned_and_projected(seg_index):
     assert "positions" in plan  # positional stream projected to the kernel
 
 
+def test_kernel_scan_projects_kernel_columns(seg_index):
+    """The kernel stage scans only the columns the kernels read: a point
+    AND query reads neither positions nor ctf; a phrase query still
+    reads positions."""
+    from honeywell_search_engine_spark.query.wand import bm25_topk_phrase, bm25_topk_wand
+
+    def read_schema(df):
+        return _plan(df).split("ReadSchema")[1].split("\n")[0]
+
+    conf = seg_index.spark.conf
+    conf.set("spark.sql.maxMetadataStringLength", "10000")  # untruncated ReadSchema
+    try:
+        point = read_schema(bm25_topk_wand(seg_index, "data search", k=10))
+        phrase = read_schema(bm25_topk_phrase(seg_index, "data search", k=10))
+    finally:
+        conf.unset("spark.sql.maxMetadataStringLength")
+    assert "doclens" in point, point
+    for bad in ("positions", "p_off", "ctf"):
+        assert bad not in point, (bad, point)
+    assert "positions" in phrase and "p_off" in phrase, phrase
+
+
 def test_rerank_plan_shape(spark):
     """rerank_topk: candidate semi-join broadcasts, final top-k via a
     single window over 50 rows (no Exchange storm), features stay as
