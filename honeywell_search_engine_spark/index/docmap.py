@@ -127,7 +127,3 @@ def lids_by_shard(docmap: DataFrame, docids) -> dict[int, np.ndarray]:
     for r in rows:
         out.setdefault(int(r["shard"]), []).append(int(r["local_id"]))
     return {s: np.array(sorted(v), dtype=np.int64) for s, v in out.items()}
-
-
-# tombstone-flavored alias (the original call sites read better with it)
-dead_lids_by_shard = lids_by_shard

@@ -162,7 +162,7 @@ def compact(spark: SparkSession, index_dir: str, _fail_at: str | None = None) ->
     # left-anti join against a tombstone DataFrame — NOT ~isin([literals]):
     # a million tombstones must not become a million-node Catalyst
     # expression. The dead side is broadcast (small relative to the corpus).
-    from honeywell_search_engine_spark.index.docmap import dead_lids_by_shard
+    from honeywell_search_engine_spark.index.docmap import lids_by_shard
 
     dead_sorted = np.array(sorted(dead), dtype=np.int64)
     dead_df = spark.createDataFrame(
@@ -183,7 +183,7 @@ def compact(spark: SparkSession, index_dir: str, _fail_at: str | None = None) ->
     new_avgdl = float(row["s"] or 0) / new_n if new_n else 0.0
 
     # rewrite segments (decode -> mask dead lids -> re-encode)
-    dead_map = dead_lids_by_shard(docmap, dead)
+    dead_map = lids_by_shard(docmap, dead)
     dead_bc = spark.sparkContext.broadcast(dead_map)
     rewritten = (
         spark.read.parquet(f"{index_dir}/segments")

@@ -1035,9 +1035,9 @@ class SegmentIndex:
         if not self.tombstones:
             return None
         if self._dead_bc is None:
-            from honeywell_search_engine_spark.index.docmap import dead_lids_by_shard
+            from honeywell_search_engine_spark.index.docmap import lids_by_shard
 
-            by_shard = dead_lids_by_shard(self.docmap, self.tombstones)
+            by_shard = lids_by_shard(self.docmap, self.tombstones)
             self._dead_bc = self.spark.sparkContext.broadcast(by_shard)
         return self._dead_bc
 
@@ -1064,9 +1064,9 @@ class SegmentIndex:
         if key in self._scope_bcs:
             self._scope_bcs.move_to_end(key)
             return self._scope_bcs[key]
-        from honeywell_search_engine_spark.index.docmap import dead_lids_by_shard
+        from honeywell_search_engine_spark.index.docmap import lids_by_shard
 
-        by_shard = dead_lids_by_shard(self.docmap, allowed_docids)
+        by_shard = lids_by_shard(self.docmap, allowed_docids)
         bc = self.spark.sparkContext.broadcast(by_shard)
         self._scope_bcs[key] = bc
         if len(self._scope_bcs) > 64:  # bound driver+executor memory

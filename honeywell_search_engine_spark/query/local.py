@@ -4,10 +4,13 @@ Why this exists: the reference's latency targets (p95 < 500 ms, 100 q/s —
 reference PIPELINE.md:349-350) describe its *serving process* (FastAPI +
 Postgres GIN lookups, backend/app/routers/search.py), not a batch engine.
 Spark is the right tool for building, merging, and compacting the index
-and for batch query workloads (query/wand.py), but a per-query Spark job
-carries a fixed ~0.3-0.5 s scheduling cost that no kernel speed can
-remove. The deployment story at 10^12 docs is the standard one: Spark
-writes immutable segments to the lake; stateless serving nodes read them.
+and for batch query workloads (query/wand.py), but a Spark point query
+carries a fixed cost that no kernel speed can remove: it is one job of
+one stage and one task, and its traced ``wand.exec_ms`` measured
+210-267 ms on a 4-vCPU host (perfbench ``spark-point``), with ~94 ms of
+CPU for each extra Python task (wand.POSTINGS_PER_TASK). The deployment
+story at 10^12 docs is the standard one: Spark writes immutable segments
+to the lake; stateless serving nodes read them.
 
 This module is that serving node, and the one query surface every
 in-process front end shares (``QuerySurface``: search, search_websearch,

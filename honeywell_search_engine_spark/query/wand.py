@@ -44,21 +44,33 @@ top-k is the k-merge of per-shard top-k's — exact, no recall loss (tested
 rank-identical to both the naive Catalyst engine and the oracle). One task
 may evaluate several shards' groups; the result does not depend on it.
 
-Shard kernel (numpy, per shard):
+Shard kernels (numpy, per shard). The conjunctive ones — AND (default,
+reference F4 websearch_to_tsquery semantics), phrase/NEAR and websearch
+groups — are one matcher, drive -> intersect -> verify -> score:
 
-- AND (default, reference F4 websearch_to_tsquery semantics): iterate
-  terms by ascending df; decode the rarest list fully; every other list is
-  decoded *selectively* — searchsorted over its block-max docids finds the
-  only blocks that can contain surviving candidates, everything else is
-  skipped (block-max docid skipping). Exact scores for survivors, float64,
-  lexicographic term order (bit-identical to the oracle).
-- Single term: blocks are visited in descending idf*bmax_u (block-max
-  score order); once the k-th heap score exceeds the next block's upper
-  bound the remaining blocks are provably irrelevant and never decoded —
-  classic block-max top-k, exact.
-- OR (disjunctive, reference F5 triple-match semantics): exact vectorized
-  union scoring — see _shard_kernel_or for why the OR path trades pruning
-  for guaranteed-exact returned scores.
+- drive (``_drive``): the rarest list is decoded whole (with positions
+  when the plan needs them) and its docids pass the one candidate filter
+  (``_live``: tombstones, docid scope and, for AND and websearch groups,
+  '-term' negation);
+- intersect (``_intersect``): every other distinct term is probed at the
+  candidates through ``_probe_any`` — an encoded list decodes only the
+  blocks whose block-max docid can hold a candidate (block-max docid
+  skipping), a decoded list is searched directly — into one column set
+  {term: (tfs, doclens, flat positions|None)};
+- verify: the kernel's own logic — AND's sound theta pruning (the same
+  intersect over its <=k probe candidates), phrase adjacency and ordered
+  or unordered NEAR (``_phrase_verify_score``), websearch quoted groups
+  and negated phrases (``_websearch_match``);
+- score (``_bm25_sum``): exact float64 BM25 of the survivors, terms in
+  lexicographic order (bit-identical to the oracle).
+
+The single-term kernel visits blocks in descending idf*bmax_u (block-max
+score order); once the k-th heap score exceeds the next block's upper
+bound the remaining blocks are provably irrelevant and never decoded —
+classic block-max top-k, exact. OR (disjunctive, reference F5
+triple-match semantics) is exact vectorized union scoring — see
+_shard_kernel_or for why the OR path trades pruning for guaranteed-exact
+returned scores.
 
 Deleted documents (tombstones, index/maintenance.py) are filtered inside
 the kernels from the broadcast tombstone set until compaction folds them
@@ -272,19 +284,87 @@ def _blocked(rows) -> bool:
     return not any(isinstance(x, codec.PostingList) for _t, x in rows)
 
 
-def _live(lids: np.ndarray, scores: np.ndarray, dead: np.ndarray,
-          scope: np.ndarray | None, neg_rows) -> tuple:
-    """(lids, scores) without tombstoned, out-of-scope and negated docs."""
+# the index of every candidate: selecting with it is a view, not a copy
+_ALL = slice(None)
+
+
+def _live(lids: np.ndarray, dead: np.ndarray, scope: np.ndarray | None = None,
+          neg_rows=()):
+    """Keep-mask over ascending candidate `lids`, the one candidate filter
+    of every kernel: False for tombstoned (`dead`), out-of-`scope` and
+    negated (`neg_rows`, websearch '-term') docs. The negated lists are
+    probed only at the candidates the first two tests keep. With nothing
+    to filter it is ``_ALL``, so the common case copies no column."""
+    if not dead.size and scope is None and not neg_rows:
+        return _ALL
+    keep = np.ones(lids.size, dtype=bool)
     if dead.size:
-        alive = ~np.isin(lids, dead)
-        lids, scores = lids[alive], scores[alive]
+        keep &= ~np.isin(lids.astype(np.int64, copy=False), dead)
     if scope is not None:
-        m = np.isin(lids, scope)
-        lids, scores = lids[m], scores[m]
-    if neg_rows and lids.size:
-        keep_n = ~_negated_mask(neg_rows, lids)
-        lids, scores = lids[keep_n], scores[keep_n]
-    return lids, scores
+        keep &= np.isin(lids.astype(np.int64, copy=False), scope)
+    if neg_rows and keep.any():
+        keep[keep] = ~_negated_mask(neg_rows, lids[keep])
+    return keep
+
+
+def _take(cand: np.ndarray, cols: dict, keep: np.ndarray) -> tuple:
+    """The one keep-mask step of the conjunctive kernels: (cand, cols) at
+    the candidates where `keep` holds. `cols` is the column set
+    {term: (tfs, doclens, flat positions|None)} aligned with `cand`; flat
+    positions are kept posting by posting (per-posting counts are the
+    tfs), so filtering never walks a per-doc list."""
+    if keep is _ALL or keep.all():
+        return cand, cols
+    return cand[keep], {
+        t: (tfs[keep], dls[keep],
+            None if flat is None else flat[np.repeat(keep, tfs.astype(np.int64))])
+        for t, (tfs, dls, flat) in cols.items()
+    }
+
+
+def _drive(rows: list, dead: np.ndarray, scope: np.ndarray | None = None,
+           neg_rows=(), need_pos=frozenset()) -> tuple:
+    """The drive step of the conjunctive kernels. `rows` are (term, list)
+    pairs; the rarest list is decoded whole (flat positions when its term
+    is in `need_pos`) and its docids are filtered through ``_live``.
+    Returns (the other rows by ascending length, cand, cols)."""
+    rows = sorted(rows, key=lambda tr: tr[1].n)
+    t0, x0 = rows[0]
+    wp = t0 in need_pos
+    pl0 = _full(x0, with_positions=wp)
+    cand = pl0.docids
+    cols = {t0: (pl0.tfs, pl0.doclens, pl0.positions if wp else None)}
+    return (rows[1:], *_take(cand, cols, _live(cand, dead, scope, neg_rows)))
+
+
+def _intersect(rows: list, cand: np.ndarray, cols: dict, need_pos=frozenset()) -> tuple:
+    """The one intersect loop: ascending candidates `cand` against every
+    (term, list) of `rows` whose term has no column yet, so a repeated
+    term is probed once. Each probe goes through ``_probe_any`` (candidate
+    blocks only, or a direct search of a decoded list), adds the term's
+    column (positions for `need_pos` terms) and narrows every column to
+    the candidates that hold. Returns the matched (cand, cols)."""
+    cols = dict(cols)
+    for t, x in rows:
+        if cand.size == 0:
+            break
+        if t in cols:
+            continue
+        keep, tfs, dls, flat = _probe_any(x, cand, with_positions=t in need_pos)
+        cand, cols = _take(cand, cols, keep)
+        cols[t] = (tfs, dls, flat)
+    return cand, cols
+
+
+def _bm25_sum(cols: dict, idf: dict[str, float], avgdl: float) -> np.ndarray:
+    """Exact BM25 of the candidates a column set is aligned with: each
+    term's contribution added in lexicographic term order (float64, the
+    oracle's sum order, so scores are bit-identical)."""
+    score = np.zeros(next(iter(cols.values()))[0].size, dtype=np.float64)
+    for t in sorted(cols):
+        tfs, dls, _flat = cols[t]
+        score += idf[t] * _u_exact(tfs, dls, avgdl)
+    return score
 
 
 def _topk_single(enc: codec.EncodedList, idf: float, avgdl: float, k: int,
@@ -299,11 +379,11 @@ def _topk_single(enc: codec.EncodedList, idf: float, avgdl: float, k: int,
     pruning threshold never counts an excluded doc. A decoded PostingList
     has no block bounds and is scored in one full-scan pass."""
     if isinstance(enc, codec.PostingList):
-        lids, scores = _live(
-            enc.docids.astype(np.int64), idf * _u_exact(enc.tfs, enc.doclens, avgdl),
-            dead, scope, neg_rows,
+        lids = enc.docids.astype(np.int64)
+        keep = _live(lids, dead, scope, neg_rows)
+        return _select_topk_with_ties(
+            lids[keep], idf * _u_exact(enc.tfs[keep], enc.doclens[keep], avgdl), k
         )
-        return _select_topk_with_ties(lids, scores, k)
     order = np.argsort(-enc.bmax_u, kind="stable")
     # Blocks are visited in descending-bound order in CHUNKS: the stop
     # test uses the first (= highest-bound) block of the next chunk, so
@@ -321,10 +401,9 @@ def _topk_single(enc: codec.EncodedList, idf: float, avgdl: float, k: int,
         if topbuf.size >= k and bound < topbuf.min():
             break  # every remaining block has a strictly smaller bound
         pl = codec.decode_blocks(enc, np.sort(batch))
-        lids, scores = _live(
-            pl.docids.astype(np.int64), idf * _u_exact(pl.tfs, pl.doclens, avgdl),
-            dead, scope, neg_rows,
-        )
+        lids = pl.docids.astype(np.int64)
+        keep = _live(lids, dead, scope, neg_rows)
+        lids, scores = lids[keep], idf * _u_exact(pl.tfs[keep], pl.doclens[keep], avgdl)
         cand_d.append(lids)
         cand_s.append(scores)
         if scores.size:
@@ -382,85 +461,33 @@ def _shard_kernel_and(term_rows: list, idf: dict[str, float], avgdl: float,
     version took theta from UNVERIFIED driver contributions, which
     over-prunes when high-driver-score docs fail the intersection.)
     Lists without block metadata (decoded PostingLists) skip the score
-    pruning; the intersection probes them directly."""
-    term_rows = sorted(term_rows, key=lambda tr: tr[1].n)
-    t0, e0 = term_rows[0]
-    pl0 = _full(e0)
-    cand = pl0.docids  # uint64 ascending
-    tf_cols = {t0: (pl0.tfs, pl0.doclens)}
-    if dead.size:
-        alive = ~np.isin(cand.astype(np.int64), dead)
-        cand = cand[alive]
-        tf_cols[t0] = (pl0.tfs[alive], pl0.doclens[alive])
-    if scope is not None:
-        m = np.isin(cand.astype(np.int64), scope)
-        tfs0, dls0 = tf_cols[t0]
-        cand = cand[m]
-        tf_cols[t0] = (tfs0[m], dls0[m])
-    if neg_rows and cand.size:
-        # websearch '-term' exclusion BEFORE pruning, so theta derives
-        # only from docs that can actually be returned
-        keep_n = ~_negated_mask(neg_rows, cand)
-        if not keep_n.all():
-            tfs0, dls0 = tf_cols[t0]
-            cand = cand[keep_n]
-            tf_cols[t0] = (tfs0[keep_n], dls0[keep_n])
-    if prune and cand.size > k and _blocked(term_rows[1:]):
-        tfs0, dls0 = tf_cols[t0]
+    pruning; the intersection probes them directly. Negation is applied
+    in the drive step, before pruning, so theta derives only from docs
+    that can actually be returned."""
+    rest, cand, cols = _drive(term_rows, dead, scope, neg_rows)
+    if prune and cand.size > k and _blocked(rest):
+        t0, (tfs0, dls0, _) = next(iter(cols.items()))
         exact0 = idf[t0] * _u_exact(tfs0, dls0, avgdl)  # exact driver part
         ub = exact0.copy()
-        keep_any = np.ones(cand.size, dtype=bool)
+        keep = np.ones(cand.size, dtype=bool)
         ci = cand.astype(np.int64)
-        for t, enc in term_rows[1:]:
+        for t, enc in rest:
             b = np.searchsorted(enc.bmax_docid, ci, side="left")
             valid = b < enc.bmax_docid.size
-            keep_any &= valid  # beyond t's last block -> AND can never hold
+            keep &= valid  # beyond t's last block -> AND can never hold
             ub[valid] += idf[t] * enc.bmax_u[b[valid]]
         # probe: verify the k best-by-driver candidates against the full
-        # conjunction (selective decode over ≤k docids — a handful of
-        # blocks per list) and take theta from their TRUE scores
-        probe_idx = np.sort(np.argpartition(exact0, exact0.size - k)[exact0.size - k:])
-        v_cand, v_cols = _intersect_selective(
-            term_rows[1:], cand[probe_idx],
-            {t0: (tfs0[probe_idx], dls0[probe_idx])},
-        )
-        theta = None
+        # conjunction (the same intersect loop over <=k docids — a handful
+        # of blocks per list) and take theta from their TRUE scores
+        probe = np.zeros(cand.size, dtype=bool)
+        probe[np.argpartition(exact0, exact0.size - k)[exact0.size - k:]] = True
+        v_cand, v_cols = _intersect(rest, *_take(cand, cols, probe))
         if v_cand.size >= k:
-            v_score = np.zeros(v_cand.size, dtype=np.float64)
-            for t in sorted(v_cols):
-                tfs, dls = v_cols[t]
-                v_score += idf[t] * _u_exact(tfs, dls, avgdl)
-            theta = np.partition(v_score, v_score.size - k)[v_score.size - k]
-        keep = keep_any if theta is None else keep_any & (ub >= theta)
-        if not keep.all():
-            cand = cand[keep]
-            tf_cols[t0] = (tfs0[keep], dls0[keep])
-    cand, tf_cols = _intersect_selective(term_rows[1:], cand, tf_cols)
-    if cand.size == 0:
-        return []
-    # exact scores, lexicographic term order (oracle bit-parity)
-    score = np.zeros(cand.size, dtype=np.float64)
-    for t in sorted(tf_cols):
-        tfs, dls = tf_cols[t]
-        score += idf[t] * _u_exact(tfs, dls, avgdl)
-    return _select_topk_with_ties(cand.astype(np.int64), score, k)
-
-
-def _intersect_selective(rest_rows: list, cand: np.ndarray, tf_cols: dict):
-    """Intersect `cand` (ascending docids, with driver tf columns already
-    in tf_cols) against every (term, list) in rest_rows through
-    _probe_any: an encoded list decodes ONLY the blocks that can contain a
-    surviving candidate, a decoded one is searched directly. Returns the
-    matched (cand, tf_cols) with one (tfs, doclens) column per term."""
-    for t, x in rest_rows:
-        if cand.size == 0:
-            return cand, tf_cols
-        keep, tfs, dls, _ = _probe_any(x, cand)
-        for tt in list(tf_cols):
-            tf_cols[tt] = (tf_cols[tt][0][keep], tf_cols[tt][1][keep])
-        tf_cols[t] = (tfs, dls)
-        cand = cand[keep]
-    return cand, tf_cols
+            v_score = _bm25_sum(v_cols, idf, avgdl)
+            keep &= ub >= np.partition(v_score, v_score.size - k)[v_score.size - k]
+        cand, cols = _take(cand, cols, keep)
+    cand, cols = _intersect(rest, cand, cols)
+    return _select_topk_with_ties(cand.astype(np.int64), _bm25_sum(cols, idf, avgdl), k)
 
 
 def _or_block_prune(term_rows: list, idf: dict[str, float], avgdl: float,
@@ -546,10 +573,7 @@ def _shard_kernel_or(term_rows: list, idf: dict[str, float], avgdl: float,
         mask = np.zeros(union.size, dtype=bool)
         mask[inb] = keep[iv[inb]]
         union = union[mask]
-    if dead.size:
-        union = union[~np.isin(union.astype(np.int64), dead)]
-    if scope is not None:
-        union = union[np.isin(union.astype(np.int64), scope)]
+    union = union[_live(union, dead, scope)]
     score = np.zeros(union.size, dtype=np.float64)
     for t, pl in decoded:  # lexicographic order
         pos = np.searchsorted(union, pl.docids)
@@ -569,61 +593,37 @@ def _shard_kernel_phrase(term_rows: list, idf: dict[str, float], avgdl: float,
     are decoded ONLY for candidate blocks and adjacency is verified by
     chained intersection of per-term positions shifted by their phrase
     offset. Matching docs score standard BM25 over the phrase's distinct
-    terms (lexicographic sum order — oracle bit-parity). Decoded
-    PostingLists (flat positions) are probed directly."""
-    m = len(term_rows)
-    drive = min(range(m), key=lambda i: term_rows[i][1].n)
-    pl0 = _full(term_rows[drive][1], with_positions=True)
-    cand = pl0.docids
-    # per_term[i] = (tfs, doclens, flat absolute positions) — positions
-    # stay ONE flat array per term (per-posting boundaries are the tfs);
-    # filtering/gathering is vectorized, never a per-doc list walk
-    per_term: dict[int, tuple] = {drive: (pl0.tfs, pl0.doclens, pl0.positions)}
-
-    def _filter_cols(tfs, dls, flat, keep):
-        return tfs[keep], dls[keep], flat[np.repeat(keep, tfs.astype(np.int64))]
-
-    if dead.size:
-        alive = ~np.isin(cand.astype(np.int64), dead)
-        per_term[drive] = _filter_cols(*per_term[drive], alive)
-        cand = cand[alive]
-    for i in sorted(range(m), key=lambda i: term_rows[i][1].n):
-        if i == drive:
-            continue
-        if cand.size == 0:
-            return []
-        # candidate blocks only (positions too), or a direct search of a
-        # decoded list; flat positions gathered at the matched postings
-        keep, tfs, dls, flat = _probe_any(term_rows[i][1], cand, with_positions=True)
-        for tt in list(per_term):
-            per_term[tt] = _filter_cols(*per_term[tt], keep)
-        per_term[i] = (tfs, dls, flat)
-        cand = cand[keep]
+    terms (lexicographic sum order — oracle bit-parity). Columns are keyed
+    by term, so a repeated term is probed once. Decoded PostingLists
+    (flat positions) are probed directly."""
+    terms = [t for t, _ in term_rows]
+    need_pos = frozenset(terms)
+    rest, cand, cols = _drive(term_rows, dead, need_pos=need_pos)
+    cand, cols = _intersect(rest, cand, cols, need_pos)
     if cand.size == 0:
         return []
-    return _phrase_verify_score(
-        [t for t, _ in term_rows], per_term, cand, idf, avgdl, k, slop,
-        unordered=unordered,
-    )
+    return _phrase_verify_score(terms, cols, cand, idf, avgdl, k, slop, unordered)
 
 
-def _pos_keys(tfs: np.ndarray, flat: np.ndarray) -> np.ndarray:
-    """One term's flat positions over candidates 0..n-1 (per-candidate
-    counts are its tfs) as composite (candidate << 32) | position keys,
-    ascending by construction."""
+def _pos_keys(col: tuple) -> np.ndarray:
+    """One term's (tfs, doclens, flat positions) column over candidates
+    0..n-1 as composite (candidate << 32) | position keys, ascending by
+    construction (per-candidate position counts are the tfs)."""
+    tfs, _dls, flat = col
     c = np.repeat(np.arange(tfs.size, dtype=np.int64), tfs.astype(np.int64))
     return (c << 32) | flat.astype(np.int64)
 
 
-def _adjacent(keys, m: int) -> np.ndarray:
-    """Candidate indices where phrase terms 0..m-1 occur at consecutive
-    positions; keys(j) gives term j's _pos_keys. A start survives term j
-    iff key+j is among term j's keys (exact adjacency)."""
-    cur = keys(0)
-    for j in range(1, m):
+def _adjacent(cols: dict, phrase) -> np.ndarray:
+    """Candidate indices where the `phrase` terms occur at consecutive
+    positions, from the column set `cols` (positions for every phrase
+    term). A start survives term j iff key+j is among term j's
+    _pos_keys (exact adjacency)."""
+    cur = _pos_keys(cols[phrase[0]])
+    for j in range(1, len(phrase)):
         if cur.size == 0:
             break
-        kj = keys(j)
+        kj = _pos_keys(cols[phrase[j]])
         tgt = cur + j  # pos+j can't overflow into the candidate bits
         idx = np.searchsorted(kj, tgt)
         ok = idx < kj.size
@@ -633,36 +633,35 @@ def _adjacent(keys, m: int) -> np.ndarray:
 
 
 def _phrase_verify_score(
-    terms: list[str], per_term: dict[int, tuple], cand: np.ndarray,
+    terms: list[str], cols: dict, cand: np.ndarray,
     idf: dict[str, float], avgdl: float, k: int, slop: int,
     unordered: bool = False,
 ):
-    # `unordered` (exactly two distinct terms): classic A NEAR/k B — a
-    # candidate survives iff min |pos_A - pos_B| <= slop in EITHER order;
-    # verified with the same composite (cand<<32)|pos keys: one
-    # searchsorted of term A's keys into term B's gives each A-occurrence
-    # its successor AND predecessor B-position within the same candidate.
-    # positional verify, vectorized ACROSS candidates (no per-doc Python
-    # loop — round-2 verdict item 6): every (candidate, position) pair is
-    # one composite key (c << 32) | pos, ascending by construction, so one
-    # searchsorted per phrase term verifies every candidate at once.
-    # slop=0: a start survives term j iff key+j exists in term j's keys
-    # (exact adjacency). slop>0: ordered-NEAR — greedy next-position
-    # chaining (side='right' gives the smallest position > current WITHIN
-    # the same candidate, checked via the key's candidate bits), so
-    # `min span <= (m-1)+slop` stays an exact test.
-    m = len(terms)
-    n_cand = cand.size
-    span_max = (m - 1) + slop
+    """Verify, then score, the phrase candidates `cand`; `cols` holds
+    every phrase term's column, positions included. Every (candidate,
+    position) pair is one composite key (c << 32) | pos, ascending by
+    construction, so one searchsorted per phrase term verifies every
+    candidate at once (no per-doc Python loop).
 
-    def _keys(j: int) -> np.ndarray:
-        tfs_j, _dls_j, flat_j = per_term[j]
-        return _pos_keys(tfs_j, flat_j)
+    - slop=0: exact adjacency (``_adjacent``).
+    - slop>0: ordered NEAR — greedy next-position chaining (side='right'
+      gives the smallest position > current WITHIN the same candidate,
+      checked via the key's candidate bits), so `min span <= (m-1)+slop`
+      stays an exact test.
+    - `unordered` (exactly two distinct terms): classic A NEAR/k B — a
+      candidate survives iff min |pos_A - pos_B| <= slop in EITHER order;
+      one searchsorted of A's keys into B's gives each A occurrence its
+      successor AND predecessor B position within the same candidate.
+
+    Survivors score BM25 over the phrase's distinct terms (a repeated
+    term contributes once, like the oracle)."""
+    m = len(terms)
+    span_max = (m - 1) + slop
 
     if unordered:
         if m != 2:
             raise ValueError("unordered NEAR is the two-term operator")
-        k0, k1 = _keys(0), _keys(1)
+        k0, k1 = _pos_keys(cols[terms[0]]), _pos_keys(cols[terms[1]])
         c0 = k0 >> 32
         p0 = k0 & 0xFFFFFFFF
         idx = np.searchsorted(k1, k0)
@@ -679,15 +678,15 @@ def _phrase_verify_score(
         hit |= same_p & ((p0 - (pred & 0xFFFFFFFF)) <= slop)
         hit_c = np.unique(c0[hit])
     elif slop == 0:
-        hit_c = _adjacent(_keys, m)
+        hit_c = _adjacent(cols, terms)
     else:
-        cur = _keys(0)
+        cur = _pos_keys(cols[terms[0]])
         c0 = cur >> 32
         p0 = cur & 0xFFFFFFFF
         q = cur.copy()
         live = np.ones(cur.size, dtype=bool)
         for j in range(1, m):
-            kj = _keys(j)
+            kj = _pos_keys(cols[terms[j]])
             idx = np.searchsorted(kj, q, side="right")
             in_rng = live & (idx < kj.size)
             nxt = np.zeros_like(q)
@@ -696,22 +695,11 @@ def _phrase_verify_score(
             q = np.where(live, nxt, q)
         live &= ((q & 0xFFFFFFFF) - p0) <= span_max
         hit_c = np.unique(c0[live])
-    phrase_ok = np.zeros(n_cand, dtype=bool)
+    phrase_ok = np.zeros(cand.size, dtype=bool)
     phrase_ok[hit_c] = True
-    if not phrase_ok.any():
-        return []
-    cand = cand[phrase_ok]
-    # distinct-term BM25 in lexicographic order (repeated phrase terms
-    # contribute once, like the oracle)
-    by_term: dict[str, tuple] = {}
-    for i, t in enumerate(terms):
-        tfs, dls, _ps = per_term[i]
-        by_term.setdefault(t, (tfs[phrase_ok], dls[phrase_ok]))
-    score = np.zeros(cand.size, dtype=np.float64)
-    for t in sorted(by_term):
-        tfs, dls = by_term[t]
-        score += idf[t] * _u_exact(tfs, dls, avgdl)
-    return _select_topk_with_ties(cand.astype(np.int64), score, k)
+    # scoring reads no positions: drop them before the survivors' filter
+    cand, cols = _take(cand, {t: (*c[:2], None) for t, c in cols.items()}, phrase_ok)
+    return _select_topk_with_ties(cand.astype(np.int64), _bm25_sum(cols, idf, avgdl), k)
 
 
 def _gather_flat(pl, sel: np.ndarray) -> np.ndarray:
@@ -774,31 +762,17 @@ def _probe_at(enc: codec.EncodedList, cand: np.ndarray, with_positions: bool = F
 
 def _phrase_mask(ph_rows: list, cand: np.ndarray) -> np.ndarray:
     """Boolean mask over `cand` (sorted docids): True where the phrase —
-    ph_rows as (term, EncodedList) in PHRASE order, repeats allowed —
-    occurs at consecutive filtered-stream positions. Used for negated
-    quoted phrases ('-"a b"', Postgres !(a <-> b)), where the phrase's
-    terms are NOT required of the candidates, so presence and adjacency
-    are both probed selectively (candidate blocks only)."""
-    n = cand.size
-    out = np.zeros(n, dtype=bool)
-    if n == 0:
-        return out
-    alive = np.arange(n, dtype=np.int64)
-    sub = cand
-    flats: dict[str, tuple] = {}  # distinct term -> (tfs, flat) aligned with sub
-    for t in dict.fromkeys(t for t, _ in ph_rows):
-        enc = next(e for tt, e in ph_rows if tt == t)
-        keep, tfs, _dls, flat = _probe_any(enc, sub, with_positions=True)
-        if not keep.any():
-            return out  # some phrase term absent from every candidate
-        for tt in flats:
-            ptfs, pflat = flats[tt]
-            flats[tt] = (
-                ptfs[keep], pflat[np.repeat(keep, ptfs.astype(np.int64))]
-            )
-        alive, sub = alive[keep], sub[keep]
-        flats[t] = (tfs, flat)
-    out[alive[_adjacent(lambda j: _pos_keys(*flats[ph_rows[j][0]]), len(ph_rows))]] = True
+    ph_rows as (term, list) in PHRASE order, repeats allowed — occurs at
+    consecutive filtered-stream positions. Used for negated quoted
+    phrases ('-"a b"', Postgres !(a <-> b)), where the phrase's terms are
+    NOT required of the candidates: the intersect loop over the phrase's
+    distinct terms probes presence and positions selectively (candidate
+    blocks only), then ``_adjacent`` verifies."""
+    terms = [t for t, _ in ph_rows]
+    sub, cols = _intersect(ph_rows, cand, {}, frozenset(terms))
+    out = np.zeros(cand.size, dtype=bool)
+    if sub.size:
+        out[np.searchsorted(cand, sub[_adjacent(cols, terms)])] = True
     return out
 
 
@@ -810,71 +784,29 @@ def _websearch_match(
     neg_phrase_rows: list = (),
 ):
     """Match portion of one conjunctive websearch group on one shard:
-    pos_rows are the DISTINCT required (term, EncodedList) pairs (loose
-    terms + every quoted-phrase member), phrase_groups are token-lists
-    that must each occur adjacently, neg_rows exclude docs containing the
-    term, neg_phrase_rows exclude docs where that phrase occurs adjacently
-    ('-"a b"'). Returns (cand, cols) — surviving lids plus per-required-
-    term (tfs, doclens, flat_positions|None) columns for scoring. Exact;
-    positions decode only for phrase members and only in candidate
-    blocks."""
-    need_pos = {t for ph in phrase_groups for t in ph}
-    rows = sorted(pos_rows, key=lambda tr: tr[1].n)
-    t0, e0 = rows[0]
-    pl0 = _full(e0, with_positions=t0 in need_pos)
-    cand = pl0.docids
-    cols: dict[str, tuple] = {
-        t0: (pl0.tfs, pl0.doclens, pl0.positions if t0 in need_pos else None)
-    }
-
-    def _filter(keep: np.ndarray) -> None:
-        nonlocal cand
-        for tt in list(cols):
-            tfs, dls, flat = cols[tt]
-            nf = (
-                flat[np.repeat(keep, tfs.astype(np.int64))]
-                if flat is not None
-                else None
-            )
-            cols[tt] = (tfs[keep], dls[keep], nf)
-        cand = cand[keep]
-
-    if dead.size:
-        _filter(~np.isin(cand.astype(np.int64), dead))
-    for t, enc in rows[1:]:
-        if cand.size == 0:
-            return cand, cols
-        wp = t in need_pos
-        # block-selective decode + membership + segment gather, or a
-        # direct searchsorted of a decoded PostingList
-        keep, tfs, dls, flat = _probe_any(enc, cand, with_positions=wp)
-        _filter(keep)
-        cols[t] = (tfs, dls, flat if wp else None)
-    if cand.size == 0:
-        return cand, cols
-    if neg_rows:
-        hit = _negated_mask(neg_rows, cand)
-        if hit.any():
-            _filter(~hit)
-    if cand.size == 0:
-        return cand, cols
-    # adjacency verification per quoted group — same composite-key sweep
-    # as the phrase kernel, all groups must hold
-    ok_all = np.ones(cand.size, dtype=bool)
+    pos_rows are the DISTINCT required (term, list) pairs (loose terms +
+    every quoted-phrase member), phrase_groups are token-lists that must
+    each occur adjacently, neg_rows exclude docs containing the term,
+    neg_phrase_rows exclude docs where that phrase occurs adjacently
+    ('-"a b"'). Drive (tombstones and negated terms filtered there, as in
+    the AND kernel) and intersect as every conjunctive kernel (positions
+    only for phrase members, only in candidate blocks), then adjacency and
+    negated phrases. Returns (cand, cols) — surviving lids and their
+    column set for scoring. Exact."""
+    need_pos = frozenset(t for ph in phrase_groups for t in ph)
+    rest, cand, cols = _drive(pos_rows, dead, neg_rows=neg_rows, need_pos=need_pos)
+    cand, cols = _intersect(rest, cand, cols, need_pos)
+    # every quoted group must occur adjacently, then no negated phrase may
     for ph in phrase_groups:
-        g = np.zeros(cand.size, dtype=bool)
-        g[_adjacent(lambda j: _pos_keys(cols[ph[j]][0], cols[ph[j]][2]), len(ph))] = True
-        ok_all &= g
-    if not ok_all.all():
-        _filter(ok_all)
-    # negated quoted phrases: exclude candidates where the phrase occurs
-    # adjacently — probed selectively, the phrase terms are NOT required
+        if cand.size == 0:
+            break
+        ok = np.zeros(cand.size, dtype=bool)
+        ok[_adjacent(cols, ph)] = True
+        cand, cols = _take(cand, cols, ok)
     for ph_rows in neg_phrase_rows:
         if cand.size == 0:
             break
-        hits = _phrase_mask(ph_rows, cand)
-        if hits.any():
-            _filter(~hits)
+        cand, cols = _take(cand, cols, ~_phrase_mask(ph_rows, cand))
     return cand, cols
 
 
@@ -886,23 +818,13 @@ def _shard_kernel_websearch(
     avgdl: float,
     k: int,
     dead: np.ndarray = _NO_DEAD,
-    neg_phrase_rows: list = (),
 ):
     """One conjunctive websearch group on one shard, scored: match via
-    _websearch_match, then BM25 over the group's required terms
-    (lexicographic sum order — oracle bit-parity). No score-bound
-    pruning: with unverified phrase groups pending there is no sound
-    theta (same reasoning as the AND-prune fix)."""
-    cand, cols = _websearch_match(
-        pos_rows, phrase_groups, neg_rows, dead, neg_phrase_rows
-    )
-    if cand.size == 0:
-        return []
-    score = np.zeros(cand.size, dtype=np.float64)
-    for t in sorted(cols):
-        tfs, dls, _flat = cols[t]
-        score += idf[t] * _u_exact(tfs, dls, avgdl)
-    return _select_topk_with_ties(cand.astype(np.int64), score, k)
+    _websearch_match, then BM25 over the group's required terms. No
+    score-bound pruning: with unverified phrase groups pending there is
+    no sound theta (same reasoning as the AND-prune fix)."""
+    cand, cols = _websearch_match(pos_rows, phrase_groups, neg_rows, dead)
+    return _select_topk_with_ties(cand.astype(np.int64), _bm25_sum(cols, idf, avgdl), k)
 
 
 def _shard_kernel_websearch_or(
@@ -1330,7 +1252,9 @@ def bm25_topk_wand_batch(
 ) -> DataFrame:
     """Evaluate a whole query batch in ONE shard-kernel stage.
 
-    Per-query Spark work pays ~0.3-0.5 s of scheduling each; a search
+    A point query is one Spark job of one stage and one task, and pays a
+    fixed cost for it (traced ``wand.exec_ms`` 210-267 ms on a 4-vCPU
+    host; ~94 ms of CPU per extra task, see POSTINGS_PER_TASK); a search
     engine's natural unit is the query *stream* (the reference's design
     target is 100 q/s, PIPELINE.md:350). Here: one pruned segment scan
     over the union of all queries' terms, one kernel stage

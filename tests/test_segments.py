@@ -263,6 +263,66 @@ def test_and_pruning_sound_when_high_driver_docs_fail_conjunction():
     assert res_pruned == res_full
 
 
+@pytest.mark.parametrize("rep", ["encoded", "memo", "decoded"])
+@pytest.mark.parametrize("slop", [0, 2])
+def test_repeated_phrase_term_probed_once(monkeypatch, rep, slop):
+    """The phrase kernel keys its columns by term: in "alpha bravo alpha"
+    the rare `bravo` drives and `alpha` is probed ONCE, not once per
+    occurrence. One in-process shard (lid = docid) of 600 docs, `alpha`
+    in every doc (5 blocks), so the probe is block-selective; the result
+    equals OracleIndex.search_phrase bit-exactly, over EncodedLists,
+    MemoLists and decoded PostingLists alike."""
+    from collections import Counter
+
+    import numpy as np
+
+    from honeywell_search_engine_spark.index import codec
+    from honeywell_search_engine_spark.oracle import OracleIndex
+    from honeywell_search_engine_spark.query import wand as W
+
+    docs = []
+    for d in range(600):
+        words = ["alpha", "charlie", "delta"][: 1 + d % 3] + ["echo"] * (d % 5)
+        if d % 10 == 0:
+            words += ["alpha", "bravo", "alpha"] if d % 20 else ["bravo", "echo", "alpha"]
+        docs.append((d, " ".join(words)))
+    oracle = OracleIndex.build(docs)
+    by_term = {}
+    for t, post in oracle.postings.items():
+        ds = sorted(post)
+        enc = codec.encode_postings(
+            np.array(ds, dtype=np.uint64),
+            np.array([post[d] for d in ds], dtype=np.uint64),
+            np.array([oracle.doclen[d] for d in ds], dtype=np.uint64),
+            oracle.avgdl,
+            positions=np.concatenate([oracle.positions[t][d] for d in ds]),
+        )
+        if rep != "encoded":
+            ml = codec.MemoList(
+                enc, codec.decode_postings(enc, with_positions=True, flat_positions=True)
+            )
+            enc = ml if rep == "memo" else ml.pl
+        by_term[t] = enc
+    assert by_term["alpha"].n == 600 and by_term["bravo"].n == 60
+    idf = {t: oracle.idf(t) for t in by_term}
+    q = "alpha bravo alpha"
+    plan = W.plan_query(oracle, q, 10, syntax="phrase", slop=slop)  # reads .stemmed only
+    assert plan.terms == ("alpha", "bravo", "alpha")
+
+    term_of = {id(x): t for t, x in by_term.items()}
+    probes = Counter()
+    real = W._probe_any
+    monkeypatch.setattr(
+        W, "_probe_any",
+        lambda x, cand, **kw: probes.update([term_of[id(x)]]) or real(x, cand, **kw),
+    )
+    got = W.eval_shard(plan, by_term, idf, oracle.avgdl, 10)
+    assert probes == {"alpha": 1}
+    exp = oracle.search_phrase(q, k=10, slop=slop)
+    assert len(exp) == 10
+    assert [(int(d), float(s)) for d, s in got][:10] == exp
+
+
 def test_near_topk_matches_oracle(spark, seg_index, oracle, pages_pdf):
     """Ordered-NEAR (slop) top-k == oracle at slop 1 and 2; slop widens or
     keeps the hit set vs the exact phrase."""
