@@ -14,9 +14,9 @@ Spark-first:
   compression, per-block max-score metadata) built with salted
   repartition-and-sort to defeat head-term skew, with per-partition lineage
   manifests for checkpointed resume;
-- BM25 top-k query engine: naive Catalyst-only path (broadcast term join +
-  hash aggregate) and a segment path with block-max WAND pruning inside
-  one mapInArrow task body.
+- BM25 top-k query engine over the segments (their one durable copy of
+  the postings), with block-max WAND pruning inside one mapInArrow task
+  body, and Spark-free serving nodes over the same segments.
 
 No per-row Python UDFs anywhere — only pandas_udf / applyInPandas /
 mapInPandas / mapInArrow over Arrow batches, plus built-in

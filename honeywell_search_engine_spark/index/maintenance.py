@@ -9,7 +9,7 @@ deletion is two-phase, lake-style:
    filters tombstoned docids at query time (the WAND kernels take the
    broadcast tombstone set).
 2. ``compact`` — periodic: rewrite segments dropping dead postings
-   (decode -> mask -> re-encode inside mapInPandas), recompute term_stats
+   (decode -> mask -> re-encode inside mapInArrow), recompute term_stats
    from the surviving segment metadata (df = Σn, ctf = Σctf — no raw
    posting scan needed), refresh N/avgdl from the doclen table, clear
    tombstones. Per-bucket manifests are refreshed with a new generation
@@ -24,22 +24,22 @@ import shutil
 import time
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import SparkSession, functions as F
 
 from honeywell_search_engine_spark.index import codec
 from honeywell_search_engine_spark.index.segments import (
+    PA_SEGMENT_SCHEMA,
     SEGMENT_SCHEMA,
-    SegmentIndex,
     _encode_group,
     _invalidate_buckets,
     _read_manifest,
     _write_manifest,
     bucket_checksums,
+    bucket_col,
     enc_from_row,
     encode_pending_buckets,
     input_fingerprint,
-    load_tombstones,
+    segment_occurrences,
     write_occurrences,
     write_term_stats,
 )
@@ -59,54 +59,60 @@ def delete_docs(index_dir: str, docids: list[int], reason: str = "") -> str:
 
 
 def _rewrite_kernel(dead_bc, avgdl: float):
-    """dead_bc: Spark broadcast of {shard: sorted int64 tombstoned-lid
-    array} — one copy per executor, not a per-task closure set."""
+    """mapInArrow body: decode each segment row, drop the postings of
+    tombstoned lids (their positions masked by ``np.repeat(keep, tfs)``)
+    and re-encode. dead_bc: Spark broadcast of {shard: sorted int64
+    tombstoned-lid array} — one copy per executor, not a per-task closure
+    set."""
     _EMPTY = np.zeros(0, dtype=np.int64)
 
     def rewrite(batches):
+        import pyarrow as pa
+
         dead_map = dead_bc.value
-        for pdf in batches:
+        for batch in batches:
             out = []
-            for _, row in pdf.iterrows():
+            for row in batch.to_pylist():
                 enc = enc_from_row(row)
-                pl = codec.decode_postings(enc, with_positions=True)
-                dead_arr = dead_map.get(int(row["shard"]), _EMPTY)
-                keep = ~np.isin(pl.docids.astype(np.int64), dead_arr)
+                pl = codec.decode_postings(enc, with_positions=True, flat_positions=True)
+                keep = ~np.isin(pl.docids.astype(np.int64), dead_map.get(row["shard"], _EMPTY))
                 if not keep.any():
                     continue
                 pos = None
                 if pl.positions is not None:
-                    kept = [p for p, k in zip(pl.positions, keep) if k]
-                    pos = (
-                        np.concatenate(kept).astype(np.uint64)
-                        if kept
-                        else np.zeros(0, np.uint64)
-                    )
+                    pos = pl.positions[np.repeat(keep, pl.tfs.astype(np.int64))]
                 out.append(
                     _encode_group(
-                        row["term"], int(row["shard"]), int(row["bucket"]),
+                        row["term"], row["shard"], row["bucket"],
                         pl.docids[keep], pl.tfs[keep], pl.doclens[keep], avgdl,
                         positions=pos, fmt=enc.fmt,
                     )
                 )
             if out:
-                yield pd.DataFrame(out)
+                yield pa.RecordBatch.from_pylist(out, schema=PA_SEGMENT_SCHEMA)
 
     return rewrite
 
 
-_COMPACT_DIRS = ("segments", "term_stats", "docmap", "postings")
+_COMPACT_DIRS = ("segments", "term_stats", "docmap")
 
 
-def _carry_sum_doclen(meta: dict, src: dict) -> None:
-    """Carry the journaled exact Σdoclen into stats.json metadata, or DROP
-    a stale value when the journal predates the field (r7) — GenerationSet
-    trusts `sum_doclen` as exact, so a stats writer must never leave an
-    out-of-date one behind."""
+def _commit_stats(index_dir: str, meta: dict, src: dict) -> None:
+    """Write stats.json with the n_docs, avgdl and exact Σdoclen journaled
+    in `src` — the one stats writer of compact, merge and promote. A
+    journal that predates `sum_doclen` (r7) DROPS the stale value:
+    GenerationSet trusts it as exact. An index written while an occurrence
+    table was a second durable copy loses that table (postings/) and its
+    multi-file marker here; nothing reads either any more."""
+    meta.update({"n_docs": src["n_docs"], "avgdl": src["avgdl"]})
     if "sum_doclen" in src:
         meta["sum_doclen"] = src["sum_doclen"]
     else:
         meta.pop("sum_doclen", None)
+    meta.pop("occ_multifile_buckets", None)
+    shutil.rmtree(f"{index_dir}/postings", ignore_errors=True)
+    with open(f"{index_dir}/stats.json", "w") as f:
+        json.dump(meta, f)
 
 
 def _repair_dir_swaps(index_dir: str) -> None:
@@ -187,26 +193,10 @@ def compact(spark: SparkSession, index_dir: str, _fail_at: str | None = None) ->
     dead_bc = spark.sparkContext.broadcast(dead_map)
     rewritten = (
         spark.read.parquet(f"{index_dir}/segments")
-        .mapInPandas(_rewrite_kernel(dead_bc, new_avgdl), schema=SEGMENT_SCHEMA)
+        .mapInArrow(_rewrite_kernel(dead_bc, new_avgdl), schema=SEGMENT_SCHEMA)
     )
     rewritten.write.mode("overwrite").partitionBy("bucket").parquet(
         f"{index_dir}/segments_new"
-    )
-
-    # the phase-1 postings table is the durable re-encode source (merges
-    # re-encode affected buckets FROM it) — it must shed the dead rows too,
-    # or a later merge would resurrect deleted docs. Anti-join on the dead
-    # (shard, lid) pairs, rewritten in the occurrence layout future
-    # encodes rely on.
-    dead_pairs = spark.createDataFrame(
-        [(int(s), int(l)) for s, ls in dead_map.items() for l in ls] or [],
-        "shard int, lid long",
-    )
-    write_occurrences(
-        spark.read.parquet(f"{index_dir}/postings").join(
-            F.broadcast(dead_pairs), ["shard", "lid"], "left_anti"
-        ),
-        f"{index_dir}/postings_new",
     )
     n_postings = write_term_stats(
         spark.read.parquet(f"{index_dir}/segments_new"),
@@ -245,13 +235,7 @@ def _finish_compact(
         _swap_bucket_dir(f"{index_dir}/{name}", f"{index_dir}/{name}_new")
         if i == 0 and _fail_at == "mid_swap":
             raise RuntimeError("injected failure at mid_swap")
-    meta.update({"n_docs": st["n_docs"], "avgdl": st["avgdl"]})
-    _carry_sum_doclen(meta, st)
-    # the postings rewrite above re-sorted every bucket into single
-    # contiguous files, so promotion's multi-file markers are all cleared
-    meta.pop("occ_multifile_buckets", None)
-    with open(f"{index_dir}/stats.json", "w") as f:
-        json.dump(meta, f)
+    _commit_stats(index_dir, meta, st)
     buckets = list(range(meta["n_buckets"]))
     chks = bucket_checksums(spark, f"{index_dir}/segments", buckets)
     gen = int(time.time())
@@ -365,20 +349,24 @@ def merge_deltas(
     1. pending = complete delta batches (id:checksum) not in the registry;
        no pending -> no-op. Re-running with an already-merged delta_dir is
        a no-op — tf can never double.
-    2. STAGE (journal "staging" -> "staged"): merged bucket data is written
-       to postings_merged/ and the forward index to docmap_staged/ (new
+    2. STAGE (journal "staging" -> "staged"): the affected buckets'
+       segment rows are decoded to occurrence rows (segment_occurrences),
+       a re-ingested doc's old rows dropped, the delta's rows added, and
+       the result written through write_occurrences to the scratch
+       postings_merged/; the forward index goes to docmap_staged/ (new
        docs get lids APPENDED after each shard's max — existing posting
-       lists never shift); the live index is NOT touched. A crash here
+       lists never shift). The live index is NOT touched. A crash here
        restages from scratch.
     3. COMMIT (journal "staged" -> "swapped"): invalidate affected bucket
        manifests + finalize marker FIRST (readers now refuse the index
-       instead of trusting stale manifests), then swap each bucket dir and
-       the docmap dir via rename-with-backup (_swap_bucket_dir — every
-       crash point is repaired by re-running), then rewrite stats.json from
+       instead of trusting stale manifests), then swap the docmap dir via
+       rename-with-backup (_swap_bucket_dir — every crash point is
+       repaired by re-running), then rewrite stats.json from
        journal-recorded values.
     4. ENCODE (journal "swapped" -> registry updated, inflight cleared):
        encode_pending_buckets re-encodes exactly the invalidated buckets
-       and refinalizes term_stats (already idempotent).
+       from postings_merged/, refinalizes term_stats (already idempotent)
+       and deletes the scratch.
 
     Re-invoking merge_deltas after a crash at ANY point resumes from the
     journal and converges to the same bytes as an uninterrupted run
@@ -388,7 +376,6 @@ def merge_deltas(
     a delta streamed with a different modulus can't corrupt the layout.
     `_fail_at` is a test-only fault-injection point ("staged",
     "invalidated", "mid_swap", "swapped")."""
-    from honeywell_search_engine_spark.index.naive import bucket_col
     from honeywell_search_engine_spark.streaming.ingest import delta_postings
 
     def _boom(point: str) -> None:
@@ -454,6 +441,7 @@ def merge_deltas(
         from honeywell_search_engine_spark.index.docmap import append_local_ids
 
         base_dm = spark.read.parquet(f"{index_dir}/docmap")
+        segments = spark.read.parquet(f"{index_dir}/segments")
         delta_docs = delta.groupBy("docid").agg(F.first("doclen").alias("doclen"))
         new_docs = delta_docs.join(base_dm.select("docid"), "docid", "left_anti")
         reingested = delta_docs.join(base_dm.select("docid"), "docid", "left_semi")
@@ -483,7 +471,7 @@ def merge_deltas(
             )
             extra = [
                 r["bucket"]
-                for r in spark.read.parquet(f"{index_dir}/postings")
+                for r in segment_occurrences(segments)
                 .join(F.broadcast(re_pairs), ["shard", "lid"], "left_semi")
                 .select("bucket")
                 .distinct()
@@ -502,11 +490,9 @@ def merge_deltas(
             staged_dm.select("docid", "shard", F.col("local_id").alias("lid")),
             "docid",
         ).select("lid", "doclen", "term", "shard", "bucket", "pos")
-        base = (
-            spark.read.parquet(f"{index_dir}/postings")
-            .filter(F.col("bucket").isin(affected))
-            .select("lid", "doclen", "term", "shard", "bucket", "pos")
-        )
+        base = segment_occurrences(
+            segments.filter(F.col("bucket").isin(affected))
+        ).select("lid", "doclen", "term", "shard", "bucket", "pos")
         if re_pairs is not None:
             base = base.join(F.broadcast(re_pairs), ["shard", "lid"], "left_anti")
         write_occurrences(base.unionByName(occ_delta), staged_dir)
@@ -528,35 +514,19 @@ def merge_deltas(
 
     # ---- COMMIT -----------------------------------------------------------
     if inflight["status"] == "staged":
-        affected = inflight["affected_buckets"]
-        _invalidate_buckets(index_dir, affected)
+        _invalidate_buckets(index_dir, inflight["affected_buckets"])
         _boom("invalidated")
-        for i, b in enumerate(affected):
-            _swap_bucket_dir(
-                f"{index_dir}/postings/bucket={b}", f"{staged_dir}/bucket={b}"
-            )
-            if i == 0:
-                _boom("mid_swap")
-        shutil.rmtree(staged_dir, ignore_errors=True)
         if os.path.isdir(docmap_staged):
             _swap_bucket_dir(f"{index_dir}/docmap", docmap_staged)
-        meta.update({"n_docs": inflight["n_docs"], "avgdl": inflight["avgdl"]})
-        _carry_sum_doclen(meta, inflight)
-        if "occ_multifile_buckets" in meta:
-            # STAGE re-sorted the affected buckets into contiguous files,
-            # clearing any promotion-appended multi-file markers on them
-            meta["occ_multifile_buckets"] = [
-                b for b in meta["occ_multifile_buckets"] if b not in set(affected)
-            ]
-        with open(f"{index_dir}/stats.json", "w") as f:
-            json.dump(meta, f)
+        _boom("mid_swap")
+        _commit_stats(index_dir, meta, inflight)
         inflight["status"] = "swapped"
         _write_merge_state(index_dir, state)
     _boom("swapped")
 
     # ---- ENCODE + register --------------------------------------------------
     fp = input_fingerprint(spark, delta_dir)
-    encode_pending_buckets(spark, index_dir, fp)
+    encode_pending_buckets(spark, index_dir, fp, occ_path=staged_dir)
     for k in inflight["batch_keys"]:
         state["merged_batches"][k] = {"delta_dir": delta_dir}
     result = {

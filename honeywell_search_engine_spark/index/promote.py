@@ -40,14 +40,10 @@ docids ⇒ df adds; n_docs/avgdl from exact integer doclen sums over both
 docmaps), and kernels are exact under any lid assignment
 (query/wand.py boundary-tie contract). Pinned in tests/test_promote.py.
 
-Occurrence rows (the durable re-encode source for merge/compact) are
-APPENDED as extra parquet files per bucket — base files untouched
-(delta rows rewritten with offset lids, O(delta)). merge_deltas and
-compact re-sort on read, so they stay exact over the multi-file layout;
-the one consumer that relies on (term, shard) groups living in a single
-file — encode_pending_buckets' no-shuffle scan — consults the
-``occ_multifile_buckets`` marker this module leaves in stats.json and
-normalizes (one pruned repartition+sort per bucket) before re-encoding.
+Segments are the one durable copy of the postings: a generation keeps
+no occurrence rows once it is finalized, and promotion writes none.
+The spliced segment rows are all a later merge_deltas or compact needs
+(both decode them).
 
 Scope: the delta's docids must be DISJOINT from the base's (the
 append-only web-crawl case). Re-ingested documents need posting
@@ -57,8 +53,8 @@ upsert) or GenerationSet's query-time shadowing; promote refuses loudly.
 At 100 TB: promotion reads+rewrites the affected buckets' segment BYTES
 (compressed, ~2.4 B/posting — an IO-bound streaming pass distributed one
 bucket per task) but its encode CPU is O(delta + one seam block per
-touched list); the base occurrence rows (the expensive raw form, ~10× the
-segment bytes) are never shuffled, rewritten, or even read. Parity with
+touched list); no raw occurrence row (~10× the segment bytes) is
+shuffled, written or read. Parity with
 the reference's ingest-visibility contract (backend/app/worker/tasks.py
 indexes per-upload batches; Postgres GIN maintains its index
 incrementally) — this is the Spark-native equivalent of that incremental
@@ -77,7 +73,7 @@ from pyspark.sql import SparkSession, functions as F
 from honeywell_search_engine_spark.index import codec
 from honeywell_search_engine_spark.index.codec import BLOCK, EncodedList
 from honeywell_search_engine_spark.index.maintenance import (
-    _carry_sum_doclen,
+    _commit_stats,
     _repair_dir_swaps,
     _swap_bucket_dir,
 )
@@ -532,7 +528,7 @@ def promote_generation(
     to the live index without touching it; COMMIT journals 'committing',
     invalidates manifests (readers refuse rather than trust stale
     metadata), then swaps segment bucket dirs and hard-appends the
-    journaled occurrence/docmap files under deterministic names; FINALIZE
+    journaled docmap files under deterministic names; FINALIZE
     recomputes bucket checksums and term_stats. Re-running after a crash
     at any point converges (tests/test_promote.py kill-point tests).
     `_fail_at` is the test-only injection hook ("staged" | "committing" |
@@ -571,7 +567,7 @@ def promote_generation(
             )
     # maintenance ops on one index are externally serialized; still refuse
     # the detectable races — an unfinished merge or a staged compaction
-    # owns the same segment/postings dirs this promotion would swap
+    # owns the same segment/docmap dirs this promotion would swap
     ms = _read_manifest(index_dir, "merge_state.json") or {}
     if ms.get("inflight"):
         raise ValueError(
@@ -606,7 +602,6 @@ def promote_generation(
         )
 
     staged_seg = f"{index_dir}/segments_promoted"
-    staged_occ = f"{index_dir}/promote_staged_occ"
     staged_dm = f"{index_dir}/promote_staged_docmap"
 
     # a staged promotion's artifacts embed the base as it was at STAGE
@@ -617,7 +612,6 @@ def promote_generation(
     if inflight and inflight["status"] == "staged":
         if inflight.get("base_epoch") != _base_epoch(spark, index_dir):
             shutil.rmtree(staged_seg, ignore_errors=True)
-            shutil.rmtree(staged_occ, ignore_errors=True)
             shutil.rmtree(staged_dm, ignore_errors=True)
             inflight["status"] = "staging"
             _write_promote_state(index_dir, state)
@@ -754,33 +748,15 @@ def promote_generation(
             .parquet(staged_seg)
         )
 
-        # delta-side occurrence rows and docmap rows, rewritten into the
-        # base lid space (O(Σdelta)); base files are never read or copied
-        occ_u = dm_u = None
+        # delta-side docmap rows, rewritten into the base lid space
+        # (O(Σdelta)); base files are never read or copied
+        dm_u = None
         for d, offs_i in zip(delta_dirs, offs_list):
-            o = _apply_lid_offsets(
-                spark, spark.read.parquet(f"{d}/postings"), offs_i, "lid"
-            )
             m = _apply_lid_offsets(
                 spark, spark.read.parquet(f"{d}/docmap"), offs_i, "local_id"
             )
-            occ_u = o if occ_u is None else occ_u.unionByName(o)
             dm_u = m if dm_u is None else dm_u.unionByName(m)
-        (
-            occ_u.write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(staged_occ)
-        )
         dm_u.coalesce(1).write.mode("overwrite").parquet(staged_dm)
-        occ_files = {
-            str(b): sorted(
-                fn
-                for fn in os.listdir(f"{staged_occ}/bucket={b}")
-                if fn.endswith(".parquet")
-            )
-            for b in affected
-            if os.path.isdir(f"{staged_occ}/bucket={b}")
-        }
         dm_files = sorted(
             fn for fn in os.listdir(staged_dm) if fn.endswith(".parquet")
         )
@@ -793,7 +769,6 @@ def promote_generation(
                 "n_docs": n_new,
                 "avgdl": avgdl_new,
                 "sum_doclen": sum_dl,
-                "occ_files": occ_files,
                 "dm_files": dm_files,
             }
         )
@@ -804,7 +779,7 @@ def promote_generation(
     if inflight["status"] in ("staged", "committing"):
         if inflight["status"] == "staged":
             # Point of no return: the base mutates from here on (manifest
-            # removal, bucket swaps, docmap/occ renames, stats.json), and
+            # removal, bucket swaps, docmap renames, stats.json), and
             # any of those changes the base epoch. Journal 'committing'
             # FIRST so a crash inside the window resumes the commit below —
             # the epoch-mismatch restage above applies only to a PRE-commit
@@ -826,17 +801,9 @@ def promote_generation(
             )
             if i == 0:
                 _boom("mid_swap")
-        # hard-append the journaled occurrence/docmap files under
-        # deterministic names: a re-run after a crash skips what landed
+        # hard-append the journaled docmap files under deterministic
+        # names: a re-run after a crash skips what landed
         fp8 = fp.replace(":", "")[:8]
-        for b_str, files in inflight["occ_files"].items():
-            dstdir = f"{index_dir}/postings/bucket={int(b_str)}"
-            os.makedirs(dstdir, exist_ok=True)
-            for fn in files:
-                dst = os.path.join(dstdir, f"promote-{fp8}-{fn}")
-                src = f"{staged_occ}/bucket={int(b_str)}/{fn}"
-                if not os.path.exists(dst):
-                    os.rename(src, dst)
         for fn in inflight["dm_files"]:
             dst = os.path.join(f"{index_dir}/docmap", f"promote-{fp8}-{fn}")
             src = os.path.join(staged_dm, fn)
@@ -845,15 +812,8 @@ def promote_generation(
         # the r6-advice window: docmap renamed, stats/state not yet written
         _boom("committed_files")
         shutil.rmtree(staged_seg, ignore_errors=True)
-        shutil.rmtree(staged_occ, ignore_errors=True)
         shutil.rmtree(staged_dm, ignore_errors=True)
-        meta.update({"n_docs": inflight["n_docs"], "avgdl": inflight["avgdl"]})
-        _carry_sum_doclen(meta, inflight)
-        meta["occ_multifile_buckets"] = sorted(
-            set(meta.get("occ_multifile_buckets", [])) | set(affected)
-        )
-        with open(f"{index_dir}/stats.json", "w") as f:
-            json.dump(meta, f)
+        _commit_stats(index_dir, meta, inflight)
         inflight["status"] = "swapped"
         _write_promote_state(index_dir, state)
     _boom("swapped")

@@ -4,10 +4,10 @@ Layout on disk (all immutable once a manifest marks its unit complete):
 
     {index}/docmap/                      forward index / docvalues:
                                          (shard, local_id, docid, doclen)
-    {index}/postings/bucket=<b>/...      phase-1 occurrence rows (term,
-                                         lid, doclen, shard, pos), parquet
     {index}/segments/bucket=<b>/...      phase-2 encoded posting lists
-                                         (values are shard-local lids)
+                                         (values are shard-local lids):
+                                         the one durable copy of the
+                                         postings
     {index}/term_stats/                  (term, df, ctf, idf) parquet,
                                          one term-sorted file
     {index}/stats.json                   N, avgdl, layout params
@@ -15,8 +15,16 @@ Layout on disk (all immutable once a manifest marks its unit complete):
     {index}/manifests/bucket_<b>.json    per-partition lineage for phase 2
     {index}/manifests/finalize.json      term_stats written; n_postings
 
+Scratch, deleted once finalize.json commits:
+
+    {index}/postings/bucket=<b>/...      phase-1 occurrence rows (term,
+                                         lid, doclen, shard, pos), parquet
+    {index}/postings_merged/bucket=<b>/  merge_deltas' staged rows
+
 This module owns those formats, and build, promote, merge and compact
-write them only through it: ``write_occurrences`` (postings/),
+write them only through it: ``bucket_of`` / ``bucket_col`` (the term ->
+bucket map), ``write_occurrences`` (occurrence scratch),
+``segment_occurrences`` (segments/ rows -> occurrence rows),
 ``write_term_stats`` (term_stats/ and n_postings), ``enc_from_row`` /
 ``segment_row`` (a segments/ row <-> ``codec.EncodedList``) and
 ``_invalidate_buckets`` (what a rewriting commit drops before it moves data).
@@ -54,9 +62,11 @@ Design (north_rule / SURVEY.md §3.2 rebuild lifecycle):
   phase 2 proceeds bucket-chunk by bucket-chunk, writing one manifest per
   bucket (row counts + content checksum); a finalize step derives
   term_stats (df = Σn, ctf = Σctf) from segment metadata — no posting
-  scan. ``build_segments`` re-invoked after a crash verifies fingerprints
-  and encodes only buckets whose manifest is missing — segments are
-  byte-identical to an uninterrupted build (tested).
+  scan — and deletes the phase-1 scratch. ``build_segments`` re-invoked
+  after a crash verifies fingerprints and encodes only buckets whose
+  manifest is missing — segments are byte-identical to an uninterrupted
+  build (tested). After finalize a missing manifest re-derives its bucket
+  from the bucket's own segment rows (``segment_occurrences``).
 """
 
 from __future__ import annotations
@@ -75,11 +85,20 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from honeywell_search_engine_spark.index import codec
 from honeywell_search_engine_spark.index.docmap import assign_local_ids
-from honeywell_search_engine_spark.index.naive import bucket_col, bucket_of
 from honeywell_search_engine_spark.index.stats import CorpusStats, idf_col
 
 N_BUCKETS = 64
 N_SHARDS = 8
+
+
+def bucket_of(term: str, n_buckets: int = N_BUCKETS) -> int:
+    """Python-side bucket id; must agree with the JVM crc32 expression."""
+    return zlib.crc32(term.encode("utf-8")) % n_buckets
+
+
+def bucket_col(term_col, n_buckets: int = N_BUCKETS):
+    """``bucket_of`` as a Column: pmod(crc32(term), n_buckets)."""
+    return F.pmod(F.crc32(term_col.cast("string").cast("binary")), F.lit(n_buckets)).cast("int")
 
 SEGMENT_SCHEMA = (
     "term string, shard int, n long, ctf long, "
@@ -534,7 +553,9 @@ def write_occurrences(df: DataFrame, path: str) -> None:
     """Write occurrence rows (term, lid, doclen, shard, bucket, pos) in the
     layout the no-shuffle phase-2 encode relies on ("ONE shuffle" above):
     each (term, shard) group contiguous and sorted by (lid, pos) in
-    exactly one file of its bucket directory."""
+    exactly one file of its bucket directory. Occurrence rows are encode
+    scratch (a build's postings/, a merge's postings_merged/), never a
+    durable copy."""
     (
         df.repartition(F.col("term"), F.col("shard"))
         .sortWithinPartitions("bucket", "term", "shard", "lid", "pos")
@@ -542,6 +563,61 @@ def write_occurrences(df: DataFrame, path: str) -> None:
         .partitionBy("bucket")
         .parquet(path)
     )
+
+
+OCCURRENCE_SCHEMA = "term string, shard int, lid long, doclen int, pos int, bucket int"
+
+#: flush a decoded batch once it holds this many occurrences
+_DECODE_FLUSH = 1 << 20
+
+
+def decode_occurrences(batches):
+    """mapInArrow body: segment-row Arrow batches -> OCCURRENCE_SCHEMA
+    batches, one row per token occurrence. Each list's docids, tfs,
+    doclens (its own doclen stream) and flat positions are decoded, and a
+    posting's lid and doclen repeat tf times. Rows come out sorted by
+    (lid, pos) within each (term, shard): exactly the phase-1 rows the list
+    was encoded from, so re-encoding them reproduces its bytes. Runs
+    in-process over pyarrow batches as well."""
+    import pyarrow as pa
+
+    schema = pa.schema([("term", pa.string()), ("shard", pa.int32()), ("lid", pa.int64()),
+                        ("doclen", pa.int32()), ("pos", pa.int32()), ("bucket", pa.int32())])
+
+    def flush(batch, parts):
+        row, lid, doclen, pos = (np.concatenate(c) for c in zip(*parts))
+        row = pa.array(row)
+        return pa.RecordBatch.from_arrays(
+            [batch.column("term").take(row), batch.column("shard").take(row).cast(pa.int32()),
+             pa.array(lid), pa.array(doclen), pa.array(pos),
+             batch.column("bucket").take(row).cast(pa.int32())],
+            schema=schema,
+        )
+
+    for batch in batches:
+        parts, held = [], 0
+        for i, row in enumerate(batch.to_pylist()):
+            pl = codec.decode_postings(enc_from_row(row), with_positions=True, flat_positions=True)
+            if pl.positions is None:
+                raise ValueError(
+                    f"segment row ({row['term']!r}, shard {row['shard']}) has no positions"
+                )
+            tf = pl.tfs.astype(np.int64)
+            parts.append((np.full(pl.positions.size, i), np.repeat(pl.docids.astype(np.int64), tf),
+                          np.repeat(pl.doclens.astype(np.int32), tf), pl.positions.astype(np.int32)))
+            held += pl.positions.size
+            if held >= _DECODE_FLUSH:
+                yield flush(batch, parts)
+                parts, held = [], 0
+        if parts:
+            yield flush(batch, parts)
+
+
+def segment_occurrences(segments: DataFrame) -> DataFrame:
+    """The occurrence rows of segment rows (decode_occurrences in a
+    mapInArrow): how merge_deltas and a bucket repair re-derive postings
+    now that segments are their one durable copy."""
+    return segments.mapInArrow(decode_occurrences, schema=OCCURRENCE_SCHEMA)
 
 
 def write_term_stats(segments_df: DataFrame, n_docs: int, path: str) -> int:
@@ -719,49 +795,27 @@ def build_segments(
     encode_pending_buckets(spark, index_dir, fp, buckets_per_job, progress)
 
 
-def _normalize_occurrence_buckets(
-    spark: SparkSession, index_dir: str, meta: dict, buckets: list[int]
-) -> None:
-    """Rewrite each bucket's occurrence rows through write_occurrences,
-    restoring the one-file-per-group invariant promotion's file appends
-    relaxed, then clear its marker. Crash-safe: staged write +
-    rename-with-backup swap per bucket; a re-run simply re-normalizes
-    (idempotent)."""
-    from honeywell_search_engine_spark.index.maintenance import _swap_bucket_dir
-
-    for b in buckets:
-        src = f"{index_dir}/postings/bucket={b}"
-        staged = f"{index_dir}/postings_norm_bucket_{b}"
-        # repair a crash inside a PRIOR normalize's swap window: between
-        # _swap_bucket_dir's two renames the live dir is missing and the
-        # data sits in .bak — restore it before reading, or the scan below
-        # fails and the stray bucket=N.bak dir poisons partition inference
-        bak = src + ".bak"
-        if not os.path.isdir(src) and os.path.isdir(bak):
-            os.rename(bak, src)
-        write_occurrences(
-            spark.read.parquet(src).withColumn("bucket", F.lit(b)), staged
-        )
-        _swap_bucket_dir(src, f"{staged}/bucket={b}")
-        shutil.rmtree(staged, ignore_errors=True)
-        meta["occ_multifile_buckets"] = [
-            x for x in meta.get("occ_multifile_buckets", []) if x != b
-        ]
-        with open(f"{index_dir}/stats.json", "w") as f:
-            json.dump(meta, f)
-
-
 def encode_pending_buckets(
     spark: SparkSession,
     index_dir: str,
     fp: str,
     buckets_per_job: int = 16,
     progress: bool = False,
+    occ_path: str | None = None,
 ) -> None:
     """Phase 2: encode every bucket whose manifest is missing/incomplete
     (NO shuffle — groups are file-contiguous by construction), then
     finalize term_stats from segment metadata. Idempotent; also the merge
-    path after deltas invalidate buckets."""
+    path after deltas invalidate buckets.
+
+    The pending buckets are encoded from the occurrence rows at
+    `occ_path`: a build's phase-1 scratch ``postings/`` (the default) or
+    merge_deltas' staged ``postings_merged/``. A finalized index keeps no
+    occurrence rows, so when `occ_path` is absent the pending buckets are
+    re-derived from their own segment rows (``segment_occurrences``)
+    first. Once term_stats commits, the scratch is deleted: segments are
+    the one durable copy of the postings."""
+    occ_path = occ_path or f"{index_dir}/postings"
     with open(f"{index_dir}/stats.json") as f:
         meta = json.load(f)
     avgdl = meta["avgdl"]
@@ -773,15 +827,18 @@ def encode_pending_buckets(
         if (m := _read_manifest(index_dir, f"bucket_{b}.json")) is None
         or m.get("status") != "complete"
     ]
-    # promotion (index/promote.py) APPENDS delta occurrence files to its
-    # affected buckets; the no-shuffle encode below requires every
-    # (term, shard) group contiguous in ONE file. Normalize any marked
-    # bucket we are about to re-encode first (one pruned repartition+sort
-    # per bucket — only reachable after a crash mid-promotion or a manual
-    # manifest invalidation; the promote path itself never re-encodes).
-    multi = sorted(set(meta.get("occ_multifile_buckets", [])) & set(todo))
-    if multi:
-        _normalize_occurrence_buckets(spark, index_dir, meta, multi)
+    if todo and not os.path.isdir(occ_path):
+        # staged, then renamed into place: a crash never leaves a partial
+        # scratch under the name this check trusts
+        staging = f"{occ_path}.staging"
+        shutil.rmtree(staging, ignore_errors=True)
+        write_occurrences(
+            segment_occurrences(
+                spark.read.parquet(f"{index_dir}/segments").filter(F.col("bucket").isin(todo))
+            ),
+            staging,
+        )
+        os.rename(staging, occ_path)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     # a (term, shard) group must never be split across scan partitions.
     # Spark's actual split size is min(maxPartitionBytes, max(openCost,
@@ -804,7 +861,7 @@ def encode_pending_buckets(
             chunk = todo[i : i + buckets_per_job]
             t0 = time.time()
             rows = (
-                spark.read.parquet(f"{index_dir}/postings")
+                spark.read.parquet(occ_path)
                 .filter(F.col("bucket").isin(chunk))  # partition-pruned scan
                 .select("term", "shard", "lid", "doclen", "pos")
             )
@@ -845,18 +902,18 @@ def encode_pending_buckets(
 
     # ---- finalize: term_stats from segment metadata (no posting scan) ----
     fin = _read_manifest(index_dir, "finalize.json")
-    if not todo and fin and fin.get("status") == "complete":
-        return
-    n_postings = write_term_stats(
-        spark.read.parquet(f"{index_dir}/segments"),
-        meta["n_docs"],
-        f"{index_dir}/term_stats",
-    )
-    _write_manifest(
-        index_dir,
-        "finalize.json",
-        {"status": "complete", "input_fingerprint": fp, "n_postings": n_postings},
-    )
+    if todo or not fin or fin.get("status") != "complete":
+        n_postings = write_term_stats(
+            spark.read.parquet(f"{index_dir}/segments"),
+            meta["n_docs"],
+            f"{index_dir}/term_stats",
+        )
+        _write_manifest(
+            index_dir,
+            "finalize.json",
+            {"status": "complete", "input_fingerprint": fp, "n_postings": n_postings},
+        )
+    shutil.rmtree(occ_path, ignore_errors=True)
 
 
 def load_tombstones(index_dir: str) -> frozenset[int]:

@@ -1,4 +1,3 @@
-from honeywell_search_engine_spark.query.naive import bm25_topk_naive  # noqa: F401
 from honeywell_search_engine_spark.query.suggest import (  # noqa: F401
     build_spell_table,
     correct_terms,

@@ -58,8 +58,7 @@ from collections import OrderedDict
 
 import numpy as np
 
-from honeywell_search_engine_spark.index.naive import bucket_of
-from honeywell_search_engine_spark.index.segments import enc_from_row, load_tombstones
+from honeywell_search_engine_spark.index.segments import bucket_of, enc_from_row, load_tombstones
 from honeywell_search_engine_spark.query import respond
 from honeywell_search_engine_spark.query import wand as W
 

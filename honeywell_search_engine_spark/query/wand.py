@@ -41,7 +41,7 @@ cogroups its (shard, lid) rows with the segment rows instead
 Because ``shard = pmod(docid, n_shards)`` every document's postings live in
 exactly one shard, so conjunctive evaluation is shard-local and the global
 top-k is the k-merge of per-shard top-k's — exact, no recall loss (tested
-rank-identical to both the naive Catalyst engine and the oracle). One task
+rank- and bit-identical to the oracle). One task
 may evaluate several shards' groups; the result does not depend on it.
 
 Shard kernels (numpy, per shard). The conjunctive ones — AND (default,
@@ -839,18 +839,33 @@ def _shard_kernel_websearch_or(
     Postgres websearch 'or' keyword — AND binds tighter, so the query is
     an OR of groups). `groups` are (all_pos, neg, phrases, neg_phrases)
     from analyzer.parse_websearch_query; `by_term` maps this shard's terms
-    to EncodedLists. A doc matches iff ANY group holds; its score sums
+    to their lists. A doc matches iff ANY group holds; its score sums
     BM25 over ALL distinct positive terms of the whole query present in
     the doc (union-presence scoring, lexicographic order — the
-    `search_or` convention; oracle bit-parity). Group matching reuses
-    _websearch_match; the scoring pass probes each positive term
-    selectively at the matched union (candidate blocks only)."""
+    `search_or` convention; oracle bit-parity).
+
+    Every positive term's list is read once. Each group's rarest list
+    (its driver) is decoded whole; every other positive term is probed
+    ONCE, at the union of the drivers' docids — a superset of every
+    group's hits, since a hit holds its group's driver. The groups then
+    match (_websearch_match) over these decoded lists, and the union of
+    their hits is scored from the same lists."""
+    scored = {t for g in groups for t in g[0] if t in by_term}
+    # a required term absent in this shard: that group is empty here
+    groups = [g for g in groups if set(g[0]) <= scored]
+    if not groups:
+        return []
+    need_pos = frozenset(t for g in groups for ph in g[2] for t in ph)
+    lists = {}
+    for all_pos, *_ in groups:
+        d = min(all_pos, key=lambda t: by_term[t].n)
+        lists[d] = _full(by_term[d], with_positions=d in need_pos)
+    drive = np.unique(np.concatenate([pl.docids for pl in lists.values()]))
+    for t in sorted(scored - lists.keys()):
+        keep, tfs, dls, flat = _probe_any(by_term[t], drive, with_positions=t in need_pos)
+        lists[t] = codec.PostingList(drive[keep], tfs, dls, flat)
     union: np.ndarray | None = None
     for all_pos, neg, phrases, neg_phrases in groups:
-        if any(t not in by_term for t in all_pos):
-            continue  # a required term absent in this shard: group empty here
-        pos_rows = [(t, by_term[t]) for t in all_pos]
-        neg_rows = [(t, by_term[t]) for t in neg if t in by_term]
         npr = [
             [(t, by_term[t]) for t in ph]
             for ph in neg_phrases
@@ -858,19 +873,18 @@ def _shard_kernel_websearch_or(
             # a negated phrase with a term absent from this shard can
             # never occur adjacently -> excludes nothing
         ]
-        cand, _cols = _websearch_match(pos_rows, phrases, neg_rows, dead, npr)
+        cand, _cols = _websearch_match(
+            [(t, lists[t]) for t in all_pos], phrases,
+            [(t, by_term[t]) for t in neg if t in by_term], dead, npr,
+        )
         if cand.size:
             union = cand if union is None else np.union1d(union, cand)
     if union is None or union.size == 0:
         return []
     score = np.zeros(union.size, dtype=np.float64)
-    for t in sorted({t for g in groups for t in g[0]}):
-        enc = by_term.get(t)
-        if enc is None:
-            continue
-        keep, tfs, dls, _ = _probe_any(enc, union)
-        if keep.any():
-            score[keep] += idf[t] * _u_exact(tfs, dls, avgdl)
+    for t in sorted(lists):
+        keep, tfs, dls, _ = _probe_pl(lists[t], union)
+        score[keep] += idf[t] * _u_exact(tfs, dls, avgdl)
     return _select_topk_with_ties(union.astype(np.int64), score, k)
 
 

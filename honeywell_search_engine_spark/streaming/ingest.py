@@ -24,8 +24,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from honeywell_search_engine_spark.index.corpus import docs_from_pages, tokenized_docs
-from honeywell_search_engine_spark.index.naive import bucket_col
-from honeywell_search_engine_spark.index.segments import N_BUCKETS, N_SHARDS
+from honeywell_search_engine_spark.index.segments import N_BUCKETS, N_SHARDS, bucket_col
 from honeywell_search_engine_spark.sources.pages import PAGES_SCHEMA
 
 

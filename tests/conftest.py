@@ -58,19 +58,3 @@ def seg_index(spark, pages_path, tmp_path_factory):
     tok = tokenized_docs(docs_from_pages(pages))
     build_segments(tok, out, pages_path, n_buckets=16, n_shards=4, buckets_per_job=8)
     return SegmentIndex(spark, out)
-
-
-@pytest.fixture(scope="session")
-def naive_index(spark, pages_path, tmp_path_factory):
-    from honeywell_search_engine_spark.index.corpus import (
-        docs_from_pages,
-        tokenized_docs,
-    )
-    from honeywell_search_engine_spark.index.naive import NaiveIndex, build_naive_index
-    from honeywell_search_engine_spark.sources.pages import read_pages
-
-    out = str(tmp_path_factory.mktemp("index") / "naive")
-    pages = read_pages(spark, pages_path)
-    tok = tokenized_docs(docs_from_pages(pages), pre_cleaned=False)
-    build_naive_index(tok, out, n_buckets=16)
-    return NaiveIndex(spark, out)

@@ -3,8 +3,6 @@ must be visible in the plan, not assumed.
 
 - segment scans are partition-pruned by bucket and push the term filter;
 - pages scans prune columns (html not read unless extraction requested);
-- the naive BM25 plan ends in TakeOrderedAndProject (per-partition heaps),
-  never a global Sort;
 - the phase-2 encode plan contains NO Exchange (single-shuffle build).
 """
 
@@ -37,24 +35,40 @@ def test_pages_scan_prunes_html(spark, pages_path):
     assert "lang" in plan  # pushed filter on lang
 
 
-def test_naive_topk_uses_takeordered(naive_index):
-    from honeywell_search_engine_spark.query.naive import bm25_topk_naive
+def test_naive_topk_uses_takeordered(seg_index):
+    """The naive exhaustive query (k = corpus size) keeps the
+    TakeOrderedAndProject cut: a large k does not fall back to a global
+    Sort."""
+    import re
 
-    df = bm25_topk_naive(naive_index, "data search", k=10)
-    assert "TakeOrderedAndProject" in _plan(df)
+    from honeywell_search_engine_spark.query.wand import bm25_topk_wand
+
+    plan = _plan(bm25_topk_wand(seg_index, "data search", k=seg_index.stats.n_docs))
+    assert "TakeOrderedAndProject" in plan
+    assert not re.findall(r"Sort \[", plan), plan
 
 
-def test_phase2_encode_plan_has_no_exchange(spark, seg_index):
-    """The encode read path (postings scan -> mapInPandas) must not
-    shuffle: groups are file-contiguous by construction."""
-    from honeywell_search_engine_spark.index.segments import make_segment_encoder, SEGMENT_SCHEMA
-
-    rows = (
-        spark.read.parquet(f"{seg_index.path}/postings")
-        .filter(F.col("bucket").isin([0, 1]))
-        .select("term", "shard", "lid", "doclen")
+def test_phase2_encode_plan_has_no_exchange(spark, seg_index, tmp_path):
+    """The encode read path (occurrence scratch scan -> mapInArrow) must
+    not shuffle: groups are file-contiguous by construction. The scratch
+    here is re-derived from the index's segment rows, as a bucket repair
+    does (the build deletes its own at finalize)."""
+    from honeywell_search_engine_spark.index.segments import (
+        SEGMENT_SCHEMA,
+        make_segment_encoder,
+        segment_occurrences,
+        write_occurrences,
     )
-    enc = rows.mapInPandas(make_segment_encoder(100.0, 16), schema=SEGMENT_SCHEMA)
+
+    occ = str(tmp_path / "postings")
+    segs = spark.read.parquet(f"{seg_index.path}/segments")
+    write_occurrences(segment_occurrences(segs.filter(F.col("bucket").isin([0, 1]))), occ)
+    rows = (
+        spark.read.parquet(occ)
+        .filter(F.col("bucket").isin([0, 1]))
+        .select("term", "shard", "lid", "doclen", "pos")
+    )
+    enc = rows.mapInArrow(make_segment_encoder(100.0, 16), schema=SEGMENT_SCHEMA)
     assert "Exchange" not in _plan(enc)
 
 

@@ -2,8 +2,9 @@
 generation index into the base by block-granular byte concatenation must
 be query-for-query bit-identical to an index built from scratch over the
 union corpus — and must interoperate with every maintenance path
-(tombstones/compact, merge_deltas, encode_pending_buckets' normalization
-of the multi-file occurrence layout)."""
+(tombstones/compact, merge_deltas, encode_pending_buckets' re-derivation
+of a bucket from its segment rows). Segments are the one durable copy of
+the postings: no writer leaves occurrence rows behind."""
 
 import json
 import os
@@ -317,9 +318,9 @@ def test_promote_killpoints_converge(promote_fixture, spark, tmp_path, point):
 def test_postpromote_compact_sheds_promoted_and_base_docs(
     promote_fixture, spark, tmp_path
 ):
-    """delete_docs + compact over a promoted index: compact re-reads the
-    multi-file occurrence layout (layout-agnostic sort), folds tombstones
-    from BOTH generations, and clears the multi-file markers."""
+    """delete_docs + compact over a promoted index: compact decodes the
+    spliced segment rows, folds tombstones from BOTH generations, and
+    leaves no multi-file marker."""
     from honeywell_search_engine_spark.index.maintenance import (
         compact,
         delete_docs,
@@ -348,9 +349,9 @@ def test_postpromote_compact_sheds_promoted_and_base_docs(
 
 
 def test_postpromote_merge_deltas_exact(promote_fixture, spark, tmp_path):
-    """merge_deltas on a promoted index (its STAGE reads the multi-file
-    occurrence layout) stays exact vs a scratch build over all three
-    corpora, and clears the affected buckets' multi-file markers."""
+    """merge_deltas on a promoted index (its STAGE decodes the spliced
+    segment rows) stays exact vs a scratch build over all three
+    corpora."""
     from honeywell_search_engine_spark.index.maintenance import merge_deltas
     from honeywell_search_engine_spark.streaming.ingest import (
         stream_postings_delta,
@@ -378,13 +379,15 @@ def test_postpromote_merge_deltas_exact(promote_fixture, spark, tmp_path):
     assert _all_results(p) == _all_results(s)
 
 
-def test_encode_pending_normalizes_multifile_bucket(
+def test_encode_pending_rederives_bucket_from_segments(
     promote_fixture, spark, tmp_path
 ):
-    """Invalidate one promoted bucket's manifest and re-encode from
-    occurrence rows: encode_pending_buckets must normalize the multi-file
-    layout first (else the no-shuffle scan would emit duplicate
-    (term, shard) rows) and converge to the same query results."""
+    """Invalidate one promoted bucket's manifest on the finalized index
+    (which keeps no occurrence rows): encode_pending_buckets re-derives
+    the bucket from its own spliced segment rows, re-encodes it to one
+    row per (term, shard) group, leaves no scratch behind and converges
+    to the same query results."""
+    from honeywell_search_engine_spark.index.promote import _read_promote_state
     from honeywell_search_engine_spark.index.segments import (
         encode_pending_buckets,
         input_fingerprint,
@@ -393,22 +396,24 @@ def test_encode_pending_normalizes_multifile_bucket(
     _, _, _, scratch_idx, promoted_idx, _ = promote_fixture
     target = str(tmp_path / "idx_norm")
     shutil.copytree(promoted_idx, target)
-    with open(f"{target}/stats.json") as f:
-        marked = json.load(f)["occ_multifile_buckets"]
-    assert marked
-    b = marked[0]
+    assert not os.path.isdir(f"{target}/postings")
+    (promoted,) = _read_promote_state(target)["promoted"].values()
+    b = sorted(
+        int(e.split("=", 1)[1])
+        for e in os.listdir(f"{promoted['delta_index_dir']}/segments")
+        if e.startswith("bucket=")
+    )[0]
     os.remove(f"{target}/manifests/bucket_{b}.json")
     os.remove(f"{target}/manifests/finalize.json")
-    fp = input_fingerprint(spark, f"{target}/postings")
+    fp = input_fingerprint(spark, f"{target}/segments")
     encode_pending_buckets(spark, target, fp, buckets_per_job=N_BUCKETS)
-    with open(f"{target}/stats.json") as f:
-        assert b not in json.load(f).get("occ_multifile_buckets", [])
+    assert not os.path.isdir(f"{target}/postings")
     # one (term, shard) row per group in the re-encoded bucket
     import pyarrow.parquet as pq
 
     t = pq.read_table(f"{target}/segments/bucket={b}", columns=["term", "shard"])
     keys = list(zip(t.column("term").to_pylist(), t.column("shard").to_pylist()))
-    assert len(keys) == len(set(keys))
+    assert keys and len(keys) == len(set(keys))
     p, s = ServingIndex(target), ServingIndex(scratch_idx)
     assert _all_results(p) == _all_results(s)
 
@@ -416,8 +421,8 @@ def test_encode_pending_normalizes_multifile_bucket(
 def test_multi_generation_promote_chain(promote_fixture, spark, tmp_path):
     """Two generations promoted in sequence (the tiered-compaction cadence)
     — the second promotion lands on an already-promoted base whose lid
-    space has appended ranges and whose occurrence buckets are already
-    multi-file. Final index bit-identical to the scratch union, and
+    space has appended ranges and whose lists are already spliced. Final
+    index bit-identical to the scratch union, and
     GenerationSet over (base, gen1, gen2) agrees with it BEFORE either
     promotion."""
     from honeywell_search_engine_spark.index.promote import build_generation
@@ -659,32 +664,6 @@ def test_failed_overlap_validation_does_not_wedge(promote_fixture, spark, tmp_pa
     assert p.search("data search", k=10) == s.search("data search", k=10)
 
 
-def test_normalize_repairs_crashed_swap(promote_fixture, spark, tmp_path):
-    """encode_pending_buckets' normalization recovers a bucket stranded
-    mid-swap by a crashed prior normalization (live dir missing, data in
-    .bak) instead of failing on the missing path."""
-    from honeywell_search_engine_spark.index.segments import (
-        encode_pending_buckets,
-        input_fingerprint,
-    )
-
-    _, _, _, scratch_idx, promoted_idx, _ = promote_fixture
-    target = str(tmp_path / "idx_bak")
-    shutil.copytree(promoted_idx, target)
-    with open(f"{target}/stats.json") as f:
-        b = json.load(f)["occ_multifile_buckets"][0]
-    # simulate the crash window: live bucket dir renamed away to .bak
-    os.rename(f"{target}/postings/bucket={b}", f"{target}/postings/bucket={b}.bak")
-    os.remove(f"{target}/manifests/bucket_{b}.json")
-    os.remove(f"{target}/manifests/finalize.json")
-    fp = input_fingerprint(spark, f"{target}/postings")
-    encode_pending_buckets(spark, target, fp, buckets_per_job=N_BUCKETS)
-    assert os.path.isdir(f"{target}/postings/bucket={b}")
-    assert not os.path.isdir(f"{target}/postings/bucket={b}.bak")
-    p, s = ServingIndex(target), ServingIndex(scratch_idx)
-    assert _all_results(p) == _all_results(s)
-
-
 def test_one_pass_multi_generation_promote(promote_fixture, spark, tmp_path):
     """r6 verdict #6: promote_generation([g1, g2]) folds K generations in
     ONE base pass and must be bit-identical to the sequential chain —
@@ -801,3 +780,99 @@ def test_offsets_broadcast_join_above_threshold(
     assert _all_results(ServingIndex(target)) == _all_results(
         ServingIndex(scratch_idx)
     )
+
+
+_OCCURRENCE_DIRS = ("postings", "postings_merged", "promote_staged_occ")
+
+
+def _occurrence_dirs(idx: str) -> list[str]:
+    return sorted(d for d in _OCCURRENCE_DIRS if os.path.isdir(f"{idx}/{d}"))
+
+
+def _stream_extra_delta(spark, tmp_path) -> str:
+    """Streamed occurrence deltas of docs 400..430 (disjoint from the
+    fixture's corpus), for merge_deltas."""
+    from honeywell_search_engine_spark.streaming.ingest import stream_postings_delta
+
+    pages = str(tmp_path / "pages_extra")
+    _write_pages(spark, generate_pages_pdf(430), 400, 430, pages)
+    delta = str(tmp_path / "delta_stream")
+    stream_postings_delta(spark, pages, delta, n_buckets=N_BUCKETS, n_shards=N_SHARDS)
+    return delta
+
+
+def test_segments_are_the_only_durable_copy(promote_fixture, spark, tmp_path):
+    """build_segments, build_generation, promote_generation, merge_deltas
+    and compact leave no occurrence directory behind: segments are the one
+    durable copy of the postings."""
+    from honeywell_search_engine_spark.index.maintenance import (
+        compact,
+        delete_docs,
+        merge_deltas,
+    )
+    from honeywell_search_engine_spark.index.promote import build_generation
+
+    root, base_idx, delta_idx, _, promoted_idx, pdf = promote_fixture
+    for idx in (base_idx, delta_idx, promoted_idx):  # build, build, promote
+        assert _occurrence_dirs(idx) == [], idx
+    gen_pages = str(tmp_path / "pages_gen")
+    _write_pages(spark, generate_pages_pdf(430), 400, 430, gen_pages)
+    gen = str(tmp_path / "idx_gen")
+    build_generation(spark, gen_pages, gen, base_idx)
+    assert _occurrence_dirs(gen) == []
+
+    target = str(tmp_path / "idx_life")
+    shutil.copytree(promoted_idx, target)
+    assert merge_deltas(spark, target, _stream_extra_delta(spark, tmp_path))["docs_added"] > 10
+    assert _occurrence_dirs(target) == []
+    delete_docs(target, [d for d, _ in ServingIndex(target).search("data", k=4)])
+    assert compact(spark, target)["compacted"] == 4
+    assert _occurrence_dirs(target) == []
+
+
+@pytest.mark.parametrize("op", ["merge_deltas", "compact"])
+def test_parent_format_index_sheds_occurrence_table(promote_fixture, spark, tmp_path, op):
+    """An index written while the occurrence table was a second durable
+    copy carries postings/ and, once promoted into, the
+    `occ_multifile_buckets` marker in stats.json. It opens and answers
+    like the same index without them, and the next merge_deltas or
+    compact removes both and gives the same results as on that index."""
+    from honeywell_search_engine_spark.index.maintenance import (
+        compact,
+        delete_docs,
+        merge_deltas,
+    )
+    from honeywell_search_engine_spark.index.segments import (
+        segment_occurrences,
+        write_occurrences,
+    )
+
+    _, _, _, _, promoted_idx, _ = promote_fixture
+    clean, legacy = str(tmp_path / "idx_clean"), str(tmp_path / "idx_legacy")
+    for d in (clean, legacy):
+        shutil.copytree(promoted_idx, d)
+    write_occurrences(
+        segment_occurrences(spark.read.parquet(f"{legacy}/segments")), f"{legacy}/postings"
+    )
+    with open(f"{legacy}/stats.json") as f:
+        meta = json.load(f)
+    meta["occ_multifile_buckets"] = [0, 1]
+    with open(f"{legacy}/stats.json", "w") as f:
+        json.dump(meta, f)
+    assert _all_results(ServingIndex(legacy)) == _all_results(ServingIndex(clean))
+
+    if op == "merge_deltas":
+        delta = _stream_extra_delta(spark, tmp_path)
+        for d in (clean, legacy):
+            assert merge_deltas(spark, d, delta)["docs_added"] > 10
+    else:
+        victims = [d for d, _ in ServingIndex(clean).search("data", k=4)]
+        for d in (clean, legacy):
+            delete_docs(d, victims)
+            assert compact(spark, d)["compacted"] == len(victims)
+    assert _occurrence_dirs(legacy) == []
+    with open(f"{legacy}/stats.json") as f:
+        assert "occ_multifile_buckets" not in json.load(f)
+    p, c = ServingIndex(legacy), ServingIndex(clean)
+    assert p.n_docs == c.n_docs
+    assert _all_results(p) == _all_results(c)

@@ -35,15 +35,39 @@ def test_wand_bit_identical_to_oracle(seg_index, oracle, name):
     assert got == exp, name  # bit-exact scores AND identical ranks
 
 
-def test_wand_equals_naive(seg_index, naive_index):
-    """WAND pruning is lossless vs the exhaustive Catalyst engine."""
-    from honeywell_search_engine_spark.query.naive import bm25_topk_naive
+def test_corpus_stats_match(seg_index, oracle):
+    assert seg_index.stats.n_docs == oracle.n_docs
+    assert seg_index.stats.avgdl == pytest.approx(oracle.avgdl, rel=1e-12)
 
+
+def test_marker_query_exact_docset(seg_index, pages_pdf):
+    """Planted marker terms hit exactly the docs they were planted in."""
+    from honeywell_search_engine_spark.index.corpus import docid_py
+    from honeywell_search_engine_spark.sources.pages import marker_term
+
+    en = pages_pdf[pages_pdf.lang == "en"]
+    expected = {
+        docid_py(row.url)
+        for i, row in en.iterrows()
+        if marker_term(0) in row.text.lower()
+    }
+    got = {r["docid"] for r in bm25_topk_wand(seg_index, marker_term(0), k=10**4).collect()}
+    assert got == expected and got
+
+
+def test_wand_equals_naive(seg_index):
+    """WAND pruning is lossless vs the naive exhaustive run: the pruned
+    top-10 is the head of the full ranked list (k = corpus size, where the
+    threshold never rises and nothing is skipped)."""
+    n = seg_index.stats.n_docs
+    n_matches = []
     for name in ("q01", "q06", "q10", "q12", "q14"):
         q = QUERIES[name]
-        a = [(r["docid"], r["score"]) for r in bm25_topk_naive(naive_index, q, 10).collect()]
+        a = [(r["docid"], r["score"]) for r in bm25_topk_wand(seg_index, q, n).collect()]
         b = [(r["docid"], r["score"]) for r in bm25_topk_wand(seg_index, q, 10).collect()]
-        assert a == b, name
+        assert a[:10] == b, name
+        n_matches.append(len(a))
+    assert max(n_matches) > 10  # some pruned run had matches to skip
 
 
 def test_or_mode_superset(seg_index, oracle):
@@ -60,9 +84,20 @@ def test_or_mode_superset(seg_index, oracle):
     assert got_or == got_and
 
 
-def test_resume_rebuilds_identically(spark, pages_path, tmp_path_factory):
+def test_resume_rebuilds_identically(spark, pages_path, tmp_path_factory, monkeypatch):
+    from honeywell_search_engine_spark.index import segments as S
+
     out = str(tmp_path_factory.mktemp("resume") / "idx")
-    _build(spark, pages_path, out, n_buckets=8, n_shards=4, buckets_per_job=4)
+    # a crash before finalize: term_stats never commits, so the phase-1
+    # occurrence scratch a resume encodes from is still there
+    def crash(*a, **kw):
+        raise RuntimeError("crash before finalize")
+
+    monkeypatch.setattr(S, "write_term_stats", crash)
+    with pytest.raises(RuntimeError, match="before finalize"):
+        _build(spark, pages_path, out, n_buckets=8, n_shards=4, buckets_per_job=4)
+    monkeypatch.undo()
+    assert os.path.isdir(f"{out}/postings")
     before = {
         b: json.load(open(f"{out}/manifests/bucket_{b}.json")) for b in range(8)
     }
@@ -80,6 +115,7 @@ def test_resume_rebuilds_identically(spark, pages_path, tmp_path_factory):
         assert after["checksum"] == before[b]["checksum"], b
         assert after["rows"] == before[b]["rows"], b
         assert after["postings"] == before[b]["postings"], b
+    assert not os.path.isdir(f"{out}/postings")  # finalize drops the scratch
 
 
 def test_resume_refuses_changed_input(spark, pages_path, tmp_path_factory, tmp_path):
@@ -319,6 +355,72 @@ def test_repeated_phrase_term_probed_once(monkeypatch, rep, slop):
     got = W.eval_shard(plan, by_term, idf, oracle.avgdl, 10)
     assert probes == {"alpha": 1}
     exp = oracle.search_phrase(q, k=10, slop=slop)
+    assert len(exp) == 10
+    assert [(int(d), float(s)) for d, s in got][:10] == exp
+
+
+@pytest.mark.parametrize("rep", ["encoded", "memo", "decoded"])
+def test_websearch_or_probes_each_term_once(monkeypatch, rep):
+    """A multi-group websearch query reads each positive term's list once
+    per shard: each group's rarest list is decoded whole and every other
+    term is probed ONCE, for matching and scoring alike. In "alpha bravo
+    or charlie delta" the rare `alpha` and `charlie` drive, so `bravo`
+    and `delta` are probed once each (docs 0, 3, 6 ... match the second
+    group only, so `bravo` is still needed there to score them). One
+    in-process shard of 600 docs; the result equals
+    OracleIndex.search_websearch bit-exactly over EncodedLists, MemoLists
+    and decoded PostingLists."""
+    from collections import Counter
+
+    import numpy as np
+
+    from honeywell_search_engine_spark.index import codec
+    from honeywell_search_engine_spark.oracle import OracleIndex
+    from honeywell_search_engine_spark.query import wand as W
+
+    docs = []
+    for d in range(600):
+        words = ["bravo", "delta", "echo"][: 1 + d % 3] + ["echo"] * (d % 4)
+        if d % 7 == 0:
+            words.append("alpha")
+        if d % 3 == 0:
+            words += ["charlie", "delta", "bravo"][: 2 + d % 2]
+        docs.append((d, " ".join(words)))
+    oracle = OracleIndex.build(docs)
+    by_term = {}
+    for t, post in oracle.postings.items():
+        ds = sorted(post)
+        enc = codec.encode_postings(
+            np.array(ds, dtype=np.uint64),
+            np.array([post[d] for d in ds], dtype=np.uint64),
+            np.array([oracle.doclen[d] for d in ds], dtype=np.uint64),
+            oracle.avgdl,
+            positions=np.concatenate([oracle.positions[t][d] for d in ds]),
+        )
+        if rep != "encoded":
+            ml = codec.MemoList(
+                enc, codec.decode_postings(enc, with_positions=True, flat_positions=True)
+            )
+            enc = ml if rep == "memo" else ml.pl
+        by_term[t] = enc
+    assert by_term["alpha"].n < by_term["bravo"].n
+    assert by_term["charlie"].n < by_term["delta"].n
+    idf = {t: oracle.idf(t) for t in by_term}
+    q = "alpha bravo or charlie delta"
+    plan = W.plan_query(oracle, q, 10, syntax="web")  # reads .stemmed only
+    assert len(plan.groups) == 2
+
+    term_of = {id(x): t for t, x in by_term.items()}
+    probes = Counter()
+    real = W._probe_any
+    monkeypatch.setattr(
+        W, "_probe_any",
+        lambda x, cand, **kw: probes.update([term_of.get(id(x))]) or real(x, cand, **kw),
+    )
+    got = W.eval_shard(plan, by_term, idf, oracle.avgdl, 10)
+    probes.pop(None, None)  # lookups in the already-decoded lists
+    assert probes == {"bravo": 1, "delta": 1}
+    exp = oracle.search_websearch(q, k=10)
     assert len(exp) == 10
     assert [(int(d), float(s)) for d, s in got][:10] == exp
 

@@ -139,8 +139,11 @@ def _index_signature(spark, idx_dir):
     (term, global docid, tf, doclen)). Merged indexes append lids instead
     of re-ranking (index/docmap.py), so segment BYTES legitimately differ
     from a from-scratch build while the logical index — and therefore every
-    query result — is identical."""
+    query result — is identical. The content is the segments' own, decoded
+    to occurrence rows."""
     from pyspark.sql import functions as F
+
+    from honeywell_search_engine_spark.index.segments import segment_occurrences
 
     with open(f"{idx_dir}/stats.json") as f:
         meta = json.load(f)
@@ -148,7 +151,7 @@ def _index_signature(spark, idx_dir):
         "shard", F.col("local_id").alias("lid"), "docid"
     )
     tf = (
-        spark.read.parquet(f"{idx_dir}/postings")
+        segment_occurrences(spark.read.parquet(f"{idx_dir}/segments"))
         .join(dm, ["shard", "lid"])
         .groupBy("term", "docid")
         .agg(F.count("*").alias("tf"), F.first("doclen").alias("doclen"))
