@@ -356,7 +356,9 @@ def pfor_encode_runs(values: np.ndarray, r_starts: np.ndarray, r_ends: np.ndarra
 def pfor_decode(buf, n: int, block: int = BLOCK) -> np.ndarray:
     """Decode n values from consecutive PFor blocks (every block holds
     `block` values except a possibly-partial final one — exactly the shape
-    pfor_encode emits and decode_blocks' contiguous-run slices preserve)."""
+    pfor_encode emits), walking the blocks one by one with no offsets: the
+    reference pfor_decode_at is tested against, and the splice's one-block
+    seam decode (index/promote.py)."""
     if n == 0:
         return np.zeros(0, dtype=np.uint64)
     raw = np.frombuffer(buf, dtype=np.uint8)
@@ -390,29 +392,42 @@ def pfor_decode(buf, n: int, block: int = BLOCK) -> np.ndarray:
     return out
 
 
-def pfor_decode_at(buf, offs: np.ndarray, n: int) -> np.ndarray:
-    """Vectorized decode of n values from consecutive PFor blocks whose
-    byte offsets are KNOWN (offs[i] = start of block i — exactly the
-    d_off/t_off/l_off arrays the EncodedList stores). Inverse of the
-    mega-batched encoder: headers read in one gather, low bits of all
-    same-width blocks unpacked/repacked in uint8 C kernels, exceptions
-    patched with a Python loop over exception BLOCKS only (rare by
+def pfor_decode_at(buf, offs: np.ndarray, counts) -> np.ndarray:
+    """Vectorized decode of PFor blocks whose byte offsets are KNOWN
+    (offs[i] = start of block i in buf — the d_off/t_off/l_off arrays the
+    EncodedList stores). `counts` is either the per-block value count (an
+    int array, one per block: the blocks of MANY lists in one call, each
+    list's last block possibly partial — ``decode_many``) or one int n
+    (n values in full blocks, only the last one partial — one stream).
+    Block i's values land at out[c[i] : c[i] + counts[i]] with c the
+    exclusive cumsum of the counts, and its exceptions are patched at
+    those offsets. Inverse of the mega-batched encoder: headers read in
+    one gather, low bits of all same-width blocks unpacked/repacked in
+    uint8 C kernels, all exception blocks patched in one pass (rare by
     construction — the width minimizer prices them out).
 
-    Equivalent to pfor_decode(buf, n) (tested), ~O(blocks) Python cost
-    -> O(width classes)."""
+    Equivalent to pfor_decode(buf, n) (tested); the Python cost is
+    O(width classes), not O(blocks) or O(lists)."""
+    offs = np.asarray(offs, dtype=np.int64)
+    if np.ndim(counts) == 0:
+        nb = (int(counts) + BLOCK - 1) // BLOCK
+        offs = offs[:nb]
+        m = np.full(nb, BLOCK, dtype=np.int64)
+        if nb:
+            m[-1] = int(counts) - (nb - 1) * BLOCK
+    else:
+        m = np.asarray(counts, dtype=np.int64)
+    n = int(m.sum())
     if n == 0:
         return np.zeros(0, dtype=np.uint64)
-    offs = np.asarray(offs, dtype=np.int64)[: (n + BLOCK - 1) // BLOCK]
-    nb = offs.size
+    first = np.zeros(m.size, dtype=np.int64)  # output offset of each block
+    np.cumsum(m[:-1], out=first[1:])
     raw = np.frombuffer(buf, dtype=np.uint8)
     w = raw[offs].astype(np.int64)
     n_exc = raw[offs + 1].astype(np.int64)
     exc_len = raw[offs + 2].astype(np.int64) | (
         raw[offs + 3].astype(np.int64) << 8
     )
-    m = np.full(nb, BLOCK, dtype=np.int64)
-    m[-1] = n - (nb - 1) * BLOCK
     pb = (m * w + 7) // 8
     out = np.zeros(n, dtype=np.uint64)
     arange_blk = np.arange(BLOCK, dtype=np.int64)
@@ -450,9 +465,10 @@ def pfor_decode_at(buf, offs: np.ndarray, n: int) -> np.ndarray:
             .view(dt)
             .astype(np.uint64)
         )
-        idx = rows[:, None] * BLOCK + arange_blk[None, :]
-        sel = idx < n  # only the global last block is partial
-        out[idx[sel]] = vals[sel]
+        # a partial block's window runs past its packed bits: keep only
+        # its first counts[i] values
+        sel = arange_blk[None, :] < m[rows][:, None]
+        out[(first[rows][:, None] + arange_blk[None, :])[sel]] = vals[sel]
     exc_rows = np.flatnonzero(n_exc)
     if exc_rows.size:
         # one pass for ALL exception blocks: gather the position bytes and
@@ -472,7 +488,7 @@ def pfor_decode_at(buf, offs: np.ndarray, n: int) -> np.ndarray:
         )
         hbytes = raw[np.repeat(sec + k, hlen) + hwithin]
         high = varbyte_decode(hbytes.tobytes(), total)
-        out[np.repeat(exc_rows * BLOCK, k) + pos] |= high << np.repeat(
+        out[np.repeat(first[exc_rows], k) + pos] |= high << np.repeat(
             w[exc_rows], k
         ).astype(np.uint64)
     return out
@@ -490,13 +506,11 @@ FMT_FROM_TAG = {v: k for k, v in FMT_TAGS.items()}
 
 
 def _stream_decode(fmt: str, buf, n: int, offs=None) -> np.ndarray:
-    """offs (per-block byte offsets, relative to buf) unlocks the
-    vectorized pfor path; without it pfor falls back to the sequential
-    block walk. varbyte ignores offs (its decode is already one pass)."""
+    """n values of one stream run (decode_blocks' selective path): pfor
+    reads its blocks at `offs` (per-block byte offsets, relative to
+    buf); varbyte ignores offs (its decode is already one pass)."""
     if fmt == FMT_PFOR:
-        if offs is not None:
-            return pfor_decode_at(buf, offs, n)
-        return pfor_decode(buf, n)
+        return pfor_decode_at(buf, offs, n)
     return varbyte_decode(buf, n)
 
 
@@ -652,26 +666,118 @@ def _split_positions(flat: np.ndarray, tfs: np.ndarray) -> list:
     return np.split(_abs_positions(flat, tfs), starts[1:])
 
 
+def _ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Concatenation of arange(starts[i], starts[i] + lens[i]) over i."""
+    first = np.cumsum(lens) - lens
+    return np.repeat(starts - first, lens) + np.arange(int(lens.sum()), dtype=np.int64)
+
+
+# the three per-posting streams of an EncodedList: (bytes, block offsets)
+_STREAMS = (("deltas", "d_off"), ("tfs", "t_off"), ("doclens", "l_off"))
+
+
+def _decode_streams(encs: list, ns: np.ndarray, stream) -> np.ndarray:
+    """One stream of every list in `encs` (all of one codec), back to back:
+    the lists' bytes concatenated and decoded in ONE block decode. PFor
+    takes the lists' block offsets shifted by each list's byte base, and
+    per-block counts with each list's last block partial; varbyte is
+    self-delimiting, so the concatenated bytes decode as one stream."""
+    name, off_name = stream
+    bufs = [getattr(e, name) for e in encs]
+    buf = b"".join(bufs)
+    total = int(ns.sum())
+    if encs[0].fmt != FMT_PFOR:
+        return varbyte_decode(buf, total)
+    nbs = (ns + BLOCK - 1) // BLOCK
+    lens = np.fromiter((len(b) for b in bufs), dtype=np.int64, count=len(bufs))
+    offs = np.concatenate(
+        [np.asarray(getattr(e, off_name), dtype=np.int64)[:nb] for e, nb in zip(encs, nbs)]
+    ) + np.repeat(np.cumsum(lens) - lens, nbs)
+    counts = np.full(int(nbs.sum()), BLOCK, dtype=np.int64)
+    last = np.cumsum(nbs)[nbs > 0] - 1
+    counts[last] = ns[nbs > 0] - (nbs[nbs > 0] - 1) * BLOCK
+    return pfor_decode_at(buf, offs, counts)
+
+
+def decode_concat(encs: list, with_positions=False):
+    """The one full decode of posting lists: ``(pl, want)`` with pl's
+    docids, tfs and doclens holding every list of `encs` back to back
+    (list i at [s_i, s_i + n_i), s the exclusive cumsum of the n), and
+    pl.positions the FLAT absolute positions of the lists with want[i]
+    back to back (list i's tfs give its per-posting split), or None when
+    no list has them. `with_positions` is one flag or one per list; a
+    list built without positions is never in `want`.
+
+    The lists share one codec (an index has one). Each stream of the
+    lists decodes in one block decode (``_decode_streams``), the docids
+    in one segmented cumsum that restarts at each list, and the flagged
+    lists' positions in one varbyte decode — the per-call cost is paid
+    per query or batch, not per list."""
+    ns = np.fromiter((e.n for e in encs), dtype=np.int64, count=len(encs))
+    starts = np.cumsum(ns) - ns
+    if len({e.fmt for e in encs}) > 1:
+        raise ValueError("decode_concat takes lists of one codec (one index)")
+    deltas, tfs, doclens = (_decode_streams(encs, ns, st) for st in _STREAMS)
+    # docids: one cumsum, minus the running total before each list start
+    csum = np.cumsum(deltas, dtype=np.uint64)
+    base = np.zeros(len(encs), dtype=np.uint64)
+    head = starts > 0
+    base[head] = csum[starts[head] - 1]
+    docids = csum - np.repeat(base, ns)
+    tfs += np.uint64(1)
+    flags = (
+        [bool(with_positions)] * len(encs)
+        if np.ndim(with_positions) == 0 else [bool(f) for f in with_positions]
+    )
+    want = np.array([f and e.p_off is not None for f, e in zip(flags, encs)], dtype=bool)
+    positions = None
+    if want.any():
+        sel = np.flatnonzero(want)
+        tfs_p = tfs if want.all() else tfs[_ranges(starts[sel], ns[sel])]
+        buf = b"".join(encs[i].positions for i in sel)
+        positions = _abs_positions(varbyte_decode(buf, int(tfs_p.sum())), tfs_p)
+    return PostingList(docids, tfs, doclens, positions), want
+
+
+def decode_many(encs, with_positions=False) -> list[PostingList]:
+    """Full decode of many EncodedLists in one pass (``decode_concat``):
+    one PostingList per list, positions flat and absolute (None for a
+    list not flagged in `with_positions` or built without positions).
+    The arrays of a multi-list call are copies, not views of the batch,
+    so a cached list never pins the arrays of the lists decoded with it."""
+    encs = list(encs)
+    if not encs:
+        return []
+    pl, want = decode_concat(encs, with_positions)
+    if len(encs) == 1:
+        return [pl]
+    out, s, p = [], 0, 0
+    for enc, w in zip(encs, want):
+        e = s + enc.n
+        positions = None
+        if w:  # the flagged lists' positions lie back to back
+            q = p + int(pl.tfs[s:e].sum())
+            positions, p = pl.positions[p:q].copy(), q
+        out.append(PostingList(pl.docids[s:e].copy(), pl.tfs[s:e].copy(),
+                               pl.doclens[s:e].copy(), positions))
+        s = e
+    return out
+
+
 def decode_postings(
     enc: EncodedList, with_positions: bool = False, flat_positions: bool = False
 ) -> PostingList:
-    """`flat_positions=True` returns positions as ONE flat absolute-position
-    array (per-posting boundaries are the tfs) — the kernel-friendly shape
-    with no per-posting list materialization."""
+    """Full decode of one list: ``decode_many([enc])`` (a MemoList
+    returns its cached decode). `flat_positions=True` returns positions
+    as ONE flat absolute-position array (per-posting boundaries are the
+    tfs) — the kernel-friendly shape with no per-posting list
+    materialization; False splits them per posting."""
     if isinstance(enc, MemoList):
         return _memo_slice_all(enc, with_positions, flat_positions)
-    deltas = _stream_decode(enc.fmt, enc.deltas, enc.n, enc.d_off)
-    docids = np.cumsum(deltas, dtype=np.uint64)
-    tfs = _stream_decode(enc.fmt, enc.tfs, enc.n, enc.t_off) + np.uint64(1)
-    doclens = _stream_decode(enc.fmt, enc.doclens, enc.n, enc.l_off)
-    positions = None
-    if with_positions and enc.p_off is not None:
-        flat = varbyte_decode(enc.positions, int(tfs.sum()))
-        positions = (
-            _abs_positions(flat, tfs) if flat_positions
-            else _split_positions(flat, tfs)
-        )
-    return PostingList(docids=docids, tfs=tfs, doclens=doclens, positions=positions)
+    pl = decode_many([enc], with_positions)[0]
+    if pl.positions is not None and not flat_positions:
+        pl.positions = np.split(pl.positions, np.cumsum(pl.tfs.astype(np.int64))[:-1])
+    return pl
 
 
 def _block_bounds(enc: EncodedList, b: int):

@@ -36,6 +36,7 @@ from honeywell_search_engine_spark.index.segments import (
     _write_manifest,
     bucket_checksums,
     bucket_col,
+    decode_chunks,
     enc_from_row,
     encode_pending_buckets,
     input_fingerprint,
@@ -59,9 +60,10 @@ def delete_docs(index_dir: str, docids: list[int], reason: str = "") -> str:
 
 
 def _rewrite_kernel(dead_bc, avgdl: float):
-    """mapInArrow body: decode each segment row, drop the postings of
-    tombstoned lids (their positions masked by ``np.repeat(keep, tfs)``)
-    and re-encode. dead_bc: Spark broadcast of {shard: sorted int64
+    """mapInArrow body: decode the segment rows (every ``decode_chunks``
+    range in one ``codec.decode_many``), drop the postings of tombstoned
+    lids (their positions masked by ``np.repeat(keep, tfs)``) and
+    re-encode. dead_bc: Spark broadcast of {shard: sorted int64
     tombstoned-lid array} — one copy per executor, not a per-task closure
     set."""
     _EMPTY = np.zeros(0, dtype=np.int64)
@@ -72,22 +74,23 @@ def _rewrite_kernel(dead_bc, avgdl: float):
         dead_map = dead_bc.value
         for batch in batches:
             out = []
-            for row in batch.to_pylist():
-                enc = enc_from_row(row)
-                pl = codec.decode_postings(enc, with_positions=True, flat_positions=True)
-                keep = ~np.isin(pl.docids.astype(np.int64), dead_map.get(row["shard"], _EMPTY))
-                if not keep.any():
-                    continue
-                pos = None
-                if pl.positions is not None:
-                    pos = pl.positions[np.repeat(keep, pl.tfs.astype(np.int64))]
-                out.append(
-                    _encode_group(
-                        row["term"], row["shard"], row["bucket"],
-                        pl.docids[keep], pl.tfs[keep], pl.doclens[keep], avgdl,
-                        positions=pos, fmt=enc.fmt,
+            rows = batch.to_pylist()
+            for lo, hi in decode_chunks(rows):
+                encs = [enc_from_row(r) for r in rows[lo:hi]]
+                for row, enc, pl in zip(rows[lo:hi], encs, codec.decode_many(encs, True)):
+                    keep = ~np.isin(pl.docids.astype(np.int64), dead_map.get(row["shard"], _EMPTY))
+                    if not keep.any():
+                        continue
+                    pos = None
+                    if pl.positions is not None:
+                        pos = pl.positions[np.repeat(keep, pl.tfs.astype(np.int64))]
+                    out.append(
+                        _encode_group(
+                            row["term"], row["shard"], row["bucket"],
+                            pl.docids[keep], pl.tfs[keep], pl.doclens[keep], avgdl,
+                            positions=pos, fmt=enc.fmt,
+                        )
                     )
-                )
             if out:
                 yield pa.RecordBatch.from_pylist(out, schema=PA_SEGMENT_SCHEMA)
 

@@ -567,50 +567,60 @@ def write_occurrences(df: DataFrame, path: str) -> None:
 
 OCCURRENCE_SCHEMA = "term string, shard int, lid long, doclen int, pos int, bucket int"
 
-#: flush a decoded batch once it holds this many occurrences
+#: bound on the occurrences one batched decode of segment rows holds
 _DECODE_FLUSH = 1 << 20
+
+
+def decode_chunks(rows: list[dict]):
+    """Yield (lo, hi) row ranges of `rows` (segment row dicts) whose
+    occurrences (Σ ctf) stay within _DECODE_FLUSH — a row larger than
+    that is a range of its own. Each range is one ``codec.decode_many``
+    / ``decode_concat`` call: the full-decode loops pay the per-call
+    cost per chunk, not per row, and memory stays bounded."""
+    lo, held = 0, 0
+    for i, r in enumerate(rows):
+        c = int(r["ctf"])
+        if held and held + c > _DECODE_FLUSH:
+            yield lo, i
+            lo, held = i, 0
+        held += c
+    if lo < len(rows):
+        yield lo, len(rows)
 
 
 def decode_occurrences(batches):
     """mapInArrow body: segment-row Arrow batches -> OCCURRENCE_SCHEMA
-    batches, one row per token occurrence. Each list's docids, tfs,
-    doclens (its own doclen stream) and flat positions are decoded, and a
-    posting's lid and doclen repeat tf times. Rows come out sorted by
-    (lid, pos) within each (term, shard): exactly the phase-1 rows the list
-    was encoded from, so re-encoding them reproduces its bytes. Runs
-    in-process over pyarrow batches as well."""
+    batches, one row per token occurrence. Every chunk of rows
+    (``decode_chunks``) decodes in one ``codec.decode_concat``: docids,
+    tfs, doclens (each list's own doclen stream) and flat positions, back
+    to back; a posting's lid and doclen repeat tf times and a list's term,
+    shard and bucket repeat over its occurrences (numpy ``repeat``, no
+    per-row loop). Rows come out sorted by (lid, pos) within each (term,
+    shard): exactly the phase-1 rows the list was encoded from, so
+    re-encoding them reproduces its bytes. Runs in-process over pyarrow
+    batches as well."""
     import pyarrow as pa
 
     schema = pa.schema([("term", pa.string()), ("shard", pa.int32()), ("lid", pa.int64()),
                         ("doclen", pa.int32()), ("pos", pa.int32()), ("bucket", pa.int32())])
-
-    def flush(batch, parts):
-        row, lid, doclen, pos = (np.concatenate(c) for c in zip(*parts))
-        row = pa.array(row)
-        return pa.RecordBatch.from_arrays(
-            [batch.column("term").take(row), batch.column("shard").take(row).cast(pa.int32()),
-             pa.array(lid), pa.array(doclen), pa.array(pos),
-             batch.column("bucket").take(row).cast(pa.int32())],
-            schema=schema,
-        )
-
     for batch in batches:
-        parts, held = [], 0
-        for i, row in enumerate(batch.to_pylist()):
-            pl = codec.decode_postings(enc_from_row(row), with_positions=True, flat_positions=True)
-            if pl.positions is None:
-                raise ValueError(
-                    f"segment row ({row['term']!r}, shard {row['shard']}) has no positions"
-                )
+        rows = batch.to_pylist()
+        for lo, hi in decode_chunks(rows):
+            pl, want = codec.decode_concat([enc_from_row(r) for r in rows[lo:hi]], True)
+            if not want.all():
+                r = rows[lo + int(np.argmin(want))]
+                raise ValueError(f"segment row ({r['term']!r}, shard {r['shard']}) has no positions")
             tf = pl.tfs.astype(np.int64)
-            parts.append((np.full(pl.positions.size, i), np.repeat(pl.docids.astype(np.int64), tf),
-                          np.repeat(pl.doclens.astype(np.int32), tf), pl.positions.astype(np.int32)))
-            held += pl.positions.size
-            if held >= _DECODE_FLUSH:
-                yield flush(batch, parts)
-                parts, held = [], 0
-        if parts:
-            yield flush(batch, parts)
+            ns = np.fromiter((r["n"] for r in rows[lo:hi]), dtype=np.int64, count=hi - lo)
+            row = pa.array(np.repeat(np.repeat(np.arange(lo, hi), ns), tf))
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("term").take(row), batch.column("shard").take(row).cast(pa.int32()),
+                 pa.array(np.repeat(pl.docids.astype(np.int64), tf)),
+                 pa.array(np.repeat(pl.doclens.astype(np.int32), tf)),
+                 pa.array(pl.positions.astype(np.int32)),
+                 batch.column("bucket").take(row).cast(pa.int32())],
+                schema=schema,
+            )
 
 
 def segment_occurrences(segments: DataFrame) -> DataFrame:
@@ -839,7 +849,6 @@ def encode_pending_buckets(
             staging,
         )
         os.rename(staging, occ_path)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     # a (term, shard) group must never be split across scan partitions.
     # Spark's actual split size is min(maxPartitionBytes, max(openCost,
     # bytes/parallelism)) — a huge maxPartitionBytes alone does NOT forbid
@@ -849,6 +858,8 @@ def encode_pending_buckets(
     prev_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
     prev_oc = spark.conf.get("spark.sql.files.openCostInBytes")
     prev_arb = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    prev_pom = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(512 * 1024**3))
     spark.conf.set("spark.sql.files.openCostInBytes", str(512 * 1024**3))
     # 100k-row Arrow batches for the encoder: per-batch fixed work
@@ -899,6 +910,7 @@ def encode_pending_buckets(
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
         spark.conf.set("spark.sql.files.openCostInBytes", prev_oc)
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev_arb)
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_pom)
 
     # ---- finalize: term_stats from segment metadata (no posting scan) ----
     fin = _read_manifest(index_dir, "finalize.json")

@@ -39,10 +39,12 @@ differs:
   (mmap/KV-backed), exactly like Lucene docvalues — the per-shard array
   layout here is that design at sandbox scale.
 - decode: each (term, shard) list is decoded once into a byte-budgeted
-  LRU (``_memo``). Per shard, ``_search`` hands the evaluator the
-  decoded PostingLists (full-scan kernels) when every list the plan
-  touches there is at most FULLSCAN_MAX_POSTINGS long, else the
-  MemoLists (block-max-pruned kernels, block decode = a slice).
+  LRU (``_memo``). A query's lists that miss it — every shard, every
+  term — decode together in ONE ``codec.decode_many`` call: one block
+  decode per stream, not three per list. Per shard, ``_search`` hands
+  the evaluator the decoded PostingLists (full-scan kernels) when every
+  list the plan touches there is at most FULLSCAN_MAX_POSTINGS long,
+  else the MemoLists (block-max-pruned kernels, block decode = a slice).
 
 Tombstones are read from the same manifest files as the Spark path and
 translated per shard with vectorized searchsorted. An instance is a
@@ -58,6 +60,7 @@ from collections import OrderedDict
 
 import numpy as np
 
+from honeywell_search_engine_spark.index import codec
 from honeywell_search_engine_spark.index.segments import bucket_of, enc_from_row, load_tombstones
 from honeywell_search_engine_spark.query import respond
 from honeywell_search_engine_spark.query import wand as W
@@ -237,6 +240,9 @@ class ServingIndex(QuerySurface):
             self._by_docid[int(s)] = (ds[o], ls[o])
         # tombstones -> {shard: sorted lid array}
         self._dead = self._lids_by_shard(load_tombstones(path))
+        # the segments dataset handle: opened on the first term-row miss,
+        # then reused by every later miss (no per-miss file discovery)
+        self._segments = None
         # term -> (df, [segment row dict per owned shard])
         self._term_lru: OrderedDict[str, tuple[int, list[dict]]] = OrderedDict()
         self._term_cap = term_cache_capacity
@@ -258,16 +264,20 @@ class ServingIndex(QuerySurface):
         docmap, and tombstones, and drops every cache (term-row and df
         LRU, decoded-postings LRU, hot-document LRU) — no process
         restart; an attached docs store is re-attached with its
-        columns and its document-cache cap. Posting rows are read
-        lazily per query, so between the
-        on-disk swap and this call an UNCACHED term would pair new
-        postings with old stats: for strict consistency either promote
-        into a versioned directory and open a fresh node on it, or drain
-        the node around the maintenance window; reload() is the
-        refresh-in-place hook for deployments that accept that brief
-        window. A GenerationSet member should not be reloaded directly
-        (the injected global stats/shadows would be lost) — re-open the
-        GenerationSet instead."""
+        columns and its document-cache cap, and the segments dataset
+        handle is re-opened. Posting rows are read lazily per query
+        through that handle, which lists the segment files once, on the
+        node's first term miss. A node that is not reloaded after an
+        on-disk swap keeps serving its cached terms from the old view;
+        an UNCACHED term is read from the files its handle listed: a
+        file the maintenance replaced fails the read (FileNotFoundError)
+        instead of pairing new postings with old stats, and a file it
+        added is not seen. For strict consistency either promote into a
+        versioned directory and open a fresh node on it, or drain the
+        node around the maintenance window; reload() is the
+        refresh-in-place hook. A GenerationSet member should not be
+        reloaded directly (the injected global stats/shadows would be
+        lost) — re-open the GenerationSet instead."""
         self.__init__(
             self.path,
             term_cache_capacity=self._term_cap,
@@ -322,9 +332,11 @@ class ServingIndex(QuerySurface):
         if missing:
             import pyarrow.dataset as ds
 
-            data = ds.dataset(
-                f"{self.path}/segments", format="parquet", partitioning="hive"
-            )
+            if self._segments is None:
+                self._segments = ds.dataset(
+                    f"{self.path}/segments", format="parquet", partitioning="hive"
+                )
+            data = self._segments
             buckets = sorted({bucket_of(t, self.n_buckets) for t in missing})
             flt = ds.field("bucket").isin(buckets) & ds.field("term").isin(missing)
             if self._shards is not None:
@@ -358,13 +370,14 @@ class ServingIndex(QuerySurface):
               rows_by_term: dict[str, list[dict]]) -> list[tuple[int, float]]:
         """The top-k of `plan` over `rows_by_term` (``_rows_for``), with
         idf from `df` — this node's own, or a GenerationSet's logical df.
-        Per shard the lists come from the decoded LRU — PostingLists when
-        every list the plan touches there is <= FULLSCAN_MAX_POSTINGS
-        (full-scan kernels: lowest constant cost, measured ~3x faster
-        than block walking at that size), else MemoLists (exact
-        block-max pruning, essential for Zipf head terms at scale; block
-        decode is a slice of the cached decode) — then wand.eval_shard,
-        the lid->docid mapping and the top_k cut."""
+        The lists of every shard come from ``_memo`` in one call (the
+        misses decode in one batch). Per shard the evaluator gets
+        PostingLists when every list the plan touches there is <=
+        FULLSCAN_MAX_POSTINGS (full-scan kernels: lowest constant cost,
+        measured ~3x faster than block walking at that size), else
+        MemoLists (exact block-max pruning, essential for Zipf head terms
+        at scale; block decode is a slice of the cached decode) — then
+        wand.eval_shard, the lid->docid mapping and the top_k cut."""
         if any(not rows_by_term[t] for t in plan.required):
             return []  # a required term has no rows here -> no hit
         idf = {
@@ -376,15 +389,14 @@ class ServingIndex(QuerySurface):
         for t, rows in rows_by_term.items():
             for row in rows:
                 by_shard.setdefault(int(row["shard"]), {})[t] = row
+        by_shard = {s: tmap for s, tmap in by_shard.items()
+                    if all(t in tmap for t in plan.required)}
+        lists = self._memo([(t, s, r, t in plan.need_pos)
+                            for s, tmap in by_shard.items() for t, r in tmap.items()])
         parts = []
         for s, tmap in by_shard.items():
-            if any(t not in tmap for t in plan.required):
-                continue
             full_scan = max(int(r["n"]) for r in tmap.values()) <= FULLSCAN_MAX_POSTINGS
-            by_term = {}
-            for t, r in tmap.items():
-                ml = self._memo(t, s, r, positions=t in plan.need_pos)
-                by_term[t] = ml.pl if full_scan else ml
+            by_term = {t: lists[t, s].pl if full_scan else lists[t, s] for t in tmap}
             res = W.eval_shard(
                 plan, by_term, idf, self.avgdl, k, self._dead.get(s, W._NO_DEAD),
                 scope.get(s, W._NO_DEAD) if scope is not None else None,
@@ -393,48 +405,48 @@ class ServingIndex(QuerySurface):
             parts.append([(int(arr[int(l)]), float(v)) for l, v in res])
         return top_k(parts, k)
 
-    def _memo(self, term: str, shard: int, row: dict,
-              positions: bool = False):
-        """MemoList (encoded row + its full decode, codec.MemoList) for
-        one (term, shard), LRU-memoized — the hot-term working set of a
-        serving node, same idea as the encoded-row LRU one level up.
-        Kernels run on it unchanged (block decode = slice) so warm
-        queries keep block-max pruning but skip codec work. Positions
-        (flat absolute) decode only when a positional query first asks
-        (`positions=True`); an entry cached without them is upgraded in
-        place, so AND/OR traffic never pays for position decode and a
-        later phrase query on the same term still hits the LRU."""
-        from honeywell_search_engine_spark.index import codec
-
-        key = (term, shard)
-        ml = self._dec_lru.get(key)
-        if ml is None or (positions and ml.pl.positions is None):
-            if ml is not None:  # positions upgrade replaces the entry
-                del self._dec_lru[key]
-                self._dec_bytes -= ml.nbytes
-            enc = enc_from_row(row)
-            ml = codec.MemoList(
-                enc,
-                codec.decode_postings(
-                    enc, with_positions=positions, flat_positions=True
-                ),
-            )
+    def _memo(self, wanted) -> dict:
+        """{(term, shard): MemoList} for `wanted` [(term, shard, row,
+        positions)]: the encoded row + its full decode (codec.MemoList),
+        LRU-memoized — the hot-term working set of a serving node, same
+        idea as the encoded-row LRU one level up. Kernels run on it
+        unchanged (block decode = slice), so warm queries keep block-max
+        pruning but skip codec work. Every miss decodes in ONE
+        ``codec.decode_many`` call (one block decode per stream) and is
+        inserted into the LRU. Positions (flat absolute) decode only when
+        a positional query first asks (`positions=True`); an entry cached
+        without them is upgraded in place, so AND/OR traffic never pays
+        for position decode and a later phrase query on the same term
+        still hits the LRU."""
+        out, miss = {}, []
+        for term, shard, row, positions in wanted:
+            key = (term, shard)
+            ml = self._dec_lru.get(key)
+            if ml is None or (positions and ml.pl.positions is None):
+                miss.append((key, enc_from_row(row), positions))
+            else:
+                self._dec_lru.move_to_end(key)
+                out[key] = ml
+        decoded = codec.decode_many([enc for _, enc, _ in miss], [p for *_, p in miss])
+        for (key, enc, _), pl in zip(miss, decoded):
+            out[key] = ml = codec.MemoList(enc, pl)
+            old = self._dec_lru.pop(key, None)
+            if old is not None:  # positions upgrade replaces the entry
+                self._dec_bytes -= old.nbytes
             if ml.nbytes > self._dec_budget:
                 # An entry that alone exceeds the budget (a Zipf head
                 # term at scale: 10^7+ postings/shard decodes past the
                 # 256 MiB default) must NOT enter the LRU — inserting
                 # it first would flush every other warm entry before
-                # being discarded itself. Serve it uncached.
-                return ml
+                # being discarded itself. This query serves it from
+                # the batch.
+                continue
             self._dec_lru[key] = ml
-            self._dec_lru.move_to_end(key)
             self._dec_bytes += ml.nbytes
             while self._dec_bytes > self._dec_budget:
                 k_old, old = self._dec_lru.popitem(last=False)
                 self._dec_bytes -= old.nbytes
-        else:
-            self._dec_lru.move_to_end(key)
-        return ml
+        return out
 
     # ---- suggest / spell (serving-side mirrors of query/suggest.py) ------
 

@@ -978,21 +978,15 @@ def _batch_tail(per_shard: DataFrame, k: int) -> DataFrame:
 def _memo_by_term(rows: list, use_count: dict, need_pos=frozenset()) -> dict:
     """{term: EncodedList} of one shard's segment rows (dicts): terms
     shared by several queries of a batch (the Zipf head of a query log)
-    decode ONCE per task as a MemoList — every query after the first runs
-    decode-free with block-max pruning intact; single-query terms stay
-    encoded (selective decode only). Positions decode only for terms in
-    `need_pos`."""
-    by_term = {}
-    for r in rows:
-        t, enc = r["term"], enc_from_row(r)
-        if use_count.get(t, 0) > 1:
-            enc = codec.MemoList(
-                enc,
-                codec.decode_postings(
-                    enc, with_positions=t in need_pos, flat_positions=True
-                ),
-            )
-        by_term[t] = enc
+    decode ONCE per task as MemoLists, all in one ``codec.decode_many``
+    call — every query after the first runs decode-free with block-max
+    pruning intact; single-query terms stay encoded (selective decode
+    only). Positions decode only for terms in `need_pos`."""
+    by_term = {r["term"]: enc_from_row(r) for r in rows}
+    shared = [t for t in by_term if use_count.get(t, 0) > 1]
+    decoded = codec.decode_many([by_term[t] for t in shared], [t in need_pos for t in shared])
+    for t, pl in zip(shared, decoded):
+        by_term[t] = codec.MemoList(by_term[t], pl)
     return by_term
 
 

@@ -8,6 +8,7 @@ from honeywell_search_engine_spark.index.codec import (
     BLOCK,
     bm25_u,
     decode_blocks,
+    decode_many,
     decode_postings,
     encode_postings,
     varbyte_decode,
@@ -253,3 +254,91 @@ def test_memolist_slices_equal_codec_decode(fmt, seed):
     ml2 = MemoList(enc, decode_postings(enc))
     with pytest.raises(ValueError):
         decode_postings(ml2, with_positions=True, flat_positions=True)
+
+
+def _decode_many_lists(fmt, with_pos, sizes, seed=11):
+    """Encoded lists of the given sizes, with their source arrays. Every
+    third list has a 2^45 docid gap (a PFor exception in its delta
+    stream) and a 2^40 doclen (one in its doclen stream)."""
+    rng = np.random.default_rng(seed)
+    out = []
+    for i, n in enumerate(sizes):
+        docids = np.sort(rng.choice(10**6, size=n, replace=False)).astype(np.uint64)
+        tfs = rng.integers(1, 6, size=n).astype(np.uint64)
+        dls = rng.integers(8, 4000, size=n).astype(np.uint64)
+        if i % 3 == 0:
+            docids[n // 2:] += np.uint64(2**45)
+            dls[-1] = np.uint64(2**40)
+        pos = None
+        if with_pos:
+            pos = np.concatenate([
+                np.sort(rng.choice(10**5, size=int(t), replace=False)) for t in tfs
+            ]).astype(np.uint64)
+        enc = encode_postings(docids, tfs, dls, 250.0, positions=pos, fmt=fmt)
+        out.append((enc, (docids, tfs, dls, pos)))
+    return out
+
+
+_SIZES = {
+    "single n=1": [1],
+    "single 2 blocks": [256],
+    "n multiple of 128": [128, 384, 128],
+    "mixed sizes": [1, 5, 127, 128, 129, 300, 1, 1000, 2, 255],
+}
+
+
+@pytest.mark.parametrize("sizes", list(_SIZES.values()), ids=list(_SIZES))
+@pytest.mark.parametrize("with_pos", [False, True])
+@pytest.mark.parametrize("fmt", ["vb", "pfor"])
+def test_decode_many_equals_per_list_decode(fmt, with_pos, sizes):
+    """decode_many over many lists equals, array for array, each list's
+    source arrays, its own decode_postings and its all-blocks
+    decode_blocks (the selective path, which decodes each list alone):
+    vb and pfor, with and without positions, n = 1, n a multiple of 128,
+    PFor exceptions, and a single list."""
+    lists = _decode_many_lists(fmt, with_pos, sizes)
+    encs = [e for e, _ in lists]
+    if fmt == "pfor" and max(sizes) > 1:  # the exceptions are really there
+        assert any(e.deltas[e.d_off[-1] + 1] for e in encs)
+    got = decode_many(encs, with_positions=True)
+    assert len(got) == len(encs)
+    for enc, (docids, tfs, dls, pos), pl in zip(encs, [s for _, s in lists], got):
+        one = decode_postings(enc, with_positions=True, flat_positions=True)
+        blk = decode_blocks(enc, np.arange(enc.bmax_docid.size), with_positions=True,
+                            flat_positions=True)
+        for a in (pl, one, blk):
+            assert a.docids.dtype == np.uint64
+            assert np.array_equal(a.docids, docids)
+            assert np.array_equal(a.tfs, tfs)
+            assert np.array_equal(a.doclens, dls)
+            if with_pos:
+                assert np.array_equal(a.positions, pos)
+            else:
+                assert a.positions is None
+
+
+@pytest.mark.parametrize("fmt", ["vb", "pfor"])
+def test_decode_many_mixed_flags(fmt):
+    """Per-list position flags in one call: flagged lists get their
+    positions, the rest None; a list built without positions is None even
+    when flagged. Lists of two codecs in one call are refused."""
+    with_pos = _decode_many_lists(fmt, True, [3, 200, 128, 1, 90], seed=5)
+    no_pos = _decode_many_lists(fmt, False, [40, 129], seed=6)
+    lists = with_pos[:2] + no_pos[:1] + with_pos[2:] + no_pos[1:]
+    flags = [True, False, True, True, False, True, False]
+    got = decode_many([e for e, _ in lists], with_positions=flags)
+    for (enc, (docids, tfs, dls, pos)), flag, pl in zip(lists, flags, got):
+        assert np.array_equal(pl.docids, docids)
+        assert np.array_equal(pl.tfs, tfs)
+        assert np.array_equal(pl.doclens, dls)
+        if flag and pos is not None:
+            assert np.array_equal(pl.positions, pos)
+            per_posting = decode_postings(enc, with_positions=True).positions
+            assert all(np.array_equal(a, b) for a, b in
+                       zip(per_posting, np.split(pos, np.cumsum(tfs.astype(np.int64))[:-1])))
+        else:
+            assert pl.positions is None
+    assert decode_many([]) == []
+    other = _decode_many_lists("pfor" if fmt == "vb" else "vb", False, [10], seed=7)
+    with pytest.raises(ValueError):
+        decode_many([lists[0][0], other[0][0]])

@@ -120,6 +120,22 @@ def test_pfor_decode_at_empty():
     assert codec.pfor_decode_at(b"", np.zeros(0, np.int64), 0).size == 0
 
 
+def test_pfor_decode_at_per_block_counts():
+    """Blocks of many streams in one call: their buffers concatenated,
+    offsets shifted by each stream's byte base and one value count per
+    block (each stream's last block partial) decode every stream back
+    to back, exceptions included."""
+    streams = _cases()
+    encoded = [codec.pfor_encode(v) for v in streams]
+    base = np.cumsum([0] + [len(b) for b, _ in encoded])[:-1]
+    offs = np.concatenate([o + b0 for (_, o), b0 in zip(encoded, base)])
+    counts = np.concatenate([
+        np.diff(np.append(np.arange(0, v.size, codec.BLOCK), v.size)) for v in streams
+    ])
+    out = codec.pfor_decode_at(b"".join(b for b, _ in encoded), offs, counts)
+    assert np.array_equal(out, np.concatenate(streams))
+
+
 def test_pfor_beats_varbyte_on_posting_deltas():
     """On dense-lid posting deltas (the stream the codec exists for) PFor
     must not be larger than varbyte: deltas of a 30%-df head term over
@@ -312,6 +328,41 @@ def test_pfor_serving_matches_vb(pfor_index, seg_index):
     assert sb.codec_fmt == codec.FMT_PFOR
     for name, q in sorted(reference_queries().items()):
         assert sa.search(q, k=10) == sb.search(q, k=10), name
+
+
+def test_cold_serving_query_one_block_decode_per_stream(pfor_index, oracle, monkeypatch):
+    """A cold multi-term query over a multi-shard pfor index decodes every
+    (term, shard) list it misses in ONE batch: one pfor_decode_at call per
+    stream (deltas, tfs, doclens), not three per list. A warm repeat
+    decodes nothing; a phrase over two of its terms upgrades their lists
+    with positions in one more batch. Every answer equals the oracle's."""
+    from honeywell_search_engine_spark.query.local import ServingIndex
+    from honeywell_search_engine_spark.sources.pages import vocabulary
+
+    calls = []
+    real = codec.pfor_decode_at
+
+    def counting(buf, offs, counts):
+        calls.append(np.size(counts))
+        return real(buf, offs, counts)
+
+    monkeypatch.setattr(codec, "pfor_decode_at", counting)
+    v = vocabulary()
+    q, phrase = f"{v[0]} {v[1]} {v[2]}", f"{v[0]} {v[1]}"
+    sv = ServingIndex(pfor_index.path)
+    assert sv.codec_fmt == codec.FMT_PFOR
+    got = sv.search(q, k=10, mode="or")
+    assert got == oracle.search_or(q, k=10)
+    n_lists = len(sv._dec_lru)
+    assert n_lists == 3 * sv.n_shards  # 3 terms x 4 shards, all decoded
+    assert len(calls) == 3, calls
+    assert min(calls) >= n_lists  # each call spans every list's blocks
+    calls.clear()
+    assert sv.search(q, k=10, mode="or") == got
+    assert calls == []
+    assert sv.search_phrase(phrase, k=10) == oracle.search_phrase(phrase, k=10)
+    assert len(calls) == 3, calls
+    assert len(sv._dec_lru) == n_lists
 
 
 def test_pfor_payload_not_larger(pfor_index, seg_index, spark):

@@ -876,3 +876,28 @@ def test_parent_format_index_sheds_occurrence_table(promote_fixture, spark, tmp_
     p, c = ServingIndex(legacy), ServingIndex(clean)
     assert p.n_docs == c.n_docs
     assert _all_results(p) == _all_results(c)
+
+
+def test_builds_restore_session_conf(spark, tmp_path):
+    """build_segments and build_generation leave the caller's session conf
+    as they found it: the phase-2 encode sets partition-overwrite mode and
+    three scan/batch sizes only for its own writes (a leaked dynamic
+    overwrite mode makes every later overwrite in the session replace
+    only the partitions it writes)."""
+    from honeywell_search_engine_spark.index.promote import build_generation
+
+    keys = (
+        "spark.sql.sources.partitionOverwriteMode",
+        "spark.sql.files.maxPartitionBytes",
+        "spark.sql.files.openCostInBytes",
+        "spark.sql.execution.arrow.maxRecordsPerBatch",
+    )
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
+    before = {k: spark.conf.get(k) for k in keys}
+    pdf = generate_pages_pdf(120)
+    _write_pages(spark, pdf, 0, 80, str(tmp_path / "pages_base"))
+    _write_pages(spark, pdf, 80, 120, str(tmp_path / "pages_gen"))
+    _build(spark, str(tmp_path / "pages_base"), str(tmp_path / "idx"))
+    assert {k: spark.conf.get(k) for k in keys} == before
+    build_generation(spark, str(tmp_path / "pages_gen"), str(tmp_path / "gen"), str(tmp_path / "idx"))
+    assert {k: spark.conf.get(k) for k in keys} == before
