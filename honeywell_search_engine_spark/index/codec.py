@@ -133,6 +133,8 @@ for _l in range(65):
             _PFOR_EXC_COST[_l, _b] = 1 + (_l - _b + 6) // 7
 del _l, _b
 _PFOR_FULL_MASK = np.uint64(0xFFFFFFFFFFFFFFFF)
+# the low-w-bits mask of every width 0..64
+_PFOR_MASKS = np.array([(1 << b) - 1 for b in range(65)], dtype=np.uint64)
 
 
 def _pfor_bitlen(v: np.ndarray) -> np.ndarray:
@@ -402,12 +404,15 @@ def pfor_decode_at(buf, offs: np.ndarray, counts) -> np.ndarray:
     Block i's values land at out[c[i] : c[i] + counts[i]] with c the
     exclusive cumsum of the counts, and its exceptions are patched at
     those offsets. Inverse of the mega-batched encoder: headers read in
-    one gather, low bits of all same-width blocks unpacked/repacked in
-    uint8 C kernels, all exception blocks patched in one pass (rare by
-    construction — the width minimizer prices them out).
+    one gather, the low bits of every value of every block unpacked in
+    one more (value j of a block at byte offset off with width w is the
+    little-endian 64-bit word at byte off + 4 + (j*w >> 3), shifted right
+    by (j*w) & 7 and masked to w bits; a second word supplies the high
+    bits only where w + shift > 64), all exception blocks patched in one
+    pass (rare by construction — the width minimizer prices them out).
 
     Equivalent to pfor_decode(buf, n) (tested); the Python cost is
-    O(width classes), not O(blocks) or O(lists)."""
+    O(1), not O(width classes), O(blocks) or O(lists)."""
     offs = np.asarray(offs, dtype=np.int64)
     if np.ndim(counts) == 0:
         nb = (int(counts) + BLOCK - 1) // BLOCK
@@ -429,46 +434,24 @@ def pfor_decode_at(buf, offs: np.ndarray, counts) -> np.ndarray:
         raw[offs + 3].astype(np.int64) << 8
     )
     pb = (m * w + 7) // 8
-    out = np.zeros(n, dtype=np.uint64)
-    arange_blk = np.arange(BLOCK, dtype=np.int64)
-    pad = int(((BLOCK * 64 + 7) // 8))  # widest possible packed section
-    rawp = None
-    for b in np.unique(w):
-        b = int(b)
-        if b == 0:
-            continue  # low bits all zero; exceptions patched below
-        rows = np.flatnonzero(w == b)
-        pbb = (BLOCK * b + 7) // 8
-        if rawp is None:
-            rawp = np.concatenate([raw, np.zeros(pad, dtype=np.uint8)])
-            win_cache: dict = {}
-        if pbb not in win_cache:
-            win_cache[pbb] = np.lib.stride_tricks.sliding_window_view(
-                rawp, pbb
-            )
-        packed = win_cache[pbb][offs[rows] + _PFOR_HDR]  # (rows, pbb) copy
-        dt = np.dtype(
-            "<u1" if b <= 8 else "<u2" if b <= 16
-            else "<u4" if b <= 32 else "<u8"
-        )
-        dtbits = dt.itemsize * 8
-        bits = np.unpackbits(packed, axis=1, bitorder="little")[
-            :, : BLOCK * b
-        ].reshape(rows.size, BLOCK, b)
-        full = np.zeros((rows.size, BLOCK, dtbits), dtype=np.uint8)
-        full[:, :, :b] = bits
-        vals = (
-            np.packbits(
-                full.reshape(rows.size, BLOCK * dtbits),
-                axis=1, bitorder="little",
-            )
-            .view(dt)
-            .astype(np.uint64)
-        )
-        # a partial block's window runs past its packed bits: keep only
-        # its first counts[i] values
-        sel = arange_blk[None, :] < m[rows][:, None]
-        out[(first[rows][:, None] + arange_blk[None, :])[sel]] = vals[sel]
+    # the buffer as overlapping unaligned little-endian words, one per
+    # byte; 16 zero bytes of padding keep the second word of the last
+    # value in range
+    rawp = np.concatenate([raw, np.zeros(16, dtype=np.uint8)])
+    words = np.ndarray((rawp.size - 7,), dtype="<u8", buffer=rawp, strides=(1,))
+    w_v = np.repeat(w, m)
+    # absolute bit offset of every value: block's packed start + j * w
+    bit = np.arange(n, dtype=np.int64)
+    bit *= w_v
+    bit += np.repeat((offs + _PFOR_HDR) * 8 - first * w, m)
+    shift = (bit & 7).astype(np.uint64)
+    bit >>= 3  # the byte of the value's first bit
+    out = words[bit]
+    out >>= shift
+    if w.max() > 57:  # widths 58..63: a value may straddle two words
+        two = np.flatnonzero(w_v + shift.astype(np.int64) > 64)
+        out[two] |= words[bit[two] + 8] << (np.uint64(64) - shift[two])
+    out &= _PFOR_MASKS[w_v]
     exc_rows = np.flatnonzero(n_exc)
     if exc_rows.size:
         # one pass for ALL exception blocks: gather the position bytes and

@@ -37,7 +37,7 @@ from honeywell_search_engine_spark.index.segments import (
     bucket_checksums,
     bucket_col,
     decode_chunks,
-    enc_from_row,
+    enc_from_arrow,
     encode_pending_buckets,
     input_fingerprint,
     segment_occurrences,
@@ -60,12 +60,12 @@ def delete_docs(index_dir: str, docids: list[int], reason: str = "") -> str:
 
 
 def _rewrite_kernel(dead_bc, avgdl: float):
-    """mapInArrow body: decode the segment rows (every ``decode_chunks``
-    range in one ``codec.decode_many``), drop the postings of tombstoned
-    lids (their positions masked by ``np.repeat(keep, tfs)``) and
-    re-encode. dead_bc: Spark broadcast of {shard: sorted int64
-    tombstoned-lid array} — one copy per executor, not a per-task closure
-    set."""
+    """mapInArrow body: decode the segment rows (lists from the batch's
+    columns, ``enc_from_arrow``; every ``decode_chunks`` range in one
+    ``codec.decode_many``), drop the postings of tombstoned lids (their
+    positions masked by ``np.repeat(keep, tfs)``) and re-encode. dead_bc:
+    Spark broadcast of {shard: sorted int64 tombstoned-lid array} — one
+    copy per executor, not a per-task closure set."""
     _EMPTY = np.zeros(0, dtype=np.int64)
 
     def rewrite(batches):
@@ -74,11 +74,11 @@ def _rewrite_kernel(dead_bc, avgdl: float):
         dead_map = dead_bc.value
         for batch in batches:
             out = []
-            rows = batch.to_pylist()
-            for lo, hi in decode_chunks(rows):
-                encs = [enc_from_row(r) for r in rows[lo:hi]]
-                for row, enc, pl in zip(rows[lo:hi], encs, codec.decode_many(encs, True)):
-                    keep = ~np.isin(pl.docids.astype(np.int64), dead_map.get(row["shard"], _EMPTY))
+            encs = enc_from_arrow(batch)
+            terms, shards, buckets = (batch.column(c).to_pylist() for c in ("term", "shard", "bucket"))
+            for lo, hi in decode_chunks(batch.column("ctf").to_numpy()):
+                for i, pl in enumerate(codec.decode_many(encs[lo:hi], True), lo):
+                    keep = ~np.isin(pl.docids.astype(np.int64), dead_map.get(shards[i], _EMPTY))
                     if not keep.any():
                         continue
                     pos = None
@@ -86,9 +86,9 @@ def _rewrite_kernel(dead_bc, avgdl: float):
                         pos = pl.positions[np.repeat(keep, pl.tfs.astype(np.int64))]
                     out.append(
                         _encode_group(
-                            row["term"], row["shard"], row["bucket"],
+                            terms[i], shards[i], buckets[i],
                             pl.docids[keep], pl.tfs[keep], pl.doclens[keep], avgdl,
-                            positions=pos, fmt=enc.fmt,
+                            positions=pos, fmt=encs[i].fmt,
                         )
                     )
             if out:

@@ -25,8 +25,10 @@ This module owns those formats, and build, promote, merge and compact
 write them only through it: ``bucket_of`` / ``bucket_col`` (the term ->
 bucket map), ``write_occurrences`` (occurrence scratch),
 ``segment_occurrences`` (segments/ rows -> occurrence rows),
-``write_term_stats`` (term_stats/ and n_postings), ``enc_from_row`` /
-``segment_row`` (a segments/ row <-> ``codec.EncodedList``) and
+``write_term_stats`` (term_stats/ and n_postings), ``enc_from_arrow``
+(segments/ Arrow rows -> ``codec.EncodedList``, the one read path),
+``enc_from_row`` / ``segment_row`` (a dict row <-> ``codec.EncodedList``,
+promote's splice) and
 ``_invalidate_buckets`` (what a rewriting commit drops before it moves data).
 
 Design (north_rule / SURVEY.md §3.2 rebuild lifecycle):
@@ -163,6 +165,67 @@ def enc_from_row(row) -> codec.EncodedList:
         p_off=np.asarray(p_off, dtype=np.int64) if p_off is not None else None,
         fmt=codec.FMT_FROM_TAG[int(fmt)] if fmt is not None else codec.FMT_VB,
     )
+
+
+def _arrow_col(tbl, name):
+    """Column `name` of an Arrow Table or RecordBatch as one Array."""
+    col = tbl.column(name)
+    if not hasattr(col, "num_chunks"):
+        return col
+    return col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
+
+
+def _arrow_lists(tbl, name) -> list[np.ndarray]:
+    """Each row's value of list column `name`: views of its value buffer."""
+    a = _arrow_col(tbl, name)
+    vals = a.values.to_numpy(zero_copy_only=False)
+    off = a.offsets.to_numpy()
+    return [vals[off[i] : off[i + 1]] for i in range(tbl.num_rows)]
+
+
+def _positions_from_arrow(tbl, positions=True) -> list[tuple[bytes, np.ndarray | None]]:
+    """(positions stream, p_off) of every row of a segment-row Arrow Table
+    or RecordBatch. `positions` is one flag or one per row; a row not
+    flagged, a row without positions, and every row of a table without
+    the positions / p_off columns (a scan that projected them away, or an
+    index built before they joined the schema) get (b"", None)."""
+    k = tbl.num_rows
+    keep = [bool(positions)] * k if np.ndim(positions) == 0 else [bool(f) for f in positions]
+    names = set(tbl.schema.names)
+    if not ("positions" in names and "p_off" in names and any(keep)):
+        return [(b"", None)] * k
+    pos, po = _arrow_col(tbl, "positions").to_pylist(), _arrow_lists(tbl, "p_off")
+    null = _arrow_col(tbl, "p_off").is_null().to_pylist()
+    return [(pos[i] or b"", po[i]) if keep[i] and not null[i] else (b"", None)
+            for i in range(k)]
+
+
+def enc_from_arrow(tbl, positions=True) -> list[codec.EncodedList]:
+    """The encoded posting list of every row of a segment-row Arrow Table
+    or RecordBatch, built from its columns: no per-row dicts, and the
+    block-metadata arrays are views of the columns' value buffers.
+    `positions` (one flag, or one per row) keeps a row's positions
+    stream (``_positions_from_arrow``), and a table without `fmt` yields
+    varbyte lists — the same reading as ``enc_from_row``."""
+    names = set(tbl.schema.names)
+    ns = _arrow_col(tbl, "n").to_pylist()
+    bd, bu = _arrow_lists(tbl, "bmax_docid"), _arrow_lists(tbl, "bmax_u")
+    do, to, lo = (_arrow_lists(tbl, c) for c in ("d_off", "t_off", "l_off"))
+    deltas, tfs, doclens = (_arrow_col(tbl, c).to_pylist() for c in ("deltas", "tfs", "doclens"))
+    fmts = (
+        [codec.FMT_VB if f is None else codec.FMT_FROM_TAG[f]
+         for f in _arrow_col(tbl, "fmt").to_pylist()]
+        if "fmt" in names else [codec.FMT_VB] * tbl.num_rows
+    )
+    return [
+        codec.EncodedList(
+            n=int(ns[i]), bmax_docid=bd[i], bmax_u=bu[i],
+            d_off=do[i], t_off=to[i], l_off=lo[i],
+            deltas=deltas[i], tfs=tfs[i], doclens=doclens[i],
+            positions=p, p_off=po, fmt=fmts[i],
+        )
+        for i, (p, po) in enumerate(_positions_from_arrow(tbl, positions))
+    ]
 
 
 def segment_row(enc: codec.EncodedList, term: str, shard: int, ctf: int,
@@ -571,26 +634,28 @@ OCCURRENCE_SCHEMA = "term string, shard int, lid long, doclen int, pos int, buck
 _DECODE_FLUSH = 1 << 20
 
 
-def decode_chunks(rows: list[dict]):
-    """Yield (lo, hi) row ranges of `rows` (segment row dicts) whose
-    occurrences (Σ ctf) stay within _DECODE_FLUSH — a row larger than
-    that is a range of its own. Each range is one ``codec.decode_many``
-    / ``decode_concat`` call: the full-decode loops pay the per-call
-    cost per chunk, not per row, and memory stays bounded."""
+def decode_chunks(ctf):
+    """Yield (lo, hi) row ranges of a batch of segment rows, given their
+    ctf column, whose occurrences (Σ ctf) stay within _DECODE_FLUSH — a
+    row larger than that is a range of its own. Each range is one
+    ``codec.decode_many`` / ``decode_concat`` call: the full-decode loops
+    pay the per-call cost per chunk, not per row, and memory stays
+    bounded."""
     lo, held = 0, 0
-    for i, r in enumerate(rows):
-        c = int(r["ctf"])
+    for i, c in enumerate(ctf):
+        c = int(c)
         if held and held + c > _DECODE_FLUSH:
             yield lo, i
             lo, held = i, 0
         held += c
-    if lo < len(rows):
-        yield lo, len(rows)
+    if lo < len(ctf):
+        yield lo, len(ctf)
 
 
 def decode_occurrences(batches):
     """mapInArrow body: segment-row Arrow batches -> OCCURRENCE_SCHEMA
-    batches, one row per token occurrence. Every chunk of rows
+    batches, one row per token occurrence. The batch's lists come from
+    its columns (``enc_from_arrow``), and every chunk of rows
     (``decode_chunks``) decodes in one ``codec.decode_concat``: docids,
     tfs, doclens (each list's own doclen stream) and flat positions, back
     to back; a posting's lid and doclen repeat tf times and a list's term,
@@ -604,15 +669,16 @@ def decode_occurrences(batches):
     schema = pa.schema([("term", pa.string()), ("shard", pa.int32()), ("lid", pa.int64()),
                         ("doclen", pa.int32()), ("pos", pa.int32()), ("bucket", pa.int32())])
     for batch in batches:
-        rows = batch.to_pylist()
-        for lo, hi in decode_chunks(rows):
-            pl, want = codec.decode_concat([enc_from_row(r) for r in rows[lo:hi]], True)
+        encs = enc_from_arrow(batch)
+        ns = batch.column("n").to_numpy()
+        for lo, hi in decode_chunks(batch.column("ctf").to_numpy()):
+            pl, want = codec.decode_concat(encs[lo:hi], True)
             if not want.all():
-                r = rows[lo + int(np.argmin(want))]
-                raise ValueError(f"segment row ({r['term']!r}, shard {r['shard']}) has no positions")
+                i = lo + int(np.argmin(want))
+                raise ValueError(f"segment row ({batch.column('term')[i].as_py()!r}, "
+                                 f"shard {batch.column('shard')[i].as_py()}) has no positions")
             tf = pl.tfs.astype(np.int64)
-            ns = np.fromiter((r["n"] for r in rows[lo:hi]), dtype=np.int64, count=hi - lo)
-            row = pa.array(np.repeat(np.repeat(np.arange(lo, hi), ns), tf))
+            row = pa.array(np.repeat(np.repeat(np.arange(lo, hi), ns[lo:hi]), tf))
             yield pa.RecordBatch.from_arrays(
                 [batch.column("term").take(row), batch.column("shard").take(row).cast(pa.int32()),
                  pa.array(np.repeat(pl.docids.astype(np.int64), tf)),

@@ -225,11 +225,12 @@ class GenerationSet(QuerySurface):
 
     # ---- query surface ----------------------------------------------------
 
-    def _rows_for(self, terms) -> tuple[dict[str, int], list[dict[str, list[dict]]]]:
-        """(logical {term: df}, each generation's {term: rows}) — one
-        batched ServingIndex._rows_for per generation; df = Σ df_g minus
-        the shadowed postings (``_df_corr``)."""
-        reads = [g._rows_for(terms) for g in self.gens]
+    def _rows_for(self, terms, need_pos=()) -> tuple[dict[str, int], list[dict[str, dict]]]:
+        """(logical {term: df}, each generation's {term: {shard:
+        EncodedList}}) — one batched ServingIndex._rows_for per
+        generation (positions for the terms of `need_pos`); df = Σ df_g
+        minus the shadowed postings (``_df_corr``)."""
+        reads = [g._rows_for(terms, need_pos) for g in self.gens]
         df = {t: sum(d[t] for d, _ in reads) - self._df_corr.get(t, 0) for t in reads[0][0]}
         return df, [rows for _, rows in reads]
 
@@ -238,7 +239,7 @@ class GenerationSet(QuerySurface):
         merged by top_k."""
         if plan is None:
             return []
-        df, rows = self._rows_for(plan.scan_terms)
+        df, rows = self._rows_for(plan.scan_terms, plan.need_pos)
         return top_k(
             [g._eval(plan, k, allowed_docids, df, r) for g, r in zip(self.gens, rows)], k
         )

@@ -23,11 +23,18 @@ bit-exact with the Spark path by construction — the SAME plan step and
 shard evaluator (``eval_shard``) over the SAME encoded rows; only the I/O
 differs:
 
-- posting rows: pyarrow dataset read of ``{index}/segments`` with bucket
-  partition-directory pruning + a `term IN (...)` filter pushed to parquet
-  row groups — a query touches only its terms' lists (the whole point of
-  an inverted index), a few KB-MB regardless of corpus size. Rows are
-  LRU-memoized per term (hot-term working set).
+- posting rows: a pyarrow.parquet read of the query's bucket files
+  under ``{index}/segments`` — the file list comes from one dataset open
+  per node, each file's footer is parsed once and kept until
+  ``reload()``, and only the row groups whose term min/max can hold a
+  wanted term are read, only the columns the kernels read — so a query
+  touches only its terms' lists (the whole point of an inverted index),
+  a few KB-MB regardless of corpus size. Each term's lists are built
+  straight from the Arrow columns (segments.enc_from_arrow) and
+  LRU-memoized per term as {shard: EncodedList} (hot-term working set).
+  positions/p_off are read only for a positional plan's terms: an
+  AND/OR term's entry holds none, and its first positional use reads
+  the term's rows again, with them, as a miss.
 - idf: ln1p((N-df+.5)/(df+.5)) with df = Σ n over the term's segment
   rows of all shards (the sum term_stats stores), taken from the same
   read and kept with the rows in the term's one LRU entry — the query
@@ -41,7 +48,8 @@ differs:
 - decode: each (term, shard) list is decoded once into a byte-budgeted
   LRU (``_memo``). A query's lists that miss it — every shard, every
   term — decode together in ONE ``codec.decode_many`` call: one block
-  decode per stream, not three per list. Per shard, ``_search`` hands
+  decode per stream, not three per list (a pfor stream's values unpack
+  in one gather, ``codec.pfor_decode_at``). Per shard, ``_search`` hands
   the evaluator the decoded PostingLists (full-scan kernels) when every
   list the plan touches there is at most FULLSCAN_MAX_POSTINGS long,
   else the MemoLists (block-max-pruned kernels, block decode = a slice).
@@ -56,12 +64,17 @@ from __future__ import annotations
 
 import json
 import math
+from bisect import bisect_left
 from collections import OrderedDict
 
 import numpy as np
 
 from honeywell_search_engine_spark.index import codec
-from honeywell_search_engine_spark.index.segments import bucket_of, enc_from_row, load_tombstones
+from honeywell_search_engine_spark.index.segments import (
+    bucket_of,
+    enc_from_arrow,
+    load_tombstones,
+)
 from honeywell_search_engine_spark.query import respond
 from honeywell_search_engine_spark.query import wand as W
 
@@ -74,6 +87,12 @@ from honeywell_search_engine_spark.query import wand as W
 # scan wins (measured ~3x at 20k docs), above it pruning's skipped work
 # dominates (a Zipf head term at web scale is 10^6-10^8 postings/shard).
 FULLSCAN_MAX_POSTINGS = 1 << 17
+
+# the segment columns a serving read takes: what the kernels read, plus
+# the positions stream for the rows of a positional term
+_ROW_COLS = ("term", "shard", "n", "bmax_docid", "bmax_u", "d_off", "t_off", "l_off",
+             "deltas", "tfs", "doclens", "fmt")
+_POS_COLS = ("positions", "p_off")
 
 
 def _succ_prefix(prefix: str) -> str | None:
@@ -94,6 +113,12 @@ def _succ_prefix(prefix: str) -> str | None:
             nxt = 0xE000 if 0xD800 <= cp + 1 <= 0xDFFF else cp + 1
             return prefix[:i] + chr(nxt)
     return None
+
+
+def _holds_any(terms: list[str], lo: str, hi: str) -> bool:
+    """True if the sorted `terms` hold one in [lo, hi]."""
+    i = bisect_left(terms, lo)
+    return i < len(terms) and terms[i] <= hi
 
 
 def top_k(parts, k: int) -> list[tuple[int, float]]:
@@ -240,11 +265,15 @@ class ServingIndex(QuerySurface):
             self._by_docid[int(s)] = (ds[o], ls[o])
         # tombstones -> {shard: sorted lid array}
         self._dead = self._lids_by_shard(load_tombstones(path))
-        # the segments dataset handle: opened on the first term-row miss,
-        # then reused by every later miss (no per-miss file discovery)
-        self._segments = None
-        # term -> (df, [segment row dict per owned shard])
-        self._term_lru: OrderedDict[str, tuple[int, list[dict]]] = OrderedDict()
+        # {bucket: segment files}: listed from one segments dataset open
+        # on the first term-row miss, and serving every later miss (no
+        # per-miss file discovery)
+        self._bucket_files: dict[int, list[str]] | None = None
+        # path -> (footer, column names, [(row group, term min, term max)]):
+        # each file's footer is parsed once, on its bucket's first read
+        self._footers: dict[str, tuple] = {}
+        # term -> (df, {owned shard: EncodedList}, positions read)
+        self._term_lru: OrderedDict[str, tuple[int, dict, bool]] = OrderedDict()
         self._term_cap = term_cache_capacity
         # decoded-postings LRU: (term, shard) -> codec.MemoList (encoded
         # row + its full decode). BYTE-budgeted, not entry-counted: a head
@@ -264,18 +293,20 @@ class ServingIndex(QuerySurface):
         docmap, and tombstones, and drops every cache (term-row and df
         LRU, decoded-postings LRU, hot-document LRU) — no process
         restart; an attached docs store is re-attached with its
-        columns and its document-cache cap, and the segments dataset
-        handle is re-opened. Posting rows are read lazily per query
-        through that handle, which lists the segment files once, on the
-        node's first term miss. A node that is not reloaded after an
-        on-disk swap keeps serving its cached terms from the old view;
-        an UNCACHED term is read from the files its handle listed: a
-        file the maintenance replaced fails the read (FileNotFoundError)
-        instead of pairing new postings with old stats, and a file it
-        added is not seen. For strict consistency either promote into a
-        versioned directory and open a fresh node on it, or drain the
-        node around the maintenance window; reload() is the
-        refresh-in-place hook. A GenerationSet member should not be
+        columns and its document-cache cap, and the listed segment
+        files and the cached parquet footers are dropped. Posting rows
+        are read lazily per query from the files one segments dataset
+        listed on the node's first term miss, each file's footer parsed
+        on its first read and kept; every read opens its file anew. A
+        node that is not reloaded after an on-disk swap keeps serving
+        its cached terms from the old view; an UNCACHED term (or a
+        cached term's first positional use) is read from the listed
+        files: a file the maintenance replaced fails the read
+        (FileNotFoundError) instead of pairing new postings with old
+        stats, and a file it added is not seen. For strict consistency
+        either promote into a versioned directory and open a fresh node
+        on it, or drain the node around the maintenance window; reload()
+        is the refresh-in-place hook. A GenerationSet member should not be
         reloaded directly (the injected global stats/shadows would be
         lost) — re-open the GenerationSet instead."""
         self.__init__(
@@ -312,50 +343,99 @@ class ServingIndex(QuerySurface):
 
     # ---- pruned posting reads --------------------------------------------
 
-    def _rows_for(self, terms) -> tuple[dict[str, int], dict[str, list[dict]]]:
-        """({term: df}, {term: [segment row dict per shard]}) — LRU first,
-        then ONE pruned dataset read for all missing terms. df is Σ n over
+    def _rows_for(self, terms, need_pos=()) -> tuple[dict[str, int], dict[str, dict]]:
+        """({term: df}, {term: {owned shard: EncodedList}}) — LRU first,
+        then ONE read (``_read_terms``) for every missing term and every
+        term of `need_pos` cached without its positions. df is Σ n over
         the term's rows of ALL shards (the sum term_stats stores), kept
-        with the rows in the term's one LRU entry. A shard-subset node
-        reads only its OWN shards' posting payloads; its df (scores must
-        be identical on every node) rides a second, metadata-columns-only
-        read over all shards."""
+        with the lists in the term's one LRU entry. Positions are read
+        only for the terms of `need_pos`: an AND/OR term's entry holds
+        none until its first positional use reads them."""
         df: dict[str, int] = {}
-        rows: dict[str, list[dict]] = {}
-        missing = []
+        rows: dict[str, dict] = {}
+        read = []
         for t in dict.fromkeys(terms):
-            if t in self._term_lru:
-                self._term_lru.move_to_end(t)
-                df[t], rows[t] = self._term_lru[t]
+            hit = self._term_lru.get(t)
+            if hit is None or (t in need_pos and not hit[2]):
+                read.append(t)
             else:
-                missing.append(t)
-        if missing:
-            import pyarrow.dataset as ds
-
-            if self._segments is None:
-                self._segments = ds.dataset(
-                    f"{self.path}/segments", format="parquet", partitioning="hive"
-                )
-            data = self._segments
-            buckets = sorted({bucket_of(t, self.n_buckets) for t in missing})
-            flt = ds.field("bucket").isin(buckets) & ds.field("term").isin(missing)
-            if self._shards is not None:
-                meta = data.to_table(filter=flt, columns=["term", "n"])
-                flt = flt & ds.field("shard").isin(list(self._shards))
-            tbl = data.to_table(filter=flt)
-            if self._shards is None:
-                meta = tbl
-            dfs = dict.fromkeys(missing, 0)
-            for t, n in zip(meta.column("term").to_pylist(), meta.column("n").to_pylist()):
-                dfs[t] += n
-            got: dict[str, list[dict]] = {t: [] for t in missing}
-            for row in tbl.to_pylist():
-                got[row["term"]].append(row)
-            for t in missing:
-                df[t], rows[t] = self._term_lru[t] = (dfs[t], got[t])
+                self._term_lru.move_to_end(t)
+                df[t], rows[t], _ = hit
+        if read:
+            for t, entry in self._read_terms(read, need_pos).items():
+                self._term_lru[t] = entry
+                self._term_lru.move_to_end(t)
+                df[t], rows[t], _ = entry
                 if len(self._term_lru) > self._term_cap:
                     self._term_lru.popitem(last=False)
         return df, rows
+
+    def _footer(self, path: str) -> tuple:
+        """(footer, column names, [(row group, term min, term max)]) of one
+        segment file, parsed on its first read and kept until reload();
+        a row group without term statistics gets (rg, None, None)."""
+        f = self._footers.get(path)
+        if f is None:
+            import pyarrow.parquet as pq
+
+            md = pq.read_metadata(path)
+            names = set(md.schema.to_arrow_schema().names)
+            ci = next(i for i in range(md.num_columns) if md.schema.column(i).path == "term")
+            ranges = []
+            for rg in range(md.num_row_groups):
+                st = md.row_group(rg).column(ci).statistics
+                ok = st is not None and st.has_min_max
+                ranges.append((rg, st.min if ok else None, st.max if ok else None))
+            f = self._footers[path] = (md, names, ranges)
+        return f
+
+    def _read_terms(self, terms: list[str], need_pos) -> dict[str, tuple[int, dict, bool]]:
+        """{term: (df, {owned shard: EncodedList}, positions read)} for
+        `terms`, read with pyarrow.parquet from their buckets' files: per
+        file only the row groups whose term min/max can hold one of the
+        bucket's terms, then those terms' rows, in the ``_ROW_COLS``.
+        ``_POS_COLS`` are read where a term of `need_pos` is, and only
+        those terms' lists keep them. A shard-subset node takes df from
+        every shard's rows and builds lists for its own shards alone —
+        one read either way."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        if self._bucket_files is None:
+            import pyarrow.dataset as ds
+
+            self._bucket_files = {}
+            segments = ds.dataset(f"{self.path}/segments", format="parquet", partitioning="hive")
+            for frag in segments.get_fragments():
+                b = ds.get_partition_keys(frag.partition_expression)["bucket"]
+                self._bucket_files.setdefault(int(b), []).append(frag.path)
+        dfs = dict.fromkeys(terms, 0)
+        lists: dict[str, dict] = {t: {} for t in terms}
+        by_bucket: dict[int, list[str]] = {}
+        for t in sorted(terms):
+            by_bucket.setdefault(bucket_of(t, self.n_buckets), []).append(t)
+        for b, ts in by_bucket.items():
+            cols = _ROW_COLS + (_POS_COLS if any(t in need_pos for t in ts) else ())
+            for path in self._bucket_files.get(b, ()):
+                md, names, ranges = self._footer(path)
+                rgs = [rg for rg, lo, hi in ranges if lo is None or _holds_any(ts, lo, hi)]
+                if not rgs:
+                    continue
+                with pq.ParquetFile(path, metadata=md) as f:
+                    tbl = f.read_row_groups(
+                        rgs, columns=[c for c in cols if c in names], use_threads=False
+                    )
+                tbl = tbl.filter(pc.is_in(tbl.column("term"), value_set=pa.array(ts)))
+                for t, n in zip(tbl.column("term").to_pylist(), tbl.column("n").to_pylist()):
+                    dfs[t] += n
+                if self._shards is not None:
+                    tbl = tbl.filter(pa.array(np.isin(tbl.column("shard").to_numpy(), self._shards)))
+                row_terms = tbl.column("term").to_pylist()
+                encs = enc_from_arrow(tbl, [t in need_pos for t in row_terms])
+                for t, s, enc in zip(row_terms, tbl.column("shard").to_pylist(), encs):
+                    lists[t][s] = enc
+        return {t: (dfs[t], lists[t], t in need_pos) for t in terms}
 
     # ---- queries ----------------------------------------------------------
 
@@ -364,10 +444,11 @@ class ServingIndex(QuerySurface):
         node: the pruned row fetch with its df, then ``_eval``."""
         if plan is None:
             return []
-        return self._eval(plan, k, allowed_docids, *self._rows_for(plan.scan_terms))
+        return self._eval(plan, k, allowed_docids,
+                          *self._rows_for(plan.scan_terms, plan.need_pos))
 
     def _eval(self, plan, k: int, allowed_docids, df: dict[str, int],
-              rows_by_term: dict[str, list[dict]]) -> list[tuple[int, float]]:
+              rows_by_term: dict[str, dict]) -> list[tuple[int, float]]:
         """The top-k of `plan` over `rows_by_term` (``_rows_for``), with
         idf from `df` — this node's own, or a GenerationSet's logical df.
         The lists of every shard come from ``_memo`` in one call (the
@@ -385,17 +466,17 @@ class ServingIndex(QuerySurface):
             for t, r in rows_by_term.items() if r
         }
         scope = self._lids_by_shard(allowed_docids) if allowed_docids is not None else None
-        by_shard: dict[int, dict[str, dict]] = {}
-        for t, rows in rows_by_term.items():
-            for row in rows:
-                by_shard.setdefault(int(row["shard"]), {})[t] = row
+        by_shard: dict[int, dict[str, codec.EncodedList]] = {}
+        for t, encs in rows_by_term.items():
+            for s, enc in encs.items():
+                by_shard.setdefault(s, {})[t] = enc
         by_shard = {s: tmap for s, tmap in by_shard.items()
                     if all(t in tmap for t in plan.required)}
-        lists = self._memo([(t, s, r, t in plan.need_pos)
-                            for s, tmap in by_shard.items() for t, r in tmap.items()])
+        lists = self._memo([(t, s, enc, t in plan.need_pos)
+                            for s, tmap in by_shard.items() for t, enc in tmap.items()])
         parts = []
         for s, tmap in by_shard.items():
-            full_scan = max(int(r["n"]) for r in tmap.values()) <= FULLSCAN_MAX_POSTINGS
+            full_scan = max(enc.n for enc in tmap.values()) <= FULLSCAN_MAX_POSTINGS
             by_term = {t: lists[t, s].pl if full_scan else lists[t, s] for t in tmap}
             res = W.eval_shard(
                 plan, by_term, idf, self.avgdl, k, self._dead.get(s, W._NO_DEAD),
@@ -406,8 +487,8 @@ class ServingIndex(QuerySurface):
         return top_k(parts, k)
 
     def _memo(self, wanted) -> dict:
-        """{(term, shard): MemoList} for `wanted` [(term, shard, row,
-        positions)]: the encoded row + its full decode (codec.MemoList),
+        """{(term, shard): MemoList} for `wanted` [(term, shard,
+        EncodedList, positions)]: the list + its full decode (codec.MemoList),
         LRU-memoized — the hot-term working set of a serving node, same
         idea as the encoded-row LRU one level up. Kernels run on it
         unchanged (block decode = slice), so warm queries keep block-max
@@ -419,11 +500,11 @@ class ServingIndex(QuerySurface):
         for position decode and a later phrase query on the same term
         still hits the LRU."""
         out, miss = {}, []
-        for term, shard, row, positions in wanted:
+        for term, shard, enc, positions in wanted:
             key = (term, shard)
             ml = self._dec_lru.get(key)
             if ml is None or (positions and ml.pl.positions is None):
-                miss.append((key, enc_from_row(row), positions))
+                miss.append((key, enc, positions))
             else:
                 self._dec_lru.move_to_end(key)
                 out[key] = ml

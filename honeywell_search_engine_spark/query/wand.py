@@ -95,7 +95,7 @@ from honeywell_search_engine_spark.index.segments import (
     SegmentIndex,
     check_terms,
     docids_of_lids,
-    enc_from_row,
+    enc_from_arrow,
 )
 
 RESULT_SCHEMA = "docid long, score double"
@@ -975,14 +975,13 @@ def _batch_tail(per_shard: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _memo_by_term(rows: list, use_count: dict, need_pos=frozenset()) -> dict:
-    """{term: EncodedList} of one shard's segment rows (dicts): terms
-    shared by several queries of a batch (the Zipf head of a query log)
-    decode ONCE per task as MemoLists, all in one ``codec.decode_many``
-    call — every query after the first runs decode-free with block-max
-    pruning intact; single-query terms stay encoded (selective decode
-    only). Positions decode only for terms in `need_pos`."""
-    by_term = {r["term"]: enc_from_row(r) for r in rows}
+def _memo_by_term(by_term: dict, use_count: dict, need_pos=frozenset()) -> dict:
+    """{term: EncodedList} of one shard's lists, with the terms shared by
+    several queries of a batch (the Zipf head of a query log) decoded
+    ONCE per task as MemoLists, all in one ``codec.decode_many`` call —
+    every query after the first runs decode-free with block-max pruning
+    intact; single-query terms stay encoded (selective decode only).
+    Positions decode only for terms in `need_pos`."""
     shared = [t for t in by_term if use_count.get(t, 0) > 1]
     decoded = codec.decode_many([by_term[t] for t in shared], [t in need_pos for t in shared])
     for t, pl in zip(shared, decoded):
@@ -1004,8 +1003,9 @@ def _task_body(index: SegmentIndex, plans: dict, k: int, batch: bool,
     """The body of one shard-kernel task, ``body(segs, scope=None)``.
 
     `segs` is the task's segment rows as a pyarrow Table: any number of
-    shards, each shard's rows complete. Per shard the body builds the
-    lists (``_memo_by_term``) and runs ``eval_shard`` for every plan of
+    shards, each shard's rows complete. The body builds every list from
+    the table's columns (``enc_from_arrow``); per shard it memoizes the
+    shared ones (``_memo_by_term``) and runs ``eval_shard`` for every plan of
     `plans` ({qid: QueryPlan}); then ONE ``docids_of_lids`` read of the
     handle's docmap files maps every (shard, lid) of the task to its
     docid. Returns a Table of (docid, score), or (qid, docid, score) when
@@ -1018,14 +1018,15 @@ def _task_body(index: SegmentIndex, plans: dict, k: int, batch: bool,
     docmap_files = index.docmap_files
 
     def body(segs: pa.Table, scope: pa.Table | None = None) -> pa.Table:
-        by_shard: dict[int, list] = {}
-        for r in segs.to_pylist():
-            by_shard.setdefault(r["shard"], []).append(r)
+        by_shard: dict[int, dict] = {}
+        for t, s, enc in zip(segs.column("term").to_pylist(), segs.column("shard").to_pylist(),
+                             enc_from_arrow(segs)):
+            by_shard.setdefault(s, {})[t] = enc
         if scope is not None:
             scope_shard = scope.column("shard").to_numpy()
             scope_lid = scope.column("lid").to_numpy().astype(np.int64)
         hits = []  # (qid, shard, lid, score)
-        for shard, rows in by_shard.items():
+        for shard, encs in by_shard.items():
             if scope is not None:
                 allowed = np.sort(scope_lid[scope_shard == shard])
                 if allowed.size == 0:
@@ -1035,7 +1036,7 @@ def _task_body(index: SegmentIndex, plans: dict, k: int, batch: bool,
             else:
                 allowed = scope_bc.value.get(shard, _NO_DEAD) if scope_bc is not None else None
             dead = dead_bc.value.get(shard, _NO_DEAD) if dead_bc is not None else _NO_DEAD
-            by_term = _memo_by_term(rows, use_count, need_pos)
+            by_term = _memo_by_term(encs, use_count, need_pos)
             for qid, plan in plans.items():
                 hits += [(qid, shard, lid, s)
                          for lid, s in eval_shard(plan, by_term, idf, avgdl, k, dead, allowed)]

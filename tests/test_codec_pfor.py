@@ -47,6 +47,12 @@ def _cases():
                 [rng.integers(0, 16, 1000), rng.integers(2**30, 2**35, 30)]
             )
         ).astype(np.uint64),
+        # one 128-value block at each width 57..63: 57 is the widest whose
+        # values never straddle two 64-bit words in the unpack, 58..63
+        # take its second-word path (w + shift > 64)
+        np.concatenate(
+            [np.full(codec.BLOCK, 2**k - 1, np.uint64) for k in range(57, 64)]
+        ),
     ]
 
 
@@ -260,8 +266,7 @@ def test_mega_batch_encoder_pfor_byte_identical():
 # ---------------------------------------------------------------------------
 
 
-@pytest.fixture(scope="module")
-def pfor_index(spark, pages_path, tmp_path_factory):
+def _build_index(spark, pages_path, tmp_path_factory, fmt):
     from honeywell_search_engine_spark.index.corpus import (
         docs_from_pages,
         tokenized_docs,
@@ -272,13 +277,25 @@ def pfor_index(spark, pages_path, tmp_path_factory):
     )
     from honeywell_search_engine_spark.sources.pages import read_pages
 
-    out = str(tmp_path_factory.mktemp("pforidx") / "idx")
+    out = str(tmp_path_factory.mktemp(f"{fmt}idx") / "idx")
     tok = tokenized_docs(docs_from_pages(read_pages(spark, pages_path)))
     build_segments(
         tok, out, pages_path, n_buckets=16, n_shards=4, buckets_per_job=8,
-        codec_fmt=codec.FMT_PFOR,
+        codec_fmt=fmt,
     )
     return SegmentIndex(spark, out)
+
+
+@pytest.fixture(scope="module")
+def pfor_index(spark, pages_path, tmp_path_factory):
+    return _build_index(spark, pages_path, tmp_path_factory, codec.FMT_PFOR)
+
+
+@pytest.fixture(scope="module")
+def vb_index(spark, pages_path, tmp_path_factory):
+    """The same corpus and layout as pfor_index, varbyte-coded (the
+    build's default codec is pfor)."""
+    return _build_index(spark, pages_path, tmp_path_factory, codec.FMT_VB)
 
 
 def test_pfor_index_flag_and_rows(pfor_index, spark):
@@ -302,7 +319,7 @@ def test_pfor_wand_matches_oracle(pfor_index, oracle):
         assert got == oracle.search(q, k=10), name
 
 
-def test_pfor_positional_and_websearch_match_vb(pfor_index, seg_index):
+def test_pfor_positional_and_websearch_match_vb(pfor_index, vb_index):
     from honeywell_search_engine_spark.query import wand as W
     from honeywell_search_engine_spark.sources.pages import vocabulary
 
@@ -314,17 +331,18 @@ def test_pfor_positional_and_websearch_match_vb(pfor_index, seg_index):
         (W.bm25_topk_websearch, (f'"{v[0]} {v[1]}" -{v[7]}',)),
         (W.bm25_topk_websearch, (f"{v[3]} or {v[4]}",)),
     ]:
-        a = fn(seg_index, *args, k=10).toPandas()
+        a = fn(vb_index, *args, k=10).toPandas()
         b = fn(pfor_index, *args, k=10).toPandas()
         pd.testing.assert_frame_equal(a, b)
 
 
-def test_pfor_serving_matches_vb(pfor_index, seg_index):
+def test_pfor_serving_matches_vb(pfor_index, vb_index):
     from honeywell_search_engine_spark.query.local import ServingIndex
     from honeywell_search_engine_spark.sources.pages import reference_queries
 
-    sa = ServingIndex(seg_index.path)
+    sa = ServingIndex(vb_index.path)
     sb = ServingIndex(pfor_index.path)
+    assert sa.codec_fmt == codec.FMT_VB
     assert sb.codec_fmt == codec.FMT_PFOR
     for name, q in sorted(reference_queries().items()):
         assert sa.search(q, k=10) == sb.search(q, k=10), name
@@ -365,7 +383,7 @@ def test_cold_serving_query_one_block_decode_per_stream(pfor_index, oracle, monk
     assert len(sv._dec_lru) == n_lists
 
 
-def test_pfor_payload_not_larger(pfor_index, seg_index, spark):
+def test_pfor_payload_not_larger(pfor_index, vb_index, spark):
     """Raw stream payload of the pfor index must not exceed varbyte's on
     the same corpus (parquet sizes also shrink but are compressor-noisy)."""
     from pyspark.sql import functions as F
@@ -381,7 +399,7 @@ def test_pfor_payload_not_larger(pfor_index, seg_index, spark):
             .collect()[0]["b"]
         )
 
-    assert payload(pfor_index) <= payload(seg_index)
+    assert payload(pfor_index) <= payload(vb_index)
 
 
 def test_codec_resume_mismatch_refused(spark, pages_path, pfor_index):

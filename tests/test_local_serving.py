@@ -298,7 +298,76 @@ def test_shard_router_matches_full_index(spark, seg_index, serving):
     # posting payload rows on a node are restricted to its shards
     node = router.nodes[0]
     _df, rows = node._rows_for([q0])
-    assert rows[q0] and all(int(r["shard"]) in node._shards for r in rows[q0])
+    assert rows[q0] and all(s in node._shards for s in rows[q0])
+
+
+def test_and_or_entry_holds_no_positions(seg_index, oracle):
+    """AND/OR queries cache their terms' lists without the positions
+    stream; a later phrase query over those terms reads the positions on
+    first use and answers as the oracle does."""
+    sv = ServingIndex(seg_index.path)
+    assert sv.search("data search", k=10) == oracle.search("data search", k=10)
+    assert sv.search("data engine", k=10, mode="or") == oracle.search_or("data engine", k=10)
+    for t in ("data", "search", "engine"):
+        _df, encs, with_pos = sv._term_lru[t]
+        assert encs and not with_pos
+        assert all(e.positions == b"" and e.p_off is None for e in encs.values())
+    exp = oracle.search_phrase("data search", k=10)
+    assert exp and sv.search_phrase("data search", k=10) == exp
+    for t in ("data", "search"):
+        _df, encs, with_pos = sv._term_lru[t]
+        assert with_pos and all(e.positions and e.p_off is not None for e in encs.values())
+    assert not sv._term_lru["engine"][2]
+
+
+def test_cold_read_prunes_row_groups(seg_index, serving, tmp_path, monkeypatch):
+    """On a copy of the index with one bucket rewritten term-sorted into
+    several row groups, a cold query reads only the row groups whose term
+    min/max can hold one of its terms, and answers as the untouched
+    index does."""
+    import glob
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from honeywell_search_engine_spark.index.segments import bucket_of
+
+    idx = str(tmp_path / "idx")
+    shutil.copytree(seg_index.path, idx)
+    b = bucket_of("data", serving.n_buckets)
+    files = glob.glob(f"{idx}/segments/bucket={b}/*.parquet")
+    tbl = pa.concat_tables([pq.ParquetFile(f).read() for f in files]).sort_by("term")
+    for f in files:
+        os.remove(f)
+    sorted_file = f"{idx}/segments/bucket={b}/part-sorted.parquet"
+    pq.write_table(tbl, sorted_file, row_group_size=max(1, tbl.num_rows // 8))
+    md = pq.read_metadata(sorted_file)
+    assert md.num_row_groups >= 8
+    stats = [md.row_group(i).column(0).statistics for i in range(md.num_row_groups)]
+    vocab = sorted(set(tbl.column("term").to_pylist()))
+    q = ["data", vocab[len(vocab) // 2]]  # two terms of bucket b
+    hold = [i for i, st in enumerate(stats) if any(st.min <= t <= st.max for t in q)]
+    assert len(hold) < md.num_row_groups
+
+    qs = " ".join(q)
+    exp = serving.search(qs, k=10, mode="or")
+    assert exp
+    reads = []
+    real = pq.ParquetFile.read_row_groups
+
+    def spy(self, row_groups, *a, **kw):
+        reads.append(list(row_groups))
+        return real(self, row_groups, *a, **kw)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_groups", spy)
+    sv = ServingIndex(idx)
+    assert sv.search(qs, k=10, mode="or") == exp
+    assert reads == [hold]
+    monkeypatch.undo()
+    assert sv.search(qs, k=10) == serving.search(qs, k=10)
+    assert sv.search_phrase("data search", k=10) == serving.search_phrase("data search", k=10)
 
 
 @pytest.mark.parametrize("n_nodes", [0, -1])

@@ -885,3 +885,43 @@ def test_bucket_checksums_pre_fmt_index(spark, seg_index, tmp_path):
     # index_report runs on the pre-fmt layout too (same column guard)
     rep = index_report(spark, old).collect()
     assert len(rep) > 0
+
+
+def test_enc_from_arrow_equals_enc_from_row(seg_index):
+    """The Arrow helper builds, from a segment table's columns, the same
+    EncodedList that enc_from_row builds from each row's dict: over a
+    shuffled multi-chunk table, with per-row position flags, and with the
+    positions and fmt columns projected away."""
+    import dataclasses
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from honeywell_search_engine_spark.index import codec
+    from honeywell_search_engine_spark.index.segments import enc_from_arrow, enc_from_row
+
+    tbl = pq.read_table(f"{seg_index.path}/segments")
+    tbl = pa.concat_tables([tbl.slice(0, 50), tbl.slice(50, 70)])
+    tbl = tbl.take(np.random.default_rng(3).permutation(tbl.num_rows))
+    rows = tbl.to_pylist()
+    flags = [i % 2 == 0 for i in range(len(rows))]
+
+    def same(a, b):
+        for f in dataclasses.fields(codec.EncodedList):
+            x, y = getattr(a, f.name), getattr(b, f.name)
+            if isinstance(x, np.ndarray) or isinstance(y, np.ndarray):
+                assert x is not None and y is not None, f.name
+                assert x.dtype == y.dtype and np.array_equal(x, y), f.name
+            else:
+                assert x == y, f.name
+
+    def without(r, cols):
+        return {k: v for k, v in r.items() if k not in cols}
+
+    assert any(r["p_off"] is not None for r in rows)
+    for enc, r, f in zip(enc_from_arrow(tbl, flags), rows, flags):
+        same(enc, enc_from_row(r if f else without(r, ("positions", "p_off"))))
+    bare = tbl.drop_columns(["positions", "p_off", "fmt"])
+    for enc, r in zip(enc_from_arrow(bare), rows):
+        same(enc, enc_from_row(without(r, ("positions", "p_off", "fmt"))))
