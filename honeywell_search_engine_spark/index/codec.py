@@ -488,15 +488,6 @@ FMT_TAGS = {FMT_VB: 0, FMT_PFOR: 1}
 FMT_FROM_TAG = {v: k for k, v in FMT_TAGS.items()}
 
 
-def _stream_decode(fmt: str, buf, n: int, offs=None) -> np.ndarray:
-    """n values of one stream run (decode_blocks' selective path): pfor
-    reads its blocks at `offs` (per-block byte offsets, relative to
-    buf); varbyte ignores offs (its decode is already one pass)."""
-    if fmt == FMT_PFOR:
-        return pfor_decode_at(buf, offs, n)
-    return varbyte_decode(buf, n)
-
-
 def bm25_u(tf: np.ndarray, doclen: np.ndarray, avgdl: float) -> np.ndarray:
     """Idf-free BM25 factor, float64 (matches stats.bm25_part_col / oracle)."""
     tf = tf.astype(np.float64)
@@ -554,6 +545,114 @@ class EncodedList:
     # codec of the deltas/tfs/doclens streams: FMT_VB (default) or
     # FMT_PFOR. positions are ALWAYS varbyte (see the PFor section note).
     fmt: str = FMT_VB
+    # a fused list (``fuse``): each block's first posting (then n) and the
+    # docid its delta chain starts from. None for one shard's list, whose
+    # block b starts at b * BLOCK and chains off bmax_docid[b - 1]
+    b_start: np.ndarray | None = None
+    b_base: np.ndarray | None = None
+
+
+# a fused list keys every posting (shard << KEY_BITS) | lid: one int64
+# per posting, ascending in (shard, lid)
+KEY_BITS = 32
+LID_MASK = (1 << KEY_BITS) - 1
+_KEY_MAX_SHARD = 1 << 31  # the shard bits stay below the int64 sign bit
+
+
+def keys_of(shards, lids) -> np.ndarray:
+    """The int64 posting keys of aligned `shards` and `lids` (either may
+    be one value)."""
+    return (np.asarray(shards, dtype=np.int64) << KEY_BITS) | np.asarray(lids, dtype=np.int64)
+
+
+def _layout(encs: list) -> tuple[np.ndarray, np.ndarray]:
+    """(posting count, uint64 delta base) of every block of `encs`, back
+    to back: one shard's list has BLOCK postings per block (the last one
+    the rest) and chains block b off bmax_docid[b - 1] (0 for block 0);
+    a fused list carries its own."""
+    nbs = np.fromiter((e.bmax_docid.size for e in encs), dtype=np.int64, count=len(encs))
+    ns = np.fromiter((e.n for e in encs), dtype=np.int64, count=len(encs))
+    first = np.cumsum(nbs) - nbs
+    counts = np.full(int(nbs.sum()), BLOCK, dtype=np.int64)
+    counts[first + nbs - 1] = ns - (nbs - 1) * BLOCK
+    bases = np.zeros(counts.size, dtype=np.uint64)
+    bases[1:] = np.concatenate([e.bmax_docid for e in encs])[:-1]
+    bases[first] = 0
+    for e, f, nb in zip(encs, first, nbs):
+        if e.b_start is not None:
+            counts[f : f + nb] = np.diff(e.b_start)
+            bases[f : f + nb] = e.b_base
+    return counts, bases
+
+
+def _block_layout(enc: EncodedList, blocks: np.ndarray) -> tuple:
+    """(first posting, posting count, uint64 delta base) of the selected
+    `blocks` of one list, as ``_layout`` reads them, in O(len(blocks))."""
+    if enc.b_start is not None:
+        first = enc.b_start[blocks]
+        return first, enc.b_start[blocks + 1] - first, enc.b_base[blocks]
+    first = blocks * BLOCK
+    bases = np.zeros(blocks.size, dtype=np.uint64)
+    bases[blocks > 0] = enc.bmax_docid[blocks[blocks > 0] - 1]
+    return first, np.minimum(first + BLOCK, enc.n) - first, bases
+
+
+def _restart(deltas: np.ndarray, counts: np.ndarray, bases: np.ndarray) -> np.ndarray:
+    """Docids of blocks decoded back to back: one cumsum of the deltas
+    whose chain restarts at each block (of `counts` postings) from its
+    base (modular uint64 arithmetic, exact)."""
+    csum = np.cumsum(deltas, dtype=np.uint64)
+    first = np.cumsum(counts) - counts
+    before = np.zeros(counts.size, dtype=np.uint64)
+    before[1:] = csum[first[1:] - 1]
+    return csum + np.repeat(bases - before, counts)
+
+
+def fuse(groups: list) -> list[EncodedList]:
+    """One list per group of `groups` ([(shard, EncodedList)] of one term,
+    ascending shards, each part one shard's list), all in one vectorized
+    pass: docids keyed (shard << KEY_BITS) | lid, byte streams joined with
+    their block offsets shifted, and b_start / b_base recording where each
+    part's blocks start and restart, so every decode reads it as one list
+    (one part is the special case). A group keeps its positions when every
+    part has them. ValueError when a key cannot hold a posting — a shard
+    outside [0, 2**31) or a lid of 2**32 or more — so none collide."""
+    parts = [p for g in groups for p in g]
+    if not parts:
+        return []
+    encs = [e for _, e in parts]
+    shards = np.fromiter((s for s, _ in parts), dtype=np.int64, count=len(parts))
+    if shards.min() < 0 or shards.max() >= _KEY_MAX_SHARD:
+        raise ValueError(f"shard ids must lie in [0, 2**31) to key postings; got {shards.tolist()}")
+    if len({e.fmt for e in encs}) > 1:
+        raise ValueError("fuse takes lists of one codec (one index)")
+    nbs = np.fromiter((e.bmax_docid.size for e in encs), dtype=np.int64, count=len(encs))
+    bmax = np.concatenate([e.bmax_docid for e in encs])
+    if bmax[np.cumsum(nbs) - 1].max() >> KEY_BITS:
+        raise ValueError("local ids must be below 2**32 to key postings")
+    prefix = np.repeat(keys_of(shards, 0), nbs)
+    bmax += prefix
+    bmax_u = np.concatenate([e.bmax_u for e in encs])
+    counts, bases = _layout(encs)
+    bases += prefix.astype(np.uint64)
+    starts = np.zeros(counts.size + 1, dtype=np.int64)
+    np.cumsum(counts, out=starts[1:])
+    bounds = np.zeros(len(groups) + 1, dtype=np.int64)  # each group's parts
+    np.cumsum([len(g) for g in groups], out=bounds[1:])
+    blk = np.concatenate(([0], np.cumsum(nbs)))[bounds]  # and its blocks
+    (deltas, d_off), (tfs, t_off), (doclens, l_off) = (
+        _joined(encs, *st, bounds) for st in _STREAMS)
+    pos = [all(e.p_off is not None for e in encs[a:b]) for a, b in zip(bounds, bounds[1:])]
+    positions, p_off = _joined(encs, "positions", "p_off", bounds)
+    out = []
+    for g, (a, b) in enumerate(zip(blk[:-1].tolist(), blk[1:].tolist())):
+        out.append(EncodedList(
+            int(starts[b] - starts[a]), bmax[a:b], bmax_u[a:b],
+            d_off[a:b], t_off[a:b], l_off[a:b], deltas[g], tfs[g], doclens[g],
+            positions[g] if pos[g] else b"", p_off[a:b] if pos[g] else None,
+            encs[0].fmt, starts[a : b + 1] - starts[a], bases[a:b],
+        ))
+    return out
 
 
 def encode_postings(
@@ -643,10 +742,8 @@ def _abs_positions(flat: np.ndarray, tfs: np.ndarray) -> np.ndarray:
 def _split_positions(flat: np.ndarray, tfs: np.ndarray) -> list:
     """Flat decoded position-deltas -> list of absolute position arrays,
     one per posting."""
-    tfs64 = tfs.astype(np.int64)
-    starts = np.zeros(tfs64.size, dtype=np.int64)
-    np.cumsum(tfs64[:-1], out=starts[1:])
-    return np.split(_abs_positions(flat, tfs), starts[1:])
+    ends = np.cumsum(tfs.astype(np.int64))
+    return np.split(_abs_positions(flat, tfs), ends[:-1])[: tfs.size]
 
 
 def _ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
@@ -659,27 +756,31 @@ def _ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
 _STREAMS = (("deltas", "d_off"), ("tfs", "t_off"), ("doclens", "l_off"))
 
 
-def _decode_streams(encs: list, ns: np.ndarray, stream) -> np.ndarray:
-    """One stream of every list in `encs` (all of one codec), back to back:
-    the lists' bytes concatenated and decoded in ONE block decode. PFor
-    takes the lists' block offsets shifted by each list's byte base, and
-    per-block counts with each list's last block partial; varbyte is
-    self-delimiting, so the concatenated bytes decode as one stream."""
-    name, off_name = stream
+def _joined(encs: list, name: str, off_name: str, bounds) -> tuple[list, np.ndarray]:
+    """One stream of the lists `encs`, joined per group (the lists
+    bounds[i]:bounds[i + 1]): each group's bytes concatenated, and each
+    block's offset in its group's bytes (its list's block offsets shifted
+    by the list's byte base in the group). A list without the stream
+    (positions not read) reads as empty."""
     bufs = [getattr(e, name) for e in encs]
-    buf = b"".join(bufs)
-    total = int(ns.sum())
-    if encs[0].fmt != FMT_PFOR:
-        return varbyte_decode(buf, total)
-    nbs = (ns + BLOCK - 1) // BLOCK
     lens = np.fromiter((len(b) for b in bufs), dtype=np.int64, count=len(bufs))
-    offs = np.concatenate(
-        [np.asarray(getattr(e, off_name), dtype=np.int64)[:nb] for e, nb in zip(encs, nbs)]
-    ) + np.repeat(np.cumsum(lens) - lens, nbs)
-    counts = np.full(int(nbs.sum()), BLOCK, dtype=np.int64)
-    last = np.cumsum(nbs)[nbs > 0] - 1
-    counts[last] = ns[nbs > 0] - (nbs[nbs > 0] - 1) * BLOCK
-    return pfor_decode_at(buf, offs, counts)
+    base = np.cumsum(lens) - lens
+    base -= np.repeat(base[bounds[:-1]], np.diff(bounds))
+    nbs = [e.bmax_docid.size for e in encs]
+    offs = np.concatenate([
+        np.zeros(nb, dtype=np.int64) if o is None else np.asarray(o, dtype=np.int64)
+        for o, nb in zip((getattr(e, off_name) for e in encs), nbs)])
+    joined = [b"".join(bufs[a:b]) for a, b in zip(bounds[:-1], bounds[1:])]
+    return joined, offs + np.repeat(base, nbs)
+
+
+def _stream_decode(fmt: str, buf, offs: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Blocks of one stream back to back in `buf` (block i at byte offs[i],
+    counts[i] values) in ONE block decode: PFor at the offsets, or one
+    varbyte decode (self-delimiting, so the offsets are not needed)."""
+    if fmt == FMT_PFOR:
+        return pfor_decode_at(buf, offs, counts)
+    return varbyte_decode(buf, int(counts.sum()))
 
 
 def decode_concat(encs: list, with_positions=False):
@@ -692,21 +793,20 @@ def decode_concat(encs: list, with_positions=False):
     list built without positions is never in `want`.
 
     The lists share one codec (an index has one). Each stream of the
-    lists decodes in one block decode (``_decode_streams``), the docids
-    in one segmented cumsum that restarts at each list, and the flagged
-    lists' positions in one varbyte decode — the per-call cost is paid
-    per query or batch, not per list."""
+    lists decodes in one block decode (``_joined``, ``_stream_decode``),
+    the docids in one segmented cumsum that restarts at each block from
+    its delta base (``_layout``, ``_restart``), and the flagged lists'
+    positions in one varbyte decode — the per-call cost is paid per
+    query or batch, not per list."""
     ns = np.fromiter((e.n for e in encs), dtype=np.int64, count=len(encs))
     starts = np.cumsum(ns) - ns
     if len({e.fmt for e in encs}) > 1:
         raise ValueError("decode_concat takes lists of one codec (one index)")
-    deltas, tfs, doclens = (_decode_streams(encs, ns, st) for st in _STREAMS)
-    # docids: one cumsum, minus the running total before each list start
-    csum = np.cumsum(deltas, dtype=np.uint64)
-    base = np.zeros(len(encs), dtype=np.uint64)
-    head = starts > 0
-    base[head] = csum[starts[head] - 1]
-    docids = csum - np.repeat(base, ns)
+    counts, bases = _layout(encs)
+    deltas, tfs, doclens = (
+        _stream_decode(encs[0].fmt, buf, offs, counts)
+        for (buf,), offs in (_joined(encs, *st, [0, len(encs)]) for st in _STREAMS))
+    docids = _restart(deltas, counts, bases)
     tfs += np.uint64(1)
     flags = (
         [bool(with_positions)] * len(encs)
@@ -763,10 +863,13 @@ def decode_postings(
     return pl
 
 
-def _block_bounds(enc: EncodedList, b: int):
-    s = b * BLOCK
-    e = min(s + BLOCK, enc.n)
-    return s, e
+def _block_bytes(buf: bytes, off, blocks: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """The bytes of the selected `blocks` of one stream (`buf`, per-block
+    byte offsets `off`) back to back, in one gather, and each block's
+    offset in them."""
+    off = np.asarray(off, dtype=np.int64)
+    size = np.append(off[1:], len(buf))[blocks] - off[blocks]
+    return np.frombuffer(buf, dtype=np.uint8)[_ranges(off[blocks], size)], np.cumsum(size) - size
 
 
 def decode_blocks(
@@ -778,75 +881,27 @@ def decode_blocks(
     """Selective decode of the given (sorted, unique) block indices only —
     the skip path: O(bytes of selected blocks), not O(list length).
 
-    Delta base for block b is bmax_docid[b-1] (the last docid of the
-    previous block), so each block is independently decodable. Positions
-    (if present and requested) decode per block too: the block's position
-    byte range is p_off[b]..p_off[b+1] and the per-posting split falls out
-    of the block's tfs.
+    Every block is independently decodable: its delta chain starts from
+    its base (``_block_layout``). The selected blocks' bytes are gathered
+    once per stream (``_block_bytes``), so each stream decodes in one call
+    and the docids in one restarting cumsum. The positions (if present
+    and requested) come from the varbyte positions stream the same way
+    (p_off per block), split by the blocks' tfs.
     """
     if isinstance(enc, MemoList):
         return _memo_slice_blocks(enc, blocks, with_positions, flat_positions)
     blocks = np.asarray(blocks, dtype=np.int64)
-    nblocks = enc.bmax_docid.size
-    parts_d, parts_t, parts_l = [], [], []
-    parts_p: list = []
-    want_pos = with_positions and enc.p_off is not None
-    # decode CONTIGUOUS RUNS of blocks in one varbyte call per stream:
-    # delta chains are unbroken inside a run (block b's first delta is
-    # relative to bmax_docid[b-1]), so only the run's base needs adding.
-    # A head-term candidate set typically selects most blocks — that
-    # collapses hundreds of per-block decodes into a handful.
-    runs = (
-        np.split(blocks, np.flatnonzero(np.diff(blocks) != 1) + 1)
-        if blocks.size
-        else []
-    )
-    for run in runs:
-        b0, b1 = int(run[0]), int(run[-1])
-        s = b0 * BLOCK
-        e = min((b1 + 1) * BLOCK, enc.n)
-        cnt = e - s
-        d_end = enc.d_off[b1 + 1] if b1 + 1 < nblocks else len(enc.deltas)
-        t_end = enc.t_off[b1 + 1] if b1 + 1 < nblocks else len(enc.tfs)
-        l_end = enc.l_off[b1 + 1] if b1 + 1 < nblocks else len(enc.doclens)
-        if enc.fmt == FMT_PFOR:
-            d_ro = np.asarray(enc.d_off[b0 : b1 + 1], dtype=np.int64)
-            t_ro = np.asarray(enc.t_off[b0 : b1 + 1], dtype=np.int64)
-            l_ro = np.asarray(enc.l_off[b0 : b1 + 1], dtype=np.int64)
-            d_ro, t_ro, l_ro = d_ro - d_ro[0], t_ro - t_ro[0], l_ro - l_ro[0]
-        else:
-            d_ro = t_ro = l_ro = None
-        d = _stream_decode(enc.fmt, enc.deltas[enc.d_off[b0] : d_end], cnt, d_ro)
-        base = np.uint64(enc.bmax_docid[b0 - 1]) if b0 > 0 else np.uint64(0)
-        docids = np.cumsum(d, dtype=np.uint64) + base
-        parts_d.append(docids)
-        tfs_b = _stream_decode(enc.fmt, enc.tfs[enc.t_off[b0] : t_end], cnt, t_ro) + np.uint64(1)
-        parts_t.append(tfs_b)
-        parts_l.append(_stream_decode(enc.fmt, enc.doclens[enc.l_off[b0] : l_end], cnt, l_ro))
-        if want_pos:
-            p_end = enc.p_off[b1 + 1] if b1 + 1 < nblocks else len(enc.positions)
-            flat = varbyte_decode(
-                enc.positions[enc.p_off[b0] : p_end], int(tfs_b.sum())
-            )
-            if flat_positions:
-                parts_p.append(_abs_positions(flat, tfs_b))
-            else:
-                parts_p.extend(_split_positions(flat, tfs_b))
-    if not parts_d:
-        z = np.zeros(0, dtype=np.uint64)
-        if not want_pos:
-            pos = None
-        else:
-            pos = np.zeros(0, dtype=np.uint64) if flat_positions else []
-        return PostingList(z, z.copy(), z.copy(), pos)
-    return PostingList(
-        np.concatenate(parts_d),
-        np.concatenate(parts_t),
-        np.concatenate(parts_l),
-        (np.concatenate(parts_p) if flat_positions else parts_p)
-        if want_pos
-        else None,
-    )
+    _, cnt, bases = _block_layout(enc, blocks)
+    deltas, tfs, doclens = (
+        _stream_decode(enc.fmt, *_block_bytes(getattr(enc, name), getattr(enc, off), blocks), cnt)
+        for name, off in _STREAMS)
+    tfs += np.uint64(1)
+    pos = None
+    if with_positions and enc.p_off is not None:
+        buf, _ = _block_bytes(enc.positions, enc.p_off, blocks)
+        flat = varbyte_decode(buf, int(tfs.sum()))
+        pos = _abs_positions(flat, tfs) if flat_positions else _split_positions(flat, tfs)
+    return PostingList(_restart(deltas, cnt, bases), tfs, doclens, pos)
 
 
 class MemoList:
@@ -854,9 +909,9 @@ class MemoList:
 
     Block metadata (n / bmax_docid / bmax_u) proxies to the encoded row,
     while decode_postings/decode_blocks return SLICES of the cached
-    arrays — block b is exactly postings [b*BLOCK, (b+1)*BLOCK) of the
-    full decode, so every encoded kernel, INCLUDING its exact block-max
-    score pruning, runs decode-free. This is the serving decoded-LRU
+    arrays — block b is exactly its postings of the full decode (from b *
+    BLOCK, or from b_start[b] in a fused list), so every encoded kernel,
+    INCLUDING its exact block-max score pruning, runs decode-free. This is the serving decoded-LRU
     representation (query/local.py): a decoded-only PostingList would
     force the kernels to score whole lists (no pruning), which breaks
     down on Zipf head terms at scale; MemoList keeps the skip structure
@@ -943,26 +998,11 @@ def _memo_slice_blocks(
     pl = ml.pl
     want_pos = _memo_positions_check(ml, with_positions, flat)
     blocks = np.asarray(blocks, dtype=np.int64)
-    if blocks.size == 0:
-        z = np.zeros(0, dtype=np.uint64)
-        pos = np.zeros(0, dtype=np.uint64) if want_pos else None
-        return PostingList(z, z.copy(), z.copy(), pos)
-    runs = np.split(blocks, np.flatnonzero(np.diff(blocks) != 1) + 1)
-    off = ml._pos_offsets() if want_pos else None
-    pd_, pt_, pl_, pp_ = [], [], [], []
-    for run in runs:
-        s = int(run[0]) * BLOCK
-        e = min((int(run[-1]) + 1) * BLOCK, ml.n)
-        pd_.append(pl.docids[s:e])
-        pt_.append(pl.tfs[s:e])
-        pl_.append(pl.doclens[s:e])
-        if want_pos:
-            pp_.append(pl.positions[off[s] : off[e]])
-    if len(pd_) == 1:  # common case: one contiguous run -> zero-copy views
-        return PostingList(pd_[0], pt_[0], pl_[0], pp_[0] if want_pos else None)
-    return PostingList(
-        np.concatenate(pd_),
-        np.concatenate(pt_),
-        np.concatenate(pl_),
-        np.concatenate(pp_) if want_pos else None,
-    )
+    s, cnt, _ = _block_layout(ml.enc, blocks)
+    e = s + cnt
+    at = _ranges(s, cnt)
+    pos = None
+    if want_pos:
+        off = ml._pos_offsets()
+        pos = pl.positions[_ranges(off[s], off[e] - off[s])]
+    return PostingList(pl.docids[at], pl.tfs[at], pl.doclens[at], pos)

@@ -108,22 +108,21 @@ def append_local_ids(
     )
 
 
-def lids_by_shard(docmap: DataFrame, docids) -> dict[int, np.ndarray]:
-    """Translate a global docid set to {shard: sorted lid array} via a
+def doc_keys(docmap: DataFrame, docids) -> np.ndarray:
+    """Translate a global docid set to its sorted posting keys
+    (shard << KEY_BITS) | local_id (index/codec.py ``fuse``) via a
     broadcast semi-join against the docmap (the set — tombstones or a
     query scope — is small relative to the corpus; the docmap scan is
     column-pruned to 3 columns)."""
-    spark = docmap.sparkSession
+    from honeywell_search_engine_spark.index.codec import keys_of
+
     ids = sorted(int(d) for d in docids)
     if not ids:
-        return {}
-    dead_df = spark.createDataFrame([(d,) for d in ids], "docid long")
+        return np.zeros(0, dtype=np.int64)
+    ids_df = docmap.sparkSession.createDataFrame([(d,) for d in ids], "docid long")
     rows = (
-        docmap.join(F.broadcast(dead_df), "docid", "left_semi")
+        docmap.join(F.broadcast(ids_df), "docid", "left_semi")
         .select("shard", "local_id")
         .collect()
     )
-    out: dict[int, list[int]] = {}
-    for r in rows:
-        out.setdefault(int(r["shard"]), []).append(int(r["local_id"]))
-    return {s: np.array(sorted(v), dtype=np.int64) for s, v in out.items()}
+    return np.unique(keys_of([r["shard"] for r in rows], [r["local_id"] for r in rows]))

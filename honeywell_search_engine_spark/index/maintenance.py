@@ -64,21 +64,20 @@ def _rewrite_kernel(dead_bc, avgdl: float):
     columns, ``enc_from_arrow``; every ``decode_chunks`` range in one
     ``codec.decode_many``), drop the postings of tombstoned lids (their
     positions masked by ``np.repeat(keep, tfs)``) and re-encode. dead_bc:
-    Spark broadcast of {shard: sorted int64 tombstoned-lid array} — one
-    copy per executor, not a per-task closure set."""
-    _EMPTY = np.zeros(0, dtype=np.int64)
+    Spark broadcast of the sorted tombstoned posting keys (shard <<
+    KEY_BITS) | lid — one copy per executor, not a per-task closure set."""
 
     def rewrite(batches):
         import pyarrow as pa
 
-        dead_map = dead_bc.value
+        dead = dead_bc.value
         for batch in batches:
             out = []
             encs = enc_from_arrow(batch)
             terms, shards, buckets = (batch.column(c).to_pylist() for c in ("term", "shard", "bucket"))
             for lo, hi in decode_chunks(batch.column("ctf").to_numpy()):
                 for i, pl in enumerate(codec.decode_many(encs[lo:hi], True), lo):
-                    keep = ~np.isin(pl.docids.astype(np.int64), dead_map.get(shards[i], _EMPTY))
+                    keep = ~np.isin(codec.keys_of(shards[i], pl.docids), dead)
                     if not keep.any():
                         continue
                     pos = None
@@ -171,7 +170,7 @@ def compact(spark: SparkSession, index_dir: str, _fail_at: str | None = None) ->
     # left-anti join against a tombstone DataFrame — NOT ~isin([literals]):
     # a million tombstones must not become a million-node Catalyst
     # expression. The dead side is broadcast (small relative to the corpus).
-    from honeywell_search_engine_spark.index.docmap import lids_by_shard
+    from honeywell_search_engine_spark.index.docmap import doc_keys
 
     dead_sorted = np.array(sorted(dead), dtype=np.int64)
     dead_df = spark.createDataFrame(
@@ -192,8 +191,7 @@ def compact(spark: SparkSession, index_dir: str, _fail_at: str | None = None) ->
     new_avgdl = float(row["s"] or 0) / new_n if new_n else 0.0
 
     # rewrite segments (decode -> mask dead lids -> re-encode)
-    dead_map = lids_by_shard(docmap, dead)
-    dead_bc = spark.sparkContext.broadcast(dead_map)
+    dead_bc = spark.sparkContext.broadcast(doc_keys(docmap, dead))
     rewritten = (
         spark.read.parquet(f"{index_dir}/segments")
         .mapInArrow(_rewrite_kernel(dead_bc, new_avgdl), schema=SEGMENT_SCHEMA)

@@ -1040,46 +1040,45 @@ def _snapshot_files(df: DataFrame) -> list[str]:
     return sorted(unquote(urlparse(u).path) for u in df.inputFiles())
 
 
-def docids_of_lids(docmap_files: list[str], shards, lids: np.ndarray) -> np.ndarray:
-    """Global docids of (shard, local id) pairs, aligned with `lids`
-    (`shards` is one shard or an array aligned with `lids`): the docvalues
-    lookup a shard-kernel task runs on its own output. ONE pyarrow read of
-    `docmap_files` (a handle's snapshot) with ``shard IN shards AND
-    local_id IN lids`` pushed into the row-group statistics, however many
-    shards the task evaluated; no Spark scan. Row groups prune only as far
-    as the docmap layout clusters (shard, local_id). ValueError when a
-    pair is missing from the docmap."""
+def docids_of_lids(docmap_files: list[str], keys: np.ndarray) -> np.ndarray:
+    """Global docids of posting keys (shard << KEY_BITS) | local id,
+    aligned with `keys`: the docvalues lookup a shard-kernel task runs on
+    its own output. ONE pyarrow read of `docmap_files` (a handle's
+    snapshot) with ``shard IN shards AND local_id IN lids`` pushed into
+    the row-group statistics, however many shards the task evaluated; no
+    Spark scan. Row groups prune only as far as the docmap layout
+    clusters (shard, local_id). ValueError when a key is missing from the
+    docmap."""
     import pyarrow as pa
     import pyarrow.dataset as ds
 
-    lids = np.asarray(lids, dtype=np.int64)
-    shards = np.broadcast_to(np.asarray(shards, dtype=np.int64), lids.shape)
-    out = np.empty(lids.size, dtype=np.int64)
-    if lids.size == 0:
-        return out
+    keys = np.asarray(keys, dtype=np.int64)
+    if keys.size == 0:
+        return np.empty(0, dtype=np.int64)
+    want = np.unique(keys)
     dset = ds.dataset(docmap_files, format="parquet")
-    want_shards = np.unique(shards)
     tbl = dset.to_table(
         columns=["shard", "local_id", "docid"],
-        filter=ds.field("shard").isin(pa.array(want_shards, dset.schema.field("shard").type))
-        & ds.field("local_id").isin(pa.array(np.unique(lids), pa.int64())),
+        filter=ds.field("shard").isin(
+            pa.array(np.unique(want >> codec.KEY_BITS), dset.schema.field("shard").type))
+        & ds.field("local_id").isin(pa.array(np.unique(want & codec.LID_MASK), pa.int64())),
     )
-    got_shard = tbl.column("shard").to_numpy()
-    got_lid = tbl.column("local_id").to_numpy()
-    got_docid = tbl.column("docid").to_numpy()
-    for shard in want_shards:
-        at = shards == shard
-        want = np.unique(lids[at])
-        # the read also returns other shards' wanted lids of this shard
-        mine = (got_shard == shard) & np.isin(got_lid, want)
-        order = np.argsort(got_lid[mine])
-        have = got_lid[mine][order]
-        if have.size != want.size:
-            raise ValueError(
-                f"docmap has {have.size} of {want.size} local ids asked for in shard {shard}"
-            )
-        out[at] = got_docid[mine][order][np.searchsorted(have, lids[at])]
-    return out
+    have = codec.keys_of(tbl.column("shard").to_numpy(), tbl.column("local_id").to_numpy())
+    found = int(np.isin(want, have).sum())
+    if found != want.size:
+        raise ValueError(f"docmap has {found} of {want.size} (shard, local id) keys asked for")
+    order = np.argsort(have)
+    return tbl.column("docid").to_numpy()[order[np.searchsorted(have, keys, sorter=order)]]
+
+
+def fuse_rows(terms, shards, encs) -> dict[str, codec.EncodedList]:
+    """{term: one keyed list} over segment rows (aligned `terms`, `shards`
+    and EncodedLists): each term's rows fused in shard order (``codec.fuse``),
+    the one list per term a serving node's or Spark task's kernel call sees."""
+    by_term: dict[str, list] = {}
+    for t, s, e in sorted(zip(terms, shards, encs), key=lambda r: (r[0], r[1])):
+        by_term.setdefault(t, []).append((s, e))
+    return dict(zip(by_term, codec.fuse(list(by_term.values()))))
 
 
 class SegmentIndex:
@@ -1163,24 +1162,24 @@ class SegmentIndex:
         self.close()
 
     def dead_broadcast(self):
-        """Tombstones translated to shard-local ordinals and memoized as a
-        Spark broadcast of {shard: sorted int64 lid array} (None when
-        empty). A million tombstones is one ~8 MB broadcast shipped once
-        per executor — never a per-task closure set."""
+        """Tombstones translated to posting keys (shard << KEY_BITS) | lid
+        and memoized as a Spark broadcast of one sorted int64 array (None
+        when empty). A million tombstones is one ~8 MB broadcast shipped
+        once per executor — never a per-task closure set."""
         if not self.tombstones:
             return None
         if self._dead_bc is None:
-            from honeywell_search_engine_spark.index.docmap import lids_by_shard
+            from honeywell_search_engine_spark.index.docmap import doc_keys
 
-            by_shard = lids_by_shard(self.docmap, self.tombstones)
-            self._dead_bc = self.spark.sparkContext.broadcast(by_shard)
+            keys = doc_keys(self.docmap, self.tombstones)
+            self._dead_bc = self.spark.sparkContext.broadcast(keys)
         return self._dead_bc
 
     def scope_broadcast(self, allowed_docids):
         """A query-time docid scope (the reference restricts every search
         to the caller's own documents — allowed_ids,
-        backend/app/routers/search.py:99-116 / F2-F3) translated to
-        {shard: sorted lid array} and broadcast, same mechanics as
+        backend/app/routers/search.py:99-116 / F2-F3) translated to one
+        sorted posting-key array and broadcast, same mechanics as
         tombstones. Returns None for an unrestricted query.
 
         MEMOIZED per docid set (a caller's scope repeats across their
@@ -1199,10 +1198,9 @@ class SegmentIndex:
         if key in self._scope_bcs:
             self._scope_bcs.move_to_end(key)
             return self._scope_bcs[key]
-        from honeywell_search_engine_spark.index.docmap import lids_by_shard
+        from honeywell_search_engine_spark.index.docmap import doc_keys
 
-        by_shard = lids_by_shard(self.docmap, allowed_docids)
-        bc = self.spark.sparkContext.broadcast(by_shard)
+        bc = self.spark.sparkContext.broadcast(doc_keys(self.docmap, allowed_docids))
         self._scope_bcs[key] = bc
         if len(self._scope_bcs) > 64:  # bound driver+executor memory
             _, old = self._scope_bcs.popitem(last=False)

@@ -11,9 +11,9 @@ compacting with `merge_deltas` only when the generation count or delta
 ratio crosses a threshold. This module is that read path: one more front
 end on the shared query surface (query/local.QuerySurface), whose
 ``_search`` reads every generation's posting rows for the plan's terms,
-sums their df into the logical df, evaluates the one query plan in every
-generation with that df (ServingIndex ``_eval``) and merges the hits with
-the same (-score, docid) ``top_k`` as a ServingIndex's shards.
+sums their df into the logical df, evaluates the one query plan once in
+every generation with that df (ServingIndex ``_eval``) and merges the
+hits with the same (-score, docid) ``top_k`` as a ShardRouter's nodes.
 
 Exactness (pinned bit-for-bit against the eagerly merged index in
 tests/test_generations.py) requires three corrections:
@@ -28,9 +28,9 @@ tests/test_generations.py) requires three corrections:
 2. **Newest-wins shadowing.** A docid re-ingested in a newer generation
    must not surface from an older one, even when only the OLD version
    matches the query (the document was replaced, not duplicated).
-   Shadowed docids are translated to per-shard lids and unioned into the
-   older generation's tombstone arrays — the existing kernel dead-list
-   path, zero new kernel code.
+   Shadowed docids are translated to posting keys and unioned into the
+   older generation's sorted tombstone keys — the existing kernel
+   dead-list path, zero new kernel code.
 3. **df correction.** idf uses df from segment metadata (df_g = Σ n
    over a generation's rows of t); the merged index drops a replaced
    doc's old posting rows, so global df(t) = Σ_generations df_g(t) −
@@ -66,6 +66,7 @@ import json
 
 import numpy as np
 
+from honeywell_search_engine_spark.index.codec import KEY_BITS, keys_of
 from honeywell_search_engine_spark.query.local import QuerySurface, ServingIndex, top_k
 
 
@@ -173,25 +174,19 @@ class GenerationSet(QuerySurface):
             g.n_docs = self.n_docs
             g.avgdl = self.avgdl
 
-        # ---- shadowed docids -> older-generation dead lids ---------------
+        # ---- shadowed docids -> older-generation dead keys ---------------
         self._df_corr: dict[str, int] = {}
-        for i, g in enumerate(self.gens):
-            if not shadows[i].size:
-                continue
-            extra = g._lids_by_shard(sorted(int(d) for d in shadows[i]))
-            for s, arr in extra.items():
-                cur = g._dead.get(s)
-                g._dead[s] = (
-                    np.union1d(cur, arr) if cur is not None and len(cur)
-                    else np.sort(arr)
-                )
-            self._df_corr_update(paths[i], extra)
+        for g, sh in zip(self.gens, shadows):
+            if sh.size:
+                keys = g._keys_of(sh)
+                g._dead = np.union1d(g._dead, keys)
+                self._df_corr_update(g.path, keys)
 
-    def _df_corr_update(self, path: str, lids_by_shard: dict) -> None:
+    def _df_corr_update(self, path: str, keys: np.ndarray) -> None:
         """Accumulate df corrections: the distinct (term, shard, lid)
-        postings of THIS generation whose lid is shadowed, decoded from
-        its segment rows of the shadowed shards (segments are the one
-        durable copy of the postings). The output is delta-sized; the
+        postings of THIS generation whose key is shadowed (`keys`,
+        sorted), decoded from its segment rows of the shadowed shards
+        (segments are the one durable copy of the postings). The output is delta-sized; the
         decode covers every list of those shards. Only the re-ingest
         fallback pays it — promotion refuses shadowed generations, so the
         append-only path never runs this."""
@@ -202,14 +197,10 @@ class GenerationSet(QuerySurface):
 
         data = ds.dataset(f"{path}/segments", format="parquet", partitioning="hive")
         hits = []
-        for b in decode_occurrences(
-            data.to_batches(filter=ds.field("shard").isin([int(s) for s in lids_by_shard]))
-        ):
-            shard_np = b.column("shard").to_numpy()
-            lid_np = b.column("lid").to_numpy()
-            want = np.zeros(b.num_rows, dtype=bool)
-            for s, arr in lids_by_shard.items():
-                want |= (shard_np == int(s)) & np.isin(lid_np, np.asarray(arr, dtype=np.int64))
+        shards = np.unique(keys >> KEY_BITS).tolist()
+        for b in decode_occurrences(data.to_batches(filter=ds.field("shard").isin(shards))):
+            want = np.isin(keys_of(b.column("shard").to_numpy(), b.column("lid").to_numpy()),
+                           keys)
             if want.any():
                 hits.append(pa.Table.from_batches([b]).select(["term", "shard", "lid"])
                             .filter(pa.array(want)))
@@ -225,11 +216,11 @@ class GenerationSet(QuerySurface):
 
     # ---- query surface ----------------------------------------------------
 
-    def _rows_for(self, terms, need_pos=()) -> tuple[dict[str, int], list[dict[str, dict]]]:
-        """(logical {term: df}, each generation's {term: {shard:
-        EncodedList}}) — one batched ServingIndex._rows_for per
-        generation (positions for the terms of `need_pos`); df = Σ df_g
-        minus the shadowed postings (``_df_corr``)."""
+    def _rows_for(self, terms, need_pos=()) -> tuple[dict[str, int], list[dict]]:
+        """(logical {term: df}, each generation's {term: fused EncodedList
+        | None}) — one batched ServingIndex._rows_for per generation
+        (positions for the terms of `need_pos`); df = Σ df_g minus the
+        shadowed postings (``_df_corr``)."""
         reads = [g._rows_for(terms, need_pos) for g in self.gens]
         df = {t: sum(d[t] for d, _ in reads) - self._df_corr.get(t, 0) for t in reads[0][0]}
         return df, [rows for _, rows in reads]

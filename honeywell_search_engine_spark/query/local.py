@@ -16,12 +16,11 @@ This module is that serving node, and the one query surface every
 in-process front end shares (``QuerySurface``: search, search_websearch,
 search_phrase, search_near_unordered, search_response). Each method plans
 the query once (query/wand.py ``plan_query``) and hands the plan to the
-front end's ``_search``: ``ServingIndex`` evaluates it over its shards,
-``ShardRouter`` and ``GenerationSet`` (query/generations.py) over their
-members' ``_search``; every one cuts its hits with ``top_k``. The node is
-bit-exact with the Spark path by construction — the SAME plan step and
-shard evaluator (``eval_shard``) over the SAME encoded rows; only the I/O
-differs:
+front end's ``_search``: ``ServingIndex`` evaluates it once over all its
+shards, ``ShardRouter`` and ``GenerationSet`` (query/generations.py) over
+their members' ``_search``, merged with ``top_k``. The node is bit-exact
+with the Spark path by construction — the SAME plan step and evaluator
+(``evaluate``) over the SAME encoded rows; only the I/O differs:
 
 - posting rows: a pyarrow.parquet read of the query's bucket files
   under ``{index}/segments`` — the file list comes from one dataset open
@@ -29,9 +28,10 @@ differs:
   ``reload()``, and only the row groups whose term min/max can hold a
   wanted term are read, only the columns the kernels read — so a query
   touches only its terms' lists (the whole point of an inverted index),
-  a few KB-MB regardless of corpus size. Each term's lists are built
-  straight from the Arrow columns (segments.enc_from_arrow) and
-  LRU-memoized per term as {shard: EncodedList} (hot-term working set).
+  a few KB-MB regardless of corpus size. Each term's rows are built
+  straight from the Arrow columns (segments.enc_from_arrow), fused into
+  ONE list over the node's shards (segments.fuse_rows: postings keyed
+  (shard << 32) | lid) and LRU-memoized per term (hot-term working set).
   positions/p_off are read only for a positional plan's terms: an
   AND/OR term's entry holds none, and its first positional use reads
   the term's rows again, with them, as a miss.
@@ -41,21 +41,23 @@ differs:
   path never reads term_stats. A GenerationSet sums its members' df and
   hands the logical df to every member's ``_eval``.
 - docid rehydration: the docmap (forward index / docvalues) is loaded as
-  per-shard lid->docid arrays. At bench scale that is a few MB; at
-  10^12 docs a serving shard holds only ITS shard's docvalues
-  (mmap/KV-backed), exactly like Lucene docvalues — the per-shard array
-  layout here is that design at sandbox scale.
-- decode: each (term, shard) list is decoded once into a byte-budgeted
-  LRU (``_memo``). A query's lists that miss it — every shard, every
-  term — decode together in ONE ``codec.decode_many`` call: one block
-  decode per stream, not three per list (a pfor stream's values unpack
-  in one gather, ``codec.pfor_decode_at``). Per shard, ``_search`` hands
-  the evaluator the decoded PostingLists (full-scan kernels) when every
-  list the plan touches there is at most FULLSCAN_MAX_POSTINGS long,
-  else the MemoLists (block-max-pruned kernels, block decode = a slice).
+  one sorted key -> docid pair of arrays (and docid -> key for
+  tombstones and scopes). At bench scale that is a few MB; at 10^12
+  docs a serving node holds only ITS shards' docvalues (mmap/KV-backed),
+  exactly like Lucene docvalues — the array layout here is that design
+  at sandbox scale.
+- decode: each term's fused list is decoded once into a byte-budgeted
+  LRU (``_memo``). A query's lists that miss it decode together in ONE
+  ``codec.decode_many`` call: one block decode per stream, not three per
+  list (a pfor stream's values unpack in one gather,
+  ``codec.pfor_decode_at``). ``_eval`` hands the evaluator the decoded
+  PostingLists (full-scan kernels) when every list the plan touches is
+  at most FULLSCAN_MAX_POSTINGS long, else the MemoLists (block-max-
+  pruned kernels, block decode = a slice) — then ONE ``evaluate`` call
+  per query and one key -> docid lookup.
 
 Tombstones are read from the same manifest files as the Spark path and
-translated per shard with vectorized searchsorted. An instance is a
+translated to sorted keys with a vectorized searchsorted. An instance is a
 snapshot of one immutable index generation (see query/cache.py — staged
 swaps require reopening to observe).
 """
@@ -73,16 +75,19 @@ from honeywell_search_engine_spark.index import codec
 from honeywell_search_engine_spark.index.segments import (
     bucket_of,
     enc_from_arrow,
+    fuse_rows,
     load_tombstones,
 )
 from honeywell_search_engine_spark.query import respond
 from honeywell_search_engine_spark.query import wand as W
 
 
-# Per-shard posting-list size above which a serving query switches from
-# the fully-vectorized full-scan kernels to the block-walk kernels with
-# exact block-max pruning (still decode-free via MemoList slices). The
-# crossover: a full scan costs ~10 ns/posting, so a 128k list is ~1.3 ms —
+# Fused-list size (a term over all the node's shards: the one list an
+# ``evaluate`` call sees) above which a serving query switches from the
+# fully-vectorized full-scan kernels to the block-walk kernels with exact
+# block-max pruning (decode-free via MemoList slices). The value, chosen
+# when the check was per shard, is kept; a measured cost rule is still
+# open. A full scan costs ~10 ns/posting, so a 128k list is ~1.3 ms —
 # about the fixed bookkeeping cost of the pruning kernels; below it the
 # scan wins (measured ~3x at 20k docs), above it pruning's skipped work
 # dominates (a Zipf head term at web scale is 10^6-10^8 postings/shard).
@@ -240,8 +245,8 @@ class ServingIndex(QuerySurface):
         # the Spark path — wand._analyzers_for reads this flag)
         self.stemmed = bool(meta.get("stemmed", False))
         self.codec_fmt = meta.get("codec", "vb")
-        # forward index: per-shard lid->docid (lids may have holes after
-        # compaction — fill with -1) + sorted docid->lid translation pair
+        # forward index: sorted posting keys (shard << 32) | lid with
+        # their docids, and the sorted docids with their keys
         dm = pq.read_table(
             f"{path}/docmap", columns=["shard", "local_id", "docid"],
             filters=(
@@ -250,21 +255,14 @@ class ServingIndex(QuerySurface):
                 else None
             ),
         )
-        shard = dm.column("shard").to_numpy()
-        lid = dm.column("local_id").to_numpy()
+        keys = codec.keys_of(dm.column("shard").to_numpy(), dm.column("local_id").to_numpy())
         docid = dm.column("docid").to_numpy()
-        self._docid_of: dict[int, np.ndarray] = {}
-        self._by_docid: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-        for s in np.unique(shard):
-            m = shard == s
-            ls, ds = lid[m], docid[m]
-            arr = np.full(int(ls.max()) + 1 if ls.size else 0, -1, dtype=np.int64)
-            arr[ls] = ds
-            self._docid_of[int(s)] = arr
-            o = np.argsort(ds)
-            self._by_docid[int(s)] = (ds[o], ls[o])
-        # tombstones -> {shard: sorted lid array}
-        self._dead = self._lids_by_shard(load_tombstones(path))
+        o = np.argsort(keys)
+        self._keys, self._docid_of = keys[o], docid[o]
+        o = np.argsort(docid)
+        self._by_docid = (docid[o], keys[o])
+        # tombstones -> sorted keys
+        self._dead = self._keys_of(load_tombstones(path))
         # {bucket: segment files}: listed from one segments dataset open
         # on the first term-row miss, and serving every later miss (no
         # per-miss file discovery)
@@ -272,18 +270,19 @@ class ServingIndex(QuerySurface):
         # path -> (footer, column names, [(row group, term min, term max)]):
         # each file's footer is parsed once, on its bucket's first read
         self._footers: dict[str, tuple] = {}
-        # term -> (df, {owned shard: EncodedList}, positions read)
-        self._term_lru: OrderedDict[str, tuple[int, dict, bool]] = OrderedDict()
+        # term -> (df, the owned shards' fused EncodedList or None,
+        # positions read)
+        self._term_lru: OrderedDict[str, tuple] = OrderedDict()
         self._term_cap = term_cache_capacity
-        # decoded-postings LRU: (term, shard) -> codec.MemoList (encoded
-        # row + its full decode). BYTE-budgeted, not entry-counted: a head
+        # decoded-postings LRU: term -> codec.MemoList (the fused list +
+        # its full decode). BYTE-budgeted, not entry-counted: a head
         # term's entry is 10^4x a tail term's, so a count cap either
         # under-uses memory or blows it — `dec_cache_bytes` (default
         # 256 MiB) is the serving node's decoded-working-set budget; the
         # hot (Zipf head) terms that dominate hits fit first, and
         # eviction only ever hits cold tail entries (which are cheap to
         # re-decode by definition).
-        self._dec_lru: OrderedDict[tuple, object] = OrderedDict()
+        self._dec_lru: OrderedDict[str, codec.MemoList] = OrderedDict()
         self._dec_budget = int(dec_cache_bytes)
         self._dec_bytes = 0
 
@@ -323,28 +322,19 @@ class ServingIndex(QuerySurface):
 
     # ---- translation ----------------------------------------------------
 
-    def _lids_by_shard(self, docids) -> dict[int, np.ndarray]:
-        out: dict[int, np.ndarray] = {}
-        if not docids:
-            return out
-        ids = np.array(sorted(int(d) for d in docids), dtype=np.int64)
-        sh = ids % self.n_shards
-        for s in np.unique(sh):
-            ds, ls = self._by_docid.get(int(s), (None, None))
-            if ds is None:
-                continue
-            want = ids[sh == s]
-            pos = np.searchsorted(ds, want)
-            ok = pos < ds.size
-            ok[ok] = ds[pos[ok]] == want[ok]
-            if ok.any():
-                out[int(s)] = np.sort(ls[pos[ok]])
-        return out
+    def _keys_of(self, docids) -> np.ndarray:
+        """Sorted posting keys of the `docids` this node holds."""
+        ids = np.fromiter(docids, dtype=np.int64)
+        ds, ks = self._by_docid
+        pos = np.searchsorted(ds, ids)
+        ok = pos < ds.size
+        ok[ok] = ds[pos[ok]] == ids[ok]
+        return np.unique(ks[pos[ok]])
 
     # ---- pruned posting reads --------------------------------------------
 
-    def _rows_for(self, terms, need_pos=()) -> tuple[dict[str, int], dict[str, dict]]:
-        """({term: df}, {term: {owned shard: EncodedList}}) — LRU first,
+    def _rows_for(self, terms, need_pos=()) -> tuple[dict[str, int], dict]:
+        """({term: df}, {term: fused EncodedList | None}) — LRU first,
         then ONE read (``_read_terms``) for every missing term and every
         term of `need_pos` cached without its positions. df is Σ n over
         the term's rows of ALL shards (the sum term_stats stores), kept
@@ -389,15 +379,16 @@ class ServingIndex(QuerySurface):
             f = self._footers[path] = (md, names, ranges)
         return f
 
-    def _read_terms(self, terms: list[str], need_pos) -> dict[str, tuple[int, dict, bool]]:
-        """{term: (df, {owned shard: EncodedList}, positions read)} for
+    def _read_terms(self, terms: list[str], need_pos) -> dict[str, tuple]:
+        """{term: (df, fused EncodedList | None, positions read)} for
         `terms`, read with pyarrow.parquet from their buckets' files: per
         file only the row groups whose term min/max can hold one of the
         bucket's terms, then those terms' rows, in the ``_ROW_COLS``.
         ``_POS_COLS`` are read where a term of `need_pos` is, and only
-        those terms' lists keep them. A shard-subset node takes df from
-        every shard's rows and builds lists for its own shards alone —
-        one read either way."""
+        those terms' lists keep them. Each term's rows fuse into one list
+        over the node's shards (``fuse_rows``; None when it has none). A
+        shard-subset node takes df from every shard's rows and builds its
+        lists from its own shards alone — one read either way."""
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
@@ -411,7 +402,7 @@ class ServingIndex(QuerySurface):
                 b = ds.get_partition_keys(frag.partition_expression)["bucket"]
                 self._bucket_files.setdefault(int(b), []).append(frag.path)
         dfs = dict.fromkeys(terms, 0)
-        lists: dict[str, dict] = {t: {} for t in terms}
+        row_terms, row_shards, encs = [], [], []
         by_bucket: dict[int, list[str]] = {}
         for t in sorted(terms):
             by_bucket.setdefault(bucket_of(t, self.n_buckets), []).append(t)
@@ -431,11 +422,12 @@ class ServingIndex(QuerySurface):
                     dfs[t] += n
                 if self._shards is not None:
                     tbl = tbl.filter(pa.array(np.isin(tbl.column("shard").to_numpy(), self._shards)))
-                row_terms = tbl.column("term").to_pylist()
-                encs = enc_from_arrow(tbl, [t in need_pos for t in row_terms])
-                for t, s, enc in zip(row_terms, tbl.column("shard").to_pylist(), encs):
-                    lists[t][s] = enc
-        return {t: (dfs[t], lists[t], t in need_pos) for t in terms}
+                here = tbl.column("term").to_pylist()
+                row_terms += here
+                row_shards += tbl.column("shard").to_pylist()
+                encs += enc_from_arrow(tbl, [t in need_pos for t in here])
+        lists = fuse_rows(row_terms, row_shards, encs)
+        return {t: (dfs[t], lists.get(t), t in need_pos) for t in terms}
 
     # ---- queries ----------------------------------------------------------
 
@@ -448,84 +440,69 @@ class ServingIndex(QuerySurface):
                           *self._rows_for(plan.scan_terms, plan.need_pos))
 
     def _eval(self, plan, k: int, allowed_docids, df: dict[str, int],
-              rows_by_term: dict[str, dict]) -> list[tuple[int, float]]:
-        """The top-k of `plan` over `rows_by_term` (``_rows_for``), with
-        idf from `df` — this node's own, or a GenerationSet's logical df.
-        The lists of every shard come from ``_memo`` in one call (the
-        misses decode in one batch). Per shard the evaluator gets
-        PostingLists when every list the plan touches there is <=
-        FULLSCAN_MAX_POSTINGS (full-scan kernels: lowest constant cost,
-        measured ~3x faster than block walking at that size), else
-        MemoLists (exact block-max pruning, essential for Zipf head terms
-        at scale; block decode is a slice of the cached decode) — then
-        wand.eval_shard, the lid->docid mapping and the top_k cut."""
-        if any(not rows_by_term[t] for t in plan.required):
+              rows_by_term: dict) -> list[tuple[int, float]]:
+        """The top-k of `plan` over `rows_by_term` (``_rows_for``: one
+        fused list per term), with idf from `df` — this node's own, or a
+        GenerationSet's logical df. The lists come from ``_memo`` in one
+        call; the evaluator gets PostingLists (full-scan kernels) when
+        every list is <= FULLSCAN_MAX_POSTINGS, else MemoLists (exact
+        block-max pruning; block decode is a slice of the cached
+        decode). Then ONE wand.evaluate call over the node's keyed
+        lists, tombstones and scope, one key -> docid lookup and the
+        (-score, docid) cut."""
+        rows = {t: r for t, r in rows_by_term.items() if r is not None}
+        if not rows or any(t not in rows for t in plan.required):
             return []  # a required term has no rows here -> no hit
-        idf = {
-            t: math.log1p((self.n_docs - df[t] + 0.5) / (df[t] + 0.5))
-            for t, r in rows_by_term.items() if r
-        }
-        scope = self._lids_by_shard(allowed_docids) if allowed_docids is not None else None
-        by_shard: dict[int, dict[str, codec.EncodedList]] = {}
-        for t, encs in rows_by_term.items():
-            for s, enc in encs.items():
-                by_shard.setdefault(s, {})[t] = enc
-        by_shard = {s: tmap for s, tmap in by_shard.items()
-                    if all(t in tmap for t in plan.required)}
-        lists = self._memo([(t, s, enc, t in plan.need_pos)
-                            for s, tmap in by_shard.items() for t, enc in tmap.items()])
-        parts = []
-        for s, tmap in by_shard.items():
-            full_scan = max(enc.n for enc in tmap.values()) <= FULLSCAN_MAX_POSTINGS
-            by_term = {t: lists[t, s].pl if full_scan else lists[t, s] for t in tmap}
-            res = W.eval_shard(
-                plan, by_term, idf, self.avgdl, k, self._dead.get(s, W._NO_DEAD),
-                scope.get(s, W._NO_DEAD) if scope is not None else None,
-            )
-            arr = self._docid_of[s]
-            parts.append([(int(arr[int(l)]), float(v)) for l, v in res])
-        return top_k(parts, k)
+        idf = {t: math.log1p((self.n_docs - df[t] + 0.5) / (df[t] + 0.5)) for t in rows}
+        lists = self._memo(rows, plan.need_pos)
+        full_scan = max(ml.n for ml in lists.values()) <= FULLSCAN_MAX_POSTINGS
+        res = W.evaluate(
+            plan, {t: ml.pl if full_scan else ml for t, ml in lists.items()}, idf,
+            self.avgdl, k, self._dead,
+            self._keys_of(allowed_docids) if allowed_docids is not None else None,
+        )
+        docids = self._docid_of[np.searchsorted(self._keys, [key for key, _ in res])]
+        scores = np.array([v for _, v in res], dtype=np.float64)
+        o = np.lexsort((docids, -scores))[:k]
+        return list(zip(docids[o].tolist(), scores[o].tolist()))
 
-    def _memo(self, wanted) -> dict:
-        """{(term, shard): MemoList} for `wanted` [(term, shard,
-        EncodedList, positions)]: the list + its full decode (codec.MemoList),
-        LRU-memoized — the hot-term working set of a serving node, same
-        idea as the encoded-row LRU one level up. Kernels run on it
-        unchanged (block decode = slice), so warm queries keep block-max
-        pruning but skip codec work. Every miss decodes in ONE
-        ``codec.decode_many`` call (one block decode per stream) and is
-        inserted into the LRU. Positions (flat absolute) decode only when
-        a positional query first asks (`positions=True`); an entry cached
-        without them is upgraded in place, so AND/OR traffic never pays
-        for position decode and a later phrase query on the same term
-        still hits the LRU."""
+    def _memo(self, rows: dict, need_pos) -> dict:
+        """{term: MemoList} for `rows` {term: fused EncodedList}: the list
+        + its full decode (codec.MemoList), LRU-memoized — the hot-term
+        working set of a serving node, same idea as the encoded-row LRU
+        one level up. Kernels run on it unchanged (block decode = slice),
+        so warm queries keep block-max pruning but skip codec work. Every
+        miss decodes in ONE ``codec.decode_many`` call (one block decode
+        per stream) and is inserted into the LRU. Positions (flat
+        absolute) decode only for the terms of `need_pos`; an entry
+        cached without them is upgraded in place, so AND/OR traffic never
+        pays for position decode and a later phrase query on the same
+        term still hits the LRU."""
         out, miss = {}, []
-        for term, shard, enc, positions in wanted:
-            key = (term, shard)
-            ml = self._dec_lru.get(key)
-            if ml is None or (positions and ml.pl.positions is None):
-                miss.append((key, enc, positions))
+        for term, enc in rows.items():
+            ml = self._dec_lru.get(term)
+            if ml is None or (term in need_pos and ml.pl.positions is None):
+                miss.append(term)
             else:
-                self._dec_lru.move_to_end(key)
-                out[key] = ml
-        decoded = codec.decode_many([enc for _, enc, _ in miss], [p for *_, p in miss])
-        for (key, enc, _), pl in zip(miss, decoded):
-            out[key] = ml = codec.MemoList(enc, pl)
-            old = self._dec_lru.pop(key, None)
+                self._dec_lru.move_to_end(term)
+                out[term] = ml
+        decoded = codec.decode_many([rows[t] for t in miss], [t in need_pos for t in miss])
+        for term, pl in zip(miss, decoded):
+            out[term] = ml = codec.MemoList(rows[term], pl)
+            old = self._dec_lru.pop(term, None)
             if old is not None:  # positions upgrade replaces the entry
                 self._dec_bytes -= old.nbytes
             if ml.nbytes > self._dec_budget:
                 # An entry that alone exceeds the budget (a Zipf head
-                # term at scale: 10^7+ postings/shard decodes past the
-                # 256 MiB default) must NOT enter the LRU — inserting
-                # it first would flush every other warm entry before
-                # being discarded itself. This query serves it from
-                # the batch.
+                # term at scale: 10^7+ postings decodes past the 256 MiB
+                # default) must NOT enter the LRU — inserting it first
+                # would flush every other warm entry before being
+                # discarded itself. This query serves it from the batch.
                 continue
-            self._dec_lru[key] = ml
+            self._dec_lru[term] = ml
             self._dec_bytes += ml.nbytes
             while self._dec_bytes > self._dec_budget:
-                k_old, old = self._dec_lru.popitem(last=False)
+                _, old = self._dec_lru.popitem(last=False)
                 self._dec_bytes -= old.nbytes
         return out
 

@@ -6,16 +6,24 @@ Every query on every front end is "plan, then evaluate":
   immutable ``QueryPlan`` (kind and, or, web, phrase or near; positive
   and negated terms; websearch groups; slop; the terms to scan and the
   terms whose positions the kernels read).
-- ``eval_shard`` evaluates a plan on one shard and is the only code
-  that picks a kernel. Its lists are EncodedLists (Spark path),
+- ``evaluate`` evaluates a plan over one list per term and is the only
+  code that picks a kernel. Its lists are EncodedLists (Spark path),
   MemoLists (cached full decode with block metadata: block-max walk) or
   decoded PostingLists (no block metadata: full scan). The kernels take
   any of the three; the float operations are the same, so scores are
   bit-identical whichever is passed.
 
-The Spark entry points run ``eval_shard`` for a ``{qid: plan}`` map in
-one shard stage (``_shard_stage``); query/local.py's ServingIndex runs it
-per shard in-process.
+A shard is the unit of storage, salting and distribution, not of
+scoring: BM25 is per document, idf is global, and ``shard = pmod(docid,
+n_shards)`` puts every document in exactly one shard. So a serving node
+and a Spark task hold ONE list per term over all their shards
+(``segments.fuse_rows``, ``codec.fuse``: each posting keyed (shard << 32)
+| lid, the on-disk format unchanged), and tombstones and a docid scope
+are one sorted key array each. ``evaluate`` runs once per plan per node
+(query/local.py ServingIndex) and per task (``_shard_stage``), one key ->
+docid lookup follows, and the global top-k is the k-merge of their
+top-k+ties — exact, however the shards fall into tasks (tested rank- and
+bit-identical to the oracle). One shard's plain lids are shard 0's keys.
 
 Distributed plan of every Spark query entry point (``_shard_stage``):
 
@@ -26,25 +34,20 @@ Distributed plan of every Spark query entry point (``_shard_stage``):
        task (below POSTINGS_PER_TASK), else               a point query]
        repartition(n, shard)
     -> mapInArrow(task body, ``_task_body``): the
-       task's rows grouped by shard, eval_shard per
-       shard with idf from the closure, then ONE pyarrow
-       read of the handle's docmap files maps every
-       (shard, lid) of the task to its docid
-    -> global TakeOrderedAndProject(k, (-score, docid))  [k rows/shard]
+       task's rows fused into one list per term,
+       evaluate once per plan with idf from the
+       closure, then ONE pyarrow read of the handle's
+       docmap files maps every key of the task to its
+       docid
+    -> global TakeOrderedAndProject(k, (-score, docid))  [k rows + ties/task]
 
 A point query is ONE Spark job of one stage and one task: no exchange
 cuts a one-task stage, no plan joins the docmap or the term dictionary,
 and the top-k runs in the kernel task's job. A large docid scope
 cogroups its (shard, lid) rows with the segment rows instead
-(``cogroup().applyInArrow``, the same body per shard).
+(``cogroup().applyInArrow``: the same body, over one shard per group).
 
-Because ``shard = pmod(docid, n_shards)`` every document's postings live in
-exactly one shard, so conjunctive evaluation is shard-local and the global
-top-k is the k-merge of per-shard top-k's — exact, no recall loss (tested
-rank- and bit-identical to the oracle). One task
-may evaluate several shards' groups; the result does not depend on it.
-
-Shard kernels (numpy, per shard). The conjunctive ones — AND (default,
+Kernels (numpy, over keyed lists). The conjunctive ones — AND (default,
 reference F4 websearch_to_tsquery semantics), phrase/NEAR and websearch
 groups — are one matcher, drive -> intersect -> verify -> score:
 
@@ -70,7 +73,9 @@ bound the remaining blocks are provably irrelevant and never decoded —
 classic block-max top-k, exact. OR (disjunctive, reference F5
 triple-match semantics) is exact vectorized union scoring — see
 _shard_kernel_or for why the OR path trades pruning for guaranteed-exact
-returned scores.
+returned scores. Over a keyed list every threshold (the single-term
+heap, AND's theta, OR's interval bound) spans all the node's or task's
+shards at once: stronger than a per-shard cut, and still exact.
 
 Deleted documents (tombstones, index/maintenance.py) are filtered inside
 the kernels from the broadcast tombstone set until compaction folds them
@@ -96,6 +101,7 @@ from honeywell_search_engine_spark.index.segments import (
     check_terms,
     docids_of_lids,
     enc_from_arrow,
+    fuse_rows,
 )
 
 RESULT_SCHEMA = "docid long, score double"
@@ -126,8 +132,8 @@ SCOPE_INLINE_MAX = 100_000
 
 @dataclass(frozen=True)
 class QueryPlan:
-    """One analyzed, validated query: what ``eval_shard`` evaluates on
-    every shard, whichever front end asked.
+    """One analyzed, validated query: what ``evaluate`` evaluates on
+    every node and task, whichever front end asked.
 
     - kind: 'and', 'or', 'web' (websearch groups), 'phrase' or 'near';
     - terms: positive terms — distinct for and/or, phrase order with
@@ -135,8 +141,8 @@ class QueryPlan:
     - neg: negated terms (and: websearch '-term');
     - groups: websearch groups (all_pos, neg, phrases, neg_phrases);
     - slop: phrase slop, or the NEAR distance;
-    - required: terms every hit contains — a shard (or a whole index)
-      missing one has no hit;
+    - required: terms every hit contains — a node or task (or a whole
+      index) missing one has no hit;
     - scan_terms: sorted distinct terms whose posting rows are read;
     - need_pos: terms whose positions the kernels read."""
 
@@ -196,14 +202,17 @@ def plan_query(
     terms skip it — Porter is not idempotent, so stems are never
     re-stemmed. `pre_analyzed` and `exclude_terms` must be in the
     analyzer's [a-z0-9]+ alphabet. ValueError on an unknown mode or
-    syntax, on `k` not an int >= 1, on `exclude_terms` outside AND mode,
-    and on a NEAR query without exactly two distinct terms."""
+    syntax, on `k` not an int >= 1, on `slop` (the NEAR distance) not an
+    int >= 0, on `exclude_terms` outside AND mode, and on a NEAR query
+    without exactly two distinct terms."""
     if mode not in ("and", "or"):
         raise ValueError(f"mode must be 'and' or 'or'; got {mode!r}")
     if syntax not in ("words", "web", "phrase", "near"):
         raise ValueError(f"unknown query syntax {syntax!r}")
     if isinstance(k, bool) or not isinstance(k, numbers.Integral) or k < 1:
         raise ValueError(f"k must be an int >= 1; got {k!r}")
+    if isinstance(slop, bool) or not isinstance(slop, numbers.Integral) or slop < 0:
+        raise ValueError(f"slop/dist must be an int >= 0; got {slop!r}")
     aq, tok, sg = _analyzers_for(index)
     if syntax in ("phrase", "near"):
         terms = tok(query)
@@ -247,12 +256,12 @@ _NO_DEAD = np.zeros(0, dtype=np.int64)
 
 
 def _select_topk_with_ties(lids: np.ndarray, scores: np.ndarray, k: int):
-    """Top-k by score (tie: ascending lid) INCLUDING every row tied with
-    the k-th score. Returning boundary ties makes the global merge exact
-    under ANY lid assignment: final ordering tie-breaks on the global
-    docid the kernel maps each lid to (docids_of_lids), and nothing tied
-    at the cut was dropped shard-side —
-    required because merged-in documents get appended lids, which are not
+    """Top-k by score (tie: ascending key) INCLUDING every row tied with
+    the k-th score. Returning boundary ties makes the final cut exact
+    under ANY lid assignment: it tie-breaks on the global docid each key
+    maps to (docids_of_lids, ServingIndex), and nothing tied at the cut
+    was dropped by the kernel — required because keys follow (shard,
+    lid), and merged-in documents get appended lids, which are not
     docid-ordered (index/docmap.py)."""
     if lids.size == 0:
         return []
@@ -370,12 +379,12 @@ def _bm25_sum(cols: dict, idf: dict[str, float], avgdl: float) -> np.ndarray:
 def _topk_single(enc: codec.EncodedList, idf: float, avgdl: float, k: int,
                  dead: np.ndarray = _NO_DEAD, scope: np.ndarray | None = None,
                  neg_rows: list = ()):
-    """Exact single-term top-k with block-max score pruning. `dead` is a
-    sorted int64 tombstoned-lid array for THIS shard (from a Spark
-    broadcast — never a per-task Python set); `scope`, when given, is the
-    sorted allowed-lid array (the reference's per-caller allowed_ids
-    restriction, F2/F3); `neg_rows` are (term, EncodedList) exclusions
-    (websearch '-term'), filtered per chunk BEFORE the top-k buffer so the
+    """Exact single-term top-k with block-max score pruning. `dead` is the
+    sorted int64 array of tombstoned keys (from a Spark broadcast — never
+    a per-task Python set); `scope`, when given, is the sorted allowed-key
+    array (the reference's per-caller allowed_ids restriction, F2/F3);
+    `neg_rows` are (term, EncodedList) exclusions (websearch '-term'),
+    filtered per chunk BEFORE the top-k buffer so the
     pruning threshold never counts an excluded doc. A decoded PostingList
     has no block bounds and is scored in one full-scan pass."""
     if isinstance(enc, codec.PostingList):
@@ -438,8 +447,8 @@ def _negated_mask(neg_rows: list, cand: np.ndarray) -> np.ndarray:
 def _shard_kernel_and(term_rows: list, idf: dict[str, float], avgdl: float,
                       k: int, dead: np.ndarray = _NO_DEAD, prune: bool = True,
                       scope: np.ndarray | None = None, neg_rows: list = ()):
-    """Conjunctive evaluation of one shard. term_rows: (term, EncodedList),
-    all query terms present (caller enforces).
+    """Conjunctive evaluation. term_rows: (term, EncodedList), all query
+    terms present (caller enforces).
 
     Rarest list drives; every other list is decoded selectively: only the
     blocks that can contain a surviving candidate (block-max docid skip).
@@ -539,7 +548,7 @@ def _or_block_prune(term_rows: list, idf: dict[str, float], avgdl: float,
 def _shard_kernel_or(term_rows: list, idf: dict[str, float], avgdl: float,
                      k: int, dead: np.ndarray = _NO_DEAD, prune: bool = True,
                      scope: np.ndarray | None = None):
-    """Disjunctive (OR) union scoring of one shard — exact, vectorized.
+    """Disjunctive (OR) union scoring — exact, vectorized.
 
     Scores every doc that contains ANY query term: union of docids via
     np.unique, per-term contributions added in lexicographic term order
@@ -587,8 +596,8 @@ def _shard_kernel_or(term_rows: list, idf: dict[str, float], avgdl: float,
 def _shard_kernel_phrase(term_rows: list, idf: dict[str, float], avgdl: float,
                          k: int, dead: np.ndarray = _NO_DEAD, slop: int = 0,
                          unordered: bool = False):
-    """Exact phrase evaluation of one shard. term_rows: [(term,
-    EncodedList)] in PHRASE order (repeats allowed). Docid intersection
+    """Exact phrase evaluation. term_rows: [(term, EncodedList)] in
+    PHRASE order (repeats allowed). Docid intersection
     drives block-selective decode exactly like the AND kernel; positions
     are decoded ONLY for candidate blocks and adjacency is verified by
     chained intersection of per-term positions shifted by their phrase
@@ -783,7 +792,7 @@ def _websearch_match(
     dead: np.ndarray = _NO_DEAD,
     neg_phrase_rows: list = (),
 ):
-    """Match portion of one conjunctive websearch group on one shard:
+    """Match portion of one conjunctive websearch group:
     pos_rows are the DISTINCT required (term, list) pairs (loose terms +
     every quoted-phrase member), phrase_groups are token-lists that must
     each occur adjacently, neg_rows exclude docs containing the term,
@@ -819,7 +828,7 @@ def _shard_kernel_websearch(
     k: int,
     dead: np.ndarray = _NO_DEAD,
 ):
-    """One conjunctive websearch group on one shard, scored: match via
+    """One conjunctive websearch group, scored: match via
     _websearch_match, then BM25 over the group's required terms. No
     score-bound pruning: with unverified phrase groups pending there is
     no sound theta (same reasoning as the AND-prune fix)."""
@@ -835,11 +844,11 @@ def _shard_kernel_websearch_or(
     k: int,
     dead: np.ndarray = _NO_DEAD,
 ):
-    """Disjunction of conjunctive websearch groups on one shard (the
-    Postgres websearch 'or' keyword — AND binds tighter, so the query is
-    an OR of groups). `groups` are (all_pos, neg, phrases, neg_phrases)
-    from analyzer.parse_websearch_query; `by_term` maps this shard's terms
-    to their lists. A doc matches iff ANY group holds; its score sums
+    """Disjunction of conjunctive websearch groups (the Postgres
+    websearch 'or' keyword — AND binds tighter, so the query is an OR of
+    groups). `groups` are (all_pos, neg, phrases, neg_phrases) from
+    analyzer.parse_websearch_query; `by_term` maps the terms to their
+    lists. A doc matches iff ANY group holds; its score sums
     BM25 over ALL distinct positive terms of the whole query present in
     the doc (union-presence scoring, lexicographic order — the
     `search_or` convention; oracle bit-parity).
@@ -851,7 +860,7 @@ def _shard_kernel_websearch_or(
     match (_websearch_match) over these decoded lists, and the union of
     their hits is scored from the same lists."""
     scored = {t for g in groups for t in g[0] if t in by_term}
-    # a required term absent in this shard: that group is empty here
+    # a required term without a list: that group is empty here
     groups = [g for g in groups if set(g[0]) <= scored]
     if not groups:
         return []
@@ -870,8 +879,8 @@ def _shard_kernel_websearch_or(
             [(t, by_term[t]) for t in ph]
             for ph in neg_phrases
             if all(t in by_term for t in ph)
-            # a negated phrase with a term absent from this shard can
-            # never occur adjacently -> excludes nothing
+            # a negated phrase with a term without a list can never
+            # occur adjacently -> excludes nothing
         ]
         cand, _cols = _websearch_match(
             [(t, lists[t]) for t in all_pos], phrases,
@@ -888,17 +897,18 @@ def _shard_kernel_websearch_or(
     return _select_topk_with_ties(union.astype(np.int64), score, k)
 
 
-def eval_shard(plan: QueryPlan, by_term: dict, idf: dict[str, float],
-               avgdl: float, k: int, dead: np.ndarray = _NO_DEAD,
-               scope: np.ndarray | None = None) -> list:
-    """Top-k+ties [(lid, score)] of `plan` on one shard — the only code
-    that picks a kernel, for every front end. `by_term` maps the shard's
-    terms to their lists: EncodedLists or MemoLists (block-max walk) or
-    decoded PostingLists (full scan), with flat positions for the plan's
-    `need_pos` terms. `dead` is the shard's sorted tombstoned lids;
-    `scope`, when given, its sorted allowed lids (and/or plans)."""
+def evaluate(plan: QueryPlan, by_term: dict, idf: dict[str, float],
+             avgdl: float, k: int, dead: np.ndarray = _NO_DEAD,
+             scope: np.ndarray | None = None) -> list:
+    """Top-k+ties [(key, score)] of `plan` — the only code that picks a
+    kernel, for every front end, called once per plan per serving node
+    and per Spark task. `by_term` maps terms to ONE keyed list each over
+    all the caller's shards: EncodedLists or MemoLists (block-max walk)
+    or decoded PostingLists (full scan), with flat positions for the
+    plan's `need_pos` terms. `dead` is the sorted tombstoned keys;
+    `scope`, when given, the sorted allowed keys (and/or plans)."""
     if any(t not in by_term for t in plan.required):
-        return []  # a required term absent in this shard: no hit here
+        return []  # a required term without a list: no hit here
     if plan.kind == "web":
         groups = plan.groups
         if len(groups) > 1 or groups[0][3]:
@@ -955,20 +965,20 @@ def _kernel_tasks(index: SegmentIndex, postings: int) -> int:
     return max(1, min(cap, -(-postings // POSTINGS_PER_TASK)))
 
 
-def _topk_tail(per_shard: DataFrame, k: int) -> DataFrame:
-    """The exact global order (-score, docid) over the per-shard
+def _topk_tail(per_task: DataFrame, k: int) -> DataFrame:
+    """The exact global order (-score, docid) over the per-task
     top-k+ties: ORDER BY + LIMIT plans as a TakeOrderedAndProject in the
     kernel stage's job (in its one stage when the stage is one task)."""
-    return per_shard.orderBy(F.desc("score"), F.asc("docid")).limit(int(k))
+    return per_task.orderBy(F.desc("score"), F.asc("docid")).limit(int(k))
 
 
-def _batch_tail(per_shard: DataFrame, k: int) -> DataFrame:
+def _batch_tail(per_task: DataFrame, k: int) -> DataFrame:
     """One per-query rank window: (qid, rnk, docid, score)."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
     return (
-        per_shard.withColumn("rnk", F.row_number().over(w))
+        per_task.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select("qid", "rnk", "docid", "score")
         .orderBy("qid", "rnk")
@@ -976,7 +986,7 @@ def _batch_tail(per_shard: DataFrame, k: int) -> DataFrame:
 
 
 def _memo_by_term(by_term: dict, use_count: dict, need_pos=frozenset()) -> dict:
-    """{term: EncodedList} of one shard's lists, with the terms shared by
+    """{term: EncodedList} of a task's lists, with the terms shared by
     several queries of a batch (the Zipf head of a query log) decoded
     ONCE per task as MemoLists, all in one ``codec.decode_many`` call —
     every query after the first runs decode-free with block-max pruning
@@ -1003,14 +1013,14 @@ def _task_body(index: SegmentIndex, plans: dict, k: int, batch: bool,
     """The body of one shard-kernel task, ``body(segs, scope=None)``.
 
     `segs` is the task's segment rows as a pyarrow Table: any number of
-    shards, each shard's rows complete. The body builds every list from
-    the table's columns (``enc_from_arrow``); per shard it memoizes the
-    shared ones (``_memo_by_term``) and runs ``eval_shard`` for every plan of
+    shards, each shard's rows complete. The body fuses each term's rows
+    into one keyed list (``fuse_rows``), memoizes the shared ones
+    (``_memo_by_term``) and runs ``evaluate`` once for every plan of
     `plans` ({qid: QueryPlan}); then ONE ``docids_of_lids`` read of the
-    handle's docmap files maps every (shard, lid) of the task to its
-    docid. Returns a Table of (docid, score), or (qid, docid, score) when
-    `batch`. `scope` (a Table of (shard, lid) rows, the cogroup path) or
-    `scope_bc` (a {shard: lids} broadcast) restricts the candidates."""
+    handle's docmap files maps every key to its docid. Returns a Table of
+    (docid, score), or (qid, docid, score) when `batch`. `scope` (the
+    cogroup path's (shard, lid) rows) or `scope_bc` (sorted keys)
+    restricts the candidates."""
     avgdl = index.stats.avgdl
     use_count = _use_count(p.scan_terms for p in plans.values())
     need_pos = frozenset().union(*(p.need_pos for p in plans.values()))
@@ -1018,32 +1028,20 @@ def _task_body(index: SegmentIndex, plans: dict, k: int, batch: bool,
     docmap_files = index.docmap_files
 
     def body(segs: pa.Table, scope: pa.Table | None = None) -> pa.Table:
-        by_shard: dict[int, dict] = {}
-        for t, s, enc in zip(segs.column("term").to_pylist(), segs.column("shard").to_pylist(),
-                             enc_from_arrow(segs)):
-            by_shard.setdefault(s, {})[t] = enc
+        by_term = fuse_rows(segs.column("term").to_pylist(), segs.column("shard").to_pylist(),
+                            enc_from_arrow(segs))
         if scope is not None:
-            scope_shard = scope.column("shard").to_numpy()
-            scope_lid = scope.column("lid").to_numpy().astype(np.int64)
-        hits = []  # (qid, shard, lid, score)
-        for shard, encs in by_shard.items():
-            if scope is not None:
-                allowed = np.sort(scope_lid[scope_shard == shard])
-                if allowed.size == 0:
-                    # cogroup keys are the UNION of both sides' shards: a
-                    # shard with postings but no scoped docs has no hit
-                    continue
-            else:
-                allowed = scope_bc.value.get(shard, _NO_DEAD) if scope_bc is not None else None
-            dead = dead_bc.value.get(shard, _NO_DEAD) if dead_bc is not None else _NO_DEAD
-            by_term = _memo_by_term(encs, use_count, need_pos)
-            for qid, plan in plans.items():
-                hits += [(qid, shard, lid, s)
-                         for lid, s in eval_shard(plan, by_term, idf, avgdl, k, dead, allowed)]
-        qids, shards, lids, scores = zip(*hits) if hits else ((), (), (), ())
+            allowed = np.sort(codec.keys_of(scope.column("shard").to_numpy(),
+                                            scope.column("lid").to_numpy()))
+        else:
+            allowed = scope_bc.value if scope_bc is not None else None
+        dead = dead_bc.value if dead_bc is not None else _NO_DEAD
+        by_term = _memo_by_term(by_term, use_count, need_pos)
+        hits = [(qid, key, s) for qid, plan in plans.items()
+                for key, s in evaluate(plan, by_term, idf, avgdl, k, dead, allowed)]
+        qids, keys, scores = zip(*hits) if hits else ((), (), ())
         cols = {
-            "docid": docids_of_lids(docmap_files, np.array(shards, dtype=np.int64),
-                                    np.array(lids, dtype=np.int64)),
+            "docid": docids_of_lids(docmap_files, np.array(keys, dtype=np.int64)),
             "score": np.array(scores, dtype=np.float64),
         }
         if batch:
@@ -1059,7 +1057,7 @@ def _shard_stage(index: SegmentIndex, plans: dict, k: int, batch: bool,
     segment rows of the union of the plans' scan terms, and one
     ``_task_body`` per task over them. Output: (qid, docid, score) when
     `batch`, else the one plan's (docid, score); no plan joins or scans
-    the docmap. `scope_bc` (a {shard: lids} broadcast) or `scope_lids`
+    the docmap. `scope_bc` (a broadcast of sorted keys) or `scope_lids`
     (cogrouped (shard, lid) rows) restrict the candidates.
 
     idf comes from the index's driver-side (df, idf) memo and rides the
@@ -1069,8 +1067,8 @@ def _shard_stage(index: SegmentIndex, plans: dict, k: int, batch: bool,
     the ``mapInArrow`` body and the caller's tail run as one stage. More
     tasks repartition by shard, so each task holds whole shards. The
     large-scope path cogroups both sides, repartitioned by shard to the
-    same count (they stay co-partitioned), and runs the body per shard
-    with ``applyInArrow``."""
+    same count (they stay co-partitioned), and runs the same body on each
+    one-shard group with ``applyInArrow``."""
     scan_terms = sorted({t for p in plans.values() for t in p.scan_terms})
     info = index.term_info(scan_terms)
     n = _kernel_tasks(index, sum(n for n, _v in info.values()))
@@ -1101,8 +1099,7 @@ def _spark_topk(index: SegmentIndex, plan: QueryPlan | None, k: int,
     TakeOrderedAndProject tail; an empty frame for a plan of None."""
     if plan is None:
         return index.spark.createDataFrame([], RESULT_SCHEMA)
-    per_shard = _shard_stage(index, {"": plan}, k, False, scope_bc, scope_lids)
-    return _topk_tail(per_shard, k)
+    return _topk_tail(_shard_stage(index, {"": plan}, k, False, scope_bc, scope_lids), k)
 
 
 def _spark_batch(index: SegmentIndex, queries: dict[str, str], k: int,
@@ -1181,13 +1178,13 @@ def bm25_topk_wand(
 
     Spark work per query: one job. idf comes from the index's driver-side
     memo (a miss is a pyarrow read, not a job); the segment scan, the
-    shard kernels (which map their lids to docids) and the
+    kernel task (which maps its keys to docids) and the
     TakeOrderedAndProject run in one stage of one task below
     POSTINGS_PER_TASK postings, and behind one shard exchange above it.
     The large-scope cogroup path adds the docmap semi-join that turns
-    the scope's docids into lids. AND
-    semantics stay exact when a query term is unknown globally: no shard
-    can then hold all terms, so every kernel returns empty."""
+    the scope's docids into lids. AND semantics stay exact when a query
+    term is unknown globally: no task then holds a list for it, so every
+    task returns empty."""
     spark = index.spark
     if (
         isinstance(allowed_docids, DataFrame)
@@ -1239,8 +1236,8 @@ def bm25_topk_websearch_batch(
     """A whole batch of websearch queries (plain AND, '"quoted"' groups,
     '-term' negation, freely mixed) in ONE shard-kernel stage: one pruned
     segment scan over the union of every query's positive AND negated
-    terms, one kernel stage where each shard kernel answers every
-    query it can serve, one per-query rank window. Returns (qid, rnk,
+    terms, one kernel stage where each task answers every query over
+    its keyed lists, one per-query rank window. Returns (qid, rnk,
     docid, score) — identical to per-query bm25_topk_websearch (tested)."""
     return _spark_batch(index, queries, k, syntax="web")
 
@@ -1250,8 +1247,8 @@ def bm25_topk_phrase_batch(
 ) -> DataFrame:
     """Evaluate a batch of phrase/NEAR queries in ONE shard-kernel stage
     (same amortization as bm25_topk_wand_batch: one pruned positional
-    segment scan over the union of all phrases' terms, per-shard kernels
-    answer every phrase they can serve, one rank window). Returns
+    segment scan over the union of all phrases' terms, each task answers
+    every phrase over its keyed lists, one rank window). Returns
     (qid, rnk, docid, score) — identical to per-query bm25_topk_phrase."""
     return _spark_batch(index, queries, k, syntax="phrase", slop=slop)
 
@@ -1267,8 +1264,8 @@ def bm25_topk_wand_batch(
     engine's natural unit is the query *stream* (the reference's design
     target is 100 q/s, PIPELINE.md:350). Here: one pruned segment scan
     over the union of all queries' terms, one kernel stage
-    where each shard kernel answers every query it can serve, one final
-    per-query rank window over <= n_queries * n_shards * k tiny rows.
+    where each task answers every query over its keyed lists, one final
+    per-query rank window over ~n_queries * n_tasks * k tiny rows.
 
     Returns DataFrame(qid, rnk, docid, score), rank per query by
     (-score, docid) — identical results to per-query bm25_topk_wand

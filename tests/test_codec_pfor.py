@@ -349,9 +349,10 @@ def test_pfor_serving_matches_vb(pfor_index, vb_index):
 
 
 def test_cold_serving_query_one_block_decode_per_stream(pfor_index, oracle, monkeypatch):
-    """A cold multi-term query over a multi-shard pfor index decodes every
-    (term, shard) list it misses in ONE batch: one pfor_decode_at call per
-    stream (deltas, tfs, doclens), not three per list. A warm repeat
+    """A cold multi-term query over a multi-shard pfor index holds one
+    fused list per term over every shard and decodes every list it misses
+    in ONE batch: one pfor_decode_at call per stream (deltas, tfs,
+    doclens), not three per list. A warm repeat
     decodes nothing; a phrase over two of its terms upgrades their lists
     with positions in one more batch. Every answer equals the oracle's."""
     from honeywell_search_engine_spark.query.local import ServingIndex
@@ -372,9 +373,11 @@ def test_cold_serving_query_one_block_decode_per_stream(pfor_index, oracle, monk
     got = sv.search(q, k=10, mode="or")
     assert got == oracle.search_or(q, k=10)
     n_lists = len(sv._dec_lru)
-    assert n_lists == 3 * sv.n_shards  # 3 terms x 4 shards, all decoded
+    assert n_lists == 3  # 3 terms, each one list over the 4 shards
     assert len(calls) == 3, calls
-    assert min(calls) >= n_lists  # each call spans every list's blocks
+    # each call spans every block of every list, all shards included
+    assert min(calls) == sum(ml.bmax_docid.size for ml in sv._dec_lru.values())
+    assert min(calls) >= 3 * sv.n_shards
     calls.clear()
     assert sv.search(q, k=10, mode="or") == got
     assert calls == []

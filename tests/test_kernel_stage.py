@@ -126,9 +126,8 @@ def test_oracle_identity_at_task_cap(monkeypatch, spark, seg_index, oracle, page
 def test_task_body_reads_docmap_once(monkeypatch, seg_index, oracle):
     """One kernel task's body, run in-process over every shard's segment
     rows (shuffled, as they may arrive from several batches): it maps the
-    (shard, lid) pairs of all shards and all queries with ONE docmap
-    dataset read, and its per-shard top-k+ties cut to k is the oracle's
-    answer for every query."""
+    keys of all shards and all queries with ONE docmap dataset read, and
+    its top-k+ties cut to k is the oracle's answer for every query."""
     import pyarrow.dataset as ds
 
     queries = {n: QUERIES[n] for n in ("q01", "q02", "q10")}
@@ -235,6 +234,99 @@ def test_unknown_mode_and_bad_k_rejected(seg_index, search_fronts, kw, match):
     for name, search in fronts.items():
         with pytest.raises(ValueError, match=match):
             search(q, **kw)
+
+
+@pytest.mark.parametrize("bad", [-1, 1.5, True, "2", None])
+def test_bad_slop_and_dist_rejected(seg_index, bad):
+    """A phrase slop or a NEAR distance that is not an int >= 0 is
+    rejected by the plan step with a ValueError on every front end —
+    never a silent empty answer (-1) or a truncated one (1.5 read as 1)."""
+    from honeywell_search_engine_spark.query.generations import GenerationSet
+    from honeywell_search_engine_spark.query.local import ServingIndex, ShardRouter
+
+    q = "data search"
+    fronts = {
+        "spark": (lambda s: W.bm25_topk_phrase(seg_index, q, slop=s),
+                  lambda d: W.bm25_topk_near_unordered(seg_index, q, dist=d)),
+        "spark-batch": (lambda s: W.bm25_topk_phrase_batch(seg_index, {"a": q}, slop=s),
+                        None),
+    }
+    for name, fe in (("serving", ServingIndex(seg_index.path)),
+                     ("router", ShardRouter(seg_index.path, n_nodes=3)),
+                     ("generations", GenerationSet([seg_index.path]))):
+        fronts[name] = (lambda s, fe=fe: fe.search_phrase(q, slop=s),
+                        lambda d, fe=fe: fe.search_near_unordered(q, dist=d))
+    for name, calls in fronts.items():
+        for call in filter(None, calls):
+            with pytest.raises(ValueError, match="slop/dist must be an int >= 0"):
+                call(bad)
+
+
+def test_one_evaluate_call_per_plan_per_node_and_task(monkeypatch, spark, seg_index, oracle):
+    """Every front end evaluates a plan ONCE over all the shards it
+    holds: one ``evaluate`` call per query on a ServingIndex, per
+    GenerationSet member and per ShardRouter node, and one per plan per
+    Spark task (counted with accumulators inside the tasks) for a point
+    query and for a batch — also with POSTINGS_PER_TASK = 1, where the
+    kernel stage runs several tasks, each over several shards' rows or
+    fewer."""
+    from honeywell_search_engine_spark.query.generations import GenerationSet
+    from honeywell_search_engine_spark.query.local import ServingIndex, ShardRouter
+
+    sc = spark.sparkContext
+    evals, bodies = sc.accumulator(0), sc.accumulator(0)  # Spark task side
+    local = []  # in-process side (a router's nodes run on threads)
+    real_eval, real_docids = W.evaluate, W.docids_of_lids
+
+    def counting_eval(*a, **kw):
+        evals.add(1)
+        local.append(1)
+        return real_eval(*a, **kw)
+
+    def counting_docids(*a, **kw):  # one docmap lookup per task body
+        bodies.add(1)
+        return real_docids(*a, **kw)
+
+    monkeypatch.setattr(W, "evaluate", counting_eval)
+    monkeypatch.setattr(W, "docids_of_lids", counting_docids)
+
+    def counted(fn):
+        e0, b0 = evals.value, bodies.value
+        out = fn()
+        return out, evals.value - e0, bodies.value - b0
+
+    q = QUERIES["q10"]
+    web = '"data search" or engine -web'
+    fronts = {
+        "serving": (ServingIndex(seg_index.path), 1),
+        "generations": (GenerationSet([seg_index.path, seg_index.path]), 2),
+        "router": (ShardRouter(seg_index.path, n_nodes=3), 3),
+    }
+    for name, (fe, n) in fronts.items():
+        for run in (lambda: fe.search(q, k=10), lambda: fe.search(q, k=10, mode="or"),
+                    lambda: fe.search_websearch(web, k=10),
+                    lambda: fe.search_phrase("data search", k=10, slop=2)):
+            local.clear()
+            assert run(), name
+            assert len(local) == n, (name, len(local))
+    cap = W._kernel_tasks(seg_index, 10**12)  # tasks at POSTINGS_PER_TASK = 1
+    assert cap > 1
+    batch = {n: QUERIES[n] for n in ("q01", "q02", "q10")}
+    for per_task in (W.POSTINGS_PER_TASK, 1):
+        monkeypatch.setattr(W, "POSTINGS_PER_TASK", per_task)
+        (got, jobs), n_evals, n_bodies = counted(
+            lambda: _run_counted(spark, lambda: _rows(W.bm25_topk_wand(seg_index, q, k=10))))
+        assert got == oracle.search(q, k=10)
+        assert n_evals == n_bodies, (per_task, n_evals, n_bodies)
+        if per_task == 1:
+            assert 1 < n_bodies <= cap, (n_bodies, jobs)
+        else:
+            assert n_bodies == 1 and jobs == [[1]], (n_bodies, jobs)
+        rows, n_evals, n_bodies = counted(
+            lambda: W.bm25_topk_wand_batch(seg_index, batch, k=10).collect())
+        assert {r["qid"] for r in rows} == set(batch)
+        assert n_evals == len(batch) * n_bodies, (per_task, n_evals, n_bodies)
+        assert 1 < n_bodies <= cap if per_task == 1 else n_bodies == 1, n_bodies
 
 
 def test_pre_analyzed_and_empty_terms(seg_index, oracle):
@@ -396,7 +488,7 @@ def test_handle_opened_before_compact_keeps_its_docmap(spark, merged_index, tmp_
             after = _rows(W.bm25_topk_wand(new, "data", k=10))
         assert before[0][0] not in {d for d, _ in after}
         with pytest.raises(FileNotFoundError):
-            docids_of_lids(old.docmap_files, 0, np.array([0], dtype=np.int64))
+            docids_of_lids(old.docmap_files, np.array([0], dtype=np.int64))
         with pytest.raises(Exception, match="FileNotFound|does not exist"):
             W.bm25_topk_wand(old, "data", k=10).collect()
     finally:

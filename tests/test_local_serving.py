@@ -274,7 +274,7 @@ def test_shard_router_matches_full_index(spark, seg_index, serving):
         n_shards = int(_json.load(f)["n_shards"])
     owned = []
     for n in router.nodes:
-        assert set(n._docid_of) <= set(n._shards)
+        assert set((n._keys >> 32).tolist()) <= set(n._shards)
         owned.extend(n._shards)
     assert sorted(owned) == list(range(n_shards))
     for qid, q in reference_queries().items():
@@ -298,7 +298,8 @@ def test_shard_router_matches_full_index(spark, seg_index, serving):
     # posting payload rows on a node are restricted to its shards
     node = router.nodes[0]
     _df, rows = node._rows_for([q0])
-    assert rows[q0] and all(s in node._shards for s in rows[q0])
+    assert rows[q0] is not None
+    assert set((rows[q0].bmax_docid >> 32).tolist()) <= set(node._shards)
 
 
 def test_and_or_entry_holds_no_positions(seg_index, oracle):
@@ -309,14 +310,14 @@ def test_and_or_entry_holds_no_positions(seg_index, oracle):
     assert sv.search("data search", k=10) == oracle.search("data search", k=10)
     assert sv.search("data engine", k=10, mode="or") == oracle.search_or("data engine", k=10)
     for t in ("data", "search", "engine"):
-        _df, encs, with_pos = sv._term_lru[t]
-        assert encs and not with_pos
-        assert all(e.positions == b"" and e.p_off is None for e in encs.values())
+        _df, enc, with_pos = sv._term_lru[t]
+        assert enc is not None and not with_pos
+        assert enc.positions == b"" and enc.p_off is None
     exp = oracle.search_phrase("data search", k=10)
     assert exp and sv.search_phrase("data search", k=10) == exp
     for t in ("data", "search"):
-        _df, encs, with_pos = sv._term_lru[t]
-        assert with_pos and all(e.positions and e.p_off is not None for e in encs.values())
+        _df, enc, with_pos = sv._term_lru[t]
+        assert with_pos and enc.positions and enc.p_off is not None
     assert not sv._term_lru["engine"][2]
 
 
@@ -468,29 +469,27 @@ def test_query_surface_signatures_match():
 
 
 def test_decoded_lru_oversize_entry_served_uncached(seg_index, oracle):
-    """A single (term, shard) entry larger than the WHOLE decoded-cache
-    budget must be served uncached without touching the LRU — the
-    pre-fix code inserted it first and then popped from the LRU end
-    until under budget, flushing every warm entry before discarding the
-    oversize one (a Zipf head term at scale would wipe the cache on
-    every query that touched it)."""
+    """A single term's entry larger than the WHOLE decoded-cache budget
+    must be served uncached without touching the LRU — the pre-fix code
+    inserted it first and then popped from the LRU end until under
+    budget, flushing every warm entry before discarding the oversize one
+    (a Zipf head term at scale would wipe the cache on every query that
+    touched it)."""
     from honeywell_search_engine_spark.functions.analyzer import analyze
 
-    probe = ServingIndex(seg_index.path)
+    # one-shard nodes, so a search for a term touches exactly one entry,
+    # its list over that shard
+    shard = 0
+    probe = ServingIndex(seg_index.path, shards=[shard])
     for q in reference_queries().values():
         probe.search(q, k=10)
-    # restrict serving to the shard holding the largest decoded entry so
-    # a search for that term touches exactly one (oversize) entry
-    cands = [
-        ((t, s), ml) for (t, s), ml in probe._dec_lru.items()
-        if analyze(t) == [t]
-    ]
-    (big_term, shard), big_ml = max(cands, key=lambda kv: kv[1].nbytes)
+    cands = [(t, ml) for t, ml in probe._dec_lru.items() if analyze(t) == [t]]
+    big_term, big_ml = max(cands, key=lambda kv: kv[1].nbytes)
     budget = big_ml.nbytes - 1
     small = [
         (t, ml.nbytes)
-        for (t, s), ml in cands
-        if s == shard and t != big_term and ml.nbytes <= budget // 2
+        for t, ml in cands
+        if t != big_term and ml.nbytes <= budget // 2
     ]
     assert small, "fixture corpus too uniform for this test"
     small_term = min(small, key=lambda kv: kv[1])[0]
@@ -502,11 +501,11 @@ def test_decoded_lru_oversize_entry_served_uncached(seg_index, oracle):
     sv = ServingIndex(seg_index.path, shards=[shard], dec_cache_bytes=budget)
     assert sv.search(small_term, k=10) == expected(small_term)
     warm = set(sv._dec_lru)
-    assert (small_term, shard) in warm
+    assert small_term in warm
     # the oversize term: correct results, warm set untouched, not cached
     assert sv.search(big_term, k=10) == expected(big_term)
     assert set(sv._dec_lru) == warm
-    assert (big_term, shard) not in sv._dec_lru
+    assert big_term not in sv._dec_lru
     assert sv._dec_bytes == sum(ml.nbytes for ml in sv._dec_lru.values())
 
 

@@ -352,7 +352,7 @@ def test_repeated_phrase_term_probed_once(monkeypatch, rep, slop):
         W, "_probe_any",
         lambda x, cand, **kw: probes.update([term_of[id(x)]]) or real(x, cand, **kw),
     )
-    got = W.eval_shard(plan, by_term, idf, oracle.avgdl, 10)
+    got = W.evaluate(plan, by_term, idf, oracle.avgdl, 10)
     assert probes == {"alpha": 1}
     exp = oracle.search_phrase(q, k=10, slop=slop)
     assert len(exp) == 10
@@ -417,7 +417,7 @@ def test_websearch_or_probes_each_term_once(monkeypatch, rep):
         W, "_probe_any",
         lambda x, cand, **kw: probes.update([term_of.get(id(x))]) or real(x, cand, **kw),
     )
-    got = W.eval_shard(plan, by_term, idf, oracle.avgdl, 10)
+    got = W.evaluate(plan, by_term, idf, oracle.avgdl, 10)
     probes.pop(None, None)  # lookups in the already-decoded lists
     assert probes == {"bravo": 1, "delta": 1}
     exp = oracle.search_websearch(q, k=10)
