@@ -108,21 +108,31 @@ def append_local_ids(
     )
 
 
+def docid_frame(spark: SparkSession, docids) -> DataFrame:
+    """The distinct `docids` (any iterable of ints) as one ``docid long``
+    column: one sorted int64 array (``np.unique``) shipped as an Arrow
+    table, never as Python rows. The frame tombstones and scopes join the
+    docmap with."""
+    import pyarrow as pa
+
+    ids = np.unique(np.fromiter(docids, dtype=np.int64))
+    return spark.createDataFrame(pa.table({"docid": ids}))
+
+
 def doc_keys(docmap: DataFrame, docids) -> np.ndarray:
     """Translate a global docid set to its sorted posting keys
     (shard << KEY_BITS) | local_id (index/codec.py ``fuse``) via a
-    broadcast semi-join against the docmap (the set — tombstones or a
-    query scope — is small relative to the corpus; the docmap scan is
-    column-pruned to 3 columns)."""
+    broadcast semi-join of ``docid_frame`` against the docmap (the set —
+    tombstones or a query scope — is small relative to the corpus; the
+    docmap scan is column-pruned to 3 columns), collected as Arrow."""
     from honeywell_search_engine_spark.index.codec import keys_of
 
-    ids = sorted(int(d) for d in docids)
-    if not ids:
-        return np.zeros(0, dtype=np.int64)
-    ids_df = docmap.sparkSession.createDataFrame([(d,) for d in ids], "docid long")
-    rows = (
-        docmap.join(F.broadcast(ids_df), "docid", "left_semi")
+    ids = np.unique(np.fromiter(docids, dtype=np.int64))
+    if not ids.size:
+        return ids
+    tbl = (
+        docmap.join(F.broadcast(docid_frame(docmap.sparkSession, ids)), "docid", "left_semi")
         .select("shard", "local_id")
-        .collect()
+        .toArrow()
     )
-    return np.unique(keys_of([r["shard"] for r in rows], [r["local_id"] for r in rows]))
+    return np.unique(keys_of(tbl.column("shard").to_numpy(), tbl.column("local_id").to_numpy()))

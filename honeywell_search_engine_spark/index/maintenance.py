@@ -42,6 +42,7 @@ from honeywell_search_engine_spark.index.segments import (
     input_fingerprint,
     segment_occurrences,
     write_occurrences,
+    write_segments,
     write_term_stats,
 )
 
@@ -170,12 +171,9 @@ def compact(spark: SparkSession, index_dir: str, _fail_at: str | None = None) ->
     # left-anti join against a tombstone DataFrame — NOT ~isin([literals]):
     # a million tombstones must not become a million-node Catalyst
     # expression. The dead side is broadcast (small relative to the corpus).
-    from honeywell_search_engine_spark.index.docmap import doc_keys
+    from honeywell_search_engine_spark.index.docmap import doc_keys, docid_frame
 
-    dead_sorted = np.array(sorted(dead), dtype=np.int64)
-    dead_df = spark.createDataFrame(
-        [(int(d),) for d in dead_sorted], "docid long"
-    )
+    dead_df = docid_frame(spark, dead)
     docmap = spark.read.parquet(f"{index_dir}/docmap")
     alive = docmap.join(F.broadcast(dead_df), "docid", "left_anti")
     alive.write.mode("overwrite").parquet(f"{index_dir}/docmap_new")
@@ -192,12 +190,10 @@ def compact(spark: SparkSession, index_dir: str, _fail_at: str | None = None) ->
 
     # rewrite segments (decode -> mask dead lids -> re-encode)
     dead_bc = spark.sparkContext.broadcast(doc_keys(docmap, dead))
-    rewritten = (
+    write_segments(
         spark.read.parquet(f"{index_dir}/segments")
-        .mapInArrow(_rewrite_kernel(dead_bc, new_avgdl), schema=SEGMENT_SCHEMA)
-    )
-    rewritten.write.mode("overwrite").partitionBy("bucket").parquet(
-        f"{index_dir}/segments_new"
+        .mapInArrow(_rewrite_kernel(dead_bc, new_avgdl), schema=SEGMENT_SCHEMA),
+        f"{index_dir}/segments_new",
     )
     n_postings = write_term_stats(
         spark.read.parquet(f"{index_dir}/segments_new"),

@@ -90,6 +90,7 @@ from honeywell_search_engine_spark.index.segments import (
     input_fingerprint,
     load_tombstones,
     segment_row,
+    write_segments,
 )
 
 __all__ = [
@@ -140,12 +141,53 @@ def splice_encoded(
     exceed every base docid. Full base blocks pass through byte-identical;
     see the module docstring for the seam cases. The result decodes
     exactly like ``encode_postings`` over the concatenated raw arrays
-    (property-pinned in tests)."""
+    (property-pinned in tests). ``splice_many`` of one triple."""
+    return splice_many([(base, delta, lid_offset)])[0]
+
+
+def splice_many(items) -> list[EncodedList]:
+    """``splice_encoded`` of every (base, delta, lid_offset) triple of
+    `items`, with the decodes of all their general seams (each base's
+    trailing partial block and each delta list) in one
+    ``codec.decode_many`` call per codec: a promotion pays the per-call
+    decode cost per batch of spliced lists, not twice per list."""
+    out: list[EncodedList | None] = []
+    seams = []  # (item index, base, delta, offset, positions) of general seams
+    for base, delta, off in items:
+        enc = _splice_direct(base, delta, int(off))
+        if enc is None:
+            seams.append((len(out), base, delta, int(off), _check_positions(base, delta)))
+        out.append(enc)
+    # each seam decodes its base's tail block (if any), then its delta
+    parts = []
+    for _, base, delta, _, has_pos in seams:
+        if base.n % BLOCK:
+            parts.append((_tail_block(base), has_pos))
+        parts.append((delta, has_pos))
+    pls: list = [None] * len(parts)
+    for fmt in {e.fmt for e, _ in parts}:  # decode_many takes one codec
+        sel = [j for j, (e, _) in enumerate(parts) if e.fmt == fmt]
+        decoded = codec.decode_many([parts[j][0] for j in sel], [parts[j][1] for j in sel])
+        for j, pl in zip(sel, decoded):
+            pls[j] = pl
+    it = iter(pls)
+    for i, base, _, off, has_pos in seams:
+        tail = next(it) if base.n % BLOCK else None
+        out[i] = _splice_seam(base, tail, next(it), off, has_pos)
+    return out
+
+
+def _splice_direct(
+    base: EncodedList | None, delta: EncodedList | None, off: int
+) -> EncodedList | None:
+    """The splice of the cases that decode no posting — no delta, no
+    base, or a base ending on a block boundary with the delta's codec —
+    or None for a general seam (``_splice_seam``). ValueError when `off`
+    does not clear the base list."""
     if delta is None:
         assert base is not None
         return base
     has_pos = _check_positions(base, delta)
-    off = int(lid_offset)
 
     if base is None:
         # delta-only term: first delta is the absolute first docid — add
@@ -174,53 +216,74 @@ def splice_encoded(
             f"lid offset {off} does not clear the base list (last docid "
             f"{base_last}) — generations must append, never interleave"
         )
-    nfull, rem = divmod(base.n, BLOCK)
+    if base.n % BLOCK or base.fmt != delta.fmt:
+        return None
 
-    if rem == 0 and base.fmt == delta.fmt:
-        # seam-free: base ends on a block boundary and codecs agree — the
-        # ONLY bytes that change in either list are delta's block 0 of the
-        # delta stream (its first value becomes relative to base_last).
-        new0, old_end = _patch_first_delta(delta, off - base_last)
-        app_d_off = delta.d_off + np.int64(len(base.deltas))
-        app_d_off[1:] += len(new0) - old_end
-        pos, p_off = base.positions, base.p_off
-        if has_pos:
-            pos = base.positions + delta.positions
-            p_off = np.concatenate(
-                [base.p_off, delta.p_off + np.int64(len(base.positions))]
-            )
-        return EncodedList(
-            n=base.n + delta.n,
-            bmax_docid=np.concatenate(
-                [base.bmax_docid, delta.bmax_docid + np.int64(off)]
-            ),
-            bmax_u=np.concatenate([base.bmax_u, delta.bmax_u]),
-            d_off=np.concatenate([base.d_off, app_d_off]),
-            t_off=np.concatenate(
-                [base.t_off, delta.t_off + np.int64(len(base.tfs))]
-            ),
-            l_off=np.concatenate(
-                [base.l_off, delta.l_off + np.int64(len(base.doclens))]
-            ),
-            deltas=base.deltas + new0 + delta.deltas[old_end:],
-            tfs=base.tfs + delta.tfs,
-            doclens=base.doclens + delta.doclens,
-            positions=pos,
-            p_off=p_off,
-            fmt=base.fmt,
+    # seam-free: base ends on a block boundary and codecs agree — the
+    # ONLY bytes that change in either list are delta's block 0 of the
+    # delta stream (its first value becomes relative to base_last).
+    new0, old_end = _patch_first_delta(delta, off - base_last)
+    app_d_off = delta.d_off + np.int64(len(base.deltas))
+    app_d_off[1:] += len(new0) - old_end
+    pos, p_off = base.positions, base.p_off
+    if has_pos:
+        pos = base.positions + delta.positions
+        p_off = np.concatenate(
+            [base.p_off, delta.p_off + np.int64(len(base.positions))]
         )
-
-    # general seam: keep base's full blocks, decode its trailing partial
-    # block + the whole (small) delta list, re-encode that appendix in the
-    # base's codec chained off the last kept block.
-    tail = (
-        codec.decode_blocks(
-            base, np.array([nfull]), with_positions=has_pos, flat_positions=True
-        )
-        if rem
-        else None
+    return EncodedList(
+        n=base.n + delta.n,
+        bmax_docid=np.concatenate(
+            [base.bmax_docid, delta.bmax_docid + np.int64(off)]
+        ),
+        bmax_u=np.concatenate([base.bmax_u, delta.bmax_u]),
+        d_off=np.concatenate([base.d_off, app_d_off]),
+        t_off=np.concatenate(
+            [base.t_off, delta.t_off + np.int64(len(base.tfs))]
+        ),
+        l_off=np.concatenate(
+            [base.l_off, delta.l_off + np.int64(len(base.doclens))]
+        ),
+        deltas=base.deltas + new0 + delta.deltas[old_end:],
+        tfs=base.tfs + delta.tfs,
+        doclens=base.doclens + delta.doclens,
+        positions=pos,
+        p_off=p_off,
+        fmt=base.fmt,
     )
-    dl = codec.decode_postings(delta, with_positions=has_pos, flat_positions=True)
+
+
+def _tail_block(base: EncodedList) -> EncodedList:
+    """The trailing partial block of `base` (one shard's list whose n is
+    not a multiple of BLOCK) as a one-block list of its own: its bytes,
+    and its delta chain starting from the last kept block's docid."""
+    nfull = base.n // BLOCK
+    zero = np.zeros(1, dtype=np.int64)
+    has_pos = base.p_off is not None
+    return EncodedList(
+        n=base.n - nfull * BLOCK,
+        bmax_docid=base.bmax_docid[nfull:],
+        bmax_u=base.bmax_u[nfull:],
+        d_off=zero, t_off=zero, l_off=zero,
+        deltas=base.deltas[int(base.d_off[nfull]):],
+        tfs=base.tfs[int(base.t_off[nfull]):],
+        doclens=base.doclens[int(base.l_off[nfull]):],
+        positions=base.positions[int(base.p_off[nfull]):] if has_pos else b"",
+        p_off=zero if has_pos else None,
+        fmt=base.fmt,
+        b_start=np.array([0, base.n - nfull * BLOCK], dtype=np.int64),
+        b_base=np.array([base.bmax_docid[nfull - 1] if nfull else 0], dtype=np.uint64),
+    )
+
+
+def _splice_seam(
+    base: EncodedList, tail, dl, off: int, has_pos: bool
+) -> EncodedList:
+    """The general seam: keep base's full blocks, and re-encode the
+    appendix — its decoded trailing partial block `tail` (None when base
+    ends on a block boundary) then the decoded delta list `dl`, shifted
+    by `off` — in the base's codec, chained off the last kept block."""
+    nfull = base.n // BLOCK
     d_docids = dl.docids + np.uint64(off)
     if tail is not None:
         docids = np.concatenate([tail.docids, d_docids])
@@ -249,7 +312,7 @@ def splice_encoded(
         pos = base.positions[:p_end] + app.positions
         p_off = np.concatenate([base.p_off[:nfull], app.p_off + np.int64(p_end)])
     return EncodedList(
-        n=base.n + delta.n,
+        n=base.n + dl.n,
         bmax_docid=np.concatenate([base.bmax_docid[:nfull], app.bmax_docid]),
         bmax_u=np.concatenate([base.bmax_u[:nfull], app.bmax_u]),
         d_off=np.concatenate([base.d_off[:nfull], app.d_off + np.int64(d_end)]),
@@ -268,23 +331,27 @@ def splice_encoded(
 # --------------------------------------------------------------------------
 
 
-def _row_splice_chain(
-    brow: dict | None, chain: list[tuple[dict, int]], bucket: int
-) -> dict:
-    """Chain-splice a base segment row with one row per generation
-    (oldest → newest, each with its per-shard lid offset already
-    resolved). Function composition of splice_encoded — byte-identical
-    to promoting the generations sequentially (each later splice sees
-    exactly the encoded list the previous one produced)."""
-    out = enc_from_row(brow) if brow is not None else None
-    ctf = int(brow["ctf"]) if brow is not None else 0
-    src = brow
-    for drow, off in chain:
-        out = splice_encoded(out, enc_from_row(drow), off)
-        ctf += int(drow["ctf"])
-        if src is None:
-            src = drow
-    return segment_row(out, src["term"], src["shard"], ctf, bucket)
+def _splice_rows(
+    brows: list, chains: list[list[tuple[dict, int]]], bucket: int
+) -> list[dict]:
+    """Chain-splice each base segment row of `brows` (None for a term the
+    base lacks) with its chain, one row per generation (oldest → newest,
+    each with its per-shard lid offset already resolved). Function
+    composition of splice_encoded — byte-identical to promoting the
+    generations sequentially (each later splice sees exactly the encoded
+    list the previous one produced) — taken one generation step at a
+    time over all the rows, so each step is one ``splice_many``."""
+    outs = [enc_from_row(r) if r is not None else None for r in brows]
+    ctfs = [int(r["ctf"]) if r is not None else 0 for r in brows]
+    for j in range(max(map(len, chains), default=0)):
+        idx = [i for i, c in enumerate(chains) if j < len(c)]
+        items = [(outs[i], enc_from_row(chains[i][j][0]), chains[i][j][1]) for i in idx]
+        for i, enc in zip(idx, splice_many(items)):
+            outs[i] = enc
+            ctfs[i] += int(chains[i][j][0]["ctf"])
+    srcs = [r if r is not None else c[0][0] for r, c in zip(brows, chains)]
+    return [segment_row(o, r["term"], r["shard"], ctf, bucket)
+            for o, r, ctf in zip(outs, srcs, ctfs)]
 
 
 def _make_bucket_splicer(
@@ -375,24 +442,21 @@ def _make_bucket_splicer(
                         miss = [i for i in range(len(keys)) if i not in hitset]
                         if miss:
                             yield _with_bucket(base_batch.take(pa.array(miss)), b)
-                        spliced = []
-                        for i in hit:
-                            r = base_batch.slice(i, 1).to_pylist()[0]
-                            spliced.append(
-                                _row_splice_chain(r, _chain_for(keys[i]), b)
-                            )
                         yield pa.RecordBatch.from_pylist(
-                            spliced, schema=PA_SEGMENT_SCHEMA
+                            _splice_rows(
+                                base_batch.take(pa.array(hit)).to_pylist(),
+                                [_chain_for(keys[i]) for i in hit],
+                                b,
+                            ),
+                            schema=PA_SEGMENT_SCHEMA,
                         )
                 # generation-only terms (absent from the base), oldest
                 # generation's row leads each chain
                 rest = sorted({k for m, _ in gen_maps for k in m})
                 for i in range(0, len(rest), 1024):
+                    ks = rest[i : i + 1024]
                     yield pa.RecordBatch.from_pylist(
-                        [
-                            _row_splice_chain(None, _chain_for(k), b)
-                            for k in rest[i : i + 1024]
-                        ],
+                        _splice_rows([None] * len(ks), [_chain_for(k) for k in ks], b),
                         schema=PA_SEGMENT_SCHEMA,
                     )
 
@@ -736,16 +800,14 @@ def promote_generation(
         bdf = spark.createDataFrame(
             [(int(b),) for b in affected], "bucket int"
         ).repartition(len(affected), "bucket")
-        (
+        write_segments(
             bdf.mapInArrow(
                 _make_bucket_splicer(
                     index_dir, list(zip(delta_dirs, offs_list))
                 ),
                 schema=SEGMENT_SCHEMA,
-            )
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(staged_seg)
+            ),
+            staged_seg,
         )
 
         # delta-side docmap rows, rewritten into the base lid space

@@ -26,7 +26,9 @@ with the Spark path by construction — the SAME plan step and evaluator
   under ``{index}/segments`` — the file list comes from one dataset open
   per node, each file's footer is parsed once and kept until
   ``reload()``, and only the row groups whose term min/max can hold a
-  wanted term are read, only the columns the kernels read — so a query
+  wanted term are read (about one per term per file: the files are
+  clustered by (term, shard) in capped row groups,
+  segments.write_segments), only the columns the kernels read — so a query
   touches only its terms' lists (the whole point of an inverted index),
   a few KB-MB regardless of corpus size. Each term's rows are built
   straight from the Arrow columns (segments.enc_from_arrow), fused into
@@ -383,7 +385,11 @@ class ServingIndex(QuerySurface):
         """{term: (df, fused EncodedList | None, positions read)} for
         `terms`, read with pyarrow.parquet from their buckets' files: per
         file only the row groups whose term min/max can hold one of the
-        bucket's terms, then those terms' rows, in the ``_ROW_COLS``.
+        bucket's terms — about one row group per term, as segment files
+        are clustered by (term, shard) in row groups of at most
+        ``segments.SEGMENT_ROW_GROUP_ROWS`` rows (a file written before
+        that layout is one row group, read whole) — then those terms'
+        rows, in the ``_ROW_COLS``.
         ``_POS_COLS`` are read where a term of `need_pos` is, and only
         those terms' lists keep them. Each term's rows fuse into one list
         over the node's shards (``fuse_rows``; None when it has none). A

@@ -96,6 +96,7 @@ from honeywell_search_engine_spark.functions.analyzer import (
     parse_websearch_query,
 )
 from honeywell_search_engine_spark.index import codec
+from honeywell_search_engine_spark.index.docmap import docid_frame
 from honeywell_search_engine_spark.index.segments import (
     SegmentIndex,
     check_terms,
@@ -1200,9 +1201,7 @@ def bm25_topk_wand(
         if isinstance(allowed_docids, DataFrame) or len(allowed_docids) > SCOPE_INLINE_MAX:
             scope_df = allowed_docids
             if not isinstance(scope_df, DataFrame):
-                scope_df = spark.createDataFrame(
-                    ((int(d),) for d in allowed_docids), "docid long"
-                )
+                scope_df = docid_frame(spark, allowed_docids)
             scope_lids = index.docmap.join(
                 scope_df.select(F.col("docid").cast("long").alias("docid")),
                 "docid",

@@ -321,33 +321,30 @@ def test_and_or_entry_holds_no_positions(seg_index, oracle):
     assert not sv._term_lru["engine"][2]
 
 
-def test_cold_read_prunes_row_groups(seg_index, serving, tmp_path, monkeypatch):
-    """On a copy of the index with one bucket rewritten term-sorted into
-    several row groups, a cold query reads only the row groups whose term
-    min/max can hold one of its terms, and answers as the untouched
-    index does."""
+def test_cold_read_prunes_row_groups(spark, pages_path, seg_index, serving, tmp_path, monkeypatch):
+    """On the fixture corpus indexed again with the segment row cap set
+    small, so the engine writes each bucket file as many term-sorted row
+    groups, a cold query reads only the row groups whose term min/max can
+    hold one of its terms, and answers as the untouched index does."""
     import glob
-    import os
-    import shutil
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from honeywell_search_engine_spark.index.segments import bucket_of
+    from honeywell_search_engine_spark.index import segments as S
+    from honeywell_search_engine_spark.index.corpus import docs_from_pages, tokenized_docs
+    from honeywell_search_engine_spark.sources.pages import read_pages
 
     idx = str(tmp_path / "idx")
-    shutil.copytree(seg_index.path, idx)
-    b = bucket_of("data", serving.n_buckets)
-    files = glob.glob(f"{idx}/segments/bucket={b}/*.parquet")
-    tbl = pa.concat_tables([pq.ParquetFile(f).read() for f in files]).sort_by("term")
-    for f in files:
-        os.remove(f)
-    sorted_file = f"{idx}/segments/bucket={b}/part-sorted.parquet"
-    pq.write_table(tbl, sorted_file, row_group_size=max(1, tbl.num_rows // 8))
-    md = pq.read_metadata(sorted_file)
+    monkeypatch.setattr(S, "SEGMENT_ROW_GROUP_ROWS", 32)
+    S.build_segments(tokenized_docs(docs_from_pages(read_pages(spark, pages_path))), idx,
+                     pages_path, n_buckets=serving.n_buckets, n_shards=serving.n_shards,
+                     buckets_per_job=8)
+    b = S.bucket_of("data", serving.n_buckets)
+    (bucket_file,) = glob.glob(f"{idx}/segments/bucket={b}/*.parquet")
+    md = pq.read_metadata(bucket_file)
     assert md.num_row_groups >= 8
     stats = [md.row_group(i).column(0).statistics for i in range(md.num_row_groups)]
-    vocab = sorted(set(tbl.column("term").to_pylist()))
+    vocab = sorted(set(pq.read_table(bucket_file, columns=["term"]).column("term").to_pylist()))
     q = ["data", vocab[len(vocab) // 2]]  # two terms of bucket b
     hold = [i for i, st in enumerate(stats) if any(st.min <= t <= st.max for t in q)]
     assert len(hold) < md.num_row_groups

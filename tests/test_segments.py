@@ -648,6 +648,35 @@ def test_assign_local_ids_partition_independent(spark):
         assert sorted(lids) == list(range(len(lids))), s
 
 
+def test_doc_keys_translate_a_docid_set(seg_index):
+    """doc_keys maps a docid set — with duplicates, docids the index does
+    not hold, and any iterable of ints — to the sorted posting keys of
+    exactly the held docids, as the docmap rows give them; an empty set
+    gives an empty int64 array. docid_frame holds each docid once."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from honeywell_search_engine_spark.index.codec import keys_of
+    from honeywell_search_engine_spark.index.docmap import doc_keys, docid_frame
+
+    dm = pq.read_table(seg_index.docmap_files, columns=["shard", "local_id", "docid"])
+    docids = dm.column("docid").to_numpy()
+    held = docids[::3]
+    absent = np.arange(1, 2000, dtype=np.int64) * 7919
+    absent = absent[~np.isin(absent, docids)]
+    scope = np.concatenate([held, held[:50], absent])
+    pick = np.isin(docids, held)
+    exp = np.sort(keys_of(dm.column("shard").to_numpy()[pick], dm.column("local_id").to_numpy()[pick]))
+    for given in (scope, scope.tolist(), frozenset(scope.tolist()), iter(scope.tolist())):
+        got = doc_keys(seg_index.docmap, given)
+        assert got.dtype == np.int64 and np.array_equal(got, exp)
+    empty = doc_keys(seg_index.docmap, frozenset())
+    assert empty.dtype == np.int64 and empty.size == 0
+    frame = docid_frame(seg_index.spark, scope)
+    assert frame.schema.simpleString() == "struct<docid:bigint>"
+    assert sorted(r.docid for r in frame.collect()) == np.unique(scope).tolist()
+
+
 def test_websearch_negation_matches_oracle(spark, seg_index, oracle):
     """websearch '-term' negation on the segment path: bit-exact vs the
     oracle with exclusions, across head/marker combinations; contradiction
