@@ -167,29 +167,32 @@ def compact(spark: SparkSession, index_dir: str, _fail_at: str | None = None) ->
     with open(f"{index_dir}/stats.json") as f:
         meta = json.load(f)
 
+    # the dead docs' posting keys, translated ONCE: they mask the segment
+    # rewrite, and their count is the number of docs removed — N drops
+    # only by tombstones that actually exist (bulk tombstone sets may hold
+    # already-deleted or never-ingested ids, which have no docmap row),
+    # and each docmap row has its own (shard, lid) key. Surviving docs keep
+    # their lids (the local-id space may gain holes; posting deltas stay
+    # valid).
+    from honeywell_search_engine_spark.index.docmap import doc_keys, docid_frame
+
+    docmap = spark.read.parquet(f"{index_dir}/docmap")
+    dead_keys = doc_keys(docmap, dead)
+    n_removed = int(dead_keys.size)
     # refresh corpus stats from the docmap minus the dead docs.
     # left-anti join against a tombstone DataFrame — NOT ~isin([literals]):
     # a million tombstones must not become a million-node Catalyst
     # expression. The dead side is broadcast (small relative to the corpus).
-    from honeywell_search_engine_spark.index.docmap import doc_keys, docid_frame
-
-    dead_df = docid_frame(spark, dead)
-    docmap = spark.read.parquet(f"{index_dir}/docmap")
-    alive = docmap.join(F.broadcast(dead_df), "docid", "left_anti")
+    alive = docmap.join(F.broadcast(docid_frame(spark, dead)), "docid", "left_anti")
     alive.write.mode("overwrite").parquet(f"{index_dir}/docmap_new")
     row = spark.read.parquet(f"{index_dir}/docmap_new").agg(
         F.sum("doclen").alias("s")
     ).collect()[0]
-    # N drops only by tombstones that actually exist (semi-join count) —
-    # bulk tombstone sets may contain already-deleted or never-ingested
-    # ids. Surviving docs keep their lids (the local-id space may gain
-    # holes; posting deltas stay valid).
-    n_removed = docmap.join(F.broadcast(dead_df), "docid", "left_semi").count()
     new_n = meta["n_docs"] - n_removed
     new_avgdl = float(row["s"] or 0) / new_n if new_n else 0.0
 
     # rewrite segments (decode -> mask dead lids -> re-encode)
-    dead_bc = spark.sparkContext.broadcast(doc_keys(docmap, dead))
+    dead_bc = spark.sparkContext.broadcast(dead_keys)
     write_segments(
         spark.read.parquet(f"{index_dir}/segments")
         .mapInArrow(_rewrite_kernel(dead_bc, new_avgdl), schema=SEGMENT_SCHEMA),

@@ -42,10 +42,10 @@ build, merge, bucket repair, promote and compact):
   and lands unsorted.
 - **Row groups of at most SEGMENT_ROW_GROUP_ROWS = 512 rows**
   (``parquet.block.row.count.limit``). A row group's `term` min/max then
-  spans a narrow term range, so the serving footer pruning
-  (query/local.py ``_read_terms``) and Spark's ``term IN`` pushdown
-  decode about one row group per query term per file instead of the
-  whole bucket (~2200 rows in the ``ingest`` benchmark's indexes).
+  spans a narrow term range, so the footer pruning of the one
+  posting-row read (``read_term_rows``: serving nodes and Spark query
+  tasks) decodes about one row group per query term per file instead of
+  the whole bucket (~2200 rows in the ``ingest`` benchmark's indexes).
   Parquet's 128 MB byte cap still bounds a head term's row group at
   scale.
 - **A lean writer, so the extra row groups cost no bytes.** On a
@@ -116,6 +116,7 @@ import re
 import shutil
 import time
 import zlib
+from bisect import bisect_left
 from collections import OrderedDict
 
 import numpy as np
@@ -1140,21 +1141,111 @@ def fuse_rows(terms, shards, encs) -> dict[str, codec.EncodedList]:
     return dict(zip(by_term, codec.fuse(list(by_term.values()))))
 
 
+# the segment columns a posting-row read takes: what the kernels read, plus
+# the positions stream for the rows of a positional term
+_ROW_COLS = ("term", "shard", "n", "bmax_docid", "bmax_u", "d_off", "t_off", "l_off",
+             "deltas", "tfs", "doclens", "fmt")
+_POS_COLS = ("positions", "p_off")
+
+
+def files_by_bucket(paths) -> dict[int, list[str]]:
+    """{bucket: sorted segment files} of segment file paths, each under
+    its ``bucket=<b>`` directory."""
+    out: dict[int, list[str]] = {}
+    for p in sorted(paths):
+        out.setdefault(int(re.search(r"/bucket=(\d+)/", p).group(1)), []).append(p)
+    return out
+
+
+def _footer(path: str) -> tuple:
+    """(footer, column names, [(row group, term min, term max)]) of one
+    segment file; a row group without term statistics gets (rg, None, None)."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    ci = next(i for i in range(md.num_columns) if md.schema.column(i).path == "term")
+    ranges = []
+    for rg in range(md.num_row_groups):
+        st = md.row_group(rg).column(ci).statistics
+        ok = st is not None and st.has_min_max
+        ranges.append((rg, st.min if ok else None, st.max if ok else None))
+    return md, set(md.schema.to_arrow_schema().names), ranges
+
+
+def _holds_any(terms: list[str], lo: str, hi: str) -> bool:
+    """True if the sorted `terms` hold one in [lo, hi]."""
+    i = bisect_left(terms, lo)
+    return i < len(terms) and terms[i] <= hi
+
+
+def read_term_rows(bucket_files: dict[int, list[str]], n_buckets: int, terms,
+                   need_pos=frozenset(), shards=None,
+                   footers: dict | None = None) -> tuple[dict, dict]:
+    """({term: df}, {term: fused EncodedList}) of `terms`: the one
+    posting-row read of every front end (a ServingIndex miss, a Spark
+    query task). `bucket_files` is {bucket: segment files} of an index of
+    `n_buckets` buckets, the reader's snapshot. Per file, only the row
+    groups whose term min/max can hold one of THAT bucket's terms are
+    read — about one per term, as segment files are clustered by (term,
+    shard) in row groups of at most SEGMENT_ROW_GROUP_ROWS rows (a file
+    written before that layout is one row group, read whole) — and only
+    ``_ROW_COLS``, plus ``_POS_COLS`` in a bucket holding a term of
+    `need_pos`; only those terms' lists keep positions. df is Σ n over a
+    term's rows of every shard (the sum term_stats stores); the lists are
+    fused (``fuse_rows``) from the rows of `shards` alone (every shard
+    when None), and a term without such rows has no list. `footers`
+    ({path: ``_footer``}), when given, keeps each parsed footer for the
+    next read. A snapshot file that is gone raises FileNotFoundError."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    footers = {} if footers is None else footers
+    dfs = dict.fromkeys(terms, 0)
+    row_terms, row_shards, encs = [], [], []
+    by_bucket: dict[int, list[str]] = {}
+    for t in sorted(dfs):
+        by_bucket.setdefault(bucket_of(t, n_buckets), []).append(t)
+    for b, ts in by_bucket.items():
+        cols = _ROW_COLS + (_POS_COLS if any(t in need_pos for t in ts) else ())
+        for path in bucket_files.get(b, ()):
+            md, names, ranges = footers.get(path) or footers.setdefault(path, _footer(path))
+            rgs = [rg for rg, lo, hi in ranges if lo is None or _holds_any(ts, lo, hi)]
+            if not rgs:
+                continue
+            with pq.ParquetFile(path, metadata=md) as f:
+                tbl = f.read_row_groups(
+                    rgs, columns=[c for c in cols if c in names], use_threads=False
+                )
+            tbl = tbl.filter(pc.is_in(tbl.column("term"), value_set=pa.array(ts)))
+            for t, n in zip(tbl.column("term").to_pylist(), tbl.column("n").to_pylist()):
+                dfs[t] += n
+            if shards is not None:
+                tbl = tbl.filter(pa.array(np.isin(tbl.column("shard").to_numpy(), list(shards))))
+            here = tbl.column("term").to_pylist()
+            row_terms += here
+            row_shards += tbl.column("shard").to_pylist()
+            encs += enc_from_arrow(tbl, [t in need_pos for t in here])
+    return dfs, fuse_rows(row_terms, row_shards, encs)
+
+
 class SegmentIndex:
     """Reader handle over a built segment index directory.
 
-    Holds a temp view and memoized broadcasts; ``close()`` (or a ``with``
-    block) releases them. The handle is a snapshot: its DataFrames and
-    its pyarrow reads (idf on the driver, docids in the kernel tasks) all
-    use the file listings taken when it opened."""
+    Holds memoized broadcasts; ``close()`` (or a ``with`` block) releases
+    them. The handle is a snapshot: its DataFrames and its pyarrow reads
+    (idf on the driver; posting rows and docids in the kernel tasks) all
+    use the file listings taken when it opened, and a file a later
+    compact or merge removed fails the read with FileNotFoundError
+    instead of mixing generations."""
 
     def __init__(self, spark: SparkSession, path: str, isolate_session: bool = True):
         # Point-query session: same SparkContext, isolated SQLConf, AQE
         # off. A point query is ONE Spark job of one stage: idf comes from
-        # a driver-side pyarrow read (term_info), and the segment scan,
-        # the shard kernels (which also map their lids to docids) and the
-        # TakeOrderedAndProject tail run in the same task when the kernel
-        # stage is sized to one task (query/wand.py _shard_stage). AQE
+        # a driver-side pyarrow read (term_info), and the segment-row
+        # read, the shard kernels (which also map their lids to docids)
+        # and the TakeOrderedAndProject tail run in the same task when the
+        # kernel stage is sized to one task (query/wand.py _shard_stage). AQE
         # has nothing to adapt there, and its stage-by-stage
         # materialization adds fixed per-query latency (measured ~35-50
         # ms/query on the 20-query reference loop) and a job.
@@ -1189,25 +1280,17 @@ class SegmentIndex:
         self.docmap = spark.read.parquet(f"{path}/docmap")
         self.term_stats_files = _snapshot_files(self.term_stats)
         self.docmap_files = _snapshot_files(self.docmap)
-        # static temp view registered ONCE: spark.sql {df} templating
-        # re-registers a temp view per substitution per call (~7 ms each,
-        # measured), so per-query SQL references it by name instead.
-        # The name is instance-unique (two indexes can share a session
-        # when isolate_session=False); close() drops it.
-        import uuid as _uuid
-
-        self._seg_view = f"hse_seg_{_uuid.uuid4().hex[:10]}"
-        self.segments.createOrReplaceTempView(self._seg_view)
+        # {bucket: segment files}: what every query task reads its rows from
+        self.segment_files = files_by_bucket(_snapshot_files(self.segments))
         self._term_cache: dict[str, tuple[int, float] | None] = {}
         self.tombstones = load_tombstones(path)
         self._dead_bc = None
         self._scope_bcs: "OrderedDict[int, object]" = OrderedDict()
 
     def close(self) -> None:
-        """Drop this handle's temp view and unpersist its memoized
-        tombstone and scope broadcasts. Idempotent; DataFrames built from
-        the handle must not be evaluated afterwards."""
-        self.spark.catalog.dropTempView(self._seg_view)
+        """Unpersist this handle's memoized tombstone and scope
+        broadcasts. Idempotent; DataFrames built from the handle must not
+        be evaluated afterwards."""
         for bc in [self._dead_bc, *self._scope_bcs.values()]:
             if bc is not None:
                 bc.unpersist()
@@ -1245,8 +1328,8 @@ class SegmentIndex:
         query stream — round-2 advice: rebuilding the broadcast per query
         re-collected the translation every time). Small scopes only: the
         query layer (query/wand.py) routes scopes above SCOPE_INLINE_MAX
-        through a cogroup join instead, so this path never materializes a
-        large scope on the driver."""
+        through a docmap join grouped by shard instead, so this path never
+        materializes a large scope on the driver."""
         if allowed_docids is None:
             return None
         # Keyed by the frozenset VALUE (frozensets hash AND compare by
@@ -1285,26 +1368,6 @@ class SegmentIndex:
             for t in missing:
                 self._term_cache[t] = found.get(t)
         return {t: v for t in terms if (v := self._term_cache[t]) is not None}
-
-    def segments_for(self, terms: list[str]) -> DataFrame:
-        """Segment rows of `terms`: bucket-directory pruned, term filter
-        pushed to the parquet scan. Empty `terms` gives an empty frame
-        with the segment schema (the shard kernels' input schema).
-
-        One spark.sql call over the static view (the per-query plan is
-        built with few py4j round trips). Terms are bound as positional
-        parameters, never spliced into the SQL text; buckets are ints
-        computed here."""
-        terms = list(dict.fromkeys(terms))
-        if not terms:
-            return self.segments.where("false")
-        buckets = sorted({bucket_of(t, self.n_buckets) for t in terms})
-        return self.spark.sql(
-            f"SELECT * FROM {self._seg_view} "
-            f"WHERE bucket IN ({','.join(map(str, buckets))}) "
-            f"AND term IN ({','.join('?' * len(terms))})",
-            args=terms,
-        )
 
 
 def index_report(spark: SparkSession, index_dir: str) -> "DataFrame":

@@ -231,7 +231,7 @@ def search_response_indexed(
     text_col: str = "text",
 ) -> DataFrame:
     """search_response served FROM THE SEGMENT INDEX: the BM25 top-k rides
-    bm25_topk_wand (pruned segment scan + WAND kernels) instead of
+    bm25_topk_wand (pruned segment-row read + WAND kernels) instead of
     re-scoring raw text, then the identical snippet/highlight/triple
     composition runs over only the k hit documents. At 100 TB the response
     path never tokenizes the corpus — it reads ≤ |terms| posting lists

@@ -6,9 +6,9 @@ Postgres GIN lookups, backend/app/routers/search.py), not a batch engine.
 Spark is the right tool for building, merging, and compacting the index
 and for batch query workloads (query/wand.py), but a Spark point query
 carries a fixed cost that no kernel speed can remove: it is one job of
-one stage and one task, and its traced ``wand.exec_ms`` measured
-210-267 ms on a 4-vCPU host (perfbench ``spark-point``), with ~94 ms of
-CPU for each extra Python task (wand.POSTINGS_PER_TASK). The deployment
+one stage and one task, and its traced ``wand.exec_ms`` measured 127 ms
+on a 4-vCPU host (perfbench ``spark-point``, seed 201), with ~43-63 ms
+of CPU for each extra Python task (wand.POSTINGS_PER_TASK). The deployment
 story at 10^12 docs is the standard one: Spark writes immutable segments
 to the lake; stateless serving nodes read them.
 
@@ -19,20 +19,20 @@ the query once (query/wand.py ``plan_query``) and hands the plan to the
 front end's ``_search``: ``ServingIndex`` evaluates it once over all its
 shards, ``ShardRouter`` and ``GenerationSet`` (query/generations.py) over
 their members' ``_search``, merged with ``top_k``. The node is bit-exact
-with the Spark path by construction — the SAME plan step and evaluator
-(``evaluate``) over the SAME encoded rows; only the I/O differs:
+with the Spark path by construction — the SAME plan step, the SAME
+posting-row read and the SAME evaluator (``evaluate``); only the caching
+and the docid lookup differ:
 
-- posting rows: a pyarrow.parquet read of the query's bucket files
-  under ``{index}/segments`` — the file list comes from one dataset open
-  per node, each file's footer is parsed once and kept until
-  ``reload()``, and only the row groups whose term min/max can hold a
-  wanted term are read (about one per term per file: the files are
-  clustered by (term, shard) in capped row groups,
-  segments.write_segments), only the columns the kernels read — so a query
-  touches only its terms' lists (the whole point of an inverted index),
-  a few KB-MB regardless of corpus size. Each term's rows are built
-  straight from the Arrow columns (segments.enc_from_arrow), fused into
-  ONE list over the node's shards (segments.fuse_rows: postings keyed
+- posting rows: ``segments.read_term_rows``, the one posting-row read a
+  Spark query task runs too — per bucket file of the query's terms only
+  the row groups whose term min/max can hold one of that bucket's terms
+  (about one per term per file: the files are clustered by (term, shard)
+  in capped row groups, segments.write_segments) and only the columns the
+  kernels read — so a query touches only its terms' lists (the whole
+  point of an inverted index), a few KB-MB regardless of corpus size.
+  The node lists the files with one dataset open on its first miss and
+  keeps each file's parsed footer until ``reload()``. Each term's rows
+  are fused into ONE list over the node's shards (postings keyed
   (shard << 32) | lid) and LRU-memoized per term (hot-term working set).
   positions/p_off are read only for a positional plan's terms: an
   AND/OR term's entry holds none, and its first positional use reads
@@ -68,17 +68,15 @@ from __future__ import annotations
 
 import json
 import math
-from bisect import bisect_left
 from collections import OrderedDict
 
 import numpy as np
 
 from honeywell_search_engine_spark.index import codec
 from honeywell_search_engine_spark.index.segments import (
-    bucket_of,
-    enc_from_arrow,
-    fuse_rows,
+    files_by_bucket,
     load_tombstones,
+    read_term_rows,
 )
 from honeywell_search_engine_spark.query import respond
 from honeywell_search_engine_spark.query import wand as W
@@ -94,13 +92,6 @@ from honeywell_search_engine_spark.query import wand as W
 # scan wins (measured ~3x at 20k docs), above it pruning's skipped work
 # dominates (a Zipf head term at web scale is 10^6-10^8 postings/shard).
 FULLSCAN_MAX_POSTINGS = 1 << 17
-
-# the segment columns a serving read takes: what the kernels read, plus
-# the positions stream for the rows of a positional term
-_ROW_COLS = ("term", "shard", "n", "bmax_docid", "bmax_u", "d_off", "t_off", "l_off",
-             "deltas", "tfs", "doclens", "fmt")
-_POS_COLS = ("positions", "p_off")
-
 
 def _succ_prefix(prefix: str) -> str | None:
     """Smallest string greater than every string with prefix `prefix`:
@@ -120,12 +111,6 @@ def _succ_prefix(prefix: str) -> str | None:
             nxt = 0xE000 if 0xD800 <= cp + 1 <= 0xDFFF else cp + 1
             return prefix[:i] + chr(nxt)
     return None
-
-
-def _holds_any(terms: list[str], lo: str, hi: str) -> bool:
-    """True if the sorted `terms` hold one in [lo, hi]."""
-    i = bisect_left(terms, lo)
-    return i < len(terms) and terms[i] <= hi
 
 
 def top_k(parts, k: int) -> list[tuple[int, float]]:
@@ -269,8 +254,9 @@ class ServingIndex(QuerySurface):
         # on the first term-row miss, and serving every later miss (no
         # per-miss file discovery)
         self._bucket_files: dict[int, list[str]] | None = None
-        # path -> (footer, column names, [(row group, term min, term max)]):
-        # each file's footer is parsed once, on its bucket's first read
+        # path -> (footer, column names, [(row group, term min, term max)])
+        # for read_term_rows: each footer is parsed once, on its file's
+        # first read
         self._footers: dict[str, tuple] = {}
         # term -> (df, the owned shards' fused EncodedList or None,
         # positions read)
@@ -337,8 +323,9 @@ class ServingIndex(QuerySurface):
 
     def _rows_for(self, terms, need_pos=()) -> tuple[dict[str, int], dict]:
         """({term: df}, {term: fused EncodedList | None}) — LRU first,
-        then ONE read (``_read_terms``) for every missing term and every
-        term of `need_pos` cached without its positions. df is Σ n over
+        then ONE ``segments.read_term_rows`` for every missing term and
+        every term of `need_pos` cached without its positions: from this
+        node's shards, with the footers it keeps. df is Σ n over
         the term's rows of ALL shards (the sum term_stats stores), kept
         with the lists in the term's one LRU entry. Positions are read
         only for the terms of `need_pos`: an AND/OR term's entry holds
@@ -354,86 +341,20 @@ class ServingIndex(QuerySurface):
                 self._term_lru.move_to_end(t)
                 df[t], rows[t], _ = hit
         if read:
-            for t, entry in self._read_terms(read, need_pos).items():
-                self._term_lru[t] = entry
+            if self._bucket_files is None:
+                import pyarrow.dataset as ds
+
+                self._bucket_files = files_by_bucket(
+                    ds.dataset(f"{self.path}/segments", format="parquet").files)
+            dfs, lists = read_term_rows(self._bucket_files, self.n_buckets, read, need_pos,
+                                        self._shards, self._footers)
+            for t in read:
+                self._term_lru[t] = entry = (dfs[t], lists.get(t), t in need_pos)
                 self._term_lru.move_to_end(t)
                 df[t], rows[t], _ = entry
                 if len(self._term_lru) > self._term_cap:
                     self._term_lru.popitem(last=False)
         return df, rows
-
-    def _footer(self, path: str) -> tuple:
-        """(footer, column names, [(row group, term min, term max)]) of one
-        segment file, parsed on its first read and kept until reload();
-        a row group without term statistics gets (rg, None, None)."""
-        f = self._footers.get(path)
-        if f is None:
-            import pyarrow.parquet as pq
-
-            md = pq.read_metadata(path)
-            names = set(md.schema.to_arrow_schema().names)
-            ci = next(i for i in range(md.num_columns) if md.schema.column(i).path == "term")
-            ranges = []
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(ci).statistics
-                ok = st is not None and st.has_min_max
-                ranges.append((rg, st.min if ok else None, st.max if ok else None))
-            f = self._footers[path] = (md, names, ranges)
-        return f
-
-    def _read_terms(self, terms: list[str], need_pos) -> dict[str, tuple]:
-        """{term: (df, fused EncodedList | None, positions read)} for
-        `terms`, read with pyarrow.parquet from their buckets' files: per
-        file only the row groups whose term min/max can hold one of the
-        bucket's terms — about one row group per term, as segment files
-        are clustered by (term, shard) in row groups of at most
-        ``segments.SEGMENT_ROW_GROUP_ROWS`` rows (a file written before
-        that layout is one row group, read whole) — then those terms'
-        rows, in the ``_ROW_COLS``.
-        ``_POS_COLS`` are read where a term of `need_pos` is, and only
-        those terms' lists keep them. Each term's rows fuse into one list
-        over the node's shards (``fuse_rows``; None when it has none). A
-        shard-subset node takes df from every shard's rows and builds its
-        lists from its own shards alone — one read either way."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        if self._bucket_files is None:
-            import pyarrow.dataset as ds
-
-            self._bucket_files = {}
-            segments = ds.dataset(f"{self.path}/segments", format="parquet", partitioning="hive")
-            for frag in segments.get_fragments():
-                b = ds.get_partition_keys(frag.partition_expression)["bucket"]
-                self._bucket_files.setdefault(int(b), []).append(frag.path)
-        dfs = dict.fromkeys(terms, 0)
-        row_terms, row_shards, encs = [], [], []
-        by_bucket: dict[int, list[str]] = {}
-        for t in sorted(terms):
-            by_bucket.setdefault(bucket_of(t, self.n_buckets), []).append(t)
-        for b, ts in by_bucket.items():
-            cols = _ROW_COLS + (_POS_COLS if any(t in need_pos for t in ts) else ())
-            for path in self._bucket_files.get(b, ()):
-                md, names, ranges = self._footer(path)
-                rgs = [rg for rg, lo, hi in ranges if lo is None or _holds_any(ts, lo, hi)]
-                if not rgs:
-                    continue
-                with pq.ParquetFile(path, metadata=md) as f:
-                    tbl = f.read_row_groups(
-                        rgs, columns=[c for c in cols if c in names], use_threads=False
-                    )
-                tbl = tbl.filter(pc.is_in(tbl.column("term"), value_set=pa.array(ts)))
-                for t, n in zip(tbl.column("term").to_pylist(), tbl.column("n").to_pylist()):
-                    dfs[t] += n
-                if self._shards is not None:
-                    tbl = tbl.filter(pa.array(np.isin(tbl.column("shard").to_numpy(), self._shards)))
-                here = tbl.column("term").to_pylist()
-                row_terms += here
-                row_shards += tbl.column("shard").to_pylist()
-                encs += enc_from_arrow(tbl, [t in need_pos for t in here])
-        lists = fuse_rows(row_terms, row_shards, encs)
-        return {t: (dfs[t], lists.get(t), t in need_pos) for t in terms}
 
     # ---- queries ----------------------------------------------------------
 

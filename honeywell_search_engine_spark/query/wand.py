@@ -29,23 +29,25 @@ Distributed plan of every Spark query entry point (``_shard_stage``):
 
     (df, idf) of the query terms: driver memo; a miss     [driver; no job]
       is a pyarrow read of the term_stats files
-    segments scan: bucket-dir pruning + term pushdown    [executors]
-    -> coalesce(1) when the scanned postings fit one     [1 Python task for
-       task (below POSTINGS_PER_TASK), else               a point query]
-       repartition(n, shard)
+    spark.range(0, n, 1, n): n task descriptors, n =      [1 Python task for
+      1 when the terms' postings fit one task (below      a point query]
+      POSTINGS_PER_TASK); task i holds shards i, i+n, ...
     -> mapInArrow(task body, ``_task_body``): the
-       task's rows fused into one list per term,
-       evaluate once per plan with idf from the
-       closure, then ONE pyarrow read of the handle's
-       docmap files maps every key of the task to its
-       docid
+       task's shards' rows of the scan terms, read with
+       the handle's segment files
+       (``segments.read_term_rows``, the serving read),
+       fused into one list per term; evaluate once per
+       plan with idf from the closure; then ONE pyarrow
+       read of the handle's docmap files maps every key
+       of the task to its docid
     -> global TakeOrderedAndProject(k, (-score, docid))  [k rows + ties/task]
 
-A point query is ONE Spark job of one stage and one task: no exchange
-cuts a one-task stage, no plan joins the docmap or the term dictionary,
-and the top-k runs in the kernel task's job. A large docid scope
-cogroups its (shard, lid) rows with the segment rows instead
-(``cogroup().applyInArrow``: the same body, over one shard per group).
+A point query is ONE Spark job of one stage and one task: its plan scans
+no file, so no SQL text is built from the query's terms, no exchange cuts
+a one-task stage, and no plan joins the docmap or the term dictionary;
+the top-k runs in the kernel task's job. A large docid scope groups its
+(shard, lid) rows by shard instead (``groupBy("shard").applyInArrow``:
+the same body, reading one shard's rows per group).
 
 Kernels (numpy, over keyed lists). The conjunctive ones — AND (default,
 reference F4 websearch_to_tsquery semantics), phrase/NEAR and websearch
@@ -101,8 +103,7 @@ from honeywell_search_engine_spark.index.segments import (
     SegmentIndex,
     check_terms,
     docids_of_lids,
-    enc_from_arrow,
-    fuse_rows,
+    read_term_rows,
 )
 
 RESULT_SCHEMA = "docid long, score double"
@@ -127,7 +128,7 @@ def _analyzers_for(index):
     return analyze_query, tokenize, (lambda g: g)
 
 # a docid scope above this size never rides a driver collect/broadcast —
-# it joins the docmap and cogroups with the segment rows instead
+# it joins the docmap, and its rows are grouped by shard instead
 SCOPE_INLINE_MAX = 100_000
 
 
@@ -941,21 +942,23 @@ BATCH_RESULT_SCHEMA = "qid string, rnk int, docid long, score double"
 # pays for itself: the per-task fixed CPU cost over the kernel's CPU cost
 # per posting, both measured on a 4-vCPU VM (Spark 4.1.2, local[4]) on the
 # perfbench index (7600 docs, 16 shards):
-# - per-task fixed cost ~94 ms of VM CPU: an empty mapInArrow over the
-#   three head terms' pruned segment rows (22.8k postings) cost 710-760 ms
-#   at 1 partition and 1360-1420 ms at 8 (medians of 5), under
-#   get_spark's worker daemon. It is Python worker set-up per task, not
-#   kernel work. Under Spark's own daemon the same recipe gives ~354 ms
-#   (1100 and 3580 ms): the per-task zip-directory re-reads the engine's
-#   daemon skips (worker_daemon.py);
+# - per-task fixed cost ~43-63 ms of VM CPU: a mapInArrow over the
+#   task-descriptor frame whose tasks read their shards' rows of the three
+#   head terms (22.8k postings, read_term_rows) and score nothing cost
+#   170-370 ms at 1 task and 590-770 ms at 8 (medians of 5, two rounds),
+#   under get_spark's worker daemon (worker_daemon.py): 43-63 ms per
+#   extra task, the task's own segment-row read included. It is Python
+#   worker set-up per task, not kernel work;
 # - kernel cost ~1.5-2.1 us of CPU per posting: the unpruned OR kernel
 #   (full decode + BM25 of every posting) over the corpus's 6 most
 #   frequent terms, 45k postings in 96 per-shard lists. Per-list overhead
 #   is included; longer lists cost less per posting, so this errs towards
 #   splitting early.
-# 94 ms / ~1.9 us ~ 50k postings: every perfbench point query (sum of df
-# <= 23k) runs ONE kernel task.
-POSTINGS_PER_TASK = 50_000
+# ~50 ms / ~1.9 us ~ 26k, rounded up to 30k postings (the split errs early
+# already): all but about 1 in 1000 perfbench point queries (sum of df:
+# median 9.2k, p99 22.7k, max 30.2k over 2392 stream queries) run ONE
+# kernel task.
+POSTINGS_PER_TASK = 30_000
 
 
 def _kernel_tasks(index: SegmentIndex, postings: int) -> int:
@@ -1011,26 +1014,27 @@ def _use_count(term_sets) -> dict:
 
 def _task_body(index: SegmentIndex, plans: dict, k: int, batch: bool,
                idf: dict[str, float], scope_bc=None):
-    """The body of one shard-kernel task, ``body(segs, scope=None)``.
+    """The body of one shard-kernel task, ``body(shards, scope=None)``.
 
-    `segs` is the task's segment rows as a pyarrow Table: any number of
-    shards, each shard's rows complete. The body fuses each term's rows
-    into one keyed list (``fuse_rows``), memoizes the shared ones
-    (``_memo_by_term``) and runs ``evaluate`` once for every plan of
-    `plans` ({qid: QueryPlan}); then ONE ``docids_of_lids`` read of the
-    handle's docmap files maps every key to its docid. Returns a Table of
-    (docid, score), or (qid, docid, score) when `batch`. `scope` (the
-    cogroup path's (shard, lid) rows) or `scope_bc` (sorted keys)
-    restricts the candidates."""
+    The body reads the task's `shards`' rows of the plans' scan terms
+    (``read_term_rows`` over the handle's segment files, positions for
+    the positional terms), fused into one keyed list per term; memoizes
+    the shared ones (``_memo_by_term``) and runs ``evaluate`` once for
+    every plan of `plans` ({qid: QueryPlan}); then ONE ``docids_of_lids``
+    read of the handle's docmap files maps every key to its docid.
+    Returns a Table of (docid, score), or (qid, docid, score) when
+    `batch`. `scope` (the large-scope path's (shard, lid) rows) or
+    `scope_bc` (sorted keys) restricts the candidates."""
     avgdl = index.stats.avgdl
     use_count = _use_count(p.scan_terms for p in plans.values())
     need_pos = frozenset().union(*(p.need_pos for p in plans.values()))
+    scan_terms = sorted(use_count)
     dead_bc = index.dead_broadcast()
-    docmap_files = index.docmap_files
+    docmap_files, segment_files, n_buckets = (
+        index.docmap_files, index.segment_files, index.n_buckets)
 
-    def body(segs: pa.Table, scope: pa.Table | None = None) -> pa.Table:
-        by_term = fuse_rows(segs.column("term").to_pylist(), segs.column("shard").to_pylist(),
-                            enc_from_arrow(segs))
+    def body(shards, scope: pa.Table | None = None) -> pa.Table:
+        _df, by_term = read_term_rows(segment_files, n_buckets, scan_terms, need_pos, shards)
         if scope is not None:
             allowed = np.sort(codec.keys_of(scope.column("shard").to_numpy(),
                                             scope.column("lid").to_numpy()))
@@ -1054,44 +1058,39 @@ def _task_body(index: SegmentIndex, plans: dict, k: int, batch: bool,
 
 def _shard_stage(index: SegmentIndex, plans: dict, k: int, batch: bool,
                  scope_bc=None, scope_lids: DataFrame | None = None) -> DataFrame:
-    """The shard-kernel stage of every Spark query entry point: the pruned
-    segment rows of the union of the plans' scan terms, and one
-    ``_task_body`` per task over them. Output: (qid, docid, score) when
-    `batch`, else the one plan's (docid, score); no plan joins or scans
-    the docmap. `scope_bc` (a broadcast of sorted keys) or `scope_lids`
-    (cogrouped (shard, lid) rows) restrict the candidates.
+    """The shard-kernel stage of every Spark query entry point: one
+    ``_task_body`` per task, each over whole shards, reading their rows of
+    the union of the plans' scan terms itself — the plan scans no segment
+    file. Output: (qid, docid, score) when `batch`, else the one plan's
+    (docid, score); no plan joins or scans the docmap. `scope_bc` (a
+    broadcast of sorted keys) or `scope_lids` ((shard, lid) rows) restrict
+    the candidates.
 
     idf comes from the index's driver-side (df, idf) memo and rides the
     body's closure. The stage runs in `_kernel_tasks` tasks sized to the
-    scanned postings (sum of df), not spark.sql.shuffle.partitions. One
-    task is a ``coalesce(1)``: no exchange cuts the stage, and the scan,
-    the ``mapInArrow`` body and the caller's tail run as one stage. More
-    tasks repartition by shard, so each task holds whole shards. The
-    large-scope path cogroups both sides, repartitioned by shard to the
-    same count (they stay co-partitioned), and runs the same body on each
-    one-shard group with ``applyInArrow``."""
+    scan terms' postings (sum of df), not spark.sql.shuffle.partitions:
+    its input is a driver-built frame of task descriptors,
+    ``spark.range(0, n, 1, n)``, and task i reads shards i, i + n, ...
+    One task is one partition, so the ``mapInArrow`` body and the
+    caller's tail run as one stage. The large-scope path groups the
+    scope's rows by shard (repartitioned by shard to the same count) and
+    runs the same body on each one-shard group with ``applyInArrow``."""
     scan_terms = sorted({t for p in plans.values() for t in p.scan_terms})
     info = index.term_info(scan_terms)
     n = _kernel_tasks(index, sum(n for n, _v in info.values()))
     body = _task_body(index, plans, k, batch, {t: v for t, (_n, v) in info.items()}, scope_bc)
     schema = BATCH_SHARD_SCHEMA if batch else RESULT_SCHEMA
-    # the kernels read neither ctf nor the bucket partition column, and
-    # positions only for a positional plan: the scan skips what they skip
-    unread = ("ctf", "bucket") + (() if any(p.need_pos for p in plans.values())
-                                  else ("positions", "p_off"))
-    rows = index.segments_for(scan_terms).drop(*unread)
+    n_shards = index.n_shards
     if scope_lids is None:
 
         def run(batches):
-            # a shard's rows may arrive in several batches
-            batches = list(batches)
-            if batches:
-                yield from body(pa.Table.from_batches(batches)).to_batches()
+            for b in batches:
+                for i in b.column(0).to_pylist():
+                    yield from body(range(i, n_shards, n)).to_batches()
 
-        part = rows.coalesce(1) if n == 1 else rows.repartition(n, "shard")
-        return part.mapInArrow(run, schema)
-    segs, scope = (df.repartition(n, "shard").groupBy("shard") for df in (rows, scope_lids))
-    return segs.cogroup(scope).applyInArrow(body, schema=schema)
+        return index.spark.range(0, n, 1, n).mapInArrow(run, schema)
+    return scope_lids.repartition(n, "shard").groupBy("shard").applyInArrow(
+        lambda scope: body([scope.column("shard")[0].as_py()], scope), schema=schema)
 
 
 def _spark_topk(index: SegmentIndex, plan: QueryPlan | None, k: int,
@@ -1177,13 +1176,14 @@ def bm25_topk_wand(
     the SparkContext of `index.spark` (the index's isolated session shares
     the caller's context); one from another context raises ValueError.
 
-    Spark work per query: one job. idf comes from the index's driver-side
-    memo (a miss is a pyarrow read, not a job); the segment scan, the
-    kernel task (which maps its keys to docids) and the
-    TakeOrderedAndProject run in one stage of one task below
-    POSTINGS_PER_TASK postings, and behind one shard exchange above it.
-    The large-scope cogroup path adds the docmap semi-join that turns
-    the scope's docids into lids. AND semantics stay exact when a query
+    Spark work per query: one job, and no file scan in its plan. idf
+    comes from the index's driver-side memo (a miss is a pyarrow read,
+    not a job); the kernel task (which reads its terms' segment rows and
+    maps its keys to docids) and the TakeOrderedAndProject run in one
+    stage of one task below POSTINGS_PER_TASK postings, and in one stage
+    of up to one task per core above it. The large-scope path adds the
+    docmap semi-join that turns the scope's docids into lids and one
+    shard exchange of those rows. AND semantics stay exact when a query
     term is unknown globally: no task then holds a list for it, so every
     task returns empty."""
     spark = index.spark
@@ -1233,10 +1233,10 @@ def bm25_topk_websearch_batch(
     index: SegmentIndex, queries: dict[str, str], k: int = 10
 ) -> DataFrame:
     """A whole batch of websearch queries (plain AND, '"quoted"' groups,
-    '-term' negation, freely mixed) in ONE shard-kernel stage: one pruned
-    segment scan over the union of every query's positive AND negated
-    terms, one kernel stage where each task answers every query over
-    its keyed lists, one per-query rank window. Returns (qid, rnk,
+    '-term' negation, freely mixed) in ONE shard-kernel stage: each task
+    reads its shards' rows of the union of every query's positive AND
+    negated terms once and answers every query over its keyed lists;
+    one per-query rank window. Returns (qid, rnk,
     docid, score) — identical to per-query bm25_topk_websearch (tested)."""
     return _spark_batch(index, queries, k, syntax="web")
 
@@ -1245,9 +1245,9 @@ def bm25_topk_phrase_batch(
     index: SegmentIndex, queries: dict[str, str], k: int = 10, slop: int = 0
 ) -> DataFrame:
     """Evaluate a batch of phrase/NEAR queries in ONE shard-kernel stage
-    (same amortization as bm25_topk_wand_batch: one pruned positional
-    segment scan over the union of all phrases' terms, each task answers
-    every phrase over its keyed lists, one rank window). Returns
+    (same amortization as bm25_topk_wand_batch: each task reads its
+    shards' positional rows of the union of all phrases' terms once and
+    answers every phrase over its keyed lists, one rank window). Returns
     (qid, rnk, docid, score) — identical to per-query bm25_topk_phrase."""
     return _spark_batch(index, queries, k, syntax="phrase", slop=slop)
 
@@ -1258,12 +1258,12 @@ def bm25_topk_wand_batch(
     """Evaluate a whole query batch in ONE shard-kernel stage.
 
     A point query is one Spark job of one stage and one task, and pays a
-    fixed cost for it (traced ``wand.exec_ms`` 210-267 ms on a 4-vCPU
-    host; ~94 ms of CPU per extra task, see POSTINGS_PER_TASK); a search
+    fixed cost for it (traced ``wand.exec_ms`` 127 ms on a 4-vCPU host;
+    ~43-63 ms of CPU per extra task, see POSTINGS_PER_TASK); a search
     engine's natural unit is the query *stream* (the reference's design
-    target is 100 q/s, PIPELINE.md:350). Here: one pruned segment scan
-    over the union of all queries' terms, one kernel stage
-    where each task answers every query over its keyed lists, one final
+    target is 100 q/s, PIPELINE.md:350). Here: one kernel stage whose
+    tasks each read their shards' rows of the union of all queries'
+    terms once and answer every query over their keyed lists, one final
     per-query rank window over ~n_queries * n_tasks * k tiny rows.
 
     Returns DataFrame(qid, rnk, docid, score), rank per query by

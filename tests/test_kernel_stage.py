@@ -1,8 +1,8 @@
 """The shard-kernel stage of the Spark query entry points: its task count
 follows the query's posting volume (query/wand.py _shard_stage), idf rides
-the kernel closure, the kernel tasks map their lids to docids themselves,
-caller strings never reach the SQL text, and a SegmentIndex releases what
-it registered."""
+the kernel closure, the kernel tasks read their own segment rows and map
+their lids to docids themselves, caller strings are analyzer input and
+never SQL, and a SegmentIndex releases what it registered."""
 
 import itertools
 import re
@@ -69,11 +69,12 @@ def test_kernel_tasks_sized_to_postings(seg_index):
 def test_repeated_point_query_runs_one_kernel_task(spark, seg_index):
     """A point query is ONE Spark job of one stage and one task, on its
     first call (every term an idf-memo miss: the lookup is a driver-side
-    pyarrow read) as on a repeat: the segment scan, the shard kernels
+    pyarrow read) as on a repeat: the segment-row read, the shard kernels
     (which map their lids to docids), and the TakeOrderedAndProject run
     in the same task. The kernel stage does not inherit
-    spark.sql.shuffle.partitions (8 in the test session), and a one-task
-    stage has no exchange."""
+    spark.sql.shuffle.partitions (8 in the test session): its input is a
+    one-row task-descriptor frame, and the plan scans no file and has no
+    exchange."""
     from honeywell_search_engine_spark.index.segments import SegmentIndex
 
     q = QUERIES["q10"]
@@ -89,21 +90,26 @@ def test_repeated_point_query_runs_one_kernel_task(spark, seg_index):
         assert got == first
         assert jobs == [[1]], jobs
         plan = physical_plan(df)
-    assert "Coalesce 1" in plan and "Exchange" not in plan, plan
-    for side in ("term_stats", "docmap", "Join"):  # idf and docids ride the kernel
+    assert "Range (0, 1, step=1, splits=1)" in plan, plan
+    # rows, idf and docids ride the kernel task: no scan of any file
+    for side in ("Exchange", "Scan", "segments", "term_stats", "docmap", "Join"):
         assert side not in plan, plan
 
 
 def test_oracle_identity_at_task_cap(monkeypatch, spark, seg_index, oracle, pages_pdf):
     """With POSTINGS_PER_TASK = 1 every stage runs at its cap (one task
-    per shard, here 4): the oracle-identity checks still hold unchanged —
-    AND/OR, websearch, phrase, batch, and the large-scope cogroup path
-    (both cogroup sides at the same count: no extra exchange)."""
+    per core, here 4, each reading its whole shards' rows): the
+    oracle-identity checks still hold unchanged — AND/OR, websearch,
+    phrase, batch, and the large-scope path (the scope's rows grouped by
+    shard at the same count: one exchange, no segment scan)."""
     monkeypatch.setattr(W, "POSTINGS_PER_TASK", 1)
     cap = min(seg_index.n_shards, spark.sparkContext.defaultParallelism)
     assert cap > 1
-    plan = physical_plan(W.bm25_topk_wand(seg_index, QUERIES["q10"], k=10))
-    assert re.search(rf"hashpartitioning\(shard#\d+, {cap}\)", plan), plan
+    df = W.bm25_topk_wand(seg_index, QUERIES["q10"], k=10)
+    plan = physical_plan(df)
+    assert f"Range (0, {cap}, step=1, splits={cap})" in plan, plan
+    assert "Exchange" not in plan and "Scan" not in plan, plan
+    assert _run_counted(seg_index.spark, df.collect)[1] == [[cap]]
     for name in sorted(QUERIES):
         TS.test_wand_bit_identical_to_oracle(seg_index, oracle, name)
     TS.test_or_topk_matches_oracle(seg_index, oracle)
@@ -119,35 +125,46 @@ def test_oracle_identity_at_task_cap(monkeypatch, spark, seg_index, oracle, page
         seg_index, QUERIES["q01"], k=10, allowed_docids=scope.withColumnRenamed("id", "docid")
     )
     cg_plan = physical_plan(cg)
-    # one exchange per cogroup side, both at the cap
-    assert len(re.findall(rf"hashpartitioning\(shard#\d+, {cap}\)", cg_plan)) == 2, cg_plan
+    # the scope side's one exchange, at the cap; its tasks read their rows
+    assert len(re.findall(r"hashpartitioning\(", cg_plan)) == 1, cg_plan
+    assert re.search(rf"hashpartitioning\(shard#\d+, {cap}\)", cg_plan), cg_plan
+    assert "/segments" not in cg_plan, cg_plan
 
 
 def test_task_body_reads_docmap_once(monkeypatch, seg_index, oracle):
-    """One kernel task's body, run in-process over every shard's segment
-    rows (shuffled, as they may arrive from several batches): it maps the
-    keys of all shards and all queries with ONE docmap dataset read, and
-    its top-k+ties cut to k is the oracle's answer for every query."""
+    """One kernel task's body, run in-process over every shard: it reads
+    its rows with the shared segment-row read, maps the keys of all shards
+    and all queries with ONE docmap dataset read, and its top-k+ties cut
+    to k is the oracle's answer for every query — as is the merge of two
+    bodies over disjoint shard groups (two tasks)."""
     import pyarrow.dataset as ds
+
+    from honeywell_search_engine_spark.index import segments as S
 
     queries = {n: QUERIES[n] for n in ("q01", "q02", "q10")}
     plans = {n: W.plan_query(seg_index, q, 10) for n, q in queries.items()}
     terms = sorted({t for p in plans.values() for t in p.scan_terms})
     idf = {t: v for t, (_n, v) in seg_index.term_info(terms).items()}
-    segs = seg_index.segments_for(terms).toArrow()
-    assert len(set(segs.column("shard").to_pylist())) > 1
-    segs = segs.take(np.random.default_rng(7).permutation(segs.num_rows))
+    body = W._task_body(seg_index, plans, 10, True, idf)
 
-    opened = []
-    real_dataset = ds.dataset
+    read_calls, real_read = [], S.read_term_rows
+    opened, real_dataset = [], ds.dataset
+    monkeypatch.setattr(W, "read_term_rows",
+                        lambda *a, **kw: read_calls.append(a) or real_read(*a, **kw))
     monkeypatch.setattr(ds, "dataset", lambda *a, **kw: opened.append(a) or real_dataset(*a, **kw))
-    out = W._task_body(seg_index, plans, 10, True, idf)(segs)
-    assert len(opened) == 1
-    rows = sorted(zip(*(out.column(c).to_pylist() for c in ("qid", "docid", "score"))),
-                  key=lambda r: (r[0], -r[2], r[1]))
-    for name, q in queries.items():
-        got = [(d, s) for qid, d, s in rows if qid == name][:10]
-        assert got == oracle.search(q, k=10), name
+    shards = range(seg_index.n_shards)
+    out = body(shards)
+    assert len(read_calls) == 1 and len(opened) == 1
+    assert read_calls[0][0] is seg_index.segment_files and list(read_calls[0][2]) == terms
+    halves = [body(range(i, seg_index.n_shards, 2)) for i in (0, 1)]
+
+    def top(tables):
+        rows = sorted(((q, d, s) for t in tables for q, d, s in
+                       zip(*(t.column(c).to_pylist() for c in ("qid", "docid", "score")))),
+                      key=lambda r: (r[0], -r[2], r[1]))
+        return {name: [(d, s) for qid, d, s in rows if qid == name][:10] for name in queries}
+
+    assert top([out]) == top(halves) == {n: oracle.search(q, k=10) for n, q in queries.items()}
 
 
 @pytest.mark.parametrize("q", HOSTILE)
@@ -337,31 +354,19 @@ def test_pre_analyzed_and_empty_terms(seg_index, oracle):
     assert W.bm25_topk_wand(seg_index, "").collect() == []
 
 
-def test_segments_for_binds_terms(seg_index):
-    """segments_for binds its terms as parameters: quotes and backslashes
-    are matched literally (no row has them), and an empty list is an
-    empty frame with the segment (kernel-input) schema."""
-    hostile = ["a'b", "c\\", "\\'", "x') OR ('1'='1", "ünï"]
-    assert seg_index.segments_for(hostile).count() == 0
-    ok = seg_index.segments_for(hostile + [QUERIES["q01"]])
-    assert {r["term"] for r in ok.select("term").collect()} == {QUERIES["q01"]}
-    empty = seg_index.segments_for([])
-    assert empty.schema == seg_index.segments.schema
-    assert empty.count() == 0
-
-
 def test_close_drops_views_and_broadcasts(spark, seg_index):
+    """A handle registers no temp view (its queries build no SQL), and
+    close() unpersists its memoized scope broadcasts."""
     from honeywell_search_engine_spark.index.segments import SegmentIndex
 
     def views(session):
         return {t.name for t in session.catalog.listTables() if t.isTemporary}
 
+    before = views(spark)
     with SegmentIndex(spark, seg_index.path, isolate_session=False) as idx:
-        mine = {idx._seg_view}
-        assert mine <= views(spark)
         assert _rows(W.bm25_topk_wand(idx, QUERIES["q10"], k=10, allowed_docids=[1])) == []
         assert idx._scope_bcs
-    assert not mine & views(spark)
+        assert views(spark) == before
     assert not idx._scope_bcs
     idx.close()  # idempotent
 
@@ -466,14 +471,22 @@ def test_in_kernel_rehydrate_matches_oracle_after_merge(spark, merged_index):
 
 
 def test_handle_opened_before_compact_keeps_its_docmap(spark, merged_index, tmp_path):
-    """A handle is a snapshot: after compact swaps in new docmap files, a
-    handle opened before it still looks docids up in ITS files only — the
-    lookup of a gone file fails, it never falls through to the new files
-    — while a handle opened after compact answers from the new ones."""
+    """A handle is a snapshot: after compact swaps in new segment and
+    docmap files, a handle opened before it still reads posting rows and
+    looks docids up in ITS files only — the read of a gone file fails
+    with FileNotFoundError, it never falls through to the new files —
+    while a handle opened after compact answers from the new ones."""
     import shutil
 
     from honeywell_search_engine_spark.index.maintenance import compact, delete_docs
-    from honeywell_search_engine_spark.index.segments import SegmentIndex, docids_of_lids
+    from honeywell_search_engine_spark.index.segments import (
+        SegmentIndex,
+        docids_of_lids,
+        read_term_rows,
+    )
+
+    def files(idx):
+        return {f for fs in idx.segment_files.values() for f in fs}
 
     idx_dir = str(tmp_path / "idx")
     shutil.copytree(merged_index[0], idx_dir)
@@ -485,11 +498,17 @@ def test_handle_opened_before_compact_keeps_its_docmap(spark, merged_index, tmp_
         with SegmentIndex(spark, idx_dir) as new:
             assert not set(old.docmap_files) & set(new.docmap_files)
             assert not set(old.term_stats_files) & set(new.term_stats_files)
+            assert files(old) and files(new) and not files(old) & files(new)
             after = _rows(W.bm25_topk_wand(new, "data", k=10))
         assert before[0][0] not in {d for d, _ in after}
         with pytest.raises(FileNotFoundError):
             docids_of_lids(old.docmap_files, np.array([0], dtype=np.int64))
-        with pytest.raises(Exception, match="FileNotFound|does not exist"):
+        with pytest.raises(FileNotFoundError):
+            read_term_rows(old.segment_files, old.n_buckets, ["data"])
+        # the kernel task's first read is its segment rows: the query
+        # fails there, on a file of the old snapshot
+        with pytest.raises(Exception, match=r"FileNotFoundError[\s\S]*/segments/bucket=") as err:
             W.bm25_topk_wand(old, "data", k=10).collect()
+        assert not any(f in str(err.value) for f in files(SegmentIndex(spark, idx_dir)))
     finally:
         old.close()

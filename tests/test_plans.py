@@ -1,7 +1,9 @@
 """Physical-plan quality assertions: the optimizations we rely on at scale
 must be visible in the plan, not assumed.
 
-- segment scans are partition-pruned by bucket and push the term filter;
+- a query plan scans no segment file: its tasks read their rows with the
+  shared posting-row read, which opens only the query terms' bucket files
+  and reads only the columns the kernels read;
 - pages scans prune columns (html not read unless extraction requested);
 - the phase-2 encode plan contains NO Exchange (single-shuffle build).
 """
@@ -14,14 +16,41 @@ _plan = physical_plan
 _optimized = optimized_plan
 
 
-def test_segment_scan_partition_pruned(seg_index):
-    df = seg_index.segments_for(["data", "search"])
-    plan = _plan(df)
-    assert "PartitionFilters" in plan
-    # bucket dir pruning present (bucket IN (...)) and term pushdown reaches
-    # the parquet source
-    assert "bucket" in plan.split("PartitionFilters")[1][:200]
-    assert "PushedFilters" in plan and "term" in plan.split("PushedFilters")[1][:200]
+def _spy_reads(monkeypatch):
+    """[footer paths] and [[columns]] of every segment file read from now
+    on (a footer is parsed once per file per read_term_rows call)."""
+    import pyarrow.parquet as pq
+
+    paths, cols = [], []
+    real_md, real_read = pq.read_metadata, pq.ParquetFile.read_row_groups
+    monkeypatch.setattr(pq, "read_metadata",
+                        lambda p, *a, **kw: paths.append(p) or real_md(p, *a, **kw))
+
+    def read(self, row_groups, columns=None, **kw):
+        cols.append(list(columns))
+        return real_read(self, row_groups, columns=columns, **kw)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_groups", read)
+    return paths, cols
+
+
+def test_segment_scan_partition_pruned(seg_index, monkeypatch):
+    """The segment-row read is bucket-pruned: it opens only the query
+    terms' bucket files of the handle's snapshot and returns their lists
+    with df equal to term_stats'; a query plan scans no segment file."""
+    from honeywell_search_engine_spark.index.segments import bucket_of, read_term_rows
+    from honeywell_search_engine_spark.query.wand import bm25_topk_wand
+
+    terms = ["data", "search"]
+    paths, _cols = _spy_reads(monkeypatch)
+    df, lists = read_term_rows(seg_index.segment_files, seg_index.n_buckets, terms)
+    files = seg_index.segment_files
+    want = {f for b in {bucket_of(t, seg_index.n_buckets) for t in terms} for f in files[b]}
+    assert want and sorted(paths) == sorted(want) and len(want) < sum(map(len, files.values()))
+    assert set(lists) == set(terms)
+    assert df == {t: n for t, (n, _idf) in seg_index.term_info(terms).items()}
+    plan = _plan(bm25_topk_wand(seg_index, "data search", k=10))
+    assert "Scan" not in plan and "segments" not in plan, plan
 
 
 def test_pages_scan_prunes_html(spark, pages_path):
@@ -88,62 +117,73 @@ def test_docmap_assignment_is_tokenizer_free(spark, pages_path):
 
 
 def test_point_query_rehydrates_inside_kernel_stage(seg_index):
-    """A point query's plan is one stage: the pruned segment scan, a
-    Coalesce 1 (no Exchange), the shard kernels — which map their lids to
-    docids themselves — and a TakeOrderedAndProject final cut. No join of
-    any kind, and no docmap or term_stats scan."""
+    """A point query's plan is one stage: a one-row task-descriptor
+    frame, the shard kernels — which read their segment rows and map
+    their lids to docids themselves — and a TakeOrderedAndProject final
+    cut. No exchange, no join of any kind, and no scan of any file."""
     from honeywell_search_engine_spark.query.wand import bm25_topk_wand
 
     plan = _plan(bm25_topk_wand(seg_index, "data search", k=10))
     assert "TakeOrderedAndProject" in plan
-    assert "Coalesce 1" in plan
-    for bad in ("Exchange", "Join", "docmap", "term_stats"):
+    assert "Range (0, 1, step=1, splits=1)" in plan
+    for bad in ("Exchange", "Join", "Scan", "segments", "docmap", "term_stats"):
         assert bad not in plan, (bad, plan)
 
 
 def test_batch_plans_read_no_docmap(seg_index):
-    """The batch entry points' kernels rehydrate too: their plans join
-    nothing and never scan the docmap, and a one-task stage feeds the
-    rank window without an exchange."""
+    """The batch entry points' kernels read their rows and rehydrate too:
+    their plans join nothing and scan no file, and a one-task stage feeds
+    the rank window without an exchange."""
     from honeywell_search_engine_spark.query import wand as W
 
     qs = {"a": "data search", "b": "table"}
     for fn in (W.bm25_topk_wand_batch, W.bm25_topk_websearch_batch, W.bm25_topk_phrase_batch):
         plan = _plan(fn(seg_index, qs, k=10))
-        assert "MapInArrow" in plan and "Coalesce 1" in plan, plan
-        for bad in ("Exchange", "Join", "docmap", "term_stats"):
+        assert "MapInArrow" in plan and "Range (0, 1, step=1, splits=1)" in plan, plan
+        for bad in ("Exchange", "Join", "Scan", "segments", "docmap", "term_stats"):
             assert bad not in plan, (fn.__name__, bad, plan)
 
 
-def test_phrase_scan_pruned_and_projected(seg_index):
-    """Phrase queries scan only the phrase terms' buckets and read the
-    position stream from the segment files (pushdown + pruning intact)."""
-    from honeywell_search_engine_spark.query.wand import bm25_topk_phrase
+def test_phrase_scan_pruned_and_projected(seg_index, monkeypatch):
+    """A phrase query's segment-row read opens only the phrase terms'
+    bucket files and reads the position stream: its lists carry
+    positions; its plan scans no segment file."""
+    from honeywell_search_engine_spark.index.segments import bucket_of, read_term_rows
+    from honeywell_search_engine_spark.query.wand import bm25_topk_phrase, plan_query
 
-    plan = _plan(bm25_topk_phrase(seg_index, "data search", k=10))
-    assert "PartitionFilters" in plan
-    assert "bucket" in plan.split("PartitionFilters")[1][:200]
-    assert "positions" in plan  # positional stream projected to the kernel
+    plan = plan_query(seg_index, "data search", 10, syntax="phrase")
+    assert plan.need_pos == {"data", "search"}
+    paths, cols = _spy_reads(monkeypatch)
+    _df, lists = read_term_rows(seg_index.segment_files, seg_index.n_buckets,
+                                plan.scan_terms, plan.need_pos)
+    files = seg_index.segment_files
+    assert sorted(paths) == sorted(
+        {f for b in {bucket_of(t, seg_index.n_buckets) for t in plan.scan_terms}
+         for f in files[b]})
+    assert cols and all("positions" in c and "p_off" in c for c in cols), cols
+    assert all(enc.positions is not None for enc in lists.values()), lists
+    assert "Scan" not in _plan(bm25_topk_phrase(seg_index, "data search", k=10))
 
 
-def test_kernel_scan_projects_kernel_columns(seg_index):
-    """The kernel stage scans only the columns the kernels read: a point
-    AND query reads neither positions nor ctf; a phrase query still
-    reads positions."""
-    from honeywell_search_engine_spark.query.wand import bm25_topk_phrase, bm25_topk_wand
+def test_kernel_scan_projects_kernel_columns(seg_index, monkeypatch):
+    """The segment-row read takes only the columns the kernels read: a
+    point AND query reads neither positions nor ctf (nor the bucket
+    partition column); a phrase query still reads positions."""
+    from honeywell_search_engine_spark.index.segments import read_term_rows
+    from honeywell_search_engine_spark.query.wand import plan_query
 
-    def read_schema(df):
-        return _plan(df).split("ReadSchema")[1].split("\n")[0]
+    def read_cols(**kw):
+        plan = plan_query(seg_index, "data search", 10, **kw)
+        _paths, cols = _spy_reads(monkeypatch)
+        read_term_rows(seg_index.segment_files, seg_index.n_buckets,
+                       plan.scan_terms, plan.need_pos)
+        monkeypatch.undo()
+        assert cols
+        return {c for cs in cols for c in cs}
 
-    conf = seg_index.spark.conf
-    conf.set("spark.sql.maxMetadataStringLength", "10000")  # untruncated ReadSchema
-    try:
-        point = read_schema(bm25_topk_wand(seg_index, "data search", k=10))
-        phrase = read_schema(bm25_topk_phrase(seg_index, "data search", k=10))
-    finally:
-        conf.unset("spark.sql.maxMetadataStringLength")
+    point, phrase = read_cols(), read_cols(syntax="phrase")
     assert "doclens" in point, point
-    for bad in ("positions", "p_off", "ctf"):
+    for bad in ("positions", "p_off", "ctf", "bucket"):
         assert bad not in point, (bad, point)
     assert "positions" in phrase and "p_off" in phrase, phrase
 
@@ -276,12 +316,13 @@ def test_segment_index_point_query_session(spark, seg_index):
 
 
 def test_wand_sql_tail_plan_shape(seg_index):
-    """The wand query plan: partition-pruned segment scan with the term
-    filter pushed, the kernel stage, and a TakeOrderedAndProject tail —
-    no Sort anywhere in the plan (the kernel body groups its rows by
-    shard itself, so not even a shard-local group sort). idf and docids
-    ride the kernel stage, so neither the term dictionary nor the docmap
-    is scanned or joined, and a one-task stage has no Exchange."""
+    """The wand query plan: the task-descriptor frame, the kernel stage
+    (whose tasks read their segment rows) and a TakeOrderedAndProject
+    tail — no Sort anywhere in the plan (the kernel body groups its rows
+    by shard itself, so not even a shard-local group sort). Rows, idf
+    and docids ride the kernel stage, so no segment file, term dictionary
+    or docmap is scanned or joined, and a one-task stage has no
+    Exchange."""
     import re
 
     from honeywell_search_engine_spark.query.wand import bm25_topk_wand
@@ -294,5 +335,4 @@ def test_wand_sql_tail_plan_shape(seg_index):
     assert "MapInArrow" in plan, plan
     assert not re.findall(r"Sort \[", plan), plan
     assert "term_stats" not in plan
-    scan_part = plan.split("PushedFilters", 1)[1][:200] if "PushedFilters" in plan else ""
-    assert "term" in scan_part
+    assert "Scan" not in plan and "segments" not in plan, plan

@@ -2,8 +2,9 @@
 writer — build, build_generation, promote_generation, merge_deltas and
 compact — leaves each bucket file sorted by (term, shard) in row groups
 of at most SEGMENT_ROW_GROUP_ROWS rows with `term` min/max statistics,
-so a cold serving read and a Spark point scan decode only the row groups
-that can hold a query term. Indexes written before the layout (one
+so the one posting-row read (``read_term_rows``: a cold serving read, a
+Spark query task) decodes only the row groups that can hold one of the
+file's bucket's query terms. Indexes written before the layout (one
 unsorted row group per bucket file, v1 pages) open and answer the same,
 and the next rewrite of a bucket clusters it."""
 
@@ -30,6 +31,7 @@ N_BUCKETS, N_SHARDS = 4, 4
 CAP = 16  # row cap of the test indexes: many row groups per bucket file
 STEPS = ("build", "generation", "promote", "merge", "compact")
 QUERY = ["data", "search"]
+SPREAD = ["crawl", "data", "page", "search", "web"]  # every bucket of the four
 
 
 def _write_pages(spark, pdf, lo, hi, path):
@@ -112,20 +114,6 @@ def _clustered(path) -> bool:
     return keys == sorted(keys)
 
 
-def _scan_rows(df, name="segments") -> int:
-    """numOutputRows of the file scans of `name` in `df`'s executed plan."""
-    rows, todo = 0, [df._jdf.queryExecution().executedPlan()]
-    while todo:
-        node = todo.pop()
-        if node.nodeName().startswith("Scan "):
-            roots = node.relation().location().rootPaths()
-            if os.path.basename(roots.apply(0).toString().rstrip("/")) == name:
-                rows += int(node.metrics().get("numOutputRows").get().value())
-        kids = node.children()
-        todo += [kids.apply(i) for i in range(kids.size())]
-    return rows
-
-
 @pytest.mark.parametrize("step", STEPS)
 def test_segment_files_clustered_in_capped_row_groups(life, step):
     idx, _ = life[step]
@@ -160,23 +148,47 @@ def test_cold_serving_reads_only_holding_row_groups(life, step, monkeypatch):
 
 
 @pytest.mark.parametrize("step", STEPS)
-def test_spark_point_scan_reads_only_holding_row_groups(spark, life, step):
-    """The segment scan of a Spark point query outputs exactly the rows of
-    the row groups whose term min/max hold a query term, in the bucket
-    files the query touches: the query terms' own rows plus at most the
-    two partial row groups around each term's run of rows in a file."""
+def test_spark_point_scan_reads_only_holding_row_groups(spark, life, step, monkeypatch):
+    """The segment-row read a Spark query task runs (tested in-process:
+    the same function, over the handle's snapshot) decodes, in every file
+    of the query's buckets, exactly the row groups whose term min/max
+    hold one of THAT bucket's terms — fewer than a filter by every query
+    term would. The Spark point query scans no segment file and answers
+    as the oracle."""
     idx, oracle = life[step]
-    files = _files(idx, {S.bucket_of(t, N_BUCKETS) for t in QUERY})
-    tbl = pa.concat_tables([pq.read_table(f, columns=["term"]) for f in files])
-    term_rows = int(np.isin(tbl.column("term").to_numpy(zero_copy_only=False), QUERY).sum())
-    held = sum(_term_ranges(f)[i][0] for f in files for i in _holding(f, QUERY))
+    by_bucket = {}
+    for t in SPREAD:
+        by_bucket.setdefault(S.bucket_of(t, N_BUCKETS), []).append(t)
+    assert len(by_bucket) >= 2
+    files = {f: ts for b, ts in by_bucket.items() for f in _files(idx, {b})}
+    want = {f: h for f, ts in files.items() if (h := _holding(f, ts))}
+    assert sum(map(len, want.values())) < sum(len(_holding(f, SPREAD)) for f in files)
+    reads = {}
+    real_init, real_read = pq.ParquetFile.__init__, pq.ParquetFile.read_row_groups
+
+    def init(self, source, *a, **kw):
+        real_init(self, source, *a, **kw)
+        self.spied_path = source
+
+    def read(self, row_groups, *a, **kw):
+        assert self.spied_path not in reads  # one read per file
+        reads[self.spied_path] = list(row_groups)
+        return real_read(self, row_groups, *a, **kw)
+
+    q = " ".join(SPREAD)
     with S.SegmentIndex(spark, idx) as si:
-        df = W.bm25_topk_wand(si, " ".join(QUERY), k=10, mode="or")
+        assert {f: ts for b, ts in by_bucket.items() for f in si.segment_files.get(b, ())} == files
+        monkeypatch.setattr(pq.ParquetFile, "__init__", init)
+        monkeypatch.setattr(pq.ParquetFile, "read_row_groups", read)
+        _df, lists = S.read_term_rows(si.segment_files, si.n_buckets, SPREAD)
+        monkeypatch.undo()
+        df = W.bm25_topk_wand(si, q, k=10, mode="or")
         got = [(r.docid, r.score) for r in df.collect()]
-        rows = _scan_rows(df)
-    assert got == oracle.search_or(" ".join(QUERY), k=10)
-    assert term_rows <= rows == held < tbl.num_rows
-    assert rows <= term_rows + 2 * (CAP - 1) * len(QUERY) * len(files)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    assert reads == want
+    assert set(lists) == set(SPREAD)
+    assert got == oracle.search_or(q, k=10)
+    assert "Scan" not in plan and "segments" not in plan, plan
 
 
 # --------------------------------------------------------------------------

@@ -581,10 +581,12 @@ def test_scoped_search_matches_oracle(seg_index, oracle):
 
 def test_large_scope_cogroup_path_no_driver_materialization(spark, seg_index, oracle):
     """A scope above SCOPE_INLINE_MAX (or any DataFrame scope) must ride
-    the distributed cogroup path: the plan joins the docmap with the scope
-    and feeds FlatMapCoGroupsInArrow — no driver collect/broadcast of the
-    scope — with results identical to the memoized-broadcast path
-    (round-2 verdict item 5)."""
+    the distributed large-scope path: the plan joins the docmap with the
+    scope and feeds its (shard, lid) rows, grouped by shard, to
+    FlatMapGroupsInArrow, whose tasks read their shard's segment rows
+    themselves (no segment scan in the plan) — no driver
+    collect/broadcast of the scope — with results identical to the
+    memoized-broadcast path (round-2 verdict item 5)."""
     from pyspark.sql import functions as F
 
     q = QUERIES["q01"]
@@ -603,7 +605,7 @@ def test_large_scope_cogroup_path_no_driver_materialization(spark, seg_index, or
     )
     df = bm25_topk_wand(seg_index, q, k=10, allowed_docids=scope_df)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInArrow" in plan, plan[:2000]
+    assert "FlatMapGroupsInArrow [shard" in plan and "/segments" not in plan, plan[:2000]
     got = [(r["docid"], r["score"]) for r in df.collect()]
     assert got == exp
 
@@ -611,7 +613,7 @@ def test_large_scope_cogroup_path_no_driver_materialization(spark, seg_index, or
     big_list = allowed + list(range(20_000_000, 20_150_000))
     df2 = bm25_topk_wand(seg_index, q, k=10, allowed_docids=big_list)
     plan2 = df2._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInArrow" in plan2
+    assert "FlatMapGroupsInArrow [shard" in plan2 and "/segments" not in plan2
     assert [(r["docid"], r["score"]) for r in df2.collect()] == exp
 
     # memoization: the same small scope reuses ONE broadcast across queries
