@@ -884,8 +884,8 @@ def main() -> None:
         _d_tf = _rng.randint(1, 4, size=_nd).astype(np.uint64)
         _b_dl = _rng.randint(20, 300, size=_nb).astype(np.uint64)
         _d_dl = _rng.randint(20, 300, size=_nd).astype(np.uint64)
-        _b_enc = _codec.encode_postings(_b_doc, _b_tf, _b_dl, 0.0, fmt="pfor")
-        _d_enc = _codec.encode_postings(_d_doc, _d_tf, _d_dl, 0.0, fmt="pfor")
+        _b_enc = _codec.encode_postings(_b_doc, _b_tf, _b_dl, fmt="pfor")
+        _d_enc = _codec.encode_postings(_d_doc, _d_tf, _d_dl, fmt="pfor")
         _off = int(_b_doc[-1]) + 1
         def _best_of(fn, reps=3):
             best = None

@@ -659,7 +659,6 @@ def encode_postings(
     docids: np.ndarray,
     tfs: np.ndarray,
     doclens: np.ndarray,
-    avgdl: float,
     positions: np.ndarray | None = None,
     fmt: str = FMT_VB,
     prev_docid: int = 0,

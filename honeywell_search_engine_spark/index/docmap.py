@@ -124,14 +124,18 @@ def doc_keys(docmap: DataFrame, docids) -> np.ndarray:
     (shard << KEY_BITS) | local_id (index/codec.py ``fuse``) via a
     broadcast semi-join of ``docid_frame`` against the docmap (the set —
     tombstones or a query scope — is small relative to the corpus; the
-    docmap scan is column-pruned to 3 columns), collected as Arrow."""
+    docmap scan is column-pruned to 3 columns), collected as Arrow.
+    `docids` is any iterable of ints, or a ``docid_frame`` already built
+    (compact joins its one tombstone frame twice)."""
     from honeywell_search_engine_spark.index.codec import keys_of
 
-    ids = np.unique(np.fromiter(docids, dtype=np.int64))
-    if not ids.size:
-        return ids
+    if not isinstance(docids, DataFrame):
+        ids = np.unique(np.fromiter(docids, dtype=np.int64))
+        if not ids.size:
+            return ids
+        docids = docid_frame(docmap.sparkSession, ids)
     tbl = (
-        docmap.join(F.broadcast(docid_frame(docmap.sparkSession, ids)), "docid", "left_semi")
+        docmap.join(F.broadcast(docids), "docid", "left_semi")
         .select("shard", "local_id")
         .toArrow()
     )

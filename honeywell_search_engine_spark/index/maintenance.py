@@ -8,8 +8,10 @@ deletion is two-phase, lake-style:
 1. ``delete_docs`` — O(1): append a tombstone manifest; every reader
    filters tombstoned docids at query time (the WAND kernels take the
    broadcast tombstone set).
-2. ``compact`` — periodic: rewrite segments dropping dead postings
-   (decode -> mask -> re-encode inside mapInArrow), recompute term_stats
+2. ``compact`` — periodic: rewrite segments dropping dead postings.
+   Only the lists that hold a dead key are re-encoded (decode -> mask ->
+   the build's encoder, inside mapInArrow); every other list passes
+   through as its input row, bytes unchanged. Then recompute term_stats
    from the surviving segment metadata (df = Σn, ctf = Σctf — no raw
    posting scan needed), refresh N/avgdl from the doclen table, clear
    tombstones. Per-bucket manifests are refreshed with a new generation
@@ -30,16 +32,17 @@ from honeywell_search_engine_spark.index import codec
 from honeywell_search_engine_spark.index.segments import (
     PA_SEGMENT_SCHEMA,
     SEGMENT_SCHEMA,
-    _encode_group,
     _invalidate_buckets,
     _read_manifest,
     _write_manifest,
     bucket_checksums,
     bucket_col,
     decode_chunks,
+    decode_occurrences,
     enc_from_arrow,
     encode_pending_buckets,
     input_fingerprint,
+    make_segment_encoder,
     segment_occurrences,
     write_occurrences,
     write_segments,
@@ -60,39 +63,72 @@ def delete_docs(index_dir: str, docids: list[int], reason: str = "") -> str:
     return path
 
 
-def _rewrite_kernel(dead_bc, avgdl: float):
-    """mapInArrow body: decode the segment rows (lists from the batch's
-    columns, ``enc_from_arrow``; every ``decode_chunks`` range in one
-    ``codec.decode_many``), drop the postings of tombstoned lids (their
-    positions masked by ``np.repeat(keep, tfs)``) and re-encode. dead_bc:
-    Spark broadcast of the sorted tombstoned posting keys (shard <<
-    KEY_BITS) | lid — one copy per executor, not a per-task closure set."""
+def _segment_batch(batch):
+    """A scanned segment-row batch as a PA_SEGMENT_SCHEMA batch, its rows
+    as they are: the columns in schema order, and null for a column the
+    index predates (positions, p_off, fmt)."""
+    import pyarrow as pa
+
+    names = set(batch.schema.names)
+    return pa.RecordBatch.from_arrays(
+        [batch.column(f.name).cast(f.type) if f.name in names
+         else pa.nulls(batch.num_rows, f.type) for f in PA_SEGMENT_SCHEMA],
+        schema=PA_SEGMENT_SCHEMA,
+    )
+
+
+def _holds_key(batch, keys: np.ndarray) -> np.ndarray:
+    """Per row of a one-codec batch of segment rows: does its list hold a
+    posting key of the sorted `keys`? The lists' docids decode in one
+    ``codec.decode_concat`` per ``decode_chunks`` range (positions
+    unread) and meet `keys` in one ``np.isin``."""
+    encs = enc_from_arrow(batch, positions=False)
+    ns = batch.column("n").to_numpy()
+    shards = batch.column("shard").to_numpy()
+    hit = np.zeros(len(encs), dtype=bool)
+    for lo, hi in decode_chunks(ns):
+        pl, _ = codec.decode_concat(encs[lo:hi])
+        dead = np.isin(codec.keys_of(np.repeat(shards[lo:hi], ns[lo:hi]), pl.docids), keys)
+        hit[lo:hi] = np.logical_or.reduceat(dead, np.cumsum(ns[lo:hi]) - ns[lo:hi])
+    return hit
+
+
+def _rewrite_kernel(dead_bc, n_buckets: int):
+    """mapInArrow body: drop the postings of tombstoned lids from the
+    segment rows. Per batch and codec, the rows whose list holds no dead
+    key (``_holds_key``) pass through as they are; the others decode to
+    occurrence rows (``decode_occurrences``), lose their dead occurrences
+    and re-encode through the build's encoder (``make_segment_encoder``,
+    one stream per codec, so each list keeps its own fmt). A list left
+    with no postings drops out. A touched list without positions (an
+    index from before they joined the schema) raises decode_occurrences'
+    ValueError. dead_bc: Spark broadcast of the sorted tombstoned posting
+    keys (shard << KEY_BITS) | lid — one copy per executor, not a
+    per-task closure set."""
+
+    def live(touched, dead):
+        import pyarrow as pa
+
+        for occ in decode_occurrences([touched]):
+            keys = codec.keys_of(occ.column("shard").to_numpy(), occ.column("lid").to_numpy())
+            yield occ.filter(pa.array(~np.isin(keys, dead)))
 
     def rewrite(batches):
         import pyarrow as pa
 
         dead = dead_bc.value
         for batch in batches:
-            out = []
-            encs = enc_from_arrow(batch)
-            terms, shards, buckets = (batch.column(c).to_pylist() for c in ("term", "shard", "bucket"))
-            for lo, hi in decode_chunks(batch.column("ctf").to_numpy()):
-                for i, pl in enumerate(codec.decode_many(encs[lo:hi], True), lo):
-                    keep = ~np.isin(codec.keys_of(shards[i], pl.docids), dead)
-                    if not keep.any():
-                        continue
-                    pos = None
-                    if pl.positions is not None:
-                        pos = pl.positions[np.repeat(keep, pl.tfs.astype(np.int64))]
-                    out.append(
-                        _encode_group(
-                            terms[i], shards[i], buckets[i],
-                            pl.docids[keep], pl.tfs[keep], pl.doclens[keep], avgdl,
-                            positions=pos, fmt=encs[i].fmt,
-                        )
-                    )
-            if out:
-                yield pa.RecordBatch.from_pylist(out, schema=PA_SEGMENT_SCHEMA)
+            tags = (batch.column("fmt").fill_null(codec.FMT_TAGS[codec.FMT_VB]).to_numpy()
+                    if "fmt" in batch.schema.names
+                    else np.full(batch.num_rows, codec.FMT_TAGS[codec.FMT_VB]))
+            for tag in np.unique(tags):
+                part = batch if (tags == tag).all() else batch.filter(pa.array(tags == tag))
+                hit = _holds_key(part, dead)
+                if not hit.all():
+                    yield _segment_batch(part.filter(pa.array(~hit)))
+                if hit.any():
+                    encode = make_segment_encoder(n_buckets, codec.FMT_FROM_TAG[int(tag)])
+                    yield from encode(live(part.filter(pa.array(hit)), dead))
 
     return rewrite
 
@@ -167,7 +203,8 @@ def compact(spark: SparkSession, index_dir: str, _fail_at: str | None = None) ->
     with open(f"{index_dir}/stats.json") as f:
         meta = json.load(f)
 
-    # the dead docs' posting keys, translated ONCE: they mask the segment
+    # the dead docs' posting keys, translated ONCE from the one tombstone
+    # frame (the docmap anti-join below reuses it): they mask the segment
     # rewrite, and their count is the number of docs removed — N drops
     # only by tombstones that actually exist (bulk tombstone sets may hold
     # already-deleted or never-ingested ids, which have no docmap row),
@@ -177,13 +214,14 @@ def compact(spark: SparkSession, index_dir: str, _fail_at: str | None = None) ->
     from honeywell_search_engine_spark.index.docmap import doc_keys, docid_frame
 
     docmap = spark.read.parquet(f"{index_dir}/docmap")
-    dead_keys = doc_keys(docmap, dead)
+    dead_df = docid_frame(spark, dead)
+    dead_keys = doc_keys(docmap, dead_df)
     n_removed = int(dead_keys.size)
     # refresh corpus stats from the docmap minus the dead docs.
     # left-anti join against a tombstone DataFrame — NOT ~isin([literals]):
     # a million tombstones must not become a million-node Catalyst
     # expression. The dead side is broadcast (small relative to the corpus).
-    alive = docmap.join(F.broadcast(docid_frame(spark, dead)), "docid", "left_anti")
+    alive = docmap.join(F.broadcast(dead_df), "docid", "left_anti")
     alive.write.mode("overwrite").parquet(f"{index_dir}/docmap_new")
     row = spark.read.parquet(f"{index_dir}/docmap_new").agg(
         F.sum("doclen").alias("s")
@@ -191,11 +229,12 @@ def compact(spark: SparkSession, index_dir: str, _fail_at: str | None = None) ->
     new_n = meta["n_docs"] - n_removed
     new_avgdl = float(row["s"] or 0) / new_n if new_n else 0.0
 
-    # rewrite segments (decode -> mask dead lids -> re-encode)
+    # rewrite segments: lists holding a dead key decode, drop it and
+    # re-encode; the rest pass through
     dead_bc = spark.sparkContext.broadcast(dead_keys)
     write_segments(
         spark.read.parquet(f"{index_dir}/segments")
-        .mapInArrow(_rewrite_kernel(dead_bc, new_avgdl), schema=SEGMENT_SCHEMA),
+        .mapInArrow(_rewrite_kernel(dead_bc, meta["n_buckets"]), schema=SEGMENT_SCHEMA),
         f"{index_dir}/segments_new",
     )
     n_postings = write_term_stats(

@@ -42,8 +42,11 @@ docmaps), and kernels are exact under any lid assignment
 
 Segments are the one durable copy of the postings: a generation keeps
 no occurrence rows once it is finalized, and promotion writes none.
-The spliced segment rows are all a later merge_deltas or compact needs
-(both decode them).
+The spliced segment rows are all a later merge_deltas or compact needs:
+merge decodes them; compact decodes their docids and re-encodes only
+the lists that hold a dead key. The splicer reads both sides' rows as
+Arrow (``segments.enc_from_arrow``) and emits the spliced lists through
+``segments.arrow_from_encs``; no row becomes a Python dict.
 
 Scope: the delta's docids must be DISJOINT from the base's (the
 append-only web-crawl case). Re-ingested documents need posting
@@ -83,13 +86,13 @@ from honeywell_search_engine_spark.index.segments import (
     _invalidate_buckets,
     _read_manifest,
     _write_manifest,
+    arrow_from_encs,
     bucket_checksums,
     build_segments,
-    enc_from_row,
+    enc_from_arrow,
     encode_pending_buckets,
     input_fingerprint,
     load_tombstones,
-    segment_row,
     write_segments,
 )
 
@@ -297,7 +300,7 @@ def _splice_seam(
         positions = dl.positions if has_pos else None
     prev = int(base.bmax_docid[nfull - 1]) if nfull > 0 else 0
     app = codec.encode_postings(
-        docids, tfs, doclens, 0.0, positions=positions, fmt=base.fmt,
+        docids, tfs, doclens, positions=positions, fmt=base.fmt,
         prev_docid=prev,
     )
     nblocks_b = base.bmax_docid.size
@@ -331,27 +334,23 @@ def _splice_seam(
 # --------------------------------------------------------------------------
 
 
-def _splice_rows(
-    brows: list, chains: list[list[tuple[dict, int]]], bucket: int
-) -> list[dict]:
-    """Chain-splice each base segment row of `brows` (None for a term the
-    base lacks) with its chain, one row per generation (oldest → newest,
-    each with its per-shard lid offset already resolved). Function
+def _splice_rows(outs: list, ctfs: list, chains: list) -> tuple[list, list]:
+    """Chain-splice each base list of `outs` (None for a term the base
+    lacks; its ctf in `ctfs`, 0 for None) with its chain, one (list, ctf,
+    lid offset) per generation holding it, oldest → newest. Function
     composition of splice_encoded — byte-identical to promoting the
     generations sequentially (each later splice sees exactly the encoded
     list the previous one produced) — taken one generation step at a
-    time over all the rows, so each step is one ``splice_many``."""
-    outs = [enc_from_row(r) if r is not None else None for r in brows]
-    ctfs = [int(r["ctf"]) if r is not None else 0 for r in brows]
+    time over all the lists, so each step is one ``splice_many``.
+    Returns the spliced lists and their ctfs."""
+    outs, ctfs = list(outs), list(ctfs)
     for j in range(max(map(len, chains), default=0)):
         idx = [i for i, c in enumerate(chains) if j < len(c)]
-        items = [(outs[i], enc_from_row(chains[i][j][0]), chains[i][j][1]) for i in idx]
+        items = [(outs[i], chains[i][j][0], chains[i][j][2]) for i in idx]
         for i, enc in zip(idx, splice_many(items)):
             outs[i] = enc
-            ctfs[i] += int(chains[i][j][0]["ctf"])
-    srcs = [r if r is not None else c[0][0] for r, c in zip(brows, chains)]
-    return [segment_row(o, r["term"], r["shard"], ctf, bucket)
-            for o, r, ctf in zip(outs, srcs, ctfs)]
+            ctfs[i] += chains[i][j][1]
+    return outs, ctfs
 
 
 def _make_bucket_splicer(
@@ -370,10 +369,15 @@ def _make_bucket_splicer(
     generation holding it, byte-identical to K sequential promotions
     (the offsets are the exact lids each sequential step would assign).
 
+    Rows stay Arrow end to end: both sides' lists come from their columns
+    (``enc_from_arrow``) and the spliced ones leave through
+    ``arrow_from_encs``; no row becomes a Python dict.
+
     Memory shape: the BASE side streams batch-by-batch (a bucket's segment
     payload can be GBs at 10^12 docs and must never materialize whole);
-    only the DELTA sides — delta-sized by definition — are held keyed in
-    memory, and their matched entries are popped as the base stream passes
+    only the DELTA sides — delta-sized by definition — are held in
+    memory, each as its Arrow table's lists with a (term, shard) -> row
+    map whose matched entries are popped as the base stream passes
     them."""
 
     def splice_bucket(batches):
@@ -396,44 +400,47 @@ def _make_bucket_splicer(
             )
             return pa.RecordBatch.from_arrays(cols, schema=PA_SEGMENT_SCHEMA)
 
+        def _keys(tbl):
+            return list(zip(tbl.column("term").to_pylist(), tbl.column("shard").to_pylist()))
+
         for batch in batches:
             for b in batch.column("bucket").to_pylist():
                 base_p = f"{index_dir}/segments/bucket={b}"
-                gen_maps: list[tuple[dict, dict]] = []
+                gens = []  # per generation: ((term, shard) -> row, lists, ctfs, offsets)
                 for delta_dir, offs in deltas:
                     delta_p = f"{delta_dir}/segments/bucket={b}"
                     if not os.path.isdir(delta_p):
                         continue  # this generation has no rows here
-                    dmap = {
-                        (r["term"], r["shard"]): r
-                        for r in ds.dataset(delta_p, format="parquet")
-                        .to_table()
-                        .to_pylist()
-                    }
-                    gen_maps.append((dmap, offs))
+                    dt = ds.dataset(delta_p, format="parquet").to_table()
+                    rows = {k: i for i, k in enumerate(_keys(dt))}
+                    gens.append((rows, enc_from_arrow(dt), dt.column("ctf").to_pylist(), offs))
 
-                def _chain_for(key):
-                    return [
-                        (m.pop(key), offs[int(key[1])])
-                        for m, offs in gen_maps
-                        if key in m
-                    ]
+                def _spliced(keys, base_encs, base_ctfs):
+                    """The segment rows of the (term, shard) `keys`: each
+                    base list (None if absent) spliced with the rows the
+                    generations hold for its key."""
+                    chains = []
+                    for key in keys:
+                        chain = []
+                        for rows, encs, ctfs, offs in gens:
+                            i = rows.pop(key, None)
+                            if i is not None:
+                                chain.append((encs[i], ctfs[i], offs[int(key[1])]))
+                        chains.append(chain)
+                    out, ctf = _splice_rows(base_encs, base_ctfs, chains)
+                    return arrow_from_encs(out, [k[0] for k in keys], [k[1] for k in keys],
+                                           ctf, [b] * len(keys))
 
                 if os.path.isdir(base_p):
                     scanner = ds.dataset(base_p, format="parquet").scanner(
                         batch_size=1024
                     )
                     for base_batch in scanner.to_batches():
-                        keys = list(
-                            zip(
-                                base_batch.column("term").to_pylist(),
-                                base_batch.column("shard").to_pylist(),
-                            )
-                        )
+                        keys = _keys(base_batch)
                         hit = [
                             i
                             for i, k in enumerate(keys)
-                            if any(k in m for m, _ in gen_maps)
+                            if any(k in rows for rows, *_ in gens)
                         ]
                         if not hit:
                             yield _with_bucket(base_batch, b)
@@ -442,23 +449,15 @@ def _make_bucket_splicer(
                         miss = [i for i in range(len(keys)) if i not in hitset]
                         if miss:
                             yield _with_bucket(base_batch.take(pa.array(miss)), b)
-                        yield pa.RecordBatch.from_pylist(
-                            _splice_rows(
-                                base_batch.take(pa.array(hit)).to_pylist(),
-                                [_chain_for(keys[i]) for i in hit],
-                                b,
-                            ),
-                            schema=PA_SEGMENT_SCHEMA,
-                        )
+                        hb = base_batch.take(pa.array(hit))
+                        yield _spliced([keys[i] for i in hit], enc_from_arrow(hb),
+                                       hb.column("ctf").to_pylist())
                 # generation-only terms (absent from the base), oldest
                 # generation's row leads each chain
-                rest = sorted({k for m, _ in gen_maps for k in m})
+                rest = sorted({k for rows, *_ in gens for k in rows})
                 for i in range(0, len(rest), 1024):
                     ks = rest[i : i + 1024]
-                    yield pa.RecordBatch.from_pylist(
-                        _splice_rows([None] * len(ks), [_chain_for(k) for k in ks], b),
-                        schema=PA_SEGMENT_SCHEMA,
-                    )
+                    yield _spliced(ks, [None] * len(ks), [0] * len(ks))
 
     return splice_bucket
 

@@ -28,8 +28,10 @@ bucket map), ``write_segments`` (segments/), ``write_occurrences``
 ``segment_occurrences`` (segments/ rows -> occurrence rows),
 ``write_term_stats`` (term_stats/ and n_postings), ``enc_from_arrow``
 (segments/ Arrow rows -> ``codec.EncodedList``, the one read path),
-``enc_from_row`` / ``segment_row`` (a dict row <-> ``codec.EncodedList``,
-promote's splice) and
+its mirror ``arrow_from_encs`` (``codec.EncodedList`` -> segments/ Arrow
+rows, the one row constructor of the build, promote and compact),
+``make_segment_encoder`` (sorted occurrence rows -> encoded rows, the one
+encoder of the build and compact) and
 ``_invalidate_buckets`` (what a rewriting commit drops before it moves data).
 
 Segment file layout (``write_segments``, the one segment writer of the
@@ -182,29 +184,6 @@ PA_SEGMENT_SCHEMA = _pa_segment_schema()
 # --------------------------------------------------------------------------
 
 
-def enc_from_row(row) -> codec.EncodedList:
-    """The encoded posting list of one segment row (a dict or a pandas
-    row). Rows of indexes built before positions or `fmt` joined the
-    schema decode as position-less varbyte lists."""
-    p_off = row["p_off"] if "p_off" in row else None
-    pos = row["positions"] if "positions" in row else None
-    fmt = row["fmt"] if "fmt" in row else None
-    return codec.EncodedList(
-        n=int(row["n"]),
-        bmax_docid=np.asarray(row["bmax_docid"], dtype=np.int64),
-        bmax_u=np.asarray(row["bmax_u"], dtype=np.float64),
-        d_off=np.asarray(row["d_off"], dtype=np.int64),
-        t_off=np.asarray(row["t_off"], dtype=np.int64),
-        l_off=np.asarray(row["l_off"], dtype=np.int64),
-        deltas=bytes(row["deltas"]),
-        tfs=bytes(row["tfs"]),
-        doclens=bytes(row["doclens"]),
-        positions=bytes(pos) if pos is not None else b"",
-        p_off=np.asarray(p_off, dtype=np.int64) if p_off is not None else None,
-        fmt=codec.FMT_FROM_TAG[int(fmt)] if fmt is not None else codec.FMT_VB,
-    )
-
-
 def _arrow_col(tbl, name):
     """Column `name` of an Arrow Table or RecordBatch as one Array."""
     col = tbl.column(name)
@@ -243,8 +222,8 @@ def enc_from_arrow(tbl, positions=True) -> list[codec.EncodedList]:
     or RecordBatch, built from its columns: no per-row dicts, and the
     block-metadata arrays are views of the columns' value buffers.
     `positions` (one flag, or one per row) keeps a row's positions
-    stream (``_positions_from_arrow``), and a table without `fmt` yields
-    varbyte lists — the same reading as ``enc_from_row``."""
+    stream (``_positions_from_arrow``), and a row or table without `fmt`
+    (an index built before PForDelta) yields a varbyte list."""
     names = set(tbl.schema.names)
     ns = _arrow_col(tbl, "n").to_pylist()
     bd, bu = _arrow_lists(tbl, "bmax_docid"), _arrow_lists(tbl, "bmax_u")
@@ -266,68 +245,95 @@ def enc_from_arrow(tbl, positions=True) -> list[codec.EncodedList]:
     ]
 
 
-def segment_row(enc: codec.EncodedList, term: str, shard: int, ctf: int,
-                bucket: int) -> dict:
-    """The SEGMENT_SCHEMA row of one encoded (term, shard) posting list."""
-    return {
-        "term": term,
-        "shard": int(shard),
-        "n": int(enc.n),
-        "ctf": int(ctf),
-        "bmax_docid": enc.bmax_docid.tolist(),
-        "bmax_u": enc.bmax_u.tolist(),
-        "d_off": enc.d_off.tolist(),
-        "t_off": enc.t_off.tolist(),
-        "l_off": enc.l_off.tolist(),
-        "deltas": enc.deltas,
-        "tfs": enc.tfs,
-        "doclens": enc.doclens,
-        "positions": enc.positions,
-        "p_off": enc.p_off.tolist() if enc.p_off is not None else None,
-        "fmt": codec.FMT_TAGS[enc.fmt],
-        "bucket": int(bucket),
-    }
+def _offsets32(sizes) -> np.ndarray:
+    """The int32 Arrow offsets of values of the given per-row sizes."""
+    off = np.zeros(len(sizes) + 1, dtype=np.int64)
+    np.cumsum(sizes, out=off[1:])
+    if off[-1] >= 1 << 31:
+        raise ValueError("a segment batch column exceeds 2 GiB; emit smaller batches")
+    return off.astype(np.int32)
 
 
-# --------------------------------------------------------------------------
-# streaming group encoder (phase 2 kernel)
-# --------------------------------------------------------------------------
+def _list_column(arrays: list, dtype):
+    """One Arrow list column of per-row numpy arrays, None a null row."""
+    import pyarrow as pa
 
-
-def _encode_group(term: str, shard: int, bucket: int,
-                  docids, tfs, doclens, avgdl: float,
-                  positions=None, fmt: str = codec.FMT_VB) -> dict:
-    """Encode one (term, shard) posting list from docid-sorted, unique
-    (docid, tf, doclen) arrays. `positions`, if given, is the flat
-    (docid, position)-ordered position stream (length = sum(tfs)); callers
-    passing positions MUST pass docids already sorted (the stable argsort
-    below cannot reorder the flat stream)."""
-    docids = np.asarray(docids)
-    order = np.argsort(docids, kind="stable")
-    if positions is not None and not np.array_equal(order, np.arange(docids.size)):
-        raise ValueError("positional encode requires pre-sorted docids")
-    enc = codec.encode_postings(
-        docids[order], np.asarray(tfs)[order],
-        np.asarray(doclens)[order], avgdl,
-        positions=positions, fmt=fmt,
+    held = [a for a in arrays if a is not None]
+    null = np.fromiter((a is None for a in arrays), dtype=bool, count=len(arrays))
+    return pa.ListArray.from_arrays(
+        _offsets32([0 if a is None else a.size for a in arrays]),
+        np.concatenate([np.empty(0, dtype), *held]).astype(dtype, copy=False),
+        mask=pa.array(null) if null.any() else None,
     )
-    ctf = int(np.asarray(tfs, dtype=np.int64).sum())
-    return segment_row(enc, term, shard, ctf, bucket)
 
 
-def make_segment_encoder(avgdl: float, n_buckets: int, fmt: str = codec.FMT_VB):
+def _binary_column(blobs: list):
+    """One Arrow binary column of per-row byte strings: one join."""
+    import pyarrow as pa
+
+    off = _offsets32([len(b) for b in blobs])
+    return pa.Array.from_buffers(
+        pa.binary(), len(blobs), [None, pa.py_buffer(off), pa.py_buffer(b"".join(blobs))]
+    )
+
+
+def arrow_from_encs(encs: list, term, shard, ctf, bucket):
+    """The PA_SEGMENT_SCHEMA RecordBatch of the encoded (term, shard)
+    posting lists `encs`, given each list's term, shard, ctf and bucket
+    (sequences, numpy or Arrow arrays, one value per list): the mirror of
+    ``enc_from_arrow`` and the one constructor of the segment rows every
+    writer emits. Each column is built from the lists' byte buffers and
+    block-offset arrays, concatenated once; no per-row dicts. A list
+    without positions gets an empty positions stream and a null p_off."""
+    import pyarrow as pa
+
+    def lists(name, dtype):
+        return _list_column([getattr(e, name) for e in encs], dtype)
+
+    def blobs(name):
+        return _binary_column([getattr(e, name) for e in encs])
+
+    k = len(encs)
+    cols = [
+        term, shard, np.fromiter((e.n for e in encs), dtype=np.int64, count=k), ctf,
+        lists("bmax_docid", np.int64), lists("bmax_u", np.float64),
+        lists("d_off", np.int64), lists("t_off", np.int64), lists("l_off", np.int64),
+        blobs("deltas"), blobs("tfs"), blobs("doclens"), blobs("positions"),
+        lists("p_off", np.int64),
+        np.fromiter((codec.FMT_TAGS[e.fmt] for e in encs), dtype=np.int32, count=k),
+        bucket,
+    ]
+    return pa.RecordBatch.from_arrays(
+        [c.cast(f.type) if isinstance(c, pa.Array) else pa.array(c, f.type)
+         for f, c in zip(PA_SEGMENT_SCHEMA, cols)],
+        schema=PA_SEGMENT_SCHEMA,
+    )
+
+
+# --------------------------------------------------------------------------
+# streaming run encoder (phase 2 and compact)
+# --------------------------------------------------------------------------
+
+
+def make_segment_encoder(n_buckets: int, fmt: str = codec.FMT_VB):
     """mapInArrow kernel: consumes (term, shard, lid, doclen, pos)
     OCCURRENCE batches sorted by (term, shard, lid, pos) within the
     partition — duplicate lids are occurrences; tf = run length. Emits one
-    encoded row per (term, shard) run.
+    encoded row per (term, shard) run (``arrow_from_encs``). The encoder
+    of every writer that encodes postings from scratch: the build's
+    phase 2, and compact, whose touched lists (``decode_occurrences``
+    minus their dead occurrences) stream through it, one stream per codec.
 
     MEGA-BATCHED: every complete run in an Arrow batch is encoded by ONE
-    varbyte call per stream (block=1 gives per-value byte offsets, so each
-    run's bytes/block-offsets are slices of the shared buffer). Varbyte is
-    value-wise independent, so the output is BYTE-IDENTICAL to per-run
+    call per stream (varbyte ``block=1`` gives per-value byte offsets,
+    ``codec.pfor_encode_runs`` per-block ones), so each run's bytes and
+    block offsets are slices of the shared buffers, and its block maxima
+    one ``np.maximum.reduceat`` over all the batch's blocks. Both codecs
+    encode runs independently, so the output is BYTE-IDENTICAL to per-run
     encode_postings (asserted by tests/test_codec.py::
     test_mega_batch_encoder_byte_identical and the build-checksum
-    invariance tests); the per-run Python cost drops to metadata assembly.
+    invariance tests); the per-run Python cost is building one
+    EncodedList of slices.
 
     mapInArrow, not mapInPandas: the dominant per-row payload is the TERM
     STRING repeated on every occurrence — pandas conversion materializes
@@ -339,24 +345,22 @@ def make_segment_encoder(avgdl: float, n_buckets: int, fmt: str = codec.FMT_VB):
     Posting values are shard-local dense ordinals (index/docmap.py); a
     query's shard kernel maps the lids it returns to global docids
     (docids_of_lids)."""
+    B_ = codec.BLOCK
 
-    def _emit(t_idx, t_vals, s, l, dl, po) -> list[dict]:
-        """Encode every run in the given sorted occurrence arrays.
-        `t_idx` are per-row dictionary indices into `t_vals`."""
+    def _emit(t_idx, t_vals, s, l, dl, po):
+        """The segment rows of every run in the given sorted occurrence
+        arrays (at least one row). `t_idx` are per-row indices into the
+        term strings `t_vals`."""
         n = t_idx.size
-        if n == 0:
-            return []
-        t = t_idx
-        run_new = np.concatenate(([True], (t[1:] != t[:-1]) | (s[1:] != s[:-1])))
-        post_new = run_new | np.concatenate(([True], l[1:] != l[:-1]))
+        run_rows = np.flatnonzero(np.concatenate(
+            ([True], (t_idx[1:] != t_idx[:-1]) | (s[1:] != s[:-1]))))
+        post_new = np.concatenate(([True], l[1:] != l[:-1]))
+        post_new[run_rows] = True
         p_idx = np.flatnonzero(post_new)  # occurrence index of posting starts
         docid = l[p_idx].astype(np.uint64)
         tf = np.diff(np.append(p_idx, n)).astype(np.uint64)
         dlp = dl[p_idx].astype(np.uint64)
-        run_of_post = np.cumsum(run_new)[p_idx] - 1
-        r_starts = np.flatnonzero(
-            np.concatenate(([True], run_of_post[1:] != run_of_post[:-1]))
-        )
+        r_starts = np.searchsorted(p_idx, run_rows)  # posting index of run starts
         r_ends = np.append(r_starts[1:], docid.size)
         # docid deltas, chain reset at each run start
         deltas = np.empty(docid.size, dtype=np.uint64)
@@ -369,90 +373,41 @@ def make_segment_encoder(avgdl: float, n_buckets: int, fmt: str = codec.FMT_VB):
         posd[0] = pou[0]
         np.subtract(pou[1:], pou[:-1], out=posd[1:])
         posd[p_idx] = pou[p_idx]
-        if fmt == codec.FMT_VB:
-            d_b, d_voff = codec.varbyte_encode(deltas, block=1)
-            t_b, t_voff = codec.varbyte_encode(tf - np.uint64(1), block=1)
-            l_b, l_voff = codec.varbyte_encode(dlp, block=1)
-            d_voff = np.append(d_voff, len(d_b))
-            t_voff = np.append(t_voff, len(t_b))
-            l_voff = np.append(l_voff, len(l_b))
-        else:
-            # PFor mega-batch: encode EVERY run's three streams in one
-            # vectorized pass each (codec.pfor_encode_runs); per-run bytes
-            # and block offsets are slices of the shared buffers,
-            # byte-identical to per-run pfor_encode (tested).
-            d_pf = codec.pfor_encode_runs(deltas, r_starts, r_ends)
-            t_pf = codec.pfor_encode_runs(tf - np.uint64(1), r_starts, r_ends)
-            l_pf = codec.pfor_encode_runs(dlp, r_starts, r_ends)
-            # first GLOBAL block index per run (shared by all three streams:
-            # block structure depends only on run length)
-            pf_base = np.concatenate(([0], np.cumsum(d_pf[2])))
-        p_b, p_voff = codec.varbyte_encode(posd, block=1)
-        p_voff = np.append(p_voff, len(p_b))
-        u = codec.bm25_u_bound(tf)
-        occ_start = np.append(p_idx, n)  # occurrence start per posting (+end)
-        run_rows = np.flatnonzero(run_new)
-        B_ = codec.BLOCK
-        rows: list[dict] = []
-        for r in range(r_starts.size):
-            ps, pe = int(r_starts[r]), int(r_ends[r])
-            cnt = pe - ps
-            nblocks = (cnt + B_ - 1) // B_
-            blk = ps + np.arange(nblocks, dtype=np.int64) * B_
-            dd, uu = docid[ps:pe], u[ps:pe]
-            pad = nblocks * B_ - cnt
-            if pad:
-                dd = np.concatenate([dd, np.zeros(pad, dtype=dd.dtype)])
-                uu = np.concatenate([uu, np.full(pad, -np.inf)])
-            term = t_vals[int(t[run_rows[r]])]
-            p0 = int(p_voff[occ_start[ps]])
+        # the block table: run r owns blocks b0[r]:b0[r + 1], and block g
+        # starts at posting blk[g]
+        nb = (r_ends - r_starts + B_ - 1) // B_
+        b0 = np.concatenate(([0], np.cumsum(nb)))
+        blk_run = np.repeat(np.arange(nb.size), nb)
+        blk = r_starts[blk_run] + (np.arange(b0[-1]) - b0[blk_run]) * B_
+        # each stream as (buffer, byte offset of every block, of every run
+        # start and of every run end); positions stay varbyte in both
+        # codecs (per-value offsets are the phrase path's random access)
+        streams = []
+        for v in (deltas, tf - np.uint64(1), dlp):
             if fmt == codec.FMT_PFOR:
-                # slice run r out of the three shared pfor buffers
-                # (positions stay varbyte — per-value offsets are the
-                # phrase path's random-access handle)
-                f0, f1 = int(pf_base[r]), int(pf_base[r + 1])
-                streams = {}
-                for key_o, key_b, (pbuf, poff, _) in (
-                    ("d_off", "deltas", d_pf),
-                    ("t_off", "tfs", t_pf),
-                    ("l_off", "doclens", l_pf),
-                ):
-                    o0 = int(poff[f0])
-                    streams[key_o] = (poff[f0:f1] - o0).tolist()
-                    streams[key_b] = pbuf[o0 : int(poff[f1])]
+                buf, off, _ = codec.pfor_encode_runs(v, r_starts, r_ends)
+                streams.append((buf, off[:-1], off[b0[:-1]], off[b0[1:]]))
             else:
-                d0, t0_, l0 = int(d_voff[ps]), int(t_voff[ps]), int(l_voff[ps])
-                streams = {
-                    "d_off": (d_voff[blk] - d0).tolist(),
-                    "t_off": (t_voff[blk] - t0_).tolist(),
-                    "l_off": (l_voff[blk] - l0).tolist(),
-                    "deltas": d_b[d0 : int(d_voff[pe])],
-                    "tfs": t_b[t0_ : int(t_voff[pe])],
-                    "doclens": l_b[l0 : int(l_voff[pe])],
-                }
-            rows.append(
-                {
-                    "term": term,
-                    "shard": int(s[run_rows[r]]),
-                    "n": cnt,
-                    "ctf": int(tf[ps:pe].sum()),
-                    "bmax_docid": dd.reshape(nblocks, B_).max(axis=1)
-                    .astype(np.int64).tolist(),
-                    "bmax_u": uu.reshape(nblocks, B_).max(axis=1)
-                    .astype(np.float64).tolist(),
-                    **streams,
-                    "positions": p_b[p0 : int(p_voff[occ_start[pe]])],
-                    "p_off": (p_voff[occ_start[blk]] - p0).tolist(),
-                    "fmt": codec.FMT_TAGS[fmt],
-                    "bucket": int(bucket_of(term, n_buckets)),
-                }
-            )
-        return rows
-
-    def _rows_batch(rows: list[dict]):
-        import pyarrow as pa
-
-        return pa.RecordBatch.from_pylist(rows, schema=PA_SEGMENT_SCHEMA)
+                buf, off = codec.varbyte_encode(v, block=1)
+                off = np.append(off, len(buf))
+                streams.append((buf, off[blk], off[r_starts], off[r_ends]))
+        buf, off = codec.varbyte_encode(posd, block=1)
+        off = np.append(off, len(buf))[np.append(p_idx, n)]  # per posting (+end)
+        streams.append((buf, off[blk], off[r_starts], off[r_ends]))
+        cuts = b0[1:-1]
+        cols = [np.split(np.maximum.reduceat(docid, blk).astype(np.int64), cuts),
+                np.split(np.maximum.reduceat(codec.bm25_u_bound(tf), blk), cuts)]
+        for buf, g_off, st, en in streams:
+            cols.append(np.split(g_off - st[blk_run], cuts))
+            cols.append([buf[a:b] for a, b in zip(st.tolist(), en.tolist())])
+        bd, bu, d_o, d_b, t_o, t_b, l_o, l_b, p_o, p_b = cols
+        encs = [codec.EncodedList(*f, fmt=fmt) for f in zip(
+            (r_ends - r_starts).tolist(), bd, bu, d_o, t_o, l_o, d_b, t_b, l_b, p_b, p_o)]
+        terms = [t_vals[i] for i in t_idx[run_rows].tolist()]
+        return arrow_from_encs(
+            encs, terms, s[run_rows], np.add.reduceat(tf, r_starts).astype(np.int64),
+            [bucket_of(t, n_buckets) for t in terms],
+        )
 
     def encode_stream(batches):
         import pyarrow.compute as pc
@@ -460,71 +415,36 @@ def make_segment_encoder(avgdl: float, n_buckets: int, fmt: str = codec.FMT_VB):
         # carry: (term_str, shard, lid, doclen, pos arrays) of the open
         # trailing run — a run has ONE term, so the string carries whole
         carry = None
-
         for batch in batches:
             if batch.num_rows == 0:
                 continue
             td = pc.dictionary_encode(batch.column("term"))
             t_idx = np.asarray(td.indices).astype(np.int64)
             t_vals = td.dictionary.to_pylist()
-            s = np.asarray(batch.column("shard")).astype(np.int64)
-            l = np.asarray(batch.column("lid")).astype(np.int64)
-            dl = np.asarray(batch.column("doclen")).astype(np.int64)
-            po = np.asarray(batch.column("pos")).astype(np.int64)
-            rows: list[dict] = []
+            s, l, dl, po = (np.asarray(batch.column(c)).astype(np.int64)
+                            for c in ("shard", "lid", "doclen", "pos"))
             if carry is not None:
+                # prepend the carried run under its term's index in this
+                # batch (a new index when the batch starts another term):
+                # the run ends where (term, shard) changes, like any run
                 cterm, cs, cl, cdl, cpo = carry
-                if cterm == t_vals[int(t_idx[0])] and cs == int(s[0]):
-                    nc = cl.size  # run continues: prepend the carry
-                    t_idx = np.concatenate(
-                        [np.full(nc, t_idx[0], dtype=np.int64), t_idx]
-                    )
-                    s = np.concatenate([np.full(nc, cs, dtype=np.int64), s])
-                    l = np.concatenate([cl, l])
-                    dl = np.concatenate([cdl, dl])
-                    po = np.concatenate([cpo, po])
-                else:  # carry was a complete run
-                    rows.extend(
-                        _emit(
-                            np.zeros(cl.size, dtype=np.int64), [cterm],
-                            np.full(cl.size, cs, dtype=np.int64), cl, cdl, cpo,
-                        )
-                    )
-                carry = None
+                ci = int(t_idx[0])
+                if t_vals[ci] != cterm:
+                    ci = len(t_vals)
+                    t_vals.append(cterm)
+                t_idx = np.concatenate([np.full(cl.size, ci), t_idx])
+                s = np.concatenate([np.full(cl.size, cs), s])
+                l, dl, po = (np.concatenate(p) for p in ((cl, l), (cdl, dl), (cpo, po)))
             # hold back the (possibly still open) final run
-            last_start = int(
-                np.flatnonzero(
-                    np.concatenate(
-                        (
-                            [True],
-                            (t_idx[1:] != t_idx[:-1]) | (s[1:] != s[:-1]),
-                        )
-                    )
-                )[-1]
-            )
-            carry = (
-                t_vals[int(t_idx[last_start])],
-                int(s[last_start]),
-                l[last_start:].copy(),
-                dl[last_start:].copy(),
-                po[last_start:].copy(),
-            )
-            rows.extend(
-                _emit(
-                    t_idx[:last_start], t_vals, s[:last_start],
-                    l[:last_start], dl[:last_start], po[:last_start],
-                )
-            )
-            if rows:
-                yield _rows_batch(rows)
-        if carry is not None and carry[2].size:
+            ends = np.flatnonzero((t_idx[1:] != t_idx[:-1]) | (s[1:] != s[:-1]))
+            last = int(ends[-1]) + 1 if ends.size else 0
+            carry = (t_vals[int(t_idx[last])], int(s[last]), l[last:], dl[last:], po[last:])
+            if last:
+                yield _emit(t_idx[:last], t_vals, s[:last], l[:last], dl[:last], po[:last])
+        if carry is not None:
             cterm, cs, cl, cdl, cpo = carry
-            yield _rows_batch(
-                _emit(
-                    np.zeros(cl.size, dtype=np.int64), [cterm],
-                    np.full(cl.size, cs, dtype=np.int64), cl, cdl, cpo,
-                )
-            )
+            yield _emit(np.zeros(cl.size, dtype=np.int64), [cterm],
+                        np.full(cl.size, cs), cl, cdl, cpo)
 
     return encode_stream
 
@@ -956,7 +876,6 @@ def encode_pending_buckets(
     occ_path = occ_path or f"{index_dir}/postings"
     with open(f"{index_dir}/stats.json") as f:
         meta = json.load(f)
-    avgdl = meta["avgdl"]
     n_buckets = meta["n_buckets"]
     codec_fmt = meta.get("codec", codec.FMT_VB)
     todo = [
@@ -994,7 +913,7 @@ def encode_pending_buckets(
     # (dictionary encode, carry splice, varbyte setup) dominates at the
     # 10k default; measured fastest at ~100k (bigger thrashes caches)
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")
-    encoder = make_segment_encoder(avgdl, n_buckets, fmt=codec_fmt)
+    encoder = make_segment_encoder(n_buckets, fmt=codec_fmt)
     try:
         for i in range(0, len(todo), buckets_per_job):
             chunk = todo[i : i + buckets_per_job]

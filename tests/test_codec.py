@@ -55,7 +55,7 @@ def _random_plist(rng, n):
 def test_postings_roundtrip(seed):
     rng = np.random.default_rng(seed)
     docids, tfs, dls = _random_plist(rng, int(rng.integers(1, 2000)))
-    enc = encode_postings(docids, tfs, dls, 250.0)
+    enc = encode_postings(docids, tfs, dls)
     pl = decode_postings(enc)
     assert np.array_equal(pl.docids, docids)
     assert np.array_equal(pl.tfs, tfs)
@@ -67,7 +67,7 @@ def test_block_metadata_dominates():
 
     rng = np.random.default_rng(9)
     docids, tfs, dls = _random_plist(rng, 1000)
-    enc = encode_postings(docids, tfs, dls, 250.0)
+    enc = encode_postings(docids, tfs, dls)
     for b in range(enc.bmax_docid.size):
         s, e = b * BLOCK, min((b + 1) * BLOCK, 1000)
         assert enc.bmax_docid[b] == docids[s:e].max()
@@ -81,7 +81,7 @@ def test_block_metadata_dominates():
 def test_selective_decode_equals_slices():
     rng = np.random.default_rng(11)
     docids, tfs, dls = _random_plist(rng, 1500)
-    enc = encode_postings(docids, tfs, dls, 250.0)
+    enc = encode_postings(docids, tfs, dls)
     nb = enc.bmax_docid.size
     sel = np.unique(rng.integers(0, nb, size=5))
     part = decode_blocks(enc, sel)
@@ -107,7 +107,7 @@ def test_positions_roundtrip():
         for t in tfs
     ]
     flat = np.concatenate(pos_parts)
-    enc = encode_postings(docids, tfs, dls, 250.0, positions=flat)
+    enc = encode_postings(docids, tfs, dls, positions=flat)
     pl = decode_postings(enc, with_positions=True)
     assert len(pl.positions) == n
     for got, exp in zip(pl.positions, pos_parts):
@@ -129,7 +129,7 @@ def test_positions_absent_when_not_encoded():
     import numpy as np
 
     docids = np.array([3, 9, 12], dtype=np.uint64)
-    enc = encode_postings(docids, np.array([1, 2, 1]), np.array([10, 20, 30]), 20.0)
+    enc = encode_postings(docids, np.array([1, 2, 1]), np.array([10, 20, 30]))
     assert decode_postings(enc, with_positions=True).positions is None
 
 
@@ -145,7 +145,6 @@ def test_mega_batch_encoder_byte_identical():
     from honeywell_search_engine_spark.index.segments import make_segment_encoder
 
     rng = np.random.default_rng(5)
-    avgdl = 37.5
     rows = []
     expected = {}
     for term, n_docs in [("alpha", 300), ("beta", 1), ("gamma", 129), ("delta", 7)]:
@@ -158,7 +157,7 @@ def test_mega_batch_encoder_byte_identical():
                 p = np.sort(rng.choice(200, size=int(tf), replace=False))
                 flat.append(p)
             pos = np.concatenate(flat).astype(np.uint64)
-            enc = codec.encode_postings(lids.astype(np.uint64), tfs, dls, avgdl, positions=pos)
+            enc = codec.encode_postings(lids.astype(np.uint64), tfs, dls, positions=pos)
             expected[(term, shard)] = enc
             for lid, tf, dl, pp in zip(lids, tfs, dls, flat):
                 for p in pp:
@@ -174,7 +173,7 @@ def test_mega_batch_encoder_byte_identical():
         for i in range(0, len(pdf), 97)
     ]
     out = pd.concat(
-        [b.to_pandas() for b in make_segment_encoder(avgdl, 16)(iter(batches))]
+        [b.to_pandas() for b in make_segment_encoder(16)(iter(batches))]
     )
     assert len(out) == len(expected)
     for _, r in out.iterrows():
@@ -214,7 +213,7 @@ def test_memolist_slices_equal_codec_decode(fmt, seed):
         for t in tfs
     ]
     flat = np.concatenate(pos_parts)
-    enc = encode_postings(docids, tfs, dls, 250.0, positions=flat, fmt=fmt)
+    enc = encode_postings(docids, tfs, dls, positions=flat, fmt=fmt)
     ml = MemoList(enc, decode_postings(enc, with_positions=True, flat_positions=True))
     # metadata proxies
     assert ml.n == enc.n and ml.fmt == enc.fmt
@@ -274,7 +273,7 @@ def _decode_many_lists(fmt, with_pos, sizes, seed=11):
             pos = np.concatenate([
                 np.sort(rng.choice(10**5, size=int(t), replace=False)) for t in tfs
             ]).astype(np.uint64)
-        enc = encode_postings(docids, tfs, dls, 250.0, positions=pos, fmt=fmt)
+        enc = encode_postings(docids, tfs, dls, positions=pos, fmt=fmt)
         out.append((enc, (docids, tfs, dls, pos)))
     return out
 

@@ -172,9 +172,9 @@ def _fake_postings(n=1000, seed=31):
 
 def test_encode_postings_pfor_decodes_identically():
     docids, tfs, doclens, pos = _fake_postings()
-    enc_vb = codec.encode_postings(docids, tfs, doclens, 100.0, positions=pos)
+    enc_vb = codec.encode_postings(docids, tfs, doclens, positions=pos)
     enc_pf = codec.encode_postings(
-        docids, tfs, doclens, 100.0, positions=pos, fmt=codec.FMT_PFOR
+        docids, tfs, doclens, positions=pos, fmt=codec.FMT_PFOR
     )
     assert enc_pf.fmt == codec.FMT_PFOR
     # block metadata (pruning bounds) is codec-independent
@@ -191,9 +191,9 @@ def test_encode_postings_pfor_decodes_identically():
 
 def test_decode_blocks_pfor_equals_vb():
     docids, tfs, doclens, pos = _fake_postings()
-    enc_vb = codec.encode_postings(docids, tfs, doclens, 100.0, positions=pos)
+    enc_vb = codec.encode_postings(docids, tfs, doclens, positions=pos)
     enc_pf = codec.encode_postings(
-        docids, tfs, doclens, 100.0, positions=pos, fmt=codec.FMT_PFOR
+        docids, tfs, doclens, positions=pos, fmt=codec.FMT_PFOR
     )
     rng = _rng()
     nb = enc_vb.bmax_docid.size
@@ -216,7 +216,6 @@ def test_mega_batch_encoder_pfor_byte_identical():
     from honeywell_search_engine_spark.index.segments import make_segment_encoder
 
     rng = _rng()
-    avgdl = 37.5
     rows, expected = [], {}
     for term, n_docs in [("alpha", 300), ("beta", 1), ("gamma", 129), ("delta", 7)]:
         for shard in (0, 1):
@@ -228,7 +227,7 @@ def test_mega_batch_encoder_pfor_byte_identical():
             ]
             pos = np.concatenate(flat).astype(np.uint64)
             expected[(term, shard)] = codec.encode_postings(
-                lids.astype(np.uint64), tfs, dls, avgdl, positions=pos,
+                lids.astype(np.uint64), tfs, dls, positions=pos,
                 fmt=codec.FMT_PFOR,
             )
             for lid, tf, dl, pp in zip(lids, tfs, dls, flat):
@@ -243,7 +242,7 @@ def test_mega_batch_encoder_pfor_byte_identical():
     out = pd.concat(
         [
             b.to_pandas()
-            for b in make_segment_encoder(avgdl, 16, fmt=codec.FMT_PFOR)(iter(batches))
+            for b in make_segment_encoder(16, fmt=codec.FMT_PFOR)(iter(batches))
         ]
     )
     assert len(out) == len(expected)

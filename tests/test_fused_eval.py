@@ -47,7 +47,6 @@ def corpus():
                     np.array([lid_of[d] for d in ds], dtype=np.uint64),
                     np.array([post[d] for d in ds], dtype=np.uint64),
                     np.array([oracle.doclen[d] for d in ds], dtype=np.uint64),
-                    oracle.avgdl,
                     positions=np.concatenate([oracle.positions[t][d] for d in ds]),
                     fmt=codec.FMT_PFOR if len(t) % 2 else codec.FMT_VB,
                 )))
@@ -150,7 +149,7 @@ def test_fused_term_probed_once_per_plan(corpus, monkeypatch, rep):
 def _plain(n_last_lid: int) -> codec.EncodedList:
     lids = np.array([0, 5, n_last_lid], dtype=np.uint64)
     ones = np.ones(3, dtype=np.uint64)
-    return codec.encode_postings(lids, ones, ones * 7, 7.0)
+    return codec.encode_postings(lids, ones, ones * 7)
 
 
 def test_fuse_refuses_keys_that_do_not_fit():

@@ -97,7 +97,7 @@ def test_phase2_encode_plan_has_no_exchange(spark, seg_index, tmp_path):
         .filter(F.col("bucket").isin([0, 1]))
         .select("term", "shard", "lid", "doclen", "pos")
     )
-    enc = rows.mapInArrow(make_segment_encoder(100.0, 16), schema=SEGMENT_SCHEMA)
+    enc = rows.mapInArrow(make_segment_encoder(16), schema=SEGMENT_SCHEMA)
     assert "Exchange" not in _plan(enc)
 
 

@@ -127,7 +127,7 @@ def _mk_list(rng, n, hi, fmt, with_pos=True):
                 for t in tfs
             ]
         )
-    enc = codec.encode_postings(docids, tfs, doclens, 0.0, positions=pos, fmt=fmt)
+    enc = codec.encode_postings(docids, tfs, doclens, positions=pos, fmt=fmt)
     return docids, tfs, doclens, pos, enc
 
 
@@ -159,7 +159,6 @@ def test_splice_equals_scratch_encode(nb, nd, fb, fd):
         e_doc,
         np.concatenate([b_tf, d_tf]),
         np.concatenate([b_dl, d_dl]),
-        0.0,
         positions=np.concatenate([b_pos, d_pos]),
         fmt=(fb if nb else fd),
     )

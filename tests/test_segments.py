@@ -236,8 +236,8 @@ def test_and_score_bound_pruning_exact_and_cheaper(monkeypatch):
     # t1: all docs, tf=1 (uniform big list)
     tf1 = np.ones(n_big, dtype=np.uint64)
     rows = [
-        ("t0", codec.encode_postings(d0, tf0, dl0, avgdl)),
-        ("t1", codec.encode_postings(docids, tf1, dls, avgdl)),
+        ("t0", codec.encode_postings(d0, tf0, dl0)),
+        ("t1", codec.encode_postings(docids, tf1, dls)),
     ]
     idf = {"t0": 2.0, "t1": 0.5}
 
@@ -288,8 +288,8 @@ def test_and_pruning_sound_when_high_driver_docs_fail_conjunction():
     tf1 = np.ones(d1.size, dtype=np.uint64)
     dl1 = np.full(d1.size, 100, dtype=np.uint64)
     rows = [
-        ("t0", codec.encode_postings(d0, tf0, dl0, avgdl)),
-        ("t1", codec.encode_postings(d1, tf1, dl1, avgdl)),
+        ("t0", codec.encode_postings(d0, tf0, dl0)),
+        ("t1", codec.encode_postings(d1, tf1, dl1)),
     ]
     idf = {"t0": 2.0, "t1": 0.5}
     res_full = _shard_kernel_and(rows, idf, avgdl, k=10, prune=False)
@@ -330,7 +330,6 @@ def test_repeated_phrase_term_probed_once(monkeypatch, rep, slop):
             np.array(ds, dtype=np.uint64),
             np.array([post[d] for d in ds], dtype=np.uint64),
             np.array([oracle.doclen[d] for d in ds], dtype=np.uint64),
-            oracle.avgdl,
             positions=np.concatenate([oracle.positions[t][d] for d in ds]),
         )
         if rep != "encoded":
@@ -394,7 +393,6 @@ def test_websearch_or_probes_each_term_once(monkeypatch, rep):
             np.array(ds, dtype=np.uint64),
             np.array([post[d] for d in ds], dtype=np.uint64),
             np.array([oracle.doclen[d] for d in ds], dtype=np.uint64),
-            oracle.avgdl,
             positions=np.concatenate([oracle.positions[t][d] for d in ds]),
         )
         if rep != "encoded":
@@ -479,8 +477,8 @@ def test_or_block_prune_exact_and_cheaper(monkeypatch):
     dl0 = np.full(d0.size, 100, dtype=np.uint64)
     # t1: everywhere, tf=1, low idf -> most of its blocks can't matter
     rows = [
-        ("t0", codec.encode_postings(d0, tf0, dl0, avgdl)),
-        ("t1", codec.encode_postings(docids, np.ones(n_big, np.uint64), dls, avgdl)),
+        ("t0", codec.encode_postings(d0, tf0, dl0)),
+        ("t1", codec.encode_postings(docids, np.ones(n_big, np.uint64), dls)),
     ]
     idf = {"t0": 4.0, "t1": 0.2}
 
@@ -918,41 +916,55 @@ def test_bucket_checksums_pre_fmt_index(spark, seg_index, tmp_path):
     assert len(rep) > 0
 
 
-def test_enc_from_arrow_equals_enc_from_row(seg_index):
-    """The Arrow helper builds, from a segment table's columns, the same
-    EncodedList that enc_from_row builds from each row's dict: over a
-    shuffled multi-chunk table, with per-row position flags, and with the
-    positions and fmt columns projected away."""
-    import dataclasses
-
+def test_arrow_from_encs_round_trips_enc_from_arrow(seg_index):
+    """arrow_from_encs is the mirror of enc_from_arrow: the segment rows
+    it builds from a table's lists (plus their term, shard, ctf and
+    bucket) equal the table column for column, over a shuffled
+    multi-chunk table. enc_from_arrow keeps the positions of the rows
+    flagged, and reads a table without positions / p_off, or without
+    fmt, as position-less or varbyte lists."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from honeywell_search_engine_spark.index import codec
-    from honeywell_search_engine_spark.index.segments import enc_from_arrow, enc_from_row
+    from honeywell_search_engine_spark.index.segments import (
+        PA_SEGMENT_SCHEMA,
+        arrow_from_encs,
+        enc_from_arrow,
+    )
 
     tbl = pq.read_table(f"{seg_index.path}/segments")
     tbl = pa.concat_tables([tbl.slice(0, 50), tbl.slice(50, 70)])
     tbl = tbl.take(np.random.default_rng(3).permutation(tbl.num_rows))
-    rows = tbl.to_pylist()
-    flags = [i % 2 == 0 for i in range(len(rows))]
+    assert tbl.column("p_off").null_count == 0
+    meta = [tbl.column(c).to_pylist() for c in ("term", "shard", "ctf", "bucket")]
+    got = arrow_from_encs(enc_from_arrow(tbl), *meta)
+    assert got.schema == PA_SEGMENT_SCHEMA and got.num_rows == tbl.num_rows
+    for f in PA_SEGMENT_SCHEMA:
+        assert got.column(f.name).to_pylist() == tbl.column(f.name).to_pylist(), f.name
 
-    def same(a, b):
-        for f in dataclasses.fields(codec.EncodedList):
-            x, y = getattr(a, f.name), getattr(b, f.name)
-            if isinstance(x, np.ndarray) or isinstance(y, np.ndarray):
-                assert x is not None and y is not None, f.name
-                assert x.dtype == y.dtype and np.array_equal(x, y), f.name
+    flags = [i % 2 == 0 for i in range(tbl.num_rows)]
+    pos, p_off = tbl.column("positions").to_pylist(), tbl.column("p_off").to_pylist()
+    for i, enc in enumerate(enc_from_arrow(tbl, flags)):
+        if flags[i]:
+            assert enc.positions == pos[i] and enc.p_off.tolist() == p_off[i]
+        else:
+            assert enc.positions == b"" and enc.p_off is None
+
+    # legacy tables: without positions and p_off, and without fmt
+    full = enc_from_arrow(tbl)
+    for cols in (["positions", "p_off", "fmt"], ["fmt"]):
+        for enc, ref, p in zip(enc_from_arrow(tbl.drop_columns(cols)), full, pos):
+            assert enc.fmt == codec.FMT_VB
+            if "positions" in cols:
+                assert enc.positions == b"" and enc.p_off is None
             else:
-                assert x == y, f.name
-
-    def without(r, cols):
-        return {k: v for k, v in r.items() if k not in cols}
-
-    assert any(r["p_off"] is not None for r in rows)
-    for enc, r, f in zip(enc_from_arrow(tbl, flags), rows, flags):
-        same(enc, enc_from_row(r if f else without(r, ("positions", "p_off"))))
-    bare = tbl.drop_columns(["positions", "p_off", "fmt"])
-    for enc, r in zip(enc_from_arrow(bare), rows):
-        same(enc, enc_from_row(without(r, ("positions", "p_off", "fmt"))))
+                assert enc.positions == p and np.array_equal(enc.p_off, ref.p_off)
+            assert (enc.n, enc.deltas, enc.tfs, enc.doclens) == (ref.n, ref.deltas, ref.tfs, ref.doclens)
+            for name in ("bmax_docid", "bmax_u", "d_off", "t_off", "l_off"):
+                assert np.array_equal(getattr(enc, name), getattr(ref, name)), name
+    bare = arrow_from_encs(enc_from_arrow(tbl.drop_columns(["positions", "p_off", "fmt"])), *meta)
+    assert bare.column("positions").to_pylist() == [b""] * tbl.num_rows
+    assert bare.column("p_off").null_count == tbl.num_rows
+    assert bare.column("fmt").to_pylist() == [codec.FMT_TAGS[codec.FMT_VB]] * tbl.num_rows
