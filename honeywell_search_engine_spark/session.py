@@ -6,6 +6,19 @@ except master/memory come from spark-submit (see jobs/*.py).
 ``get_spark`` also runs Spark's Python workers under the engine's daemon
 (``worker_daemon``), which stops the per-task re-read of every zip archive
 on the worker's path, when the worker interpreter can import it.
+
+It launches the JVM with tiered compilation capped at C1
+(``-XX:TieredStopAtLevel=1`` in ``spark.driver.defaultJavaOptions``): the
+JIT compiles with the quick C1 compiler only and never runs C2, whose
+compiles of Spark's own planner and scheduler were most of a warm point
+query's CPU. In local mode that JVM is the driver and the only executor,
+and the engine's per-row work runs in Python workers, so C2's faster code
+buys little (the figures are beside the option). A caller's
+``spark.driver.extraJavaOptions`` still applies, as Spark appends it to the
+default options, and ``extra_conf`` can replace
+``spark.driver.defaultJavaOptions``. A session ``get_spark`` did not build
+(``spark-submit`` of ``jobs/*.py`` on a cluster) does not get the cap; pass
+it with ``--conf spark.driver.defaultJavaOptions=-XX:TieredStopAtLevel=1``.
 """
 
 from __future__ import annotations
@@ -50,6 +63,24 @@ def get_spark(
         # parallelism while still merging truly tiny partitions
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        # JIT capped at C1 (module docstring). Measured on a 4-vCPU VM (Spark
+        # 4.1.2, local[4], perfbench index), C2 -> C1, alternating pairs; CPU
+        # of the whole VM from /proc/stat, per JVM thread from
+        # /proc/<pid>/task:
+        # - warm point query VM CPU p50 (16 queries a run), after 4 warm-ups
+        #   450/430 -> 220/215 ms (C2 threads 255/220 ms -> none); after 100
+        #   200/155/185 -> 140/150/140 ms (compiler threads 25-35 ms -> 0);
+        # - perfbench spark-point cpu_ms_p50, 10 pairs: 343 -> 143 ms;
+        # - 8000-page index build in a fresh JVM, 3 pairs: VM CPU 96.6-103.9
+        #   -> 73.6-82.4 s, wall 29.5-31.7 -> 29.1-31.7 s. C1 code makes the
+        #   executor threads' own work dearer (29-31 -> 40-44 s of CPU), less
+        #   than the 27-29 s of C2 compiles it drops;
+        # - traced ingest write cycle, 3 pairs: build.phase1_s 8.9-10.9 ->
+        #   9.4-10.5 s, phase2_s 4.3-5.3 -> 3.8-4.0 s, promote.s 4.9-5.7 ->
+        #   4.1-4.3 s, compact.s 2.08-2.18 -> 1.92-2.10 s.
+        # The default options, not extraJavaOptions: Spark appends a
+        # caller's extraJavaOptions (perfbench's java.io.tmpdir) to them.
+        .config("spark.driver.defaultJavaOptions", "-XX:TieredStopAtLevel=1")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

@@ -968,3 +968,44 @@ def test_arrow_from_encs_round_trips_enc_from_arrow(seg_index):
     assert bare.column("positions").to_pylist() == [b""] * tbl.num_rows
     assert bare.column("p_off").null_count == tbl.num_rows
     assert bare.column("fmt").to_pylist() == [codec.FMT_TAGS[codec.FMT_VB]] * tbl.num_rows
+
+
+def test_decode_occurrences_of_a_two_codec_bucket(seg_index, monkeypatch):
+    """A bucket file of a promoted index can hold varbyte lists next to
+    PFor ones (a delta-only list keeps its generation's codec).
+    decode_occurrences splits each chunk by codec and keeps the row
+    order: varbyte-re-encoded rows in front of PFor rows decode to the
+    varbyte rows' occurrences followed by the PFor rows', and a shuffled
+    mix over many small chunks decodes as the same rows all in PFor."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from honeywell_search_engine_spark.index import codec
+    from honeywell_search_engine_spark.index import segments as S
+
+    tbl = pq.read_table(f"{seg_index.path}/segments", filters=[("bucket", "=", 3)])
+    assert tbl.num_rows > 100
+    assert set(tbl.column("fmt").to_pylist()) == {codec.FMT_TAGS[codec.FMT_PFOR]}
+
+    def as_vb(rows):
+        vb = [codec.encode_postings(pl.docids, pl.tfs, pl.doclens, positions=pl.positions, fmt=codec.FMT_VB)
+              for pl in codec.decode_many(S.enc_from_arrow(rows), True)]
+        meta = (rows.column(c).to_pylist() for c in ("term", "shard", "ctf", "bucket"))
+        return pa.Table.from_batches([S.arrow_from_encs(vb, *meta)])
+
+    def occ(t):
+        return pa.Table.from_batches(list(S.decode_occurrences(t.to_batches())))
+
+    head, rest = as_vb(tbl.slice(0, 5)), tbl.slice(5).cast(S.PA_SEGMENT_SCHEMA)
+    mixed = pa.concat_tables([head, rest])
+    assert occ(mixed).equals(pa.concat_tables([occ(head), occ(rest)]))
+
+    order = np.random.default_rng(5).permutation(tbl.num_rows)
+    shuffled = pa.concat_tables([as_vb(tbl.slice(0, tbl.num_rows // 2)),
+                                 tbl.slice(tbl.num_rows // 2).cast(S.PA_SEGMENT_SCHEMA)]).take(order)
+    assert len(set(shuffled.column("fmt").to_pylist())) == 2
+    expected = occ(tbl.cast(S.PA_SEGMENT_SCHEMA).take(order))
+    monkeypatch.setattr(S, "_DECODE_FLUSH", 500)
+    assert len(list(S.decode_chunks(shuffled.column("ctf").to_numpy()))) > 2
+    assert occ(shuffled).equals(expected)

@@ -1,7 +1,8 @@
 """session.get_spark and the engine's Python worker daemon
 (worker_daemon): unchanged archives on a worker's path are not re-read
 per task, a rewritten one is, and a session whose workers cannot import
-the package keeps Spark's own daemon."""
+the package keeps Spark's own daemon; the session's JVM compiles at C1
+only, next to a caller's own Java options."""
 
 import importlib
 import os
@@ -10,6 +11,8 @@ import sys
 import textwrap
 import zipfile
 import zipimport
+
+import pytest
 
 from honeywell_search_engine_spark import worker_daemon as WD
 from honeywell_search_engine_spark.session import DAEMON_MODULE
@@ -106,3 +109,58 @@ def test_no_daemon_when_workers_cannot_import_package(tmp_path):
     master, n_cpus = lines["MASTER"].split()
     assert master == f"local[{n_cpus}]"
     assert lines["ROWS"] == "[0, 2, 4]"
+
+
+C1_ONLY = "-XX:TieredStopAtLevel=1"
+
+
+def test_session_jvm_compiles_at_c1_only(spark):
+    """The engine's JVM is launched with tiered compilation capped at C1
+    (spark.driver.defaultJavaOptions): its input arguments hold the flag."""
+    mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    assert C1_ONLY in list(mx.getRuntimeMXBean().getInputArguments())
+
+
+def test_caller_java_options_keep_the_c1_cap(tmp_path):
+    """A caller's spark.driver.extraJavaOptions (perfbench puts its
+    java.io.tmpdir there) applies next to the engine's C1 cap: the JVM
+    holds both the flag and the caller's system property."""
+    script = textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {ROOT!r})
+        from honeywell_search_engine_spark.session import get_spark
+        spark = get_spark(cores=1, extra_conf={{"spark.driver.extraJavaOptions": "-Dhse.probe=1"}})
+        jvm = spark.sparkContext._jvm
+        args = list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
+        print("FLAG", {C1_ONLY!r} in args)
+        print("PROBE", jvm.java.lang.System.getProperty("hse.probe"))
+        spark.stop()
+    """)
+    env = {**os.environ, "SPARK_DRIVER_MEM": "1g"}
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    lines = dict(line.split(" ", 1) for line in out.stdout.splitlines() if " " in line)
+    assert lines["FLAG"] == "True" and lines["PROBE"] == "1", out.stdout
+
+
+def test_extra_conf_replaces_the_default_java_options(monkeypatch):
+    """extra_conf can still replace spark.driver.defaultJavaOptions (and
+    with it the C1 cap): the builder holds the caller's value."""
+    from pyspark.sql import SparkSession
+
+    from honeywell_search_engine_spark.session import get_spark
+
+    class Built(Exception):
+        pass
+
+    def capture(builder):
+        raise Built(dict(builder._options))
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", capture)
+    for extra, want in (({}, C1_ONLY), ({"spark.driver.defaultJavaOptions": "-Xss4m"}, "-Xss4m")):
+        with pytest.raises(Built) as built:
+            get_spark(cores=1, extra_conf=extra)
+        assert built.value.args[0]["spark.driver.defaultJavaOptions"] == want
