@@ -791,26 +791,28 @@ def decode_concat(encs: list, with_positions=False):
     no list has them. `with_positions` is one flag or one per list; a
     list built without positions is never in `want`.
 
-    The lists share one codec (an index has one). Each stream of the
-    lists decodes in one block decode (``_joined``, ``_stream_decode``),
-    the docids in one segmented cumsum that restarts at each block from
-    its delta base (``_layout``, ``_restart``), and the flagged lists'
-    positions in one varbyte decode — the per-call cost is paid per
-    query or batch, not per list."""
+    Each stream of one codec's lists decodes in one block decode
+    (``_joined``, ``_stream_decode``), the docids in one segmented cumsum
+    that restarts at each block from its delta base (``_layout``,
+    ``_restart``), and the flagged lists' positions in one varbyte decode
+    — the per-call cost is paid per query or batch, not per list. An
+    index can hold lists of two codecs (promotion keeps a delta-only
+    list's codec): those decode one codec at a time (``_decode_by_codec``)
+    and come back in the order of `encs`."""
     ns = np.fromiter((e.n for e in encs), dtype=np.int64, count=len(encs))
     starts = np.cumsum(ns) - ns
+    flags = (
+        [bool(with_positions)] * len(encs)
+        if np.ndim(with_positions) == 0 else [bool(f) for f in with_positions]
+    )
     if len({e.fmt for e in encs}) > 1:
-        raise ValueError("decode_concat takes lists of one codec (one index)")
+        return _decode_by_codec(encs, flags, ns, starts)
     counts, bases = _layout(encs)
     deltas, tfs, doclens = (
         _stream_decode(encs[0].fmt, buf, offs, counts)
         for (buf,), offs in (_joined(encs, *st, [0, len(encs)]) for st in _STREAMS))
     docids = _restart(deltas, counts, bases)
     tfs += np.uint64(1)
-    flags = (
-        [bool(with_positions)] * len(encs)
-        if np.ndim(with_positions) == 0 else [bool(f) for f in with_positions]
-    )
     want = np.array([f and e.p_off is not None for f, e in zip(flags, encs)], dtype=bool)
     positions = None
     if want.any():
@@ -818,6 +820,32 @@ def decode_concat(encs: list, with_positions=False):
         tfs_p = tfs if want.all() else tfs[_ranges(starts[sel], ns[sel])]
         buf = b"".join(encs[i].positions for i in sel)
         positions = _abs_positions(varbyte_decode(buf, int(tfs_p.sum())), tfs_p)
+    return PostingList(docids, tfs, doclens, positions), want
+
+
+def _decode_by_codec(encs: list, flags: list, ns: np.ndarray, starts: np.ndarray):
+    """``decode_concat`` of lists of several codecs: one decode_concat per
+    codec, whose postings and flat positions are scattered back to their
+    lists' places in `encs`."""
+    fmts = np.array([e.fmt for e in encs])
+    parts = []
+    for fmt in np.unique(fmts):
+        sel = np.flatnonzero(fmts == fmt)
+        parts.append((sel, *decode_concat([encs[i] for i in sel], [flags[i] for i in sel])))
+    docids, tfs, doclens = (np.empty(int(ns.sum()), dtype=np.uint64) for _ in range(3))
+    want = np.zeros(len(encs), dtype=bool)
+    for sel, pl, w in parts:
+        at = _ranges(starts[sel], ns[sel])
+        docids[at], tfs[at], doclens[at] = pl.docids, pl.tfs, pl.doclens
+        want[sel] = w
+    positions = None
+    if want.any():
+        ends = np.concatenate([[0], np.cumsum(tfs, dtype=np.int64)])
+        ctf = np.where(want, ends[starts + ns] - ends[starts], 0)
+        positions = np.empty(int(ctf.sum()), dtype=np.uint64)
+        for sel, pl, w in parts:
+            if w.any():
+                positions[_ranges((np.cumsum(ctf) - ctf)[sel[w]], ctf[sel[w]])] = pl.positions
     return PostingList(docids, tfs, doclens, positions), want
 
 

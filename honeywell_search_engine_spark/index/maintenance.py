@@ -78,7 +78,7 @@ def _segment_batch(batch):
 
 
 def _holds_key(batch, keys: np.ndarray) -> np.ndarray:
-    """Per row of a one-codec batch of segment rows: does its list hold a
+    """Per row of a batch of segment rows: does its list hold a
     posting key of the sorted `keys`? The lists' docids decode in one
     ``codec.decode_concat`` per ``decode_chunks`` range (positions
     unread) and meet `keys` in one ``np.isin``."""
@@ -95,11 +95,11 @@ def _holds_key(batch, keys: np.ndarray) -> np.ndarray:
 
 def _rewrite_kernel(dead_bc, n_buckets: int):
     """mapInArrow body: drop the postings of tombstoned lids from the
-    segment rows. Per batch and codec, the rows whose list holds no dead
-    key (``_holds_key``) pass through as they are; the others decode to
+    segment rows. Per batch, the rows whose list holds no dead key
+    (``_holds_key``) pass through as they are; the others decode to
     occurrence rows (``decode_occurrences``), lose their dead occurrences
-    and re-encode through the build's encoder (``make_segment_encoder``,
-    one stream per codec, so each list keeps its own fmt). A list left
+    and re-encode through the build's encoder (``make_segment_encoder``),
+    one encode per codec so each list keeps its own fmt. A list left
     with no postings drops out. A touched list without positions (an
     index from before they joined the schema) raises decode_occurrences'
     ValueError. dead_bc: Spark broadcast of the sorted tombstoned posting
@@ -118,17 +118,15 @@ def _rewrite_kernel(dead_bc, n_buckets: int):
 
         dead = dead_bc.value
         for batch in batches:
+            hit = _holds_key(batch, dead)
+            if not hit.all():
+                yield _segment_batch(batch.filter(pa.array(~hit)))
             tags = (batch.column("fmt").fill_null(codec.FMT_TAGS[codec.FMT_VB]).to_numpy()
                     if "fmt" in batch.schema.names
                     else np.full(batch.num_rows, codec.FMT_TAGS[codec.FMT_VB]))
-            for tag in np.unique(tags):
-                part = batch if (tags == tag).all() else batch.filter(pa.array(tags == tag))
-                hit = _holds_key(part, dead)
-                if not hit.all():
-                    yield _segment_batch(part.filter(pa.array(~hit)))
-                if hit.any():
-                    encode = make_segment_encoder(n_buckets, codec.FMT_FROM_TAG[int(tag)])
-                    yield from encode(live(part.filter(pa.array(hit)), dead))
+            for tag in np.unique(tags[hit]):
+                encode = make_segment_encoder(n_buckets, codec.FMT_FROM_TAG[int(tag)])
+                yield from encode(live(batch.filter(pa.array(hit & (tags == tag))), dead))
 
     return rewrite
 

@@ -152,8 +152,8 @@ def splice_many(items) -> list[EncodedList]:
     """``splice_encoded`` of every (base, delta, lid_offset) triple of
     `items`, with the decodes of all their general seams (each base's
     trailing partial block and each delta list) in one
-    ``codec.decode_many`` call per codec: a promotion pays the per-call
-    decode cost per batch of spliced lists, not twice per list."""
+    ``codec.decode_many`` call: a promotion pays the per-call decode cost
+    per batch of spliced lists, not twice per list."""
     out: list[EncodedList | None] = []
     seams = []  # (item index, base, delta, offset, positions) of general seams
     for base, delta, off in items:
@@ -167,13 +167,7 @@ def splice_many(items) -> list[EncodedList]:
         if base.n % BLOCK:
             parts.append((_tail_block(base), has_pos))
         parts.append((delta, has_pos))
-    pls: list = [None] * len(parts)
-    for fmt in {e.fmt for e, _ in parts}:  # decode_many takes one codec
-        sel = [j for j, (e, _) in enumerate(parts) if e.fmt == fmt]
-        decoded = codec.decode_many([parts[j][0] for j in sel], [parts[j][1] for j in sel])
-        for j, pl in zip(sel, decoded):
-            pls[j] = pl
-    it = iter(pls)
+    it = iter(codec.decode_many([e for e, _ in parts], [p for _, p in parts]))
     for i, base, _, off, has_pos in seams:
         tail = next(it) if base.n % BLOCK else None
         out[i] = _splice_seam(base, tail, next(it), off, has_pos)

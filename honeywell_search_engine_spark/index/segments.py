@@ -638,13 +638,12 @@ def decode_occurrences(batches):
     """mapInArrow body: segment-row Arrow batches -> OCCURRENCE_SCHEMA
     batches, one row per token occurrence. The batch's lists come from
     its columns (``enc_from_arrow``), and every chunk of rows
-    (``decode_chunks``) decodes in one ``codec.decode_concat`` per codec
-    (a promoted index can hold lists of both): docids, tfs, doclens (each
-    list's own doclen stream) and flat positions, back to back; a
-    posting's lid and doclen repeat tf times and a list's term, shard and
-    bucket repeat over its occurrences (numpy ``repeat``, no per-row
-    loop). A chunk of two codecs is put back in row order by a stable sort
-    on the row. Rows come out sorted by (lid, pos) within each (term,
+    (``decode_chunks``) decodes in one ``codec.decode_concat`` (lists of
+    either codec, or both in a promoted index): docids,
+    tfs, doclens (each list's own doclen stream) and flat positions, back
+    to back; a posting's lid and doclen repeat tf times and a list's term,
+    shard and bucket repeat over its occurrences (numpy ``repeat``, no
+    per-row loop). Rows come out sorted by (lid, pos) within each (term,
     shard): exactly the phase-1 rows the list was encoded from, so
     re-encoding them reproduces its bytes. Runs in-process over pyarrow
     batches as well."""
@@ -655,31 +654,19 @@ def decode_occurrences(batches):
     for batch in batches:
         encs = enc_from_arrow(batch)
         ns = batch.column("n").to_numpy()
-        fmts = np.array([e.fmt for e in encs])
         for lo, hi in decode_chunks(batch.column("ctf").to_numpy()):
-            parts = []
-            for fmt in np.unique(fmts[lo:hi]):
-                rows = lo + np.flatnonzero(fmts[lo:hi] == fmt)
-                pl, want = codec.decode_concat([encs[i] for i in rows], True)
-                if not want.all():
-                    i = int(rows[np.argmin(want)])
-                    raise ValueError(f"segment row ({batch.column('term')[i].as_py()!r}, "
-                                     f"shard {batch.column('shard')[i].as_py()}) has no positions")
-                tf = pl.tfs.astype(np.int64)
-                parts.append((np.repeat(np.repeat(rows, ns[rows]), tf),
-                              np.repeat(pl.docids.astype(np.int64), tf),
-                              np.repeat(pl.doclens.astype(np.int32), tf),
-                              pl.positions.astype(np.int32)))
-            if len(parts) == 1:
-                row, lid, doclen, pos = parts[0]
-            else:
-                row, lid, doclen, pos = (np.concatenate(c) for c in zip(*parts))
-                order = np.argsort(row, kind="stable")
-                row, lid, doclen, pos = row[order], lid[order], doclen[order], pos[order]
-            row = pa.array(row)
+            pl, want = codec.decode_concat(encs[lo:hi], True)
+            if not want.all():
+                i = lo + int(np.argmin(want))
+                raise ValueError(f"segment row ({batch.column('term')[i].as_py()!r}, "
+                                 f"shard {batch.column('shard')[i].as_py()}) has no positions")
+            tf = pl.tfs.astype(np.int64)
+            row = pa.array(np.repeat(np.repeat(np.arange(lo, hi), ns[lo:hi]), tf))
             yield pa.RecordBatch.from_arrays(
                 [batch.column("term").take(row), batch.column("shard").take(row).cast(pa.int32()),
-                 pa.array(lid), pa.array(doclen), pa.array(pos),
+                 pa.array(np.repeat(pl.docids.astype(np.int64), tf)),
+                 pa.array(np.repeat(pl.doclens.astype(np.int32), tf)),
+                 pa.array(pl.positions.astype(np.int32)),
                  batch.column("bucket").take(row).cast(pa.int32())],
                 schema=schema,
             )

@@ -16,7 +16,10 @@ and the engine's per-row work runs in Python workers, so C2's faster code
 buys little (the figures are beside the option). A caller's
 ``spark.driver.extraJavaOptions`` still applies, as Spark appends it to the
 default options, and ``extra_conf`` can replace
-``spark.driver.defaultJavaOptions``. A session ``get_spark`` did not build
+``spark.driver.defaultJavaOptions``. The option replaces a
+``spark.driver.defaultJavaOptions`` set in the installation's
+``spark-defaults.conf``: a site that sets driver defaults there passes
+them, with the cap, through ``extra_conf``. A session ``get_spark`` did not build
 (``spark-submit`` of ``jobs/*.py`` on a cluster) does not get the cap; pass
 it with ``--conf spark.driver.defaultJavaOptions=-XX:TieredStopAtLevel=1``.
 """

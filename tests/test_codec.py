@@ -8,6 +8,7 @@ from honeywell_search_engine_spark.index.codec import (
     BLOCK,
     bm25_u,
     decode_blocks,
+    decode_concat,
     decode_many,
     decode_postings,
     encode_postings,
@@ -320,7 +321,9 @@ def test_decode_many_equals_per_list_decode(fmt, with_pos, sizes):
 def test_decode_many_mixed_flags(fmt):
     """Per-list position flags in one call: flagged lists get their
     positions, the rest None; a list built without positions is None even
-    when flagged. Lists of two codecs in one call are refused."""
+    when flagged. Lists of two codecs in one call (a promoted index can
+    hold both) decode as each list alone, in the order given, with
+    decode_concat's flat positions back to back for the flagged lists."""
     with_pos = _decode_many_lists(fmt, True, [3, 200, 128, 1, 90], seed=5)
     no_pos = _decode_many_lists(fmt, False, [40, 129], seed=6)
     lists = with_pos[:2] + no_pos[:1] + with_pos[2:] + no_pos[1:]
@@ -338,6 +341,22 @@ def test_decode_many_mixed_flags(fmt):
         else:
             assert pl.positions is None
     assert decode_many([]) == []
-    other = _decode_many_lists("pfor" if fmt == "vb" else "vb", False, [10], seed=7)
-    with pytest.raises(ValueError):
-        decode_many([lists[0][0], other[0][0]])
+    other = _decode_many_lists("pfor" if fmt == "vb" else "vb", True, [10, 300, 1], seed=7)
+    mixed = [lists[0], other[0], lists[2], other[1], lists[1], lists[6], other[2]]
+    flags = [True, True, False, False, True, True, True]
+    encs = [e for e, _ in mixed]
+    assert len({e.fmt for e in encs}) == 2
+    got = decode_many(encs, with_positions=flags)
+    for (enc, (docids, tfs, dls, pos)), flag, pl in zip(mixed, flags, got):
+        assert np.array_equal(pl.docids, docids)
+        assert np.array_equal(pl.tfs, tfs)
+        assert np.array_equal(pl.doclens, dls)
+        if flag and pos is not None:
+            assert np.array_equal(pl.positions, pos)
+        else:
+            assert pl.positions is None
+    cat, want = decode_concat(encs, flags)
+    assert want.tolist() == [f and src[3] is not None for f, (_, src) in zip(flags, mixed)]
+    assert np.array_equal(cat.docids, np.concatenate([pl.docids for pl in got]))
+    assert np.array_equal(cat.tfs, np.concatenate([pl.tfs for pl in got]))
+    assert np.array_equal(cat.positions, np.concatenate([pl.positions for pl in got if pl.positions is not None]))
