@@ -7,21 +7,25 @@ except master/memory come from spark-submit (see jobs/*.py).
 (``worker_daemon``), which stops the per-task re-read of every zip archive
 on the worker's path, when the worker interpreter can import it.
 
-It launches the JVM with tiered compilation capped at C1
-(``-XX:TieredStopAtLevel=1`` in ``spark.driver.defaultJavaOptions``): the
-JIT compiles with the quick C1 compiler only and never runs C2, whose
-compiles of Spark's own planner and scheduler were most of a warm point
-query's CPU. In local mode that JVM is the driver and the only executor,
-and the engine's per-row work runs in Python workers, so C2's faster code
-buys little (the figures are beside the option). A caller's
-``spark.driver.extraJavaOptions`` still applies, as Spark appends it to the
-default options, and ``extra_conf`` can replace
-``spark.driver.defaultJavaOptions``. The option replaces a
+It launches the JVM with C2 deferred to code ten times hotter than
+HotSpot's default (``JIT_OPTIONS`` in ``spark.driver.defaultJavaOptions``:
+the Tier4 invocation and compile thresholds times 10, loop back-edge
+threshold unchanged). A method then runs as C1 code until it has been
+called 50,000 times rather than 5,000. Most of a warm point query's CPU
+had been C2 compiling Spark's own planner and scheduler, code a point
+query calls often but not often enough to repay C2; the per-row loops of
+the engine's SQL operators (whole-stage codegen) still reach C2 within
+their first query. Capping the JIT at C1 (``-XX:TieredStopAtLevel=1``)
+saves more point-query CPU but makes those loops dearer: the headline
+driver-table queries of ``bench.py`` took 40% longer (the figures are
+beside the option). A caller's ``spark.driver.extraJavaOptions`` still
+applies, as Spark appends it to the default options, and ``extra_conf``
+can replace ``spark.driver.defaultJavaOptions``. The option replaces a
 ``spark.driver.defaultJavaOptions`` set in the installation's
 ``spark-defaults.conf``: a site that sets driver defaults there passes
-them, with the cap, through ``extra_conf``. A session ``get_spark`` did not build
-(``spark-submit`` of ``jobs/*.py`` on a cluster) does not get the cap; pass
-it with ``--conf spark.driver.defaultJavaOptions=-XX:TieredStopAtLevel=1``.
+them, with these, through ``extra_conf``. A session ``get_spark`` did not
+build (``spark-submit`` of ``jobs/*.py`` on a cluster) does not get the
+option; pass it with ``--conf "spark.driver.defaultJavaOptions=<JIT_OPTIONS>"``.
 """
 
 from __future__ import annotations
@@ -32,6 +36,10 @@ import site
 from pyspark.sql import SparkSession
 
 DAEMON_MODULE = "honeywell_search_engine_spark.worker_daemon"
+
+#: the JVM's JIT thresholds for C2, ten times HotSpot's defaults
+JIT_OPTIONS = ("-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000"
+               " -XX:Tier4CompileThreshold=150000")
 
 
 def _workers_can_import_package() -> bool:
@@ -66,24 +74,8 @@ def get_spark(
         # parallelism while still merging truly tiny partitions
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        # JIT capped at C1 (module docstring). Measured on a 4-vCPU VM (Spark
-        # 4.1.2, local[4], perfbench index), C2 -> C1, alternating pairs; CPU
-        # of the whole VM from /proc/stat, per JVM thread from
-        # /proc/<pid>/task:
-        # - warm point query VM CPU p50 (16 queries a run), after 4 warm-ups
-        #   450/430 -> 220/215 ms (C2 threads 255/220 ms -> none); after 100
-        #   200/155/185 -> 140/150/140 ms (compiler threads 25-35 ms -> 0);
-        # - perfbench spark-point cpu_ms_p50, 10 pairs: 343 -> 143 ms;
-        # - 8000-page index build in a fresh JVM, 3 pairs: VM CPU 96.6-103.9
-        #   -> 73.6-82.4 s, wall 29.5-31.7 -> 29.1-31.7 s. C1 code makes the
-        #   executor threads' own work dearer (29-31 -> 40-44 s of CPU), less
-        #   than the 27-29 s of C2 compiles it drops;
-        # - traced ingest write cycle, 3 pairs: build.phase1_s 8.9-10.9 ->
-        #   9.4-10.5 s, phase2_s 4.3-5.3 -> 3.8-4.0 s, promote.s 4.9-5.7 ->
-        #   4.1-4.3 s, compact.s 2.08-2.18 -> 1.92-2.10 s.
-        # The default options, not extraJavaOptions: Spark appends a
-        # caller's extraJavaOptions (perfbench's java.io.tmpdir) to them.
-        .config("spark.driver.defaultJavaOptions", "-XX:TieredStopAtLevel=1")
+        # C2 deferred (module docstring). FIGURES
+        .config("spark.driver.defaultJavaOptions", JIT_OPTIONS)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

@@ -973,8 +973,9 @@ def test_arrow_from_encs_round_trips_enc_from_arrow(seg_index):
 def test_decode_occurrences_of_a_two_codec_bucket(seg_index, monkeypatch):
     """A bucket file of a promoted index can hold varbyte lists next to
     PFor ones (a delta-only list keeps its generation's codec).
-    decode_occurrences splits each chunk by codec and keeps the row
-    order: varbyte-re-encoded rows in front of PFor rows decode to the
+    decode_occurrences decodes such a chunk (codec.decode_concat splits it
+    by codec) and keeps the row order: varbyte-re-encoded rows in front of
+    PFor rows decode to the
     varbyte rows' occurrences followed by the PFor rows', and a shuffled
     mix over many small chunks decodes as the same rows all in PFor."""
     import numpy as np

@@ -1,8 +1,8 @@
 """session.get_spark and the engine's Python worker daemon
 (worker_daemon): unchanged archives on a worker's path are not re-read
 per task, a rewritten one is, and a session whose workers cannot import
-the package keeps Spark's own daemon; the session's JVM compiles at C1
-only, next to a caller's own Java options."""
+the package keeps Spark's own daemon; the session's JVM defers C2
+(session.JIT_OPTIONS), next to a caller's own Java options."""
 
 import importlib
 import os
@@ -15,7 +15,7 @@ import zipimport
 import pytest
 
 from honeywell_search_engine_spark import worker_daemon as WD
-from honeywell_search_engine_spark.session import DAEMON_MODULE
+from honeywell_search_engine_spark.session import DAEMON_MODULE, JIT_OPTIONS
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -111,28 +111,29 @@ def test_no_daemon_when_workers_cannot_import_package(tmp_path):
     assert lines["ROWS"] == "[0, 2, 4]"
 
 
-C1_ONLY = "-XX:TieredStopAtLevel=1"
+JIT_FLAGS = JIT_OPTIONS.split()
 
 
-def test_session_jvm_compiles_at_c1_only(spark):
-    """The engine's JVM is launched with tiered compilation capped at C1
-    (spark.driver.defaultJavaOptions): its input arguments hold the flag."""
+def test_session_jvm_defers_c2(spark):
+    """The engine's JVM is launched with the C2 thresholds of JIT_OPTIONS
+    (spark.driver.defaultJavaOptions): its input arguments hold them."""
     mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
-    assert C1_ONLY in list(mx.getRuntimeMXBean().getInputArguments())
+    args = list(mx.getRuntimeMXBean().getInputArguments())
+    assert len(JIT_FLAGS) == 3 and all(f in args for f in JIT_FLAGS), args
 
 
-def test_caller_java_options_keep_the_c1_cap(tmp_path):
+def test_caller_java_options_keep_the_jit_options(tmp_path):
     """A caller's spark.driver.extraJavaOptions (perfbench puts its
-    java.io.tmpdir there) applies next to the engine's C1 cap: the JVM
-    holds both the flag and the caller's system property."""
+    java.io.tmpdir there) applies next to the engine's JIT options: the
+    JVM holds both the options and the caller's system property."""
     script = textwrap.dedent(f"""
         import sys
         sys.path.insert(0, {ROOT!r})
-        from honeywell_search_engine_spark.session import get_spark
+        from honeywell_search_engine_spark.session import JIT_OPTIONS, get_spark
         spark = get_spark(cores=1, extra_conf={{"spark.driver.extraJavaOptions": "-Dhse.probe=1"}})
         jvm = spark.sparkContext._jvm
         args = list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
-        print("FLAG", {C1_ONLY!r} in args)
+        print("FLAGS", all(f in args for f in JIT_OPTIONS.split()))
         print("PROBE", jvm.java.lang.System.getProperty("hse.probe"))
         spark.stop()
     """)
@@ -143,12 +144,12 @@ def test_caller_java_options_keep_the_c1_cap(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-3000:]
     lines = dict(line.split(" ", 1) for line in out.stdout.splitlines() if " " in line)
-    assert lines["FLAG"] == "True" and lines["PROBE"] == "1", out.stdout
+    assert lines["FLAGS"] == "True" and lines["PROBE"] == "1", out.stdout
 
 
 def test_extra_conf_replaces_the_default_java_options(monkeypatch):
     """extra_conf can still replace spark.driver.defaultJavaOptions (and
-    with it the C1 cap): the builder holds the caller's value."""
+    with it the JIT options): the builder holds the caller's value."""
     from pyspark.sql import SparkSession
 
     from honeywell_search_engine_spark.session import get_spark
@@ -160,7 +161,7 @@ def test_extra_conf_replaces_the_default_java_options(monkeypatch):
         raise Built(dict(builder._options))
 
     monkeypatch.setattr(SparkSession.Builder, "getOrCreate", capture)
-    for extra, want in (({}, C1_ONLY), ({"spark.driver.defaultJavaOptions": "-Xss4m"}, "-Xss4m")):
+    for extra, want in (({}, JIT_OPTIONS), ({"spark.driver.defaultJavaOptions": "-Xss4m"}, "-Xss4m")):
         with pytest.raises(Built) as built:
             get_spark(cores=1, extra_conf=extra)
         assert built.value.args[0]["spark.driver.defaultJavaOptions"] == want
