@@ -7,7 +7,7 @@ Spark is the right tool for building, merging, and compacting the index
 and for batch query workloads (query/wand.py), but a Spark point query
 carries a fixed cost that no kernel speed can remove: it is one job of
 one stage and one task, and its traced ``wand.exec_ms`` measured 110 ms
-on a 4-vCPU host (perfbench ``spark-point``, seed 631), with ~49-57 ms
+on a 4-vCPU host (perfbench ``spark-point``, seed 631), with ~44-47 ms
 of CPU for each extra Python task (wand.POSTINGS_PER_TASK). The deployment
 story at 10^12 docs is the standard one: Spark writes immutable segments
 to the lake; stateless serving nodes read them.

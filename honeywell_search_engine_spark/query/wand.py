@@ -941,21 +941,22 @@ BATCH_RESULT_SCHEMA = "qid string, rnk int, docid long, score double"
 # Postings one shard-kernel task should score before a second Python task
 # pays for itself: the per-task fixed CPU cost over the kernel's CPU cost
 # per posting, both measured on a 4-vCPU VM (Spark 4.1.2, local[4], the
-# JVM at C1 only as get_spark launches it) on the perfbench index (7600
-# docs, 16 shards):
-# - per-task fixed cost ~49-57 ms of VM CPU: a mapInArrow over the
+# JVM's JIT as get_spark launches it, session.JIT_OPTIONS) on the
+# perfbench index (7600 docs, 16 shards):
+# - per-task fixed cost ~44-47 ms of VM CPU: a mapInArrow over the
 #   task-descriptor frame whose tasks read their shards' rows of the three
 #   head terms (22.8k postings, read_term_rows) and score nothing cost
-#   120-180 ms at 1 task and 470-540 ms at 8 (medians of 5, five runs),
-#   under get_spark's worker daemon (worker_daemon.py): 49-57 ms per
-#   extra task, the task's own segment-row read included (56-74 ms with
-#   C2). It is Python worker set-up per task, not kernel work;
+#   120-130 ms at 1 task and 440-450 ms at 8 (medians of 5, two runs after
+#   100 warm point queries), under get_spark's worker daemon
+#   (worker_daemon.py): 44-47 ms per extra task, the task's own
+#   segment-row read included (50-56 ms at HotSpot's default JIT
+#   thresholds). It is Python worker set-up per task, not kernel work;
 # - kernel cost per posting, in-process over the fused lists a task
 #   evaluates (head terms, all 16 shards, min of 10 runs): ~0.9-1.3 us
 #   for the phrase kernel, which decodes and verifies positions, and
 #   0.14-0.22 us for the unpruned OR kernel (full decode + BM25 of every
 #   posting). The split sees only postings, so the dearest kernel sets it.
-# ~51 ms / ~1.2 us ~ 43k, so 30k postings stays (the split errs early):
+# ~46 ms / ~1.2 us ~ 38k, so 30k postings stays (the split errs early):
 # all but about 1 in 1000 perfbench point queries (sum of df: median
 # 9.2k, p99 22.7k, max 30.2k over 2392 stream queries) run ONE kernel
 # task.
@@ -1260,7 +1261,7 @@ def bm25_topk_wand_batch(
 
     A point query is one Spark job of one stage and one task, and pays a
     fixed cost for it (traced ``wand.exec_ms`` 110 ms on a 4-vCPU host;
-    ~49-57 ms of CPU per extra task, see POSTINGS_PER_TASK); a search
+    ~44-47 ms of CPU per extra task, see POSTINGS_PER_TASK); a search
     engine's natural unit is the query *stream* (the reference's design
     target is 100 q/s, PIPELINE.md:350). Here: one kernel stage whose
     tasks each read their shards' rows of the union of all queries'

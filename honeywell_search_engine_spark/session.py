@@ -13,9 +13,9 @@ the Tier4 invocation and compile thresholds times 10, loop back-edge
 threshold unchanged). A method then runs as C1 code until it has been
 called 50,000 times rather than 5,000. Most of a warm point query's CPU
 had been C2 compiling Spark's own planner and scheduler, code a point
-query calls often but not often enough to repay C2; the per-row loops of
-the engine's SQL operators (whole-stage codegen) still reach C2 within
-their first query. Capping the JIT at C1 (``-XX:TieredStopAtLevel=1``)
+query calls often but not often enough to repay C2. The per-row loops of
+the engine's SQL operators run as JVM whole-stage code and are hot
+enough to reach C2 still. Capping the JIT at C1 (``-XX:TieredStopAtLevel=1``)
 saves more point-query CPU but makes those loops dearer: the headline
 driver-table queries of ``bench.py`` took 40% longer (the figures are
 beside the option). A caller's ``spark.driver.extraJavaOptions`` still
@@ -25,7 +25,8 @@ can replace ``spark.driver.defaultJavaOptions``. The option replaces a
 ``spark-defaults.conf``: a site that sets driver defaults there passes
 them, with these, through ``extra_conf``. A session ``get_spark`` did not
 build (``spark-submit`` of ``jobs/*.py`` on a cluster) does not get the
-option; pass it with ``--conf "spark.driver.defaultJavaOptions=<JIT_OPTIONS>"``.
+option; pass it with ``--conf "spark.driver.defaultJavaOptions=..."``,
+the value being ``JIT_OPTIONS``.
 """
 
 from __future__ import annotations
@@ -74,7 +75,30 @@ def get_spark(
         # parallelism while still merging truly tiny partitions
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        # C2 deferred (module docstring). FIGURES
+        # C2 deferred (module docstring). Measured on a 4-vCPU VM (Spark
+        # 4.1.2, local[4]), HotSpot defaults -> JIT_OPTIONS, alternating
+        # pairs, median (range); CPU of the whole VM from /proc/stat, per
+        # JVM thread from /proc/<pid>/task:
+        # - perfbench spark-point cpu_ms_p50, 10 pairs: 344 (308-395) -> 188
+        #   (171-309) ms, 10 of 10 lower; -XX:TieredStopAtLevel=1 gave 143;
+        # - warm point query VM CPU p50 after 100 warm-ups, 2 pairs: 170/155
+        #   -> 155/150 ms (C2 threads 35/20 -> 15/20 ms);
+        # - bench.py headline driver-table queries at sf0.1 (sum of min of
+        #   3), 8 pairs: 5.46 (4.67-6.05) -> 5.46 (5.14-6.86) s, 4 of 8
+        #   lower; VM CPU 87 -> 76 s. At C1 only, 4 pairs: 5.73-7.31 ->
+        #   8.36-9.44 s, minhash_signatures 0.99-1.35 -> 2.96-3.61 s: C1
+        #   code runs the operators' per-row loops (whole-stage codegen);
+        # - 60000-page index build (bench.py build_index), fresh JVM, 5
+        #   pairs: wall 52.3 (43.7-56.1) -> 53.1 (39.9-61.0) s, VM CPU
+        #   179 -> 181 s, 3 of 5 lower; C2 threads 23.5 -> 18.3 s;
+        # - 8000-page build (perfbench prepare.build_index), 2 pairs: VM CPU
+        #   90.0/93.9 -> 84.1/91.8 s, wall 27.5/28.6 -> 27.4/30.3 s;
+        # - perfbench ingest setup_s (the write cycle), 12 pairs: 28.0
+        #   (22.6-32.8) -> 28.5 (23.2-40.5) s, 6 of 12 lower; traced, 6
+        #   pairs: build.phase1_s 9.2 -> 9.1, build.phase2_s 4.3 -> 4.4,
+        #   promote.s 4.5 -> 5.1 (min 4.1 -> 4.0), compact.s 2.1 -> 2.2 s.
+        # The default options, not extraJavaOptions: Spark appends a
+        # caller's extraJavaOptions (perfbench's java.io.tmpdir) to them.
         .config("spark.driver.defaultJavaOptions", JIT_OPTIONS)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
